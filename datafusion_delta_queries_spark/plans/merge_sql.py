@@ -826,10 +826,11 @@ def execute_optimize(
             df.repartition(n_files).write.format(fmt).mode(
                 "errorifexists"
             ).save(staging)
-        spark.read.format(fmt).load(staging).write.format(fmt).mode(
-            "overwrite"
-        ).save(path)
-        shutil.rmtree(staging)
+        # Swap the staged dir in by rename: copying it back through
+        # Spark would re-pack its files into read splits sized by the
+        # host's core count and merge away the n_files layout.
+        shutil.rmtree(path)
+        os.rename(staging, path)
         after = len(set(spark.read.format(fmt).load(path).inputFiles()))
         return len(files_before), after
 

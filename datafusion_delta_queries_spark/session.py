@@ -16,6 +16,7 @@ single JVM) but every knob is the one you'd set on a real cluster too:
 from __future__ import annotations
 
 import os
+import sys
 import tempfile
 
 from pyspark.sql import SparkSession
@@ -73,11 +74,23 @@ def get_spark(app_name: str = "dfdq-spark", cpus: int | None = None) -> SparkSes
     # code edits — the local defaults above stay the benched
     # configuration when the variable is unset.
     extra = os.environ.get("SPARK_GRAFT_SPARK_CONF", "")
+    requested: dict[str, str] = {}
     for pair in extra.split(";"):
-        pair = pair.strip()
-        if pair and "=" in pair:
+        if "=" in pair:
             k, v = pair.split("=", 1)
-            builder = builder.config(k.strip(), v.strip())
+            requested[k.strip()] = v.strip()
+    if requested:
+        builder = builder.config(map=requested)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    # getOrCreate on an existing session applies only runtime SQL confs;
+    # say so instead of letting a caller measure a config it did not get.
+    for k, v in requested.items():
+        got = spark.conf.get(k, None)
+        if got != v:
+            print(
+                f"SPARK_GRAFT_SPARK_CONF: {k}={v} did not take effect "
+                f"(session has {got!r}; static confs need a new session)",
+                file=sys.stderr,
+            )
     return spark

@@ -81,8 +81,11 @@ def _merged_commit_schema(dirs: list[str]):
     and versioned lifecycles read many times). First-seen field order
     (mergeSchema's order for additive evolution); None on any type
     conflict or unreadable footer, and the caller falls back to the
-    inferred ``mergeSchema`` read — behavior unchanged, just slower."""
-    from pyspark.sql.types import StructType
+    inferred ``mergeSchema`` read — behavior unchanged, just slower.
+    Every field is nullable, as under ``mergeSchema``: rows of a
+    commit that predates a column read it as NULL, whatever the
+    footer that introduced it declares."""
+    from pyspark.sql.types import StructField, StructType
 
     fields: list = []
     by_name: dict = {}
@@ -97,7 +100,11 @@ def _merged_commit_schema(dirs: list[str]):
                 fields.append(f)
             elif prev.dataType != f.dataType:
                 return None  # non-additive evolution: let Spark decide
-    return StructType(fields) if fields else None
+    if not fields:
+        return None
+    return StructType(
+        [StructField(f.name, f.dataType, True, f.metadata) for f in fields]
+    )
 
 
 def _kinds_from_footers(d: str):

@@ -10,6 +10,6 @@ SF_MED = "/root/testdata/sf0.01"
 
 @pytest.fixture(scope="session")
 def spark():
-    spark = get_spark("dfdq-tests", cpus=8)
+    spark = get_spark("dfdq-tests")
     yield spark
     spark.stop()

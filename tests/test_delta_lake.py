@@ -1,26 +1,7 @@
 """Real Delta Lake substrate (when delta-spark is installed).
 
-This environment ships neither the delta-spark package nor the Delta
-jars, and package installs are unavailable — re-verified 2026-08-15
-(round 12, previously rounds 6-11): ``import delta`` fails and DNS
-resolution of any package index host still fails outright
-("Name or service not known"), so the blocker is the sandbox's lack
-of network egress, not a transient failure. Re-retried round 13
-(2026-08-15): same "Name or service not known" on the index host.
-Re-retried again in the round-13 continuation (2026-08-16): identical
-DNS failure on every connection attempt; ``import delta`` still
-fails. Re-retried round 14 (2026-08-16): same "Name or service not
-known" against the index host on every retry; ``import delta`` still
-fails. Re-retried round 15 (2026-08-16): identical DNS failure
-("Name or service not known") on every connection attempt to the
-index host; ``import delta`` still fails. Re-retried round 16
-(2026-08-16): same "Name or service not known" on all five pip
-retries against the index host; ``import delta`` still fails.
-Re-retried round 17 (2026-08-17): identical DNS failure ("Name or
-service not known") on all five pip retries; ``import delta`` still
-fails. Re-retried round 18 (2026-08-18): same "Name or service not
-known" on all five pip retries against the index host; ``import
-delta`` still fails.
+This environment has no network and ships neither the delta-spark
+package nor the Delta jars, so ``import delta`` fails here.
 These tests SKIP here and the parquet version-dir substrate
 (test_versioned_sources.py) is the exercised realization. On any
 installation that has delta-spark, they run for real: write a Delta

@@ -5,8 +5,7 @@ signed_ann_stored / signed_lsh_stored) were built, oracled, and
 tested in round 16 but held OUT of the registry until the r17 window
 had room (registering ahead of window room would have broken the
 never-driver-checked = 0 invariant). They are registered now — the
-guard below flips from "stays out" to "is in", per the r16 plan in
-the rotation ledger (operators/__init__.py).
+guard below flips from "stays out" to "is in".
 
 ``signed_winnow_stored`` is the deliberate exception: the quiet
 sf0.1 A/B measured it SLOWER than its recompute sibling (1.70 vs
@@ -22,10 +21,7 @@ from __future__ import annotations
 
 import pytest
 
-from datafusion_delta_queries_spark.operators import (
-    R17_REGISTRATION_CANDIDATES,
-    registry,
-)
+from datafusion_delta_queries_spark.operators import registry
 from datafusion_delta_queries_spark.operators.signed_queries import (
     _signed_winnow_oracle,
     q_signed_winnow_stored,
@@ -34,13 +30,20 @@ from datafusion_delta_queries_spark.oracle import compare, run_oracle
 
 from .conftest import SF_SMALL
 
+STORED_TWINS = (
+    "signed_cluster_stored",
+    "signed_ivf_stored",
+    "signed_ann_stored",
+    "signed_lsh_stored",
+)
+
 
 def test_r16_tranche_is_registered_and_oracled():
     """The flip of r16's "stays out of the registry" guard: all four
     candidates are registered with oracles; the measured loser is
     not."""
     queries, oracles = registry()
-    for name in R17_REGISTRATION_CANDIDATES:
+    for name in STORED_TWINS:
         assert name in queries, name
         assert name in oracles, name
     assert "signed_winnow_stored" not in queries

@@ -4,6 +4,8 @@ snapshot = versionAsOf, PosDeltaScan = CDF inserts")."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from datafusion_delta_queries_spark.catalog import load_table
@@ -282,6 +284,38 @@ def test_additive_schema_evolution_across_versions(spark, tmp_path):
     # The delete of (1, x) retracts the pre-evolution row: its NULL
     # score groups with the delete row's NULL, so the fold nets to 0.
     assert [tuple(r) for r in s.collect()] == [(2, "y", 7.5)]
+
+
+def test_added_non_nullable_column_reads_as_nullable(spark, tmp_path):
+    """A commit whose footer declares an added column REQUIRED (written
+    by a non-Spark writer) must not make the union schema non-nullable:
+    the older commit's rows carry NULL there, as under mergeSchema."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from datafusion_delta_queries_spark.sources.versioned import (
+        _merged_commit_schema,
+    )
+
+    vt = VersionedTable(str(tmp_path / "t"))
+    vt.write_version(spark.createDataFrame([(1,)], "id: int"))
+    os.makedirs(vt._version_dir(1))
+    pq.write_table(
+        pa.table(
+            {"id": [2], "score": [7.5]},
+            schema=pa.schema([
+                pa.field("id", pa.int32()),
+                pa.field("score", pa.float64(), nullable=False),
+            ]),
+        ),
+        os.path.join(vt._version_dir(1), "part-00000.parquet"),
+    )
+    merged = _merged_commit_schema([vt._version_dir(v) for v in (0, 1)])
+    assert merged["score"].nullable
+    s = vt.snapshot(spark, 1)
+    assert s.schema["score"].nullable
+    assert s.filter("score IS NULL").count() == 1
+    assert sorted(tuple(r) for r in s.collect()) == [(1, None), (2, 7.5)]
 
 
 # -- Checkpoint + vacuum: the 100 TB log-folding discipline ------------

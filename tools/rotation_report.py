@@ -1,38 +1,38 @@
 """Rotation-ledger report: latest driver-check round per query.
 
-Recomputes, from the committed CORRECTNESS_r*.json series, what every
-round's verdict wants to know:
+The driver checks the first 50 entries of ``queries()`` each round and
+records them as ``CORRECTNESS_r{N}.json``. ``registry()`` computes that
+window from the recorded series (``operators.correctness_window``):
+never-checked queries first, then the stalest latest check, ties in
+registration order, then one pass that keeps every major family
+(``llm_ delta_ streaming_ signed_ events_``) in the window. Writing the
+next CORRECTNESS file moves the window; no code edit is needed.
+
+This report prints, from the same series:
 
 - latest-check distribution (how stale is each query's newest green row)
 - never-driver-checked queries (registered but no row yet)
 - any query whose LATEST row failed (must be zero)
-- the upcoming window (first 50 of queries()) annotated by staleness
+- the computed window's staleness mix
 
 Usage: python tools/rotation_report.py [--no-spark]
-(--no-spark skips the registry import and reports on the series only.)
+(--no-spark skips building the registry and reports on the series only.)
 """
 
 from __future__ import annotations
 
-import glob
-import json
 import os
 import sys
 from collections import Counter
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
-
-def latest_checks() -> dict[str, tuple[int, bool]]:
-    latest: dict[str, tuple[int, bool]] = {}
-    for path in sorted(glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json"))):
-        rnd = int(path.rsplit("_r", 1)[1].split(".")[0])
-        with open(path) as fh:
-            rows = json.load(fh)
-        for name, row in rows.items():
-            ok = bool(row.get("rows_match")) and row.get("hash_match") is not False
-            latest[name] = (rnd, ok)
-    return latest
+from datafusion_delta_queries_spark.operators import (  # noqa: E402
+    WINDOW_SIZE,
+    latest_checks,
+    registry,
+)
 
 
 def main() -> int:
@@ -45,19 +45,12 @@ def main() -> int:
     if "--no-spark" in sys.argv:
         return 1 if failures else 0
 
-    sys.path.insert(0, REPO)
-    from datafusion_delta_queries_spark.operators import (
-        DRIVER_WINDOW_PRIORITY,
-        registry,
-    )
-
     # registry() needs no SparkSession — it only merges dicts
     queries, oracles = registry()
     never = sorted(set(queries) - set(latest))
     print(f"registered: {len(queries)}; oracled: {len(oracles)}; "
           f"never driver-checked: {len(never)}", never or "")
-    window = list(queries)[:50]
-    assert window == list(DRIVER_WINDOW_PRIORITY)[:50]
+    window = list(queries)[:WINDOW_SIZE]
     stale = sorted(
         (latest[n][0], n) for n in latest if n in queries
     )[: 15]
