@@ -73,7 +73,7 @@ _PF_ORACLE = _except_all(
 )
 
 
-# -- Δ(R ⋈ S) — keyed-join rule, 3-branch union (mod.rs:99-158) --------
+# -- Δ(R ⋈ S) — keyed-join rule (mod.rs:99-158), run as two branches ---
 
 _JOIN_IR = Projection(
     [
@@ -483,8 +483,8 @@ def _sql_having_oracle() -> str:
 
 
 # JOIN + GROUP BY maintenance from one SQL string (round-7): the join
-# fragment runs through the PosDelta rewrite (3-branch delta, old
-# snapshots on the un-delta'd sides — nested for the 3-table chain),
+# fragment runs through the PosDelta rewrite (executed as ΔL⋈R_new ∪
+# L_old⋈ΔR — nested for the 3-table chain),
 # the aggregate through partial-union-merge. The reference has the two
 # halves (join rule mod.rs:99-158; aggregates declined mod.rs:187) but
 # never composes them.
@@ -564,7 +564,7 @@ _SQL_CD_ORACLE = (
 
 
 # count(DISTINCT) over a maintained 3-table JOIN: the join fragment
-# runs through the PosDelta 3-branch rewrite; the distinct-pair state
+# runs through the PosDelta rewrite; the distinct-pair state
 # is built over (snapshot join) ∪ (join delta) — unique customers who
 # placed a qualifying order, per nation.
 _SQL_JOIN_CD_STMT = (

@@ -137,7 +137,7 @@ _PF_ORACLE = _net_oracle(
 )
 
 
-# -- signed Δ(R ⋈ S): the bilinear 3-branch rule with sign products; ---
+# -- signed Δ(R ⋈ S): the bilinear two-branch rule with signs; ---------
 # -- BOTH sides carry inserts+deletes+updates --------------------------
 
 _JOIN_IR = Projection(

@@ -22,6 +22,12 @@ re-wrapped in PosDelta and the rule re-applied directly, with
 declines (mod.rs:23-32). The un-delta'd join sides (``join.left.clone()``)
 compile to the *old snapshot* — see compiler.py and SURVEY §4.3.
 
+This rule builds the reference IR, three branches per join; the
+executed plan is two. ``split_join_delta`` and ``split_new_state``
+(end of module) recognize the join triple and the semi rule's
+``R ∪ ΔR`` so the compiler can run them as ``ΔL⋈R_new ∪ L_old⋈ΔR``
+and one scan of R's new state.
+
 Two deliberate divergences (SURVEY §4.3): the reference clones
 ``join_type`` verbatim (mod.rs:126), silently mis-incrementalizing
 outer/semi/anti joins (a no-longer-dangling left row would need its
@@ -51,6 +57,11 @@ from .nodes import (
 _DELTA_SAFE_JOIN_TYPES = {"inner", "cross"}
 
 
+def _delta_or_self(node: Plan) -> Plan:
+    # mod.rs:23-32: recurse with re-wrap; keep original on decline.
+    return rewrite_pos_delta(PosDelta(node)) or node
+
+
 def rewrite_pos_delta(plan: Plan) -> Plan | None:
     """Apply the PosDelta rule to ``plan``.
 
@@ -62,18 +73,14 @@ def rewrite_pos_delta(plan: Plan) -> Plan | None:
         return None  # mod.rs:189-194: non-PosDelta root → no rewrite
     child = plan.input
 
-    def delta_or_self(node: Plan) -> Plan:
-        # mod.rs:23-32: recurse with re-wrap; keep original on decline.
-        return rewrite_pos_delta(PosDelta(node)) or node
-
     if isinstance(child, Projection):
-        return Projection(child.select_exprs, delta_or_self(child.input))
+        return Projection(child.select_exprs, _delta_or_self(child.input))
 
     if isinstance(child, Filter):
-        return Filter(child.predicate, delta_or_self(child.input))
+        return Filter(child.predicate, _delta_or_self(child.input))
 
     if isinstance(child, CrossJoin):
-        dl, dr = delta_or_self(child.left), delta_or_self(child.right)
+        dl, dr = _delta_or_self(child.left), _delta_or_self(child.right)
         return Union(
             [
                 CrossJoin(dl, dr),
@@ -95,7 +102,7 @@ def rewrite_pos_delta(plan: Plan) -> Plan | None:
             # Anti/outer joins stay unsupported: a previously-matched
             # (resp. dangling) row would need its output *retracted*,
             # impossible with positive deltas (see below).
-            dl, dr = delta_or_self(child.left), delta_or_self(child.right)
+            dl, dr = _delta_or_self(child.left), _delta_or_self(child.right)
             r_new = Union([child.right, dr])
             nen = child.null_equals_null
             jc = child.join_constraint
@@ -114,7 +121,7 @@ def rewrite_pos_delta(plan: Plan) -> Plan | None:
                 f"positive-delta rewrite is only sound for inner/cross/semi "
                 f"joins; got join_type={child.join_type!r} (see SURVEY §4.3)"
             )
-        dl, dr = delta_or_self(child.left), delta_or_self(child.right)
+        dl, dr = _delta_or_self(child.left), _delta_or_self(child.right)
         # mod.rs:120-129 clones every join field through the rewrite —
         # null_equals_null (mod.rs:128) and join_constraint (mod.rs:127)
         # included, on all three branches.
@@ -131,9 +138,55 @@ def rewrite_pos_delta(plan: Plan) -> Plan | None:
         )
 
     if isinstance(child, Union):
-        return Union([delta_or_self(i) for i in child.inputs])
+        return Union([_delta_or_self(i) for i in child.inputs])
 
     if isinstance(child, Scan):
         return PosDeltaScan(child)  # mod.rs:181-186
 
     return None  # mod.rs:187: unsupported operator (agg/sort/limit/...)
+
+
+# -- Recognizers for the compiler ------------------------------------
+#
+# The rule above builds the reference's IR; the compiler executes two
+# of its shapes in a cheaper, equal form (compiler.py). These match
+# only what the rule itself produces: ΔR is confirmed by re-deriving
+# Δ(R) through this module's recursion, and a side whose rewrite
+# declined (ΔR is R itself) never matches.
+
+
+def _is_delta_of(dr: Plan, r: Plan) -> bool:
+    try:
+        return dr != r and dr == _delta_or_self(r)
+    except UnsupportedIncrementalOperator:
+        return False
+
+
+def split_join_delta(node: Plan):
+    """Match the inner/cross join rule's union
+    ``[J(ΔL,ΔR), J(L,ΔR), J(ΔL,R)]``; return ``(J, L, R, ΔL, ΔR)``
+    or None."""
+    if not (isinstance(node, Union) and len(node.inputs) == 3):
+        return None
+    if {type(b) for b in node.inputs} not in ({Join}, {CrossJoin}):
+        return None
+    both, old_left, old_right = node.inputs
+    if isinstance(both, Join) and both.join_type not in _DELTA_SAFE_JOIN_TYPES:
+        return None
+    dl, dr = both.left, both.right
+    left, right = old_left.left, old_right.right
+    if node != Union(
+        [both, both.rebuild((left, dr)), both.rebuild((dl, right))]
+    ) or not _is_delta_of(dr, right):
+        return None
+    return both, left, right, dl, dr
+
+
+def split_new_state(node: Plan) -> Plan | None:
+    """Match the semi rule's ``R ∪ ΔR`` (the right side's new state);
+    return R or None."""
+    if isinstance(node, Union) and len(node.inputs) == 2:
+        right, dr = node.inputs
+        if _is_delta_of(dr, right):
+            return right
+    return None

@@ -21,27 +21,29 @@ matches on):
 
 - Δπ_e(R)  = π_e(ΔR)                       (sign carried through)
 - Δσ_p(R)  = σ_p(ΔR)
-- Δ(R ⋈ S) = (ΔR⋈ΔS) ∪ (R_old⋈ΔS) ∪ (ΔR⋈S_old),
-             sign(out) = sign(l) · sign(r)   (un-delta'd side ≡ +1)
-- Δ(R × S) = same three branches, cross
+- Δ(R ⋈ S) = (ΔR⋈S_new) ∪ (R_old⋈ΔS),
+             sign(out) = sign of the Δ side   (state side ≡ +1)
+- Δ(R × S) = same two branches, cross
 - Δ(∪ᵢRᵢ)  = ∪ᵢ ΔRᵢ
 - ΔScan(T) = the table's signed change batch
 
-The join rule is the bilinear identity (new⋈new − old⋈old expands to
-exactly those three signed branches); unlike the positive-only rule it
-is sound for deletes and updates, not just inserts. Non-linear
-operators (outer/semi/anti joins, MIN/MAX) have no signed-linear rule;
-they are maintained by *delta-scoped recompute* in
+The join rule is the bilinear identity: new⋈new − old⋈old =
+ΔR⋈S_new + R_old⋈ΔS, because S_new = S_old + ΔS as signed multisets.
+The reference's three-branch form (ΔR⋈ΔS as a branch of its own) is
+the same sum with ΔR joined twice; both compilers execute the two
+branches through one helper, ``compiler._join_delta``. Unlike the
+positive-only rule it is sound for deletes and updates, not just
+inserts. Non-linear operators (outer/semi/anti joins, MIN/MAX) have no
+signed-linear rule; they are maintained by *delta-scoped recompute* in
 ``operators/signed_queries.py`` — recompute old-vs-new restricted to
 the touched key slice, which is sound for any operator and touches
 work proportional to |Δ|, not |base|.
 
 At 100 TB: a signed change batch is small relative to the base table,
-so the two mixed join branches are skew joins of a huge snapshot
-against a tiny Δ — AQE turns them into broadcast joins at runtime,
-exactly as in the positive-delta compiler. ``consolidate`` (the
-net-change groupBy) is the only extra shuffle, and it runs on delta-
-sized data.
+so both join branches are skew joins of a huge state against a tiny
+Δ — AQE turns them into broadcast joins at runtime, exactly as in the
+positive-delta compiler. ``consolidate`` (the net-change groupBy) is
+the only extra shuffle, and it runs on delta-sized data.
 """
 
 from __future__ import annotations
@@ -52,7 +54,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
-from .compiler import _compile, scan_by_name
+from .compiler import _compile, _join, _join_delta, scan_by_name
 from .nodes import (
     CrossJoin,
     Filter,
@@ -325,8 +327,7 @@ def compile_signed_delta(ir: Plan, catalog: SignedDeltaCatalog) -> DataFrame:
         return compile_signed_delta(ir.input, catalog).where(ir.predicate)
 
     if isinstance(ir, (Join, CrossJoin)):
-        is_keyed = isinstance(ir, Join)
-        if is_keyed and ir.join_type not in ("inner", "cross"):
+        if isinstance(ir, Join) and ir.join_type not in ("inner", "cross"):
             raise UnsupportedIncrementalOperator(
                 f"signed-linear rewrite covers inner/cross joins only; "
                 f"got {ir.join_type!r} — use the delta-scoped recompute "
@@ -334,35 +335,17 @@ def compile_signed_delta(ir: Plan, catalog: SignedDeltaCatalog) -> DataFrame:
             )
         dl = compile_signed_delta(ir.left, catalog).withColumnRenamed(SIGN, "_sl")
         dr = compile_signed_delta(ir.right, catalog).withColumnRenamed(SIGN, "_sr")
-        ol = compile_old(ir.left, catalog)
-        orr = compile_old(ir.right, catalog)
 
-        def joined(left: DataFrame, right: DataFrame) -> DataFrame:
-            left, right = left.alias("l"), right.alias("r")
-            if is_keyed:
-                conds = [
-                    F.col(f"l.{lc}").eqNullSafe(F.col(f"r.{rc}"))
-                    if ir.null_equals_null
-                    else F.col(f"l.{lc}") == F.col(f"r.{rc}")
-                    for lc, rc in ir.on
-                ]
-                if ir.filter:
-                    conds.append(F.expr(ir.filter))
-                if conds:
-                    return left.join(right, reduce(lambda a, b: a & b, conds),
-                                     "inner")
-            return left.crossJoin(right)
+        def signed(branch: DataFrame) -> DataFrame:
+            # The un-delta'd side carries no sign (≡ +1), so a branch's
+            # sign is its Δ side's; it moves last for the positional union.
+            side = "_sl" if "_sl" in branch.columns else "_sr"
+            return branch.withColumn(SIGN, F.col(side).cast("bigint")).drop(side)
 
-        def sign_of(df: DataFrame) -> DataFrame:
-            have = [c for c in ("_sl", "_sr") if c in df.columns]
-            sign = reduce(lambda a, b: a * b, (F.col(c) for c in have))
-            return df.withColumn(SIGN, sign.cast("bigint")).drop(*have)
-
-        # Bilinear expansion of new⋈new − old⋈old; branch order mirrors
-        # the reference's positive rule ([Δ⋈Δ, old⋈Δ, Δ⋈old],
-        # optimizer_rules/mod.rs:150-157) for test comparability.
-        branches = [joined(dl, dr), joined(ol, dr), joined(dl, orr)]
-        return reduce(lambda a, b: a.union(b), (sign_of(b) for b in branches))
+        return _join_delta(
+            ir, dl, compile_new(ir.right, catalog),
+            compile_old(ir.left, catalog), dr, finish=signed,
+        )
 
     if isinstance(ir, Union):
         parts = [compile_signed_delta(i, catalog) for i in ir.inputs]
@@ -453,22 +436,11 @@ def compile_signed_delta_scoped_join(
 
     def _slice(side: str) -> DataFrame:
         compile_side = compile_old if side == "old" else compile_new
-        left = _restrict(compile_side(node.left, catalog), lkeys).alias("l")
-        right = _restrict(compile_side(node.right, catalog), rkeys).alias(
-            "r"
+        out = _join(
+            node,
+            _restrict(compile_side(node.left, catalog), lkeys),
+            _restrict(compile_side(node.right, catalog), rkeys),
         )
-        conds = [
-            F.col(f"l.{lc}").eqNullSafe(F.col(f"r.{rc}"))
-            if node.null_equals_null
-            else F.col(f"l.{lc}") == F.col(f"r.{rc}")
-            for lc, rc in node.on
-        ]
-        if node.filter:
-            conds.append(F.expr(node.filter))
-        how = {"semi": "left_semi", "anti": "left_anti"}.get(
-            node.join_type, node.join_type
-        )
-        out = left.join(right, reduce(lambda a, b: a & b, conds), how)
         for layer in reversed(path):
             if isinstance(layer, Projection):
                 out = out.selectExpr(*layer.select_exprs)
@@ -719,20 +691,7 @@ def compile_signed_delta_scoped_chain(
         compile_side = compile_old if side == "old" else compile_new
         cur = _restrict_fact(compile_side(fact, catalog))
         for j in joins:
-            left = cur.alias("l")
-            right = compile_side(j.right, catalog).alias("r")
-            conds = [
-                F.col(f"l.{lc}").eqNullSafe(F.col(f"r.{rc}"))
-                if j.null_equals_null
-                else F.col(f"l.{lc}") == F.col(f"r.{rc}")
-                for lc, rc in j.on
-            ]
-            if j.filter:
-                conds.append(F.expr(j.filter))
-            how = {"semi": "left_semi", "anti": "left_anti"}.get(
-                j.join_type, j.join_type
-            )
-            cur = left.join(right, reduce(lambda a, b: a & b, conds), how)
+            cur = _join(j, cur, compile_side(j.right, catalog))
         for layer in reversed(path):
             if isinstance(layer, Projection):
                 cur = cur.selectExpr(*layer.select_exprs)

@@ -1009,7 +1009,8 @@ def maintain_agg_of_sql(
 #     agg(J ∪ ΔJ) == merge(agg(J), agg(ΔJ))       where ΔJ = Δ(A ⋈ B)
 # so the maintained aggregate is: partial over the old join snapshot
 # (standing in for the stored state) merged with a partial over the
-# 3-branch join delta — only the delta branches touch fresh rows.
+# join delta (three branches in the IR, two executed: ΔA⋈B_new and
+# A_old⋈ΔB) — only the delta branches touch fresh rows.
 # ------------------------------------------------------------------
 
 
@@ -1134,10 +1135,10 @@ def maintain_join_agg_of_sql(
     """SQL GROUP BY over a JOIN → incrementally-maintained aggregate.
 
     The join fragment goes through the same IR + PosDelta rewrite as
-    ``delta_of_sql`` (3-branch join delta, snapshot sides = old
-    versions); the aggregate is maintained by partial-union-merge over
-    (old-join snapshot partial) ∪ (join-delta partial). Exact for
-    count/min/max and integer sums; HAVING filters the merged state.
+    ``delta_of_sql`` (join delta executed as ΔA⋈B_new ∪ A_old⋈ΔB);
+    the aggregate is maintained by partial-union-merge over (old-join
+    snapshot partial) ∪ (join-delta partial). Exact for count/min/max
+    and integer sums; HAVING filters the merged state.
     """
     spec = parse_join_agg_sql(sql)
     ir = sql_to_ir(spec["fragment_sql"])
@@ -1178,7 +1179,7 @@ def maintain_join_agg_of_sql(
         )
     for i, a in cds:
         # The projected fragment already aliased this agg's argument to
-        # _a{i} on both the snapshot join and the 3-branch join delta.
+        # _a{i} on both the snapshot join and the join delta.
         frames.append(_count_distinct_frame(
             snap, delt, key_cols, spec["key_names"], f"_a{i}", a["out"]
         ))
@@ -1398,7 +1399,7 @@ def maintain_join_agg_of_sql_signed(
 
     INNER/CROSS join fragments run through the bilinear signed rewrite
     (``compile_signed_delta`` — sound for retractions, unlike the
-    positive 3-branch rule); a single LEFT/RIGHT/FULL OUTER (or
+    positive rule); a single LEFT/RIGHT/FULL OUTER (or
     SEMI/ANTI) equi-join fragment routes through the delta-scoped
     recompute compiler instead
     (``compile_signed_delta_scoped_join`` — old-vs-new diff on the

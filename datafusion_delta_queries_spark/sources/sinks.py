@@ -25,6 +25,28 @@ import urllib.parse
 from pyspark.sql import DataFrame, SparkSession
 
 
+def first_part_file(d: str) -> str | None:
+    """The first parquet part file directly under ``d``, or None. One
+    ``df.write`` produced every part, so they share one schema."""
+    for name in sorted(os.listdir(d)):
+        if not name.startswith(("_", ".")) and name.endswith(".parquet"):
+            return os.path.join(d, name)
+    return None
+
+
+def _footer_columns(path: str) -> list[str] | None:
+    """Column names from the footer of a parquet table directory — a
+    driver-side metadata read, no Spark job. None when there is no
+    readable part file."""
+    import pyarrow.parquet as pq
+
+    try:
+        part = first_part_file(path)
+        return None if part is None else pq.read_schema(part).names
+    except (OSError, ValueError):
+        return None
+
+
 def write_partitioned(
     df: DataFrame, path: str, partition_cols: list[str], fmt: str = "parquet"
 ) -> None:
@@ -110,7 +132,9 @@ def upsert(
     depend on partition order, and a silent nondeterministic merge is
     worse than an error. A key appearing in both ``updates`` and
     ``deletes`` is deleted (the delete anti-join applies last,
-    deterministically).
+    deterministically). A batch whose column set differs from the
+    target's is rejected too: the merge would drop the columns it
+    lacks, or NULL-fill the ones it adds, for every surviving row.
 
     ``assume_unique_keys=True`` skips the duplicate-key guard's Spark
     job — ONLY for callers whose ``updates`` frame is key-unique by
@@ -136,7 +160,18 @@ def upsert(
     # Explicit schema: a merge requires identical schemas anyway, and
     # schema inference on every state read costs a footer-read job
     # (~0.3 s per read at any scale; a catalogued production table
-    # serves its schema from metadata the same way).
+    # serves its schema from metadata the same way). For the same
+    # reason the column-set check reads the target's footer (no job);
+    # the inferred read is only its fallback.
+    on_disk = _footer_columns(target_path) if fmt == "parquet" else None
+    if on_disk is None:
+        on_disk = spark.read.format(fmt).load(target_path).columns
+    if set(on_disk) != set(updates.columns):
+        raise ValueError(
+            f"upsert(): updates columns {sorted(updates.columns)} differ "
+            f"from the target's {sorted(on_disk)} at {target_path}; align "
+            f"the batch to the table schema first"
+        )
     target = spark.read.format(fmt).schema(updates.schema).load(target_path)
     merged = target.join(updates, key_cols, "left_anti").unionByName(updates)
     if deletes is not None:

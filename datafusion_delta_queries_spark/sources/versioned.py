@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from ..catalog import load_table
 from ..plans.compiler import DeltaCatalog
 from ..plans.signed import SignedDeltaCatalog
+from .sinks import first_part_file
 
 _VDIR = re.compile(r"^v=(\d{8})$")
 _CKPTDIR = re.compile(r"^ckpt=(\d{8})$")
@@ -52,8 +53,12 @@ def _dir_schema(d: str):
     share a schema) — a driver-side metadata read, no Spark job. The
     memo key carries the dir mtime so a recreated table at the same
     path re-reads. Returns None when anything is unusual (caller falls
-    back to an inferred read)."""
+    back to an inferred read), including INT96 and nanosecond
+    timestamps, which Spark's reader types differently from the Arrow
+    schema (TIMESTAMP, or an error, where Arrow says NTZ)."""
     try:
+        import json
+
         import pyarrow.parquet as pq
 
         from pyspark.sql.pandas.types import from_arrow_schema
@@ -62,14 +67,20 @@ def _dir_schema(d: str):
         s = _DIR_SCHEMA_MEMO.get(key)
         if s is not None:
             return s
-        for name in sorted(os.listdir(d)):
-            if name.startswith(("_", ".")) or not name.endswith(".parquet"):
-                continue
-            pa_schema = pq.ParquetFile(os.path.join(d, name)).schema_arrow
-            s = from_arrow_schema(pa_schema, prefer_timestamp_ntz=True)
-            _DIR_SCHEMA_MEMO[key] = s
-            return s
-        return None
+        part = first_part_file(d)
+        if part is None:
+            return None
+        pf = pq.ParquetFile(part)
+        if any(
+            c.physical_type == "INT96"
+            or json.loads(c.logical_type.to_json()).get("timeUnit")
+            == "nanoseconds"
+            for c in pf.schema
+        ):
+            return None
+        s = from_arrow_schema(pf.schema_arrow, prefer_timestamp_ntz=True)
+        _DIR_SCHEMA_MEMO[key] = s
+        return s
     except Exception:
         return None
 

@@ -54,9 +54,25 @@ def leafy(draw, table):
 
 @st.composite
 def plans(draw):
-    shape = draw(st.sampled_from(["simple", "join", "semi", "cross", "union"]))
+    shape = draw(
+        st.sampled_from(["simple", "join", "chain", "semi", "cross", "union"])
+    )
     if shape == "simple":
         return draw(leafy(draw(st.sampled_from(list(TABLES)))))
+    if shape == "chain":
+        # orders⋈customer⋈nation, all three with appended rows: one
+        # join side is itself a join, so its delta is a nested join
+        # delta (left-deep: ΔL; right-deep: ΔR).
+        orders = Projection(["o_orderkey", "o_custkey"], Scan("orders"))
+        if draw(st.booleans()):
+            orders = Filter("o_orderkey % 3 = 0", orders)
+        cust, nation = draw(leafy("customer")), draw(leafy("nation"))
+        oc, cn = [("o_custkey", "c_custkey")], [("c_nationkey", "n_nationkey")]
+        if draw(st.booleans()):
+            node = Join(Join(orders, cust, on=oc), nation, on=cn)
+        else:
+            node = Join(orders, Join(cust, nation, on=cn), on=oc)
+        return Projection(["o_orderkey", "c_name", "n_name"], node)
     if shape == "join":
         l = draw(leafy("customer"))
         r = draw(leafy("nation"))
@@ -172,9 +188,31 @@ def signed_leafy(draw, table):
 
 @st.composite
 def signed_plans(draw):
-    shape = draw(st.sampled_from(["simple", "join", "cross", "union"]))
+    shape = draw(st.sampled_from(["simple", "join", "chain", "cross", "union"]))
     if shape == "simple":
         return draw(signed_leafy(draw(st.sampled_from(list(SIGNED_TABLES)))))
+    if shape == "chain":
+        # lineitem⋈orders⋈customer, all three with inserts, deletes and
+        # updates: a nested signed join delta on the left or the right.
+        items = Projection(
+            ["l_orderkey", "l_linenumber", "l_extendedprice"], Scan("lineitem")
+        )
+        orders = Scan("orders")
+        if draw(st.booleans()):
+            orders = Filter(draw(st.sampled_from(SIGNED_TABLES["orders"][1])), orders)
+        if draw(st.booleans()):
+            orders = Projection(["o_orderkey", "o_custkey", "o_totalprice"], orders)
+        cust = draw(signed_leafy("customer"))
+        lo, oc = [("l_orderkey", "o_orderkey")], [("o_custkey", "c_custkey")]
+        if draw(st.booleans()):
+            node = Join(Join(items, orders, on=lo), cust, on=oc)
+        else:
+            node = Join(items, Join(orders, cust, on=oc), on=lo)
+        return Projection(
+            ["l_orderkey", "l_linenumber", "l_extendedprice", "o_totalprice",
+             "c_name"],
+            node,
+        )
     if shape == "join":
         l = draw(signed_leafy("customer"))
         r = draw(signed_leafy("nation"))  # static right side

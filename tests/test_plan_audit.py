@@ -8,6 +8,8 @@ as a test failure, not a bench surprise.
 
 from __future__ import annotations
 
+import re
+
 from datafusion_delta_queries_spark.operators.llm_pipeline import (
     q_llm_dedup_minhash_lsh,
     q_llm_dedup_ngram_jaccard,
@@ -35,14 +37,23 @@ def _plan(df) -> str:
     )
 
 
+_JOIN_NODE = re.compile(r"(?m)^[\s:+\-|]*(\w*Join\w*|CartesianProduct)\b")
+_SCAN_NODE = re.compile(r"(?m)^[\s:+\-|]*(FileScan|Scan)\s")
+
+
+def _joins_and_scans(df) -> tuple[int, int]:
+    """(join nodes, file scans) of the physical plan before AQE
+    re-planning — deterministic, unlike the runtime join choices."""
+    text = df._jdf.queryExecution().sparkPlan().toString()
+    return len(_JOIN_NODE.findall(text)), len(_SCAN_NODE.findall(text))
+
+
 def _documents_scan_pruned_to_lang_filter(plan: str) -> bool:
     """True iff some documents.parquet scan block pushes a lang=en
     filter AND reads only (doc_id, lang). Matched on the block's
     PushedFilters/ReadSchema content, not on Spark's exact explain
     formatting, so a cosmetic format change in a Spark upgrade cannot
     read as a pruning regression (r16 ADVICE item)."""
-    import re
-
     for block in re.split(r"\n\(\d+\) ", plan):
         if "documents.parquet" not in block:
             continue
@@ -99,17 +110,15 @@ def test_no_cartesian_in_lsh_paths(spark):
 
 
 def test_delta_join_physical_shape(spark):
-    """The compiled delta join is a 3-branch union of joins whose
-    delta-side scans carry the append-split predicate (pushed down)."""
+    """The compiled delta join is a union of exactly two joins,
+    ΔL⋈R_new and L_old⋈ΔR, whose delta-side scans carry the
+    append-split predicate (pushed down)."""
     from datafusion_delta_queries_spark.operators.delta_queries import q_delta_join
 
     df = q_delta_join(spark, SF_SMALL)
     plan = _plan(df)
     assert "Union" in plan
-    n_joins = plan.count("Join Inner") + plan.count("SortMergeJoin") + plan.count(
-        "BroadcastHashJoin"
-    ) + plan.count("ShuffledHashJoin")
-    assert n_joins >= 3, plan
+    assert _joins_and_scans(df)[0] == 2, plan
     # Append-split predicates reach the parquet scans as pushed filters.
     assert "PushedFilters" in plan
     assert "o_orderkey" in plan and "c_custkey" in plan
@@ -123,31 +132,75 @@ def test_delta_join_null_safe_stays_hash_join(spark):
         q_delta_join_null_safe,
     )
 
-    plan = _plan(q_delta_join_null_safe(spark, SF_SMALL))
+    df = q_delta_join_null_safe(spark, SF_SMALL)
+    plan = _plan(df)
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
-    n_joins = (
-        plan.count("SortMergeJoin")
-        + plan.count("BroadcastHashJoin")
-        + plan.count("ShuffledHashJoin")
-    )
-    assert n_joins >= 3, plan
+    assert _joins_and_scans(df)[0] == 2, plan
 
 
 def test_sql_frontend_pushdown_survives_parse(spark):
     """The SQL-string path must compile to the same pushed-down scans
     as the hand-built IR: WHERE and append-split predicates reach the
-    parquet scans; the 3-branch union of joins is intact."""
+    parquet scans; the delta is a union of exactly two joins."""
     from datafusion_delta_queries_spark.operators.delta_queries import (
         q_delta_sql_frontend,
     )
 
-    plan = _plan(q_delta_sql_frontend(spark, SF_SMALL))
+    df = q_delta_sql_frontend(spark, SF_SMALL)
+    plan = _plan(df)
     assert "Union" in plan
+    assert _joins_and_scans(df)[0] == 2, plan
     assert "PushedFilters" in plan
     # The user's WHERE (o_totalprice > 250000) is pushed into the scan.
     assert "o_totalprice" in plan and "250000" in plan
     assert "CartesianProduct" not in plan
+
+
+# The lineitem⋈orders⋈customer⋈nation⋈region⋈supplier chain, 2 to 6
+# tables: the reference IR keeps its three-branch size (3ⁿ-like), the
+# executed plan runs two branches per level (quadratic).
+_CHAIN = (
+    ("lineitem", None),
+    ("orders", "lineitem.l_orderkey = orders.o_orderkey"),
+    ("customer", "orders.o_custkey = customer.c_custkey"),
+    ("nation", "customer.c_nationkey = nation.n_nationkey"),
+    ("region", "nation.n_regionkey = region.r_regionkey"),
+    ("supplier", "lineitem.l_suppkey = supplier.s_suppkey"),
+)
+
+
+def test_delta_chain_plan_size_is_quadratic_in_depth(spark):
+    """Pins the pre-AQE physical joins and scans of ``delta_of_sql``
+    over the chain at depths 2-6, so a regression back to executing
+    the three-branch rule (10/25/56/119 joins at depths 3-6) fails
+    here whatever the host's timing noise."""
+    from datafusion_delta_queries_spark.plans import (
+        Join,
+        PosDelta,
+        delta_of_sql,
+        rewrite_pos_delta,
+        sql_to_ir,
+    )
+
+    def ir_joins(node) -> int:
+        return isinstance(node, Join) + sum(map(ir_joins, node.children))
+
+    got = {}
+    for depth in range(2, 7):
+        sql = "SELECT l_orderkey, l_linenumber FROM lineitem" + "".join(
+            f" JOIN {t} ON {on}" for t, on in _CHAIN[1:depth]
+        )
+        ir = rewrite_pos_delta(PosDelta(sql_to_ir(sql)))
+        executed = _joins_and_scans(delta_of_sql(spark, SF_SMALL, sql))
+        got[depth] = (ir_joins(ir), *executed)
+    assert got == {
+        2: (3, 2, 4),
+        3: (10, 5, 8),
+        4: (25, 9, 13),
+        5: (56, 14, 19),
+        6: (119, 20, 26),
+    }
 
 
 def test_sql_agg_maintenance_partials_and_pushdown(spark):
@@ -165,7 +218,7 @@ def test_sql_agg_maintenance_partials_and_pushdown(spark):
 
 def test_sql_join_agg_partials_and_pushdown(spark):
     """Join+aggregate maintenance: two-level hash aggregation over the
-    3-branch join delta, WHERE pushed to the orders scans, and no
+    two-branch join delta, WHERE pushed to the orders scans, and no
     cartesian anywhere in the nested delta union."""
     from datafusion_delta_queries_spark.operators.delta_queries import (
         q_delta_sql_join_agg,
@@ -387,15 +440,18 @@ def test_decontaminate_broadcasts_eval_side(spark):
 
 def test_signed_join_no_cartesian_and_change_pushdown(spark):
     """The signed bilinear join rewrite (plans/signed.py) must emit
-    keyed hash joins on all three branches with the change-batch
-    mod-class splits applied at the scans — never a cartesian."""
+    exactly two keyed joins, ΔL⋈R_new and L_old⋈ΔR, with the
+    change-batch mod-class splits applied at the scans — never a
+    cartesian."""
     from datafusion_delta_queries_spark.operators.signed_queries import (
         q_signed_join,
     )
 
-    plan = _plan(q_signed_join(spark, SF_SMALL))
+    df = q_signed_join(spark, SF_SMALL)
+    plan = _plan(df)
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
+    assert _joins_and_scans(df)[0] == 2, plan
     # The CDC mod-class splits must appear as scan-adjacent Filter
     # conditions (modulo predicates are not parquet-pushable, so
     # asserting on PushedFilters would be vacuous — it prints

@@ -217,6 +217,24 @@ def test_upsert_failure_leaves_target_intact(spark, tmp_path, monkeypatch):
     assert got == [(1, "a"), (2, "B")]
 
 
+def test_upsert_rejects_batch_missing_a_target_column(spark, tmp_path):
+    """A batch that lacks one of the target's columns must not rewrite
+    the table without it: the call raises and the table is unchanged."""
+    path = str(tmp_path / "t4")
+    spark.createDataFrame(
+        [(1, "a", 1.5), (2, "b", 2.5)], "k: bigint, v: string, w: double"
+    ).write.parquet(path)
+    drifted = spark.createDataFrame([(2, "B")], "k: bigint, v: string")
+    with pytest.raises(ValueError, match="differ from the target"):
+        upsert(spark, path, drifted, ["k"])
+    got = spark.read.parquet(path)
+    assert got.columns == ["k", "v", "w"]
+    assert sorted(tuple(r) for r in got.collect()) == [
+        (1, "a", 1.5),
+        (2, "b", 2.5),
+    ]
+
+
 def test_upsert_is_idempotent(spark, tmp_path):
     """Re-applying the same update batch is a no-op — the at-least-once
     retry story every ingest pipeline needs."""

@@ -318,6 +318,28 @@ def test_added_non_nullable_column_reads_as_nullable(spark, tmp_path):
     assert sorted(tuple(r) for r in s.collect()) == [(1, None), (2, 7.5)]
 
 
+def test_int96_commit_reads_as_spark_infers(spark, tmp_path):
+    """An INT96 timestamp column (a legacy writer's encoding) must read
+    with the type Spark itself infers for it, not the NTZ type its
+    Arrow schema maps to."""
+    import datetime
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    vt = VersionedTable(str(tmp_path / "t"))
+    os.makedirs(vt._version_dir(0))
+    pq.write_table(
+        pa.table({"id": [1], "ts": [datetime.datetime(2024, 1, 2, 3, 4, 5)]}),
+        os.path.join(vt._version_dir(0), "part-00000.parquet"),
+        use_deprecated_int96_timestamps=True,
+    )
+    inferred = spark.read.parquet(vt._version_dir(0))
+    s = vt.snapshot(spark, 0)
+    assert s.schema == inferred.schema
+    assert s.collect() == inferred.collect()
+
+
 # -- Checkpoint + vacuum: the 100 TB log-folding discipline ------------
 
 
