@@ -25,10 +25,17 @@ state table, which is small (one row per group), not the input.
 
 Insert-only batches refresh via ``refresh``; batches with deletes and
 updates (Delta-CDF shape, or pre-signed rows) via ``refresh_signed`` —
-sum/count/avg merge algebraically from signed partials, groups whose
-live row count reaches zero are deleted from the state table, and
-min/max (which cannot absorb a retraction) recompute delta-scoped
-from the post-change base, touched groups only.
+sum/count/avg merge algebraically from signed partials, and min/max
+(which cannot absorb a retraction) recompute delta-scoped from the
+post-change base, touched groups only.
+
+Every maintainer here writes through the one merge primitive,
+``sinks.upsert``/``upsert_partitioned``, as "replace the touched
+groups": the state becomes ``state ⋉̸ touched ∪ fresh``, where
+``fresh`` holds the complete new rows of the touched groups. A group
+whose live row count reaches zero (a pair netted to zero, a day whose
+hours all died, a row displaced from a top-k) is touched and has no
+fresh row, so it leaves without a separate delete frame.
 
 ``count(DISTINCT)`` is rejected here: its mergeable state is the
 distinct (keys, value) pair set, which belongs in its own table —
@@ -364,26 +371,31 @@ class ContinuousAggregate:
             df = df.where(f"NOT ({pred})")
         return df
 
-    def _upsert_state(self, merged: DataFrame, deletes=None) -> None:
-        """Persist a refresh: partition-pruned when the state table is
-        partitioned, whole-table staged swap otherwise. Groups inside
-        a recorded retention window never re-enter the state. Every
-        caller's ``merged`` is the output of a ``groupBy`` on the key
+    def _upsert_state(
+        self, updates: DataFrame, touched: DataFrame | None = None
+    ) -> None:
+        """Persist a refresh by replacing the touched groups (``touched``
+        defaults to the keys of ``updates``; a touched group with no
+        row in ``updates`` leaves the table): partition-pruned when the
+        state table is partitioned, whole-table staged swap otherwise.
+        Groups inside a recorded retention window never re-enter the
+        state, and their directories are never rewritten. Every
+        caller's ``updates`` is the output of a ``groupBy`` on the key
         columns — key-unique by construction — so the upsert's
         duplicate-key guard job is skipped."""
         keys = list(self.spec["key_names"])
-        merged = self._apply_retention(merged)
-        deletes = self._apply_retention(deletes)
+        updates = self._apply_retention(updates)
+        touched = self._apply_retention(touched)
         if self.partition_on:
             from ..sources.sinks import upsert_partitioned
 
             upsert_partitioned(
-                self.spark, self.path, merged, keys, self.partition_on,
-                deletes=deletes, assume_unique_keys=True,
+                self.spark, self.path, updates, keys, self.partition_on,
+                touched=touched, assume_unique_keys=True,
             )
         else:
             upsert(
-                self.spark, self.path, merged, keys, deletes=deletes,
+                self.spark, self.path, updates, keys, touched=touched,
                 assume_unique_keys=True,
             )
 
@@ -426,9 +438,10 @@ class ContinuousAggregate:
         (``_change_type`` column) or an already-signed one (``_sign``
         ∈ {±1}). sum/count/avg state merges algebraically from signed
         partials; a group whose live row count reaches zero is DELETED
-        from the state table (the keyed merge's WHEN MATCHED DELETE
-        arm). min/max state cannot absorb an arbitrary retraction (the
-        runner-up is gone from the partial), so statements carrying
+        from the state table (it is touched and has no fresh row, so
+        replacing the touched groups drops it). min/max state cannot
+        absorb an arbitrary retraction (the runner-up is gone from the
+        partial), so statements carrying
         min/max require ``base_new_df`` — the post-change base table.
         The repair is two-tier: a touched group whose stored extremum
         is NOT threatened by any retraction in the batch (no retracted
@@ -475,6 +488,12 @@ class ContinuousAggregate:
         (``base_new_df`` = post-change base for the recompute tier),
         and persists through the keyed upsert."""
         keys = self.spec["key_names"]
+        if self._minmax_cols and base_new_df is None:
+            raise ValueError(
+                "statement carries min/max: signed partials cannot "
+                "retract an extremum — pass base_new_df (the "
+                "post-change base) for delta-scoped recompute"
+            )
         # One batch aggregation carries both the mergeable signed
         # partials and the min/max repair probes (_i{i}: inserted-rows
         # extremum, _d{i}: most-threatening retracted value).
@@ -485,14 +504,21 @@ class ContinuousAggregate:
         # for dropped windows leave the batch here — a delete aimed at
         # a dropped group is not corruption, it is covered by the drop.
         # (Predicates reference output key names, hence post-groupBy.)
-        # Pinned: the aggregated change batch (tiny — one row per
-        # touched group) feeds the NULL-key guard, the merge, the
-        # min/max decision frame, and the touched-keys semi join —
-        # without the persist each of those actions re-scans the raw
-        # change relation.
-        delta_full = self._apply_retention(delta_full).persist()
-        merged_p = None
-        merged = None
+        delta_full = self._apply_retention(delta_full)
+        # Pins. Under AQE every reference to a cache that is not built
+        # yet runs as its own TableCacheQueryStage job (a pinned frame
+        # that one write reads three times runs as 4 identical save
+        # jobs), so a pin only pays where it saves a re-scan. Measured
+        # on the cdc_rollup benchmark (seed 1, 4 vCPU, jobs and input
+        # rows per op):
+        # - the aggregated change batch, read by the touched semi join,
+        #   the merge and the min/max decision frame: unpinned, each
+        #   re-runs the raw change scan (+2 jobs);
+        # - the touched stored slice, when min/max repair runs: the
+        #   merge and the decision frame share one fine-state scan
+        #   (unpinned: +4 jobs, +30k rows);
+        # - the final merged frame, below.
+        pinned = [delta_full.persist()]
         try:
             probe_cols = [a["ins"] for a in self._mm_aux] + [
                 a["del"] for a in self._mm_aux
@@ -501,43 +527,11 @@ class ContinuousAggregate:
             stored = self._read_state()
             touched_keys = delta_p.select(*keys)
             touched = stored.join(touched_keys, keys, "left_semi")
-            # Persist: the merged maintenance plan feeds the guard,
-            # the dead-group split, and the staged write — without
-            # pinning it, each action re-runs the stored-state read +
-            # combine aggregate (3-4× work per streamed batch).
-            merged_p = self._combine_of(
-                touched.unionByName(delta_p)
-            ).persist()
-            merged = merged_p
-            # ONE guard action for both invariants (r17: this ran as
-            # two separate limit(1).count() jobs per refresh; in a
-            # per-batch maintenance loop guard jobs are pure overhead).
-            # A NULL grouping key in the batch survives the groupBy as
-            # its own group in `merged`, so both checks read the same
-            # persisted frame. Null-key priority preserved.
-            null_cond = " OR ".join(f"`{n}` IS NULL" for n in keys)
-            guard = merged.agg(
-                F.max(F.expr(f"CASE WHEN {null_cond} THEN 1 ELSE 0 END"))
-                .alias("_nullkey"),
-                F.max(F.expr("CASE WHEN _rows < 0 THEN 1 ELSE 0 END"))
-                .alias("_neg"),
-            ).collect()[0]
-            if guard["_nullkey"]:
-                raise ValueError(
-                    "continuous aggregate: NULL grouping key in change batch"
-                )
-            if guard["_neg"]:
-                raise ValueError(
-                    "change batch retracts rows a group never had "
-                    "(negative live count) — refusing to corrupt the state"
-                )
             if self._minmax_cols:
-                if base_new_df is None:
-                    raise ValueError(
-                        "statement carries min/max: signed partials cannot "
-                        "retract an extremum — pass base_new_df (the "
-                        "post-change base) for delta-scoped recompute"
-                    )
+                touched = touched.persist()
+                pinned.append(touched)
+            merged = self._combine_of(touched.unionByName(delta_p))
+            if self._minmax_cols:
                 # Two-tier repair. Decision frame: per touched group,
                 # the batch's probe columns beside the STORED extrema
                 # (left join: a brand-new group has NULL stored state
@@ -589,24 +583,45 @@ class ContinuousAggregate:
                     .agg(*[F.expr(e) for e in self._minmax_partial])
                 )
                 mm = safe_mm.unionByName(recomp_mm)
-                # Pinned: the repaired frame embeds the delta-scoped
-                # base recompute — without the persist the upsert's
-                # staging write AND the dead-group anti-join would
-                # each re-run that base scan.
-                merged = (
-                    merged.drop(*self._minmax_cols)
-                    .join(mm, keys, "left")
-                    .persist()
+                merged = merged.drop(*self._minmax_cols).join(
+                    mm, keys, "left"
                 )
-            live = merged.where("_rows > 0")
-            dead = merged.where("_rows = 0").select(*keys)
-            self._upsert_state(live, deletes=dead)
+            # Pinned: the final merged frame feeds the guard and the
+            # write. The guard action builds the cache, so the write
+            # (live rows plus touched keys) reads only built caches —
+            # no second run of the state scan, the batch aggregate or
+            # the min/max recompute.
+            merged = merged.persist()
+            pinned.append(merged)
+            # ONE guard action for both invariants. A NULL grouping key
+            # in the batch survives the groupBy as its own group in
+            # `merged`, so both checks read the same frame. Null-key
+            # priority preserved.
+            null_cond = " OR ".join(f"`{n}` IS NULL" for n in keys)
+            guard = merged.agg(
+                F.max(F.expr(f"CASE WHEN {null_cond} THEN 1 ELSE 0 END"))
+                .alias("_nullkey"),
+                F.max(F.expr("CASE WHEN _rows < 0 THEN 1 ELSE 0 END"))
+                .alias("_neg"),
+            ).collect()[0]
+            if guard["_nullkey"]:
+                raise ValueError(
+                    "continuous aggregate: NULL grouping key in change batch"
+                )
+            if guard["_neg"]:
+                raise ValueError(
+                    "change batch retracts rows a group never had "
+                    "(negative live count) — refusing to corrupt the state"
+                )
+            # Replace every touched group: live groups get their new
+            # partials, a group at zero live rows is touched with no
+            # fresh row and so leaves the table.
+            self._upsert_state(
+                merged.where("_rows > 0"), touched=merged.select(*keys)
+            )
         finally:
-            if merged is not None and merged is not merged_p:
-                merged.unpersist()
-            if merged_p is not None:
-                merged_p.unpersist()
-            delta_full.unpersist()
+            for frame in pinned:
+                frame.unpersist()
 
     def stream_into(self, source_dir: str, schema, checkpoint_dir: str):
         """Refresh this view continuously from a file-source stream.
@@ -1158,12 +1173,15 @@ class ContinuousDistinctAggregate:
                     "change batch retracts (group, value) pairs it "
                     "never had — refusing to corrupt the state"
                 )
+            # Replace every touched pair: a pair netted to zero is
+            # touched with no fresh row, so it leaves the table.
             upsert(
                 self.spark,
                 self._table(i),
                 merged.where("_m > 0"),
                 keys,
-                deletes=merged.where("_m = 0").select(*keys),
+                touched=merged.select(*keys),
+                assume_unique_keys=True,
             )
         finally:
             merged.unpersist()
@@ -1234,8 +1252,9 @@ class ContinuousTopK:
 
     At 100 TB: state is k rows per group, refreshes are batch-sized
     plus the threatened groups' base slice, and the keyed upsert
-    rewrites only touched groups' rows (displaced rows leave through
-    the delete arm).
+    replaces only touched groups' rows (``touched`` is the group
+    columns, so displaced rows leave because their group is touched
+    and they are not re-written).
     """
 
     def __init__(
@@ -1285,20 +1304,6 @@ class ContinuousTopK:
         self._schemas.clear()  # rebuilt table: re-infer once
         self._rank(base_df).write.mode("errorifexists").parquet(self.path)
 
-    def _apply(self, candidates: DataFrame, touched: DataFrame) -> None:
-        """Replace touched groups' state with the re-ranked candidate
-        set; rows displaced from a group's top-k leave via deletes."""
-        keys = self.group_cols + self.id_cols
-        stored = _read_state_memo(self.spark, self.path, self._schemas)
-        fresh = self._rank(candidates)
-        old_touched = stored.join(
-            F.broadcast(touched), self.group_cols, "left_semi"
-        )
-        dead = old_touched.select(*keys).join(
-            fresh.select(*keys), keys, "left_anti"
-        )
-        upsert(self.spark, self.path, fresh, keys, deletes=dead)
-
     def refresh(self, delta_df: DataFrame) -> None:
         stored = _read_state_memo(self.spark, self.path, self._schemas)
         batch_top = self._rank(delta_df)
@@ -1306,7 +1311,13 @@ class ContinuousTopK:
         cand = stored.join(
             F.broadcast(touched), self.group_cols, "left_semi"
         ).unionByName(batch_top.select(*stored.columns))
-        self._apply(cand, touched)
+        # ``touched`` holds group columns only: every stored row of a
+        # touched group leaves, so rows displaced from its top-k are
+        # simply not re-written.
+        upsert(
+            self.spark, self.path, self._rank(cand),
+            self.group_cols + self.id_cols, touched=touched,
+        )
 
     def refresh_signed(
         self, changes_df: DataFrame, base_new_df: DataFrame | None = None
@@ -1388,7 +1399,6 @@ class ContinuousTopK:
                 .distinct()
                 .join(unsafe, gcols, "left_anti")
             )
-            keys = gcols + self.id_cols
             # Both candidate components restricted to SAFE groups — an
             # unsafe group's inserts are already covered by its base
             # recompute, and letting them leak in here would emit a second
@@ -1406,14 +1416,10 @@ class ContinuousTopK:
                 fresh_safe if fresh_unsafe is None
                 else fresh_safe.unionByName(fresh_unsafe.select(*stored.columns))
             )
-            touched = safe_touch.unionByName(unsafe).distinct()
-            old_touched = stored.join(
-                F.broadcast(touched), gcols, "left_semi"
+            upsert(
+                self.spark, self.path, fresh, gcols + self.id_cols,
+                touched=safe_touch.unionByName(unsafe),
             )
-            dead = old_touched.select(*keys).join(
-                fresh.select(*keys), keys, "left_anti"
-            )
-            upsert(self.spark, self.path, fresh, keys, deletes=dead)
         finally:
             dec.unpersist()
 
@@ -1522,8 +1528,10 @@ class ContinuousRollupCascade:
     Coarse repair is replace-per-touched-group: a batch touching hour
     ``h`` re-aggregates ALL surviving fine partials of ``day(h)``
     (a handful of rows via the broadcast semi join — ≤24 hourly rows
-    per touched day) into the complete new day partial and upserts it;
-    a day whose every hour died is deleted. Retractions need no
+    per touched day) into the complete new day partial, and the day
+    tier is rewritten as ``day ⋉̸ touched ∪ fresh`` in one write plan.
+    A day whose every hour died is touched and has no fresh row, so it
+    leaves — there is no separate dead-day frame. Retractions need no
     coarse-side base access: the fine tier has already absorbed them
     (including the two-tier min/max repair), and re-combining correct
     fine partials is exact by construction — which is the whole point
@@ -1669,15 +1677,13 @@ class ContinuousRollupCascade:
                 self.spark, lvl["path"], self._schemas
             )
 
-    def _repair_plan(
-        self, touched_c: DataFrame, level: int = 0
-    ) -> tuple[DataFrame, DataFrame]:
-        """(fresh, dead) for one level's repair: the touched groups'
-        complete new partials re-merged from the PREVIOUS tier's state
-        (semi-join pruned BEFORE the re-aggregation), and the touched
-        groups with no surviving finer rows. No base-table scan
-        anywhere in either plan — that is the cascade invariant the
-        plan audit pins."""
+    def _repair_plan(self, touched_c: DataFrame, level: int = 0) -> DataFrame:
+        """The touched groups' complete new partials at one level,
+        re-merged from the PREVIOUS tier's state (semi-join pruned
+        BEFORE the re-aggregation). A touched group with no surviving
+        finer rows has no row here. No base-table scan anywhere — that
+        is the cascade invariant the plan audit pins, on the write
+        plan ``sinks.replace_touched`` builds from this frame."""
         lvl = self.levels[level]
         prev_path = (
             self.fine.path if level == 0 else self.levels[level - 1]["path"]
@@ -1690,29 +1696,23 @@ class ContinuousRollupCascade:
         sliced = prev_state.withColumn(
             lvl["key"], F.expr(lvl["expr"])
         ).join(F.broadcast(touched_c), lvl["keys"], "left_semi")
-        fresh = sliced.groupBy(
+        return sliced.groupBy(
             *[F.col(k) for k in lvl["keys"]]
         ).agg(*[F.expr(e) for e in self.fine._combine])
-        dead = touched_c.join(fresh, lvl["keys"], "left_anti")
-        return fresh, dead
 
     def _repair(self, touched_c: DataFrame, level: int = 0) -> None:
         """Replace every touched group at one level from the (already
-        refreshed) previous tier; delete the ones with no surviving
-        finer rows. Work ∝ touched groups × fan-in. ``fresh`` is
-        pinned (it feeds both the dead-group anti-join and the staged
-        write) and is key-unique by construction (a groupBy output),
-        so the upsert's duplicate-key guard job is skipped."""
-        fresh, dead = self._repair_plan(touched_c, level)
-        fresh = fresh.persist()
-        try:
-            lvl = self.levels[level]
-            upsert(
-                self.spark, lvl["path"], fresh, lvl["keys"], deletes=dead,
-                assume_unique_keys=True,
-            )
-        finally:
-            fresh.unpersist()
+        refreshed) previous tier: the write is ``level ⋉̸ touched ∪
+        fresh``, so a group whose finer rows all died leaves because it
+        is touched and has no fresh row. Work ∝ touched groups ×
+        fan-in, in one write plan with no pinned frame. ``fresh`` is
+        key-unique by construction (a groupBy output), so the upsert's
+        duplicate-key guard job is skipped."""
+        lvl = self.levels[level]
+        upsert(
+            self.spark, lvl["path"], self._repair_plan(touched_c, level),
+            lvl["keys"], touched=touched_c, assume_unique_keys=True,
+        )
 
     def _repair_chain(self, touched: list[DataFrame]) -> None:
         for i, t in enumerate(touched):

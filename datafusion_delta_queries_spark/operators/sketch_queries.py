@@ -613,7 +613,7 @@ class ContinuousCms:
     (≤ CMS_D × CMS_W rows per group at any scale), a signed refresh
     hashes ONLY the change batch and upserts ONLY the (row, bucket)
     counters the batch touches — counters netting to zero LEAVE the
-    table (the upsert's delete surface), a counter driven negative
+    table (touched with no fresh row), a counter driven negative
     fails inside the plan, and untouched counters are never written.
     Insert-only feeds degenerate to pure counter adds; CDC feeds with
     deletes/updates stay exact because counters are linear — the
@@ -656,8 +656,9 @@ class ContinuousCms:
         )
         state = _read_state_memo(self.spark, self.state_path, self._schemas)
         # Net only the touched counters; everything else stays on disk
-        # untouched. Persist: the netted plan feeds the no-op probe,
-        # the upsert split, and the delete split.
+        # untouched. Persist: the netted plan feeds the no-op probe and
+        # the write, which reads it twice (nonzero counters, touched
+        # keys).
         netted = (
             delta.alias("d")
             .join(state.alias("s"), self._keys, "left")
@@ -680,14 +681,14 @@ class ContinuousCms:
         try:
             if netted.limit(1).count() == 0:
                 return
-            ups = netted.where("cnt <> 0")
-            dels = netted.where("cnt = 0").select(*self._keys)
+            # Replace every touched counter: one netted to zero is
+            # touched with no fresh row, so it leaves the table.
             upsert(
                 self.spark,
                 self.state_path,
-                ups,
+                netted.where("cnt <> 0"),
                 key_cols=self._keys,
-                deletes=dels,
+                touched=netted.select(*self._keys),
             )
         finally:
             netted.unpersist()

@@ -103,38 +103,77 @@ def write_clustered(
     w.write.format(fmt).mode("overwrite").save(path)
 
 
+def _touched_frame(
+    updates: DataFrame,
+    key_cols: list[str],
+    touched: DataFrame | None,
+    fn: str = "upsert",
+) -> DataFrame:
+    """The key frame a merge replaces: ``touched`` as given, or the
+    keys of ``updates`` when it is None. ``touched`` may name any
+    subset of ``key_cols`` — a group-level frame replaces every stored
+    row of each group it holds — but no other column."""
+    if touched is None:
+        return updates.select(*key_cols)
+    extra = [c for c in touched.columns if c not in key_cols]
+    if extra or not touched.columns:
+        raise ValueError(
+            f"{fn}(): touched columns {touched.columns} must be a "
+            f"non-empty subset of the merge key {key_cols}"
+        )
+    return touched
+
+
+def replace_touched(
+    target: DataFrame, updates: DataFrame, touched: DataFrame
+) -> DataFrame:
+    """``target ⋉̸ touched ∪ updates``: every target row whose key (on
+    ``touched``'s columns) is touched leaves, and ``updates`` is the
+    complete new content of the touched keys. One anti join; a touched
+    key with no row in ``updates`` is thereby deleted."""
+    return target.join(touched, touched.columns, "left_anti").unionByName(
+        updates
+    )
+
+
 def upsert(
     spark: SparkSession,
     target_path: str,
     updates: DataFrame,
     key_cols: list[str],
     fmt: str = "parquet",
-    deletes: DataFrame | None = None,
+    touched: DataFrame | None = None,
     assume_unique_keys: bool = False,
 ) -> None:
-    """Keyed MERGE (upsert) into a file-backed table: rows whose key
-    appears in ``updates`` are replaced, new keys are appended, rows
-    whose key appears in ``deletes`` (a key-columns-only DataFrame)
-    are removed, all other rows survive unchanged — the full
-    ``MERGE INTO … WHEN MATCHED DELETE`` surface, needed by
-    retraction-capable maintenance (a group whose count reaches zero
-    must leave the state table).
+    """Keyed MERGE into a file-backed table as "replace the touched
+    keys": the table becomes ``target ⋉̸ touched ∪ updates``.
+    ``touched`` is a key frame whose columns are a subset of
+    ``key_cols`` and defaults to the keys of ``updates`` — the plain
+    upsert: matched keys replaced, new keys appended, all other rows
+    unchanged. A caller that also removes keys passes them in
+    ``touched`` with no row in ``updates`` (``MERGE INTO … WHEN
+    MATCHED DELETE``, which retraction-capable maintenance needs: a
+    group whose count reaches zero must leave the state table). A
+    ``touched`` frame over a key prefix (e.g. the group columns of a
+    top-k view) replaces whole groups.
+
+    Precondition: ``touched`` covers every key in ``updates``. A key
+    in ``updates`` that ``touched`` misses keeps its old row beside
+    the new one; nothing checks this (it would cost a job per merge),
+    and every caller builds ``updates`` from its touched set.
 
     The plan is the canonical merge-without-transaction-log rewrite:
-    target LEFT ANTI JOIN updates on the key (one shuffle; survivors),
-    UNION ALL updates, full overwrite. On a transactional lakehouse
-    table this is ``MERGE INTO`` and rewrites only the files that
-    contain matched keys; with plain parquet the whole table rewrites,
-    so at 100 TB run it per partition directory (pair it with
-    ``write_partitioned`` and filter both sides to the partitions
-    ``updates`` touches — key pruning makes the anti-join cheap).
-    Duplicate keys in ``updates`` are rejected: last-writer-wins would
-    depend on partition order, and a silent nondeterministic merge is
-    worse than an error. A key appearing in both ``updates`` and
-    ``deletes`` is deleted (the delete anti-join applies last,
-    deterministically). A batch whose column set differs from the
-    target's is rejected too: the merge would drop the columns it
-    lacks, or NULL-fill the ones it adds, for every surviving row.
+    target LEFT ANTI JOIN touched on its columns (one shuffle or
+    broadcast; survivors), UNION ALL updates, full overwrite. On a
+    transactional lakehouse table this is ``MERGE INTO`` and rewrites
+    only the files that contain matched keys; with plain parquet the
+    whole table rewrites, so at 100 TB run it per partition directory
+    (``upsert_partitioned``). Duplicate keys in ``updates`` are
+    rejected: last-writer-wins would depend on partition order, and a
+    silent nondeterministic merge is worse than an error. A batch
+    whose column set differs from the target's is rejected too: the
+    merge would drop the columns it lacks, or NULL-fill the ones it
+    adds, for every surviving row.
 
     ``assume_unique_keys=True`` skips the duplicate-key guard's Spark
     job — ONLY for callers whose ``updates`` frame is key-unique by
@@ -143,6 +182,7 @@ def upsert(
     job per refresh; in a per-batch maintenance loop that overhead
     dominates the actual merge.
     """
+    touched = _touched_frame(updates, key_cols, touched)
     if not assume_unique_keys:
         dup = (
             updates.groupBy(*key_cols)
@@ -173,11 +213,7 @@ def upsert(
             f"the batch to the table schema first"
         )
     target = spark.read.format(fmt).schema(updates.schema).load(target_path)
-    merged = target.join(updates, key_cols, "left_anti").unionByName(updates)
-    if deletes is not None:
-        merged = merged.join(
-            deletes.select(*key_cols), key_cols, "left_anti"
-        )
+    merged = replace_touched(target, updates, touched)
     # Stage to a temp sibling directory, then swap into place. An
     # in-place mode("overwrite") deletes the target before writing, so
     # a mid-write failure (or executor loss) would lose the table with
@@ -282,25 +318,31 @@ def upsert_partitioned(
     key_cols: list[str],
     partition_cols: list[str],
     fmt: str = "parquet",
-    deletes: DataFrame | None = None,
+    touched: DataFrame | None = None,
     assume_unique_keys: bool = False,
 ) -> None:
     """Keyed MERGE into a directory-PARTITIONED table that rewrites
     only the partitions the batch touches — the 100 TB answer to plain
     ``upsert``'s whole-table rewrite (its own docstring says "run it
-    per partition directory"; this function is that, automated).
+    per partition directory"; this function is that, automated). The
+    merge is the same "replace the touched keys" as ``upsert``:
+    ``target ⋉̸ touched ∪ updates``, with ``touched`` defaulting to
+    the keys of ``updates``. The same precondition holds — ``touched``
+    covers every key in ``updates`` — and here it also keeps every
+    partition ``updates`` writes inside the touched set. ``touched``
+    must carry every partition column.
 
-    Mechanics: the touched partition values of ``updates`` ∪
-    ``deletes`` stay a DataFrame; the target read PRUNES to the
-    touched directories through a broadcast semi join (planned as a
+    Mechanics: the touched partition values of ``touched`` stay a
+    DataFrame; the target read PRUNES to the touched directories
+    through a broadcast semi join (planned as a
     ``dynamicpruningexpression`` on the scan — runtime directory
-    pruning, no driver-side partition list); the merge (anti-join ∪
-    updates − deletes) runs on that slice only; the write uses dynamic
-    partition overwrite (``partitionOverwriteMode=dynamic``), which
-    replaces exactly the partitions present in the output. A touched
-    partition whose rows are ALL deleted produces no output rows, so
-    dynamic overwrite would leave it stale — those emptied directories
-    are removed explicitly.
+    pruning, no driver-side partition list); the merge runs on that
+    slice only; the write uses dynamic partition overwrite
+    (``partitionOverwriteMode=dynamic``), which replaces exactly the
+    partitions present in the output. A touched partition whose rows
+    are ALL removed produces no output rows, so dynamic overwrite
+    would leave it stale — those emptied directories are removed
+    explicitly.
 
     ``partition_cols`` must be a subset of ``key_cols``: if the
     partition value were mutable, an update "moving" a key between
@@ -338,6 +380,16 @@ def upsert_partitioned(
             "would strand its old copy in a directory the pruned merge "
             "never reads. Partition on key columns (or use upsert())."
         )
+    touched = _touched_frame(
+        updates, key_cols, touched, "upsert_partitioned"
+    )
+    unpruned = [c for c in partition_cols if c not in touched.columns]
+    if unpruned:
+        raise ValueError(
+            f"upsert_partitioned(): touched lacks partition columns "
+            f"{unpruned} — the merge could not tell which directories "
+            "it rewrites"
+        )
     if not assume_unique_keys:
         dup = (
             updates.groupBy(*key_cols)
@@ -351,19 +403,13 @@ def upsert_partitioned(
                 f"upsert_partitioned(): updates contain duplicate keys on "
                 f"{key_cols}; deduplicate before merging"
             )
-    touch_frames = [updates.select(*partition_cols)]
-    if deletes is not None:
-        touch_frames.append(deletes.select(*partition_cols))
-    touched_df = touch_frames[0]
-    for f in touch_frames[1:]:
-        touched_df = touched_df.unionByName(f)
     # The touched set stays a (persisted, partition-count-sized)
     # DataFrame end to end: a one-row stats aggregate guards NULLs and
     # emptiness, the target scan prunes through a broadcast semi join
     # (runtime directory pruning), and the only partition tuples the
     # driver ever receives are the final emptied-directory rm list
     # inside overwrite_touched_partitions.
-    tdf = touched_df.distinct().persist()
+    tdf = touched.select(*partition_cols).distinct().persist()
     try:
         n, n_null = _touched_stats(tdf, partition_cols)
         if n_null:
@@ -384,13 +430,7 @@ def upsert_partitioned(
             target_path
         )
         sliced = prune_to_touched(target, tdf, partition_cols)
-        merged = sliced.join(updates, key_cols, "left_anti").unionByName(
-            updates
-        )
-        if deletes is not None:
-            merged = merged.join(
-                deletes.select(*key_cols), key_cols, "left_anti"
-            )
+        merged = replace_touched(sliced, updates, touched)
 
         overwrite_touched_partitions(
             spark, target_path, merged, partition_cols, tdf, fmt

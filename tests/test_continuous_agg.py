@@ -5,6 +5,8 @@ delta batch without rescanning history)."""
 
 from __future__ import annotations
 
+import itertools
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -1473,3 +1475,167 @@ def test_read_real_time_merges_tail_without_touching_state(
     # stale-free follow-up: a real refresh still lands correctly
     view.refresh(tail)
     assert norm(map(tuple, view.read().collect())) == want
+
+
+# -- per-refresh job budget (deterministic perf gate) ------------------
+
+
+def _jobs_in(spark, label, action):
+    """Spark jobs ``action`` starts, read back from the status tracker
+    under a fresh job group — host speed does not move this count."""
+    sc = spark.sparkContext
+    gid = f"job-budget-{label}-{next(_JOB_GROUP_SEQ)}"
+    sc.setJobGroup(gid, label)
+    try:
+        action()
+    finally:
+        sc._jsc.clearJobGroup()
+    return len(sc.statusTracker().getJobIdsForGroup(gid))
+
+
+_JOB_GROUP_SEQ = itertools.count()
+
+# Measured at SF_SMALL: a 3-tier cascade refresh and a single-tier
+# refresh of the same statement (sum, count, avg and a two-tier min).
+# Writing state as "replace the touched groups" took them from 81 and
+# 30 jobs; a count above the budget is a regression to explain.
+CASCADE3_REFRESH_JOBS = 30
+AGG_REFRESH_JOBS = 23
+
+
+def _events_cdf_cycle(ev):
+    """(old snapshot, CDF batch, new snapshot) on events: deletes that
+    hit stored minima, inserts, and value updates."""
+    s0 = ev.where("event_id % 3 = 0")
+    dels = s0.where("event_id % 9 = 0")
+    ins = ev.where("event_id % 3 = 1 AND event_id % 5 = 0")
+    upd_pre = s0.where("event_id % 9 = 3")
+    upd_post = upd_pre.withColumn("value", F.col("value") + 512.0)
+    batch = (
+        _cdf(dels, "delete")
+        .unionByName(_cdf(ins, "insert"))
+        .unionByName(_cdf(upd_pre, "update_preimage"))
+        .unionByName(_cdf(upd_post, "update_postimage"))
+    )
+    s1 = (
+        s0.where("event_id % 9 NOT IN (0, 3)")
+        .unionByName(upd_post)
+        .unionByName(ins)
+    )
+    return s0, batch, s1
+
+
+def test_refresh_signed_job_budget(spark, tmp_path):
+    """One signed refresh of a 3-tier rollup cascade and of a plain
+    continuous aggregate each stay within a pinned Spark-job budget
+    (maintainers are bounded by per-job fixed cost, so the count is the
+    deterministic half of any speedup claim), and both still land on
+    the recompute."""
+    from datafusion_delta_queries_spark.operators.continuous_agg import (
+        ContinuousRollupCascade,
+    )
+
+    ev = load_table(spark, SF_SMALL, "events")
+    s0, batch, s1 = _events_cdf_cycle(ev)
+
+    cascade = ContinuousRollupCascade(
+        spark, str(tmp_path / "c3"), CASCADE_SQL,
+        fine_key="bucket_h", coarse_key="bucket_d",
+        coarse_expr="date_trunc('day', bucket_h)",
+        more_levels=[("bucket_m", "date_trunc('month', bucket_d)")],
+    )
+    cascade.initialize(s0)
+    n_cascade = _jobs_in(
+        spark, "cascade3",
+        lambda: cascade.refresh_signed(batch, base_new_df=s1),
+    )
+    _assert_daily_equals(cascade, s1)
+
+    agg = ContinuousAggregate(spark, str(tmp_path / "agg"), CASCADE_SQL)
+    agg.initialize(s0)
+    n_agg = _jobs_in(
+        spark, "agg", lambda: agg.refresh_signed(batch, base_new_df=s1)
+    )
+    hourly = {
+        (r["bucket_h"], r["event_type"]): (r["n_events"], r["min_value"])
+        for r in agg.read().collect()
+    }
+    expect = {
+        (r["bucket_h"], r["event_type"]): (r["n"], r["m"])
+        for r in s1.groupBy(
+            F.date_trunc("hour", "ts").alias("bucket_h"), "event_type"
+        ).agg(F.count("*").alias("n"), F.min("value").alias("m")).collect()
+    }
+    assert hourly == expect
+
+    assert n_cascade <= CASCADE3_REFRESH_JOBS, n_cascade
+    assert n_agg <= AGG_REFRESH_JOBS, n_agg
+
+
+# -- retention contract ------------------------------------------------
+
+
+def test_signed_refresh_into_a_dropped_window(spark, tmp_path):
+    """Retention contract for signed batches: after ``drop_chunks`` on
+    partitioned state, a CDF batch whose deletes and updates fall in
+    the dropped window (as well as in-window) does not trip the
+    negative-count guard — the retracted rows' groups are gone by
+    policy — does not recreate a dropped ``yr=`` directory, and the
+    in-window groups equal a recompute over the post-change rows."""
+    import os
+
+    orders = load_table(spark, SF_SMALL, "orders")
+    sql = (
+        "SELECT date_trunc('year', o_orderdate) AS yr, "
+        "count(*) AS n_orders, "
+        "sum(CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT)) AS cents "
+        "FROM orders GROUP BY date_trunc('year', o_orderdate)"
+    )
+    path = str(tmp_path / "state")
+    view = ContinuousAggregate(spark, path, sql, partition_on=["yr"])
+    view.initialize(orders)
+    cut = "1998-01-01"
+    assert view.drop_chunks(f"yr < '{cut}'") > 0
+    dirs_after_drop = sorted(
+        d for d in os.listdir(path) if d.startswith("yr=")
+    )
+
+    # Deletes and updates on both sides of the cut. A dropped group's
+    # retraction alone would drive its (absent) count negative.
+    dels = orders.where("o_orderkey % 7 = 0")
+    upd_pre = orders.where("o_orderkey % 7 = 3")
+    upd_post = upd_pre.withColumn(
+        "o_totalprice", F.col("o_totalprice") + 100.0
+    )
+    assert dels.where(f"o_orderdate < '{cut}'").count() > 0
+    assert upd_pre.where(f"o_orderdate < '{cut}'").count() > 0
+    assert dels.where(f"o_orderdate >= '{cut}'").count() > 0
+    batch = (
+        _cdf(dels, "delete")
+        .unionByName(_cdf(upd_pre, "update_preimage"))
+        .unionByName(_cdf(upd_post, "update_postimage"))
+    )
+    view.refresh_signed(batch)
+
+    assert sorted(
+        d for d in os.listdir(path) if d.startswith("yr=")
+    ) == dirs_after_drop
+    after = (
+        orders.where("o_orderkey % 7 NOT IN (0, 3)").unionByName(upd_post)
+    )
+    want = {
+        (r["yr"], r["n_orders"], r["cents"])
+        for r in after.where(f"o_orderdate >= '{cut}'")
+        .groupBy(F.date_trunc("year", "o_orderdate").alias("yr"))
+        .agg(
+            F.count("*").alias("n_orders"),
+            F.sum(
+                F.expr("CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT)")
+            ).alias("cents"),
+        )
+        .collect()
+    }
+    got = {
+        (r["yr"], r["n_orders"], r["cents"]) for r in view.read().collect()
+    }
+    assert got == want

@@ -8,6 +8,7 @@ as a test failure, not a bench surprise.
 
 from __future__ import annotations
 
+import os
 import re
 
 from datafusion_delta_queries_spark.operators.llm_pipeline import (
@@ -809,11 +810,15 @@ def test_kmv_overlap_fanout_is_broadcast_and_state_bounded(spark):
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
 
-def test_rollup_cascade_repair_never_scans_the_base(spark, tmp_path):
+def test_rollup_cascade_repair_never_scans_the_base(
+    spark, tmp_path, monkeypatch
+):
     """The cascade invariant, pinned at the plan level: the coarse
-    repair's (fresh, dead) plans read the FINE state parquet only —
-    no events scan anywhere — and the touched-day restriction is a
-    broadcast semi join applied BEFORE the re-aggregation."""
+    repair's write plan (``coarse ⋉̸ touched ∪ fresh``) reads the FINE
+    state and the coarse state once each — no events scan anywhere —
+    the touched-day restriction is a broadcast semi join applied
+    BEFORE the re-aggregation, the touched days leave the coarse state
+    through exactly one anti join, and nothing in it is pinned."""
     from datafusion_delta_queries_spark.catalog import load_table
     from datafusion_delta_queries_spark.operators.continuous_agg import (
         ContinuousRollupCascade,
@@ -821,6 +826,7 @@ def test_rollup_cascade_repair_never_scans_the_base(spark, tmp_path):
     from datafusion_delta_queries_spark.operators.signed_queries import (
         _CASCADE_SQL,
     )
+    from datafusion_delta_queries_spark.sources import sinks
 
     ev = load_table(spark, SF_SMALL, "events")
     view = ContinuousRollupCascade(
@@ -834,12 +840,33 @@ def test_rollup_cascade_repair_never_scans_the_base(spark, tmp_path):
     # repair's own reads.
     t = view._touched_coarse(ev.limit(5))
     touched = spark.createDataFrame(t.collect(), t.schema)
-    fresh, dead = view._repair_plan(touched)
-    plan = _plan(fresh)
-    assert "events" not in plan  # fine-state scan only, never the base
-    assert plan.count("Location:") == 1  # the single fine-state scan
-    assert "LeftSemi" in plan and "BroadcastHashJoin" in plan
-    assert "events" not in _plan(dead)
+    # Capture the frame upsert() writes for the repair: the sink's one
+    # merge primitive builds it.
+    written = []
+    merge = sinks.replace_touched
+    monkeypatch.setattr(
+        sinks, "replace_touched",
+        lambda *a: written.append(merge(*a)) or written[-1],
+    )
+    view._repair(touched)
+    assert len(written) == 1
+    plan = _plan(written[0])
+    assert "events" not in plan  # state scans only, never the base
+    locations = re.findall(r"Location: \w+ \[([^\]]*)\]", plan)
+    assert len(locations) == 2, locations
+    assert sorted(os.path.basename(loc) for loc in locations) == [
+        "coarse", "fine"
+    ]
+    # The formatted plan numbers operators children-first, so the
+    # broadcast semi join runs before every aggregate iff its id is
+    # lower than theirs.
+    semi = re.findall(r"BroadcastHashJoin LeftSemi \w+ \((\d+)\)", plan)
+    aggs = re.findall(r"HashAggregate \((\d+)\)", plan)
+    assert len(semi) == 1 and aggs, plan
+    assert int(semi[0]) < min(int(a) for a in aggs)
+    assert plan.count("Join type: LeftAnti") == 1
+    assert "InMemoryRelation" not in plan
+    assert "InMemoryTableScan" not in plan
 
 
 def test_cube_expansion_is_a_single_generate(spark, tmp_path):

@@ -267,8 +267,9 @@ def _part_table(spark, tmp_path):
 
 
 def test_upsert_partitioned_equals_plain_upsert(spark, tmp_path):
-    """Same MERGE semantics as upsert(): matched keys replaced, new
-    keys appended, deletes applied — row sets identical."""
+    """Same MERGE semantics as upsert(): the touched keys are replaced
+    by the batch — matched keys replaced, new keys appended, a touched
+    key with no batch row removed — and the row set is identical."""
     from datafusion_delta_queries_spark.sources.sinks import (
         upsert_partitioned,
     )
@@ -285,20 +286,143 @@ def test_upsert_partitioned_equals_plain_upsert(spark, tmp_path):
     deletes = spark.createDataFrame(
         [(k2, "BUILDING")], "c_custkey: bigint, c_mktsegment: string"
     )
+    keys = ["c_custkey", "c_mktsegment"]
     upsert_partitioned(
-        spark, path, updates, ["c_custkey", "c_mktsegment"],
-        ["c_mktsegment"], deletes=deletes,
+        spark, path, updates, keys, ["c_mktsegment"],
+        touched=updates.select(*keys).unionByName(deletes),
     )
     got = spark.read.parquet(path).select(
         "c_custkey", "c_mktsegment", "c_name", "c_acctbal"
     )
     exp = (
-        base.join(updates, ["c_custkey", "c_mktsegment"], "left_anti")
+        base.join(updates, keys, "left_anti")
         .unionByName(updates)
-        .join(deletes, ["c_custkey", "c_mktsegment"], "left_anti")
+        .join(deletes, keys, "left_anti")
     )
     assert got.exceptAll(exp).count() == 0
     assert exp.exceptAll(got).count() == 0
+
+
+def _touched_case(spark):
+    """A target with replaced (2, 5), appended (4), deleted (3) and
+    untouched (1, 6) keys: the old ``(target ⋉̸ updates ∪ updates) ⋉̸
+    deletes`` merge and the touched form must agree on it."""
+    target = spark.createDataFrame(
+        [(1, "a", 1.0), (2, "a", 2.0), (3, "b", 3.0), (5, "b", 5.0),
+         (6, "c", 6.0)],
+        "k: bigint, seg: string, v: double",
+    )
+    updates = spark.createDataFrame(
+        [(2, "a", 20.0), (4, "b", 40.0), (5, "b", 50.0)],
+        "k: bigint, seg: string, v: double",
+    )
+    deletes = spark.createDataFrame([(3, "b")], "k: bigint, seg: string")
+    old = sorted(
+        tuple(r)
+        for r in target.join(updates, ["k", "seg"], "left_anti")
+        .unionByName(updates)
+        .join(deletes, ["k", "seg"], "left_anti")
+        .collect()
+    )
+    return target, updates, deletes, old
+
+
+def test_touched_form_equals_the_old_delete_merge(spark, tmp_path):
+    """``target ⋉̸ touched ∪ updates`` with touched = the batch keys
+    plus the deleted keys returns the old merge's rows, for both the
+    whole-table and the partition-pruned upsert."""
+    from datafusion_delta_queries_spark.sources.sinks import (
+        upsert_partitioned,
+    )
+
+    target, updates, deletes, old = _touched_case(spark)
+    assert old == [
+        (1, "a", 1.0), (2, "a", 20.0), (4, "b", 40.0), (5, "b", 50.0),
+        (6, "c", 6.0),
+    ]
+    touched = updates.select("k", "seg").unionByName(deletes)
+    flat, part = str(tmp_path / "flat"), str(tmp_path / "part")
+    target.write.parquet(flat)
+    target.write.partitionBy("seg").parquet(part)
+    upsert(spark, flat, updates, ["k", "seg"], touched=touched)
+    upsert_partitioned(
+        spark, part, updates, ["k", "seg"], ["seg"], touched=touched
+    )
+    for path in (flat, part):
+        got = spark.read.schema(target.schema).parquet(path).select(
+            *target.columns
+        )
+        assert sorted(tuple(r) for r in got.collect()) == old, path
+
+
+def test_group_level_touched_replaces_the_whole_group(spark, tmp_path):
+    """A ``touched`` frame over a key prefix (the top-k shape: group
+    columns only) replaces every stored row of each touched group —
+    rows of the group absent from the batch leave, other groups stay —
+    on both upsert paths."""
+    from datafusion_delta_queries_spark.sources.sinks import (
+        upsert_partitioned,
+    )
+
+    target = spark.createDataFrame(
+        [("g1", 1, 1.0), ("g1", 2, 2.0), ("g1", 3, 3.0), ("g2", 1, 9.0)],
+        "g: string, id: bigint, v: double",
+    )
+    fresh = spark.createDataFrame(
+        [("g1", 3, 3.0), ("g1", 4, 4.0)], "g: string, id: bigint, v: double"
+    )
+    touched = spark.createDataFrame([("g1",)], "g: string")
+    flat, part = str(tmp_path / "flat"), str(tmp_path / "part")
+    target.write.parquet(flat)
+    target.write.partitionBy("g").parquet(part)
+    upsert(spark, flat, fresh, ["g", "id"], touched=touched)
+    upsert_partitioned(
+        spark, part, fresh, ["g", "id"], ["g"], touched=touched
+    )
+    want = [("g1", 3, 3.0), ("g1", 4, 4.0), ("g2", 1, 9.0)]
+    for path in (flat, part):
+        got = spark.read.schema(target.schema).parquet(path).select(
+            *target.columns
+        )
+        assert sorted(tuple(r) for r in got.collect()) == want, path
+
+
+def test_touched_form_keeps_the_guards(spark, tmp_path):
+    """Passing ``touched`` does not bypass the duplicate-key or the
+    column-set guard, and a ``touched`` column outside the merge key
+    (or one that misses a partition column) is rejected; the table is
+    unchanged after every rejection."""
+    from datafusion_delta_queries_spark.sources.sinks import (
+        upsert_partitioned,
+    )
+
+    target, updates, deletes, _ = _touched_case(spark)
+    flat, part = str(tmp_path / "flat"), str(tmp_path / "part")
+    target.write.parquet(flat)
+    target.write.partitionBy("seg").parquet(part)
+    touched = updates.select("k", "seg").unionByName(deletes)
+    dup = updates.unionByName(updates.limit(1))
+    with pytest.raises(ValueError, match="duplicate keys"):
+        upsert(spark, flat, dup, ["k", "seg"], touched=touched)
+    with pytest.raises(ValueError, match="duplicate keys"):
+        upsert_partitioned(
+            spark, part, dup, ["k", "seg"], ["seg"], touched=touched
+        )
+    with pytest.raises(ValueError, match="differ from the target"):
+        upsert(spark, flat, updates.drop("v"), ["k", "seg"], touched=touched)
+    with pytest.raises(ValueError, match="subset of the merge key"):
+        upsert(spark, flat, updates, ["k", "seg"], touched=updates)
+    with pytest.raises(ValueError, match="lacks partition columns"):
+        upsert_partitioned(
+            spark, part, updates, ["k", "seg"], ["seg"],
+            touched=updates.select("k"),
+        )
+    want = sorted(tuple(r) for r in target.collect())
+    for path in (flat, part):
+        got = spark.read.schema(target.schema).parquet(path).select(
+            *target.columns
+        )
+        assert sorted(tuple(r) for r in got.collect()) == want, path
 
 
 def test_upsert_partitioned_leaves_untouched_partitions_alone(
@@ -360,7 +484,7 @@ def test_upsert_partitioned_removes_emptied_partition(spark, tmp_path):
         ),
         key_cols=["c_custkey", "c_mktsegment"],
         partition_cols=["c_mktsegment"],
-        deletes=deletes,
+        touched=deletes,
     )
     assert not os.path.isdir(os.path.join(path, "c_mktsegment=AUTOMOBILE"))
     got = spark.read.parquet(path)
@@ -406,7 +530,7 @@ def test_upsert_partitioned_numeric_looking_string_keys(spark, tmp_path):
     upsert_partitioned(
         spark, path,
         updates=updates.where("1 = 0"),
-        key_cols=["k", "seg"], partition_cols=["seg"], deletes=deletes,
+        key_cols=["k", "seg"], partition_cols=["seg"], touched=deletes,
     )
     assert not os.path.isdir(os.path.join(path, "seg=01"))
     assert os.path.isdir(os.path.join(path, "seg=002"))
@@ -441,7 +565,7 @@ def test_upsert_partitioned_escaped_partition_values(spark, tmp_path):
     )
     upsert_partitioned(
         spark, path, updates=updates.where("1 = 0"),
-        key_cols=["k", "seg"], partition_cols=["seg"], deletes=deletes,
+        key_cols=["k", "seg"], partition_cols=["seg"], touched=deletes,
     )
     assert not os.path.isdir(os.path.join(path, "seg=a%3Ab"))
     assert spark.read.schema(base.schema).parquet(path).count() == 1
@@ -476,7 +600,7 @@ def test_upsert_partitioned_date_partition_values(spark, tmp_path):
     deletes = spark.createDataFrame([(3, d2)], "k: bigint, day: date")
     upsert_partitioned(
         spark, path, updates=updates.where("1 = 0"),
-        key_cols=["k", "day"], partition_cols=["day"], deletes=deletes,
+        key_cols=["k", "day"], partition_cols=["day"], touched=deletes,
     )
     assert not os.path.isdir(os.path.join(path, "day=2026-08-02"))
     assert spark.read.schema(base.schema).parquet(path).count() == 2
