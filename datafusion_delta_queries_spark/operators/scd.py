@@ -98,7 +98,9 @@ def scd2_apply(
     Only touched keys are rewritten: their key set is broadcast (CDC
     batches are small — pass ``broadcast_touched=False`` for backfill
     batches comparable to the dim itself) so untouched history crosses
-    an anti join without shuffling.
+    an anti join without shuffling. The touched slice is checkpointed
+    when the call is made (it is Δ-sized), so the result references
+    ``history`` once and chained calls grow the plan linearly.
 
     Closed intervals re-enter the rebuild as explicit CLOSE events at
     their ``valid_to``: without them, a later batch's upsert would
@@ -114,7 +116,16 @@ def scd2_apply(
     if broadcast_touched:
         touched = F.broadcast(touched)
     untouched = history.join(touched, keys, "left_anti")
-    touched_hist = history.join(touched, keys, "semi")
+    # Lineage boundary: the touched slice (touched keys × their
+    # versions, Δ-sized) feeds both the closers and the versions, so a
+    # lazy slice would put ``history``'s plan into the output three
+    # times and a chain of calls would triple its plan per call (44 →
+    # 45,908 logical-plan lines over 7 calls). Checkpointed, the output
+    # references ``history`` once — through the anti join — and grows
+    # by a constant per call.
+    touched_hist = history.join(touched, keys, "semi").localCheckpoint(
+        eager=True
+    )
 
     high = F.lit(HIGH_TS).cast("timestamp")
     closers = touched_hist.where(F.col("valid_to") < high).select(
@@ -646,17 +657,12 @@ class Scd2Table:
         return self.state_path + ".__applied__"
 
     def _swap_write(self, new_hist: DataFrame) -> None:
-        import os
-        import shutil
+        from ..sources.sinks import staged_swap
 
-        staging = self.state_path + ".__staging__"
-        retired = self.state_path + ".__retired__"
-        for leftover in (staging, retired):
-            shutil.rmtree(leftover, ignore_errors=True)
-        new_hist.write.mode("overwrite").parquet(staging)
-        os.rename(self.state_path, retired)
-        os.rename(staging, self.state_path)
-        shutil.rmtree(retired)
+        staged_swap(
+            self.state_path,
+            lambda p: new_hist.write.mode("overwrite").parquet(p),
+        )
 
 
 def q_scd2_streamed_history(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -33,15 +33,24 @@ Three maintenance strategies, by operator class:
 
 At 100 TB the touched-key sets are delta-sized → broadcast semi/anti
 joins; with the base table partitioned on the key, the scoped
-recompute prunes to the touched partitions. The only full-base scans
-are the stored-state partials of the RECOMPUTE maintainers; each heavy
-index maintainer also ships a ``*_stored`` twin that reads its state
-relation from a persisted ``_stored_state`` parquet table (built once
-per fixture), so the measured per-run cost there is the true O(Δ)
-merge — the production state-store economics.
+recompute prunes to the touched partitions.
+
+Every index maintainer (LSH, ANN, winnow, cluster, IVF, PQ, IVF-PQ,
+TF-IDF, SemDeDup, BM25, inverted, phrase, dup-span, triangle,
+line-dedup) is written once, as a body that takes a ``state`` source
+and reads each corpus-sized state relation through it. ``_recompute``
+builds the relation from the old snapshot on every run (a
+corpus-proportional stand-in); ``_stored`` reads it from a persisted
+``_stored_state`` parquet table built once per input bytes and CDC
+spec, so a run pays only the O(Δ) merge — the production state-store
+economics. Each registry entry binds one body to one source (and, for
+the sparse variants, a CDC spec): a ``*_maintenance`` name and its
+``*_stored`` twin differ only in that binding.
 """
 
 from __future__ import annotations
+
+from functools import partial, reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -645,8 +654,8 @@ HAVING count(*) >= 10
 # under retraction, handled exactly by per-(hash, doc_id) multiplicity
 # state (the pair set IS what a stored dedup index keeps). Per
 # refresh, only changed documents are re-normalized and re-hashed;
-# the old corpus contributes its stored pair set, recomputed from the
-# old snapshot here only because the fixture stores no index table.
+# the old corpus contributes its pair set, recomputed from the old
+# snapshot (this index has no stored binding).
 
 def q_signed_dedup_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions import text
@@ -685,297 +694,42 @@ GROUP BY 1
 """
 
 
-# -- MinHash-LSH band-index maintenance under deletes/edits ------------
+# -- Index state: the ``state`` source every index maintainer reads ---
 #
-# The fuzzy sibling of signed_dedup_maintenance: the stored LSH band
-# index (band-bucket → member docs) maintained while documents are
-# inserted, deleted, and edited — pre-images retract their band rows
-# (an edit moves the doc between buckets exactly like the exact-dedup
-# hash move), and per-(band, doc) multiplicity nets the index. The
-# per-refresh cost is the md5-heavy pipeline over the CHANGE batch
-# plus the merge against the stored index; as in the positive path
-# (delta_lsh_maintenance), the fixture has no stored index table, so
-# the old corpus's bands are recomputed from the old snapshot here —
-# in production that branch is a read of the stored index. Docs with
-# no shingles (<3 words) produce NULL band keys and are excluded in
-# both engines: they carry no index entries. Candidate pairs
-# re-derive from the maintained index via the existing bucket-join
-# machinery; this query certifies the INDEX equals the full recompute.
-
-def q_signed_lsh_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .llm_pipeline import _band_rows, _shingled_df
-
-    cat = SignedDeltaCatalog(spark, sf_dir)
-
-    def bands_of(docs: DataFrame, carry: tuple[str, ...] = ()) -> DataFrame:
-        return _band_rows(_shingled_df(docs, carry), carry).where(
-            "band IS NOT NULL"
-        )
-
-    # Sign rides through the shingle/minhash chain as the weight
-    # column — the change batch is hashed ONCE, not once per sign.
-    stored = bands_of(cat.old("documents")).withColumn("_w", F.lit(1))
-    delta = bands_of(
-        cat.signed_changes("documents").withColumnRenamed(SIGN, "_w"),
-        carry=("_w",),
-    )
-    live = _net_multiplicity(stored, delta, "band", "doc_id")
-    return (
-        live.groupBy("band")
-        .agg(
-            F.count("*").cast("bigint").alias("n_docs"),
-            F.min("doc_id").alias("min_doc"),
-        )
-        .where("n_docs >= 2")
-    )
+# A maintainer body calls ``load = state(cat, table)`` and reads each
+# state relation as ``load(name, build)``, where ``build`` computes it
+# from ``cat``'s OLD snapshot of ``table``. A ``build`` pins its frame
+# with ``_shared`` only where several actions read it (the cluster CC
+# loop) or its derived frames must agree row for row (dup-span):
+# readers inside one query share its exchanges already, and a pin there
+# costs jobs (measured on pq, ivf, semdedup and triangle).
 
 
-def _signed_lsh_oracle() -> str:
-    # Reuses the SAME engine-twin CTE chain as every other LSH oracle
-    # (llm_pipeline._sql_base + _sql_lsh_pairs), pointed at the
-    # post-change state — one SQL copy to maintain, not three. The
-    # unreferenced mcand/mpairs CTEs are never executed.
-    from .llm_pipeline import _sql_base, _sql_lsh_pairs
-
-    return f"""
-WITH {_sql_base(f'({_new_sql("documents")})')},
-{_sql_lsh_pairs("shing", "m")}
-SELECT band, count(*) AS n_docs, min(doc_id) AS min_doc
-FROM mbands WHERE band IS NOT NULL
-GROUP BY band HAVING count(*) >= 2
-"""
+def _recompute(cat: SignedDeltaCatalog, table: str):
+    """State source: build every state relation from the old snapshot
+    on each run."""
+    return lambda name, build: build()
 
 
-def q_signed_lsh_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """``signed_lsh_maintenance`` against a PERSISTED band index: the
-    (band, doc_id) rows are READ from a parquet table a previous
-    refresh wrote (built once per fixture by ``_stored_state``), so
-    the per-run cost is shingling/minhashing the CHANGE batch plus
-    the multiplicity merge — the corpus re-shingle the stand-in
-    re-paid every run is a disk read. Same result and oracle as
-    ``signed_lsh_maintenance``."""
-    from .llm_pipeline import _band_rows, _shingled_df
-
-    cat = SignedDeltaCatalog(spark, sf_dir)
-    fp = _spec_fingerprint(sf_dir, "documents")
-    stored = _stored_state(
-        spark, "lsh_bands", fp,
-        lambda: _band_rows(_shingled_df(cat.old("documents")))
-        .where("band IS NOT NULL")
-        .select("band", "doc_id"),
-    ).withColumn("_w", F.lit(1))
-    delta = _band_rows(
-        _shingled_df(
-            cat.signed_changes("documents").withColumnRenamed(SIGN, "_w"),
-            carry=("_w",),
-        ),
-        carry=("_w",),
-    ).where("band IS NOT NULL")
-    live = _net_multiplicity(stored, delta, "band", "doc_id")
-    return (
-        live.groupBy("band")
-        .agg(
-            F.count("*").cast("bigint").alias("n_docs"),
-            F.min("doc_id").alias("min_doc"),
-        )
-        .where("n_docs >= 2")
-    )
-
-
-# -- Perceptual-hash band-index maintenance under document edits ------
-#
-# The multimodal sibling of the MinHash index: the aHash 4-band
-# blocking index (band key → member docs) maintained while documents
-# are inserted, deleted, and EDITED (an edit changes the payload
-# bytes, so the doc's hash — and its four band keys — move). Only the
-# change batch is re-hashed (one Arrow pass, sign carried as the
-# weight column); per-(band, doc) multiplicity nets the index. The
-# stored side is recomputed from the old snapshot only because the
-# fixture persists no index table.
-
-def q_signed_phash_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..functions import multimodal
-
-    cat = SignedDeltaCatalog(spark, sf_dir)
-
-    def bands_of(hashes: DataFrame) -> DataFrame:
-        return hashes.select(
-            "doc_id",
-            "_w",
-            F.posexplode(F.array("b0", "b1", "b2", "b3")).alias(
-                "band_idx", "band_val"
-            ),
-        ).selectExpr(
-            "CAST(band_idx * 65536 + band_val AS BIGINT) AS band",
-            "doc_id",
-            "_w",
-        )
-
-    def payloads_of(docs: DataFrame, w_expr: str) -> DataFrame:
-        return docs.selectExpr(
-            "doc_id",
-            "encode(text, 'UTF-8') AS payload",
-            f"CAST({w_expr} AS INT) AS _w",
-        )
-
-    stored = bands_of(
-        multimodal.perceptual_hash(
-            payloads_of(cat.old("documents"), "1"), carry=("_w",)
-        )
-    )
-    delta = bands_of(
-        multimodal.perceptual_hash(
-            payloads_of(cat.signed_changes("documents"), SIGN),
-            carry=("_w",),
-        )
-    )
-    live = _net_multiplicity(stored, delta, "band", "doc_id")
-    return (
-        live.groupBy("band")
-        .agg(
-            F.count("*").cast("bigint").alias("n_docs"),
-            F.min("doc_id").alias("min_doc"),
-        )
-        .where("n_docs >= 2")
-    )
-
-
-_SIGNED_PHASH_ORACLE = f"""
-WITH g AS (
-  SELECT doc_id, i,
-         ascii(substr(text, (i % length(text)) + 1, 1)) AS v
-  FROM ({_new_sql("documents")}) d,
-       LATERAL (SELECT unnest(generate_series(0, 63)) AS i) t(i)
-), m AS (
-  SELECT doc_id, avg(v) AS mean FROM g GROUP BY doc_id
-), bits AS (
-  SELECT g.doc_id, g.i,
-         CASE WHEN g.v > m.mean THEN 1 ELSE 0 END AS b
-  FROM g JOIN m ON g.doc_id = m.doc_id
-), bands AS (
-  SELECT doc_id, i // 16 AS band_idx,
-         SUM(b * (1 << (15 - (i % 16)))) AS band_val
-  FROM bits GROUP BY doc_id, i // 16
-)
-SELECT CAST(band_idx * 65536 + band_val AS BIGINT) AS band,
-       count(*) AS n_docs, min(doc_id) AS min_doc
-FROM bands GROUP BY 1 HAVING count(*) >= 2
-"""
-
-
-# -- Sign-LSH ANN bucket-index maintenance under vector deletes/updates
-#
-# The vector sibling: the hyperplane bucket index (8-bit sign-pattern
-# bucket → member vectors) maintained while embeddings are inserted,
-# deleted, and UPDATED (the update negates the vector — an exact IEEE
-# sign flip that moves it to the opposite bucket). The per-refresh
-# cost is re-bucketing the CHANGE batch (8 dot products per changed
-# vector) plus the merge against the stored index — recomputed from
-# the old snapshot here only because the fixture stores no index
-# table. Per-(bucket, vec) multiplicity nets the index; ANN candidate
-# pairs re-derive from it by equi-join on the bucket key.
-
-def q_signed_ann_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..functions import similarity
-    from .llm_pipeline import _PLANES
-
-    cat = SignedDeltaCatalog(spark, sf_dir)
-    bucket = similarity.bucket_expr_spark(
-        similarity.as_double_array("embedding"), _PLANES
-    )
-
-    def buckets_of(df: DataFrame, w_expr: str) -> DataFrame:
-        # Sign carried as the weight EXPRESSION — one pass over the
-        # change batch (8 dot products per vector once), not a
-        # filtered scan per sign.
-        return df.selectExpr(
-            "vec_id", f"{bucket} AS bucket", f"{w_expr} AS _w"
-        )
-
-    sgn = cat.signed_changes("embeddings")
-    stored = buckets_of(cat.old("embeddings"), "1")  # = the stored index
-    delta = buckets_of(sgn, SIGN)
-    live = _net_multiplicity(stored, delta, "bucket", "vec_id")
-    return live.groupBy("bucket").agg(
-        F.count("*").cast("bigint").alias("n_vecs"),
-        F.min("vec_id").alias("min_vec"),
-    )
-
-
-def _signed_ann_oracle() -> str:
-    from ..functions import similarity
-    from .llm_pipeline import _PLANES
-
-    bucket = similarity.bucket_expr_duckdb("v", _PLANES)
-    return f"""
-WITH e AS (
-  SELECT vec_id, embedding::DOUBLE[] AS v FROM ({_new_sql("embeddings")})
-),
-b AS (SELECT vec_id, {bucket} AS bucket FROM e)
-SELECT bucket, count(*) AS n_vecs, min(vec_id) AS min_vec
-FROM b GROUP BY bucket
-"""
-
-
-def q_signed_ann_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """``signed_ann_maintenance`` against a PERSISTED bucket index:
-    the (bucket, vec_id) rows are READ from parquet (built once per
-    fixture by ``_stored_state``), so the per-run cost is re-bucketing
-    the CHANGE batch (8 dot products per changed vector) plus the
-    multiplicity merge — never a corpus re-projection. Same result
-    and oracle as ``signed_ann_maintenance``."""
-    from ..functions import similarity
-    from .llm_pipeline import _PLANES
-
-    cat = SignedDeltaCatalog(spark, sf_dir)
-    bucket = similarity.bucket_expr_spark(
-        similarity.as_double_array("embedding"), _PLANES
-    )
-    fp = _spec_fingerprint(sf_dir, "embeddings")
-    stored = _stored_state(
-        spark, "ann_buckets", fp,
-        lambda: cat.old("embeddings").selectExpr(
-            "vec_id", f"{bucket} AS bucket"
-        ),
-    ).withColumn("_w", F.lit(1))
-    delta = cat.signed_changes("embeddings").selectExpr(
-        "vec_id", f"{bucket} AS bucket", f"{SIGN} AS _w"
-    )
-    live = _net_multiplicity(stored, delta, "bucket", "vec_id")
-    return live.groupBy("bucket").agg(
-        F.count("*").cast("bigint").alias("n_vecs"),
-        F.min("vec_id").alias("min_vec"),
-    )
-
-
-# -- Winnowing fingerprint index maintained under retractions ----------
-#
-# Completes the dedup-index family: exact-hash, MinHash-LSH, sign-LSH
-# ANN, and now winnowing (MOSS) buckets all maintain under
-# deletes/edits via the same per-(key, member) multiplicity state
-# (``_net_multiplicity``). A text edit re-winnows the document:
-# pre-image fingerprints leave (−1), post-image fingerprints enter
-# (+1), and only buckets whose live membership lands in [2, cap] stay
-# in the index. Per-refresh cost is fingerprinting the CHANGE batch
-# ONCE — the sign rides through ``_winnow_fp`` as a carried weight
-# column, the same one-weighted-pass shape the ANN maintainer uses —
-# plus the bucket-key merge; the old-state scan stands in for the
-# stored index, as in the module's recompute maintainers (the heavy
-# index maintainers additionally ship ``*_stored`` twins that read
-# their state from ``_stored_state`` parquet).
+def _stored(cat: SignedDeltaCatalog, table: str):
+    """State source: read every state relation from its persisted
+    ``_stored_state`` table, keyed on ``table``'s bytes and ``cat``'s
+    CDC spec and built from the old snapshot on first use."""
+    fp = _spec_fingerprint(cat.sf_dir, table, cat.specs)
+    return lambda name, build: _stored_state(cat.spark, name, fp, build)
 
 
 def _net_multiplicity(
-    stored: DataFrame, delta: DataFrame, key: str, member: str
+    stored: DataFrame, delta: DataFrame, *cols: str
 ) -> DataFrame:
-    """Live (key, member) rows of a maintained index: stored rows
-    (weight +1 each) plus sign-weighted delta rows, summed per
-    (key, member), zero-or-negative multiplicities dropped. The shared
-    merge step of every index maintainer in this module; both inputs
-    must carry a ``_w`` weight column."""
+    """Live rows of a maintained multiset: stored rows (weight +1 each)
+    plus sign-weighted delta rows, summed per ``cols``,
+    zero-or-negative multiplicities dropped. The shared merge step of
+    every index maintainer in this module; both inputs must carry a
+    ``_w`` weight column."""
     return (
         stored.unionByName(delta)
-        .groupBy(key, member)
+        .groupBy(*cols)
         .agg(F.sum("_w").alias("m"))
         .where("m > 0")
     )
@@ -1098,12 +852,238 @@ def _spec_fingerprint(sf_dir: str, table: str, specs=None) -> str:
         )
     return _table_fingerprint(sf_dir, table) + "|" + suffix
 
+# -- MinHash-LSH band-index maintenance under deletes/edits ------------
+#
+# The fuzzy sibling of signed_dedup_maintenance: the stored LSH band
+# index (band-bucket → member docs) maintained while documents are
+# inserted, deleted, and edited — pre-images retract their band rows
+# (an edit moves the doc between buckets exactly like the exact-dedup
+# hash move), and per-(band, doc) multiplicity nets the index. The
+# per-refresh cost is the md5-heavy pipeline over the CHANGE batch
+# plus the merge against the (band, doc_id) state. Docs with
+# no shingles (<3 words) produce NULL band keys and are excluded in
+# both engines: they carry no index entries. Candidate pairs
+# re-derive from the maintained index via the existing bucket-join
+# machinery; this query certifies the INDEX equals the full recompute.
 
-def q_signed_winnow_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
+
+def _signed_lsh(spark: SparkSession, sf_dir: str, state) -> DataFrame:
+    from .llm_pipeline import _band_rows, _shingled_df
+
+    cat = SignedDeltaCatalog(spark, sf_dir)
+    load = state(cat, "documents")
+    stored = load(
+        "lsh_bands",
+        lambda: _band_rows(_shingled_df(cat.old("documents")))
+        .where("band IS NOT NULL")
+        .select("band", "doc_id"),
+    ).withColumn("_w", F.lit(1))
+    # Sign rides through the shingle/minhash chain as the weight
+    # column — the change batch is hashed ONCE, not once per sign.
+    delta = _band_rows(
+        _shingled_df(
+            cat.signed_changes("documents").withColumnRenamed(SIGN, "_w"),
+            carry=("_w",),
+        ),
+        carry=("_w",),
+    ).where("band IS NOT NULL")
+    live = _net_multiplicity(stored, delta, "band", "doc_id")
+    return (
+        live.groupBy("band")
+        .agg(
+            F.count("*").cast("bigint").alias("n_docs"),
+            F.min("doc_id").alias("min_doc"),
+        )
+        .where("n_docs >= 2")
+    )
+
+
+q_signed_lsh_maintenance = partial(_signed_lsh, state=_recompute)
+q_signed_lsh_stored = partial(_signed_lsh, state=_stored)
+
+
+def _signed_lsh_oracle() -> str:
+    # Reuses the SAME engine-twin CTE chain as every other LSH oracle
+    # (llm_pipeline._sql_base + _sql_lsh_pairs), pointed at the
+    # post-change state — one SQL copy to maintain, not three. The
+    # unreferenced mcand/mpairs CTEs are never executed.
+    from .llm_pipeline import _sql_base, _sql_lsh_pairs
+
+    return f"""
+WITH {_sql_base(f'({_new_sql("documents")})')},
+{_sql_lsh_pairs("shing", "m")}
+SELECT band, count(*) AS n_docs, min(doc_id) AS min_doc
+FROM mbands WHERE band IS NOT NULL
+GROUP BY band HAVING count(*) >= 2
+"""
+
+
+# -- Perceptual-hash band-index maintenance under document edits ------
+#
+# The multimodal sibling of the MinHash index: the aHash 4-band
+# blocking index (band key → member docs) maintained while documents
+# are inserted, deleted, and EDITED (an edit changes the payload
+# bytes, so the doc's hash — and its four band keys — move). Only the
+# change batch is re-hashed (one Arrow pass, sign carried as the
+# weight column); per-(band, doc) multiplicity nets the index against
+# the old snapshot's band rows (this index has no stored binding).
+
+def q_signed_phash_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from ..functions import multimodal
+
+    cat = SignedDeltaCatalog(spark, sf_dir)
+
+    def bands_of(hashes: DataFrame) -> DataFrame:
+        return hashes.select(
+            "doc_id",
+            "_w",
+            F.posexplode(F.array("b0", "b1", "b2", "b3")).alias(
+                "band_idx", "band_val"
+            ),
+        ).selectExpr(
+            "CAST(band_idx * 65536 + band_val AS BIGINT) AS band",
+            "doc_id",
+            "_w",
+        )
+
+    def payloads_of(docs: DataFrame, w_expr: str) -> DataFrame:
+        return docs.selectExpr(
+            "doc_id",
+            "encode(text, 'UTF-8') AS payload",
+            f"CAST({w_expr} AS INT) AS _w",
+        )
+
+    stored = bands_of(
+        multimodal.perceptual_hash(
+            payloads_of(cat.old("documents"), "1"), carry=("_w",)
+        )
+    )
+    delta = bands_of(
+        multimodal.perceptual_hash(
+            payloads_of(cat.signed_changes("documents"), SIGN),
+            carry=("_w",),
+        )
+    )
+    live = _net_multiplicity(stored, delta, "band", "doc_id")
+    return (
+        live.groupBy("band")
+        .agg(
+            F.count("*").cast("bigint").alias("n_docs"),
+            F.min("doc_id").alias("min_doc"),
+        )
+        .where("n_docs >= 2")
+    )
+
+
+_SIGNED_PHASH_ORACLE = f"""
+WITH g AS (
+  SELECT doc_id, i,
+         ascii(substr(text, (i % length(text)) + 1, 1)) AS v
+  FROM ({_new_sql("documents")}) d,
+       LATERAL (SELECT unnest(generate_series(0, 63)) AS i) t(i)
+), m AS (
+  SELECT doc_id, avg(v) AS mean FROM g GROUP BY doc_id
+), bits AS (
+  SELECT g.doc_id, g.i,
+         CASE WHEN g.v > m.mean THEN 1 ELSE 0 END AS b
+  FROM g JOIN m ON g.doc_id = m.doc_id
+), bands AS (
+  SELECT doc_id, i // 16 AS band_idx,
+         SUM(b * (1 << (15 - (i % 16)))) AS band_val
+  FROM bits GROUP BY doc_id, i // 16
+)
+SELECT CAST(band_idx * 65536 + band_val AS BIGINT) AS band,
+       count(*) AS n_docs, min(doc_id) AS min_doc
+FROM bands GROUP BY 1 HAVING count(*) >= 2
+"""
+
+
+# -- Sign-LSH ANN bucket-index maintenance under vector deletes/updates
+#
+# The vector sibling: the hyperplane bucket index (8-bit sign-pattern
+# bucket → member vectors) maintained while embeddings are inserted,
+# deleted, and UPDATED (the update negates the vector — an exact IEEE
+# sign flip that moves it to the opposite bucket). The per-refresh
+# cost is re-bucketing the CHANGE batch (8 dot products per changed
+# vector) plus the merge against the (bucket, vec_id) state.
+# Per-(bucket, vec) multiplicity nets the index; ANN candidate pairs
+# re-derive from it by equi-join on the bucket key.
+
+
+def _signed_ann(spark: SparkSession, sf_dir: str, state) -> DataFrame:
+    from ..functions import similarity
+    from .llm_pipeline import _PLANES
+
+    cat = SignedDeltaCatalog(spark, sf_dir)
+    load = state(cat, "embeddings")
+    bucket = similarity.bucket_expr_spark(
+        similarity.as_double_array("embedding"), _PLANES
+    )
+    stored = load(
+        "ann_buckets",
+        lambda: cat.old("embeddings").selectExpr(
+            "vec_id", f"{bucket} AS bucket"
+        ),
+    ).withColumn("_w", F.lit(1))
+    # Sign carried as the weight EXPRESSION — one pass over the change
+    # batch (8 dot products per vector once), not a filtered scan per
+    # sign.
+    delta = cat.signed_changes("embeddings").selectExpr(
+        "vec_id", f"{bucket} AS bucket", f"{SIGN} AS _w"
+    )
+    live = _net_multiplicity(stored, delta, "bucket", "vec_id")
+    return live.groupBy("bucket").agg(
+        F.count("*").cast("bigint").alias("n_vecs"),
+        F.min("vec_id").alias("min_vec"),
+    )
+
+
+q_signed_ann_maintenance = partial(_signed_ann, state=_recompute)
+q_signed_ann_stored = partial(_signed_ann, state=_stored)
+
+
+def _signed_ann_oracle() -> str:
+    from ..functions import similarity
+    from .llm_pipeline import _PLANES
+
+    bucket = similarity.bucket_expr_duckdb("v", _PLANES)
+    return f"""
+WITH e AS (
+  SELECT vec_id, embedding::DOUBLE[] AS v FROM ({_new_sql("embeddings")})
+),
+b AS (SELECT vec_id, {bucket} AS bucket FROM e)
+SELECT bucket, count(*) AS n_vecs, min(vec_id) AS min_vec
+FROM b GROUP BY bucket
+"""
+
+
+# -- Winnowing fingerprint index maintained under retractions ----------
+#
+# Completes the dedup-index family: exact-hash, MinHash-LSH, sign-LSH
+# ANN, and now winnowing (MOSS) buckets all maintain under
+# deletes/edits via the same per-(key, member) multiplicity state
+# (``_net_multiplicity``). A text edit re-winnows the document:
+# pre-image fingerprints leave (−1), post-image fingerprints enter
+# (+1), and only buckets whose live membership lands in [2, cap] stay
+# in the index. Per-refresh cost is fingerprinting the CHANGE batch
+# ONCE — the sign rides through ``_winnow_fp`` as a carried weight
+# column, the same one-weighted-pass shape the ANN maintainer uses —
+# plus the bucket-key merge. The stored binding stays out of the
+# registry: at sf0.1 it measured slower than the recompute (1.70 vs
+# 1.28 s — scanning the pre-exploded (fp, doc_id) state from parquet
+# costs more than the Arrow-vectorized corpus re-fingerprint; SCALE.md
+# round-16 notes).
+
+
+def _signed_winnow(spark: SparkSession, sf_dir: str, state) -> DataFrame:
     from .llm_pipeline import _WINNOW_BUCKET_CAP, _winnow_fp
 
     cat = SignedDeltaCatalog(spark, sf_dir)
-    stored = _winnow_fp(cat.old("documents")).withColumn("_w", F.lit(1))
+    load = state(cat, "documents")
+    stored = load(
+        "winnow_fps",
+        lambda: _winnow_fp(cat.old("documents")).select("fp", "doc_id"),
+    ).withColumn("_w", F.lit(1))
     delta = _winnow_fp(
         cat.signed_changes("documents").withColumnRenamed(SIGN, "_w"),
         carry=("_w",),
@@ -1117,6 +1097,10 @@ def q_signed_winnow_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .where(f"n_docs BETWEEN 2 AND {_WINNOW_BUCKET_CAP}")
     )
+
+
+q_signed_winnow_maintenance = partial(_signed_winnow, state=_recompute)
+q_signed_winnow_stored = partial(_signed_winnow, state=_stored)
 
 
 def _signed_winnow_oracle() -> str:
@@ -1133,36 +1117,6 @@ SELECT fp, count(*) AS n_docs, min(doc_id) AS min_doc
 FROM wfp GROUP BY fp
 HAVING count(*) BETWEEN 2 AND {_WINNOW_BUCKET_CAP}
 """
-
-
-def q_signed_winnow_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """``signed_winnow_maintenance`` against a PERSISTED fingerprint
-    index: the (fp, doc_id) rows are READ from parquet (built once per
-    fixture by ``_stored_state``), so the per-run cost is winnowing
-    the CHANGE batch plus the multiplicity merge — never a corpus
-    re-fingerprint. Same result and oracle as
-    ``signed_winnow_maintenance``."""
-    from .llm_pipeline import _WINNOW_BUCKET_CAP, _winnow_fp
-
-    cat = SignedDeltaCatalog(spark, sf_dir)
-    fp_key = _spec_fingerprint(sf_dir, "documents")
-    stored = _stored_state(
-        spark, "winnow_fps", fp_key,
-        lambda: _winnow_fp(cat.old("documents")).select("fp", "doc_id"),
-    ).withColumn("_w", F.lit(1))
-    delta = _winnow_fp(
-        cat.signed_changes("documents").withColumnRenamed(SIGN, "_w"),
-        carry=("_w",),
-    )
-    live = _net_multiplicity(stored, delta, "fp", "doc_id")
-    return (
-        live.groupBy("fp")
-        .agg(
-            F.count("*").cast("bigint").alias("n_docs"),
-            F.min("doc_id").alias("min_doc"),
-        )
-        .where(f"n_docs BETWEEN 2 AND {_WINNOW_BUCKET_CAP}")
-    )
 
 
 # -- Maintained DUP-CLUSTERS under retractions: component -------------
@@ -1205,10 +1159,8 @@ def q_signed_winnow_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
 # At 100 TB: T is delta-sized, seeds/affected are broadcast-joinable
 # doc-id sets, fresh hashing is confined to the change batch, and the
 # CC loop runs only on the affected subgraph — cost ∝ changed
-# clusters, not the corpus. The full old-state scans (shingles, band
-# index, pair set, old CC) stand in for the STORED index/assignment a
-# deployment reads back (same convention as every stored-partial
-# maintainer above).
+# clusters, not the corpus. The old shingles, band rows, pair set and
+# CC come through the ``state`` source.
 
 
 # Touched-component fraction above which the affected-component
@@ -1230,134 +1182,71 @@ def _labeled_components(comp: DataFrame, sign: int) -> DataFrame:
     )
 
 
-def q_signed_cluster_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..functions import graph
-    from .llm_pipeline import (
-        _lsh_candidates,
-        _shared,
-        _shingled_df,
-        _verified_pairs,
-    )
-
-    cat = SignedDeltaCatalog(spark, sf_dir)
-    # Stored state (old-snapshot scans standing in for the persisted
-    # index — q_signed_cluster_stored reads the same three relations
-    # from _stored_state parquet): shingles, verified pair set,
-    # cluster CC.
-    sh_old = _shared(_shingled_df(cat.old("documents")))
-    pairs_old = _shared(
-        _verified_pairs(_lsh_candidates(sh_old), sh_old, 0.5).select(
-            "doc_a", "doc_b"
-        )
-    )
-    comp_old = _shared(
-        graph.connected_components(pairs_old, src="doc_a", dst="doc_b")
-    )
-    return _cluster_net(spark, cat, sh_old, pairs_old, comp_old)
-
-
-def q_signed_cluster_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """``signed_cluster_maintenance`` against PERSISTED state — the
-    heaviest stand-in of the r15 set (~3.3 s of old-state scans per
-    run): the old shingle table, the verified near-dup pair set, and
-    the old cluster assignment are READ from parquet tables a previous
-    refresh wrote (built once per fixture by ``_stored_state``), so
-    the per-run cost is hashing the CHANGE batch, the delta-sized pair
-    reconstruction, and the affected-component recompute — never the
-    corpus re-shingle / re-verify / full-graph CC the stand-ins
-    re-paid every run. Same affected-component algebra, same result,
-    same oracle as ``signed_cluster_maintenance``."""
-    from ..functions import graph
-    from .llm_pipeline import (
-        _band_rows,
-        _lsh_candidates,
-        _shingled_df,
-        _verified_pairs,
-    )
-
-    cat = SignedDeltaCatalog(spark, sf_dir)
-    fp = _spec_fingerprint(sf_dir, "documents")
-    sh_old = _stored_state(
-        spark, "cluster_shingles", fp,
-        lambda: _shingled_df(cat.old("documents")),
-    )
-    pairs_old = _stored_state(
-        spark, "cluster_pairs", fp,
-        lambda: _verified_pairs(_lsh_candidates(sh_old), sh_old, 0.5).select(
-            "doc_a", "doc_b"
-        ),
-    )
-    comp_old = _stored_state(
-        spark, "cluster_components", fp,
-        lambda: graph.connected_components(
-            pairs_old, src="doc_a", dst="doc_b"
-        ),
-    )
-    # The banded-minhash rows are a pure per-doc function of the
-    # stored shingles, so they persist alongside them (r17): without
-    # this table the stored twin still re-minhashed the WHOLE corpus
-    # every run to rebuild bands_new — the one corpus-sized compute
-    # left in its per-run path; with it, fresh hashing touches only
-    # the change batch's post-images.
-    bands_old = _stored_state(
-        spark, "cluster_bands", fp,
-        lambda: _band_rows(sh_old).where("band IS NOT NULL"),
-    )
-    return _cluster_net(
-        spark, cat, sh_old, pairs_old, comp_old, bands_old=bands_old
-    )
-
-
-def _cluster_net(
-    spark: SparkSession,
-    cat: SignedDeltaCatalog,
-    sh_old: DataFrame,
-    pairs_old: DataFrame,
-    comp_old: DataFrame,
-    bands_old: DataFrame | None = None,
-) -> DataFrame:
-    """Shared affected-component net-change computation: the three
-    state relations arrive either as old-snapshot recomputes
-    (``q_signed_cluster_maintenance``) or as persisted-parquet reads
-    (``q_signed_cluster_stored``); everything downstream is
-    identical. ``bands_old`` (optional, the stored twin) supplies the
-    old corpus's banded-minhash rows so bands_new is stitched from
-    stored rows + a Δ-only hash instead of re-minhashing the corpus —
-    band rows are a per-doc function of the shingles, so the stitched
-    relation is row-identical to the recomputed one."""
+def _signed_cluster(spark: SparkSession, sf_dir: str, state) -> DataFrame:
+    """Affected-component net change over four state relations: the old
+    shingles, the verified pair set, the old cluster assignment and the
+    old banded-minhash rows. bands_new is stitched from the state's band
+    rows plus a Δ-only hash instead of re-minhashing the corpus — band
+    rows are a per-doc function of the shingles, so the stitched
+    relation is row-identical to a recomputed one."""
     from ..functions import graph
     from .llm_pipeline import (
         _LSH_BUCKET_CAP,
         _band_rows,
+        _lsh_candidates,
         _shared,
         _shingled_df,
         _verified_pairs,
     )
 
+    cat = SignedDeltaCatalog(spark, sf_dir)
+    load = state(cat, "documents")
+    sh_old = load(
+        "cluster_shingles",
+        lambda: _shared(_shingled_df(cat.old("documents"))),
+    )
+    pairs_old = load(
+        "cluster_pairs",
+        lambda: _shared(
+            _verified_pairs(_lsh_candidates(sh_old), sh_old, 0.5).select(
+                "doc_a", "doc_b"
+            )
+        ),
+    )
+    comp_old = load(
+        "cluster_components",
+        lambda: _shared(
+            graph.connected_components(pairs_old, src="doc_a", dst="doc_b")
+        ),
+    )
+    bands_old = load(
+        "cluster_bands",
+        lambda: _band_rows(sh_old).where("band IS NOT NULL"),
+    )
+
     sgn = cat.signed_changes("documents")
-    touched = sgn.select("doc_id").distinct()
+    # Broadcast into several separately planned frames (the pinned
+    # shingles and bands, the CC loop's actions) and used only as a
+    # semi/anti-join key set (seeds de-duplicate below), so no
+    # distinct: each broadcast is then a scan, not a shuffle plus a
+    # collect.
+    touched = sgn.select("doc_id")
     t = F.broadcast(touched)
 
     # Delta-sized reconstruction of the NEW pair graph. Fresh hashing
     # touches only the change batch's post-images; untouched docs
-    # contribute their stored shingles/bands.
+    # contribute their old shingles/bands.
     sh_delta = _shingled_df(sgn.where(f"{SIGN} = 1").drop(SIGN))
     sh_unch = sh_old.join(t, sh_old["doc_id"] == touched["doc_id"], "left_anti")
     sh_new = _shared(sh_unch.unionByName(sh_delta))
     # Persisted: referenced by the bucket gate, the delta side, and the
-    # index side of the candidate join — one minhash pass, not three
-    # (zero corpus-sized passes when the band rows arrive stored).
-    if bands_old is None:
-        bands_new = _shared(_band_rows(sh_new).where("band IS NOT NULL"))
-    else:
-        bands_unch = bands_old.join(
-            t, bands_old["doc_id"] == touched["doc_id"], "left_anti"
-        )
-        bands_new = _shared(
-            bands_unch.unionByName(
-                _band_rows(sh_delta).where("band IS NOT NULL")
-            )
-        )
+    # index side of the candidate join — one minhash pass, not three.
+    bands_unch = bands_old.join(
+        t, bands_old["doc_id"] == touched["doc_id"], "left_anti"
+    )
+    bands_new = _shared(
+        bands_unch.unionByName(_band_rows(sh_delta).where("band IS NOT NULL"))
+    )
     bands_delta = bands_new.join(
         t, bands_new["doc_id"] == touched["doc_id"], "left_semi"
     )
@@ -1450,6 +1339,10 @@ def _cluster_net(
             _labeled_components(comp_new, 1)
         )
     )
+
+
+q_signed_cluster_maintenance = partial(_signed_cluster, state=_recompute)
+q_signed_cluster_stored = partial(_signed_cluster, state=_stored)
 
 
 def _signed_cluster_oracle() -> str:
@@ -2057,27 +1950,38 @@ _SESS_SPARSE_ORACLE = _net_oracle(
 # all affected holders is the same scoring join restricted by a
 # semi-join on the Δdf term set instead.
 #
-# Per refresh only the change batch is tokenized. The stored side
-# (per-term df counts and the N scalar) is recomputed from the old
-# snapshot only because the fixture stores no index table — in
-# production both are reads of the persisted index. Scale: Δdf and the
-# arriving-doc tf are delta-sized; the scoring join keys on token with
-# the maintained df index on the build side.
+# Per refresh only the change batch is tokenized; the per-term df
+# counts and the N scalar come through the ``state`` source. Scale: Δdf
+# and the arriving-doc tf are delta-sized; the scoring join keys on
+# token with the maintained df index on the build side.
 
 
-def q_signed_tfidf_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _signed_tfidf(spark: SparkSession, sf_dir: str, state) -> DataFrame:
     from pyspark.sql import Window as W
 
     from ..functions import text
     from .llm_pipeline import _norm_df
 
     cat = SignedDeltaCatalog(spark, sf_dir)
+    load = state(cat, "documents")
 
     def toks(df: DataFrame, carry: tuple[str, ...] = ()) -> DataFrame:
         return _norm_df(df, carry).selectExpr(
             "doc_id", f"explode({text.words('norm')}) AS token", *carry
         )
 
+    stored_df = load(
+        "tfidf_df",
+        lambda: toks(cat.old("documents"))
+        .select("doc_id", "token")
+        .distinct()
+        .groupBy("token")
+        .agg(F.count("*").alias("m")),
+    )
+    meta = load(
+        "tfidf_meta",
+        lambda: cat.old("documents").agg(F.count("*").alias("n_old")),
+    )
     sgn = cat.signed_changes("documents")
     # Δdf: net per-(doc, token) PRESENCE change. Within one doc version
     # tokens dedupe; an updated doc contributes (pre, −1) and (post, +1)
@@ -2088,13 +1992,6 @@ def q_signed_tfidf_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
     )
     df_delta = presence.groupBy("token").agg(F.sum("_w").alias("m"))
-    stored_df = (  # = the persisted df index (recomputed here; see above)
-        toks(cat.old("documents"))
-        .select("doc_id", "token")
-        .distinct()
-        .groupBy("token")
-        .agg(F.count("*").alias("m"))
-    )
     new_df = (
         stored_df.unionByName(df_delta)
         .groupBy("token")
@@ -2103,11 +2000,8 @@ def q_signed_tfidf_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # N: stored scalar + signed row count of the change batch.
     dn = sgn.agg(F.coalesce(F.sum(SIGN), F.lit(0)).alias("dn"))
-    n_new = (
-        cat.old("documents")
-        .agg(F.count("*").alias("n_old"))
-        .crossJoin(F.broadcast(dn))
-        .selectExpr("CAST(n_old + dn AS DOUBLE) AS n_docs_total")
+    n_new = meta.crossJoin(F.broadcast(dn)).selectExpr(
+        "CAST(n_old + dn AS DOUBLE) AS n_docs_total"
     )
     arriving = sgn.where(F.col(SIGN) == 1)  # inserts + update post-images
     tf = toks(arriving).groupBy("doc_id", "token").agg(
@@ -2127,6 +2021,10 @@ def q_signed_tfidf_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where("rnk <= 5")
         .select("doc_id", "token", "tf", "df", "tfidf", "rnk")
     )
+
+
+q_signed_tfidf_maintenance = partial(_signed_tfidf, state=_recompute)
+q_signed_tfidf_stored = partial(_signed_tfidf, state=_stored)
 
 
 def _signed_tfidf_oracle() -> str:
@@ -2160,78 +2058,6 @@ WHERE rnk <= 5 AND (({spec.insert_pred}) OR ({spec.update_pred}))
 """
 
 
-def q_signed_tfidf_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TF-IDF maintenance against a PERSISTED state store (r14 verdict
-    item 6): the document-frequency index (token → df) and the corpus
-    meta row (N) are READ from parquet tables a previous refresh wrote
-    (built once per fixture by ``_stored_state``). The per-run cost is
-    tokenizing the CHANGE BATCH only — Δ presence merge into the
-    stored df index, Δ tf for the arriving docs, one broadcast of the
-    1-row meta — never a corpus re-tokenize. Same result and oracle as
-    ``signed_tfidf_maintenance``."""
-    from pyspark.sql import Window as W
-
-    from ..functions import text
-    from .llm_pipeline import _norm_df
-
-    cat = SignedDeltaCatalog(spark, sf_dir)
-    fp = _spec_fingerprint(sf_dir, "documents")
-
-    def toks(df: DataFrame, carry: tuple[str, ...] = ()) -> DataFrame:
-        return _norm_df(df, carry).selectExpr(
-            "doc_id", f"explode({text.words('norm')}) AS token", *carry
-        )
-
-    stored_df = _stored_state(
-        spark, "tfidf_df", fp,
-        lambda: toks(cat.old("documents"))
-        .select("doc_id", "token")
-        .distinct()
-        .groupBy("token")
-        .agg(F.count("*").alias("m")),
-    )
-    meta = _stored_state(
-        spark, "tfidf_meta", fp,
-        lambda: cat.old("documents").agg(F.count("*").alias("n_old")),
-    )
-    sgn = cat.signed_changes("documents")
-    presence = (
-        toks(sgn.withColumnRenamed(SIGN, "_w"), carry=("_w",))
-        .select("doc_id", "token", "_w")
-        .distinct()
-    )
-    df_delta = presence.groupBy("token").agg(F.sum("_w").alias("m"))
-    new_df = (
-        stored_df.unionByName(df_delta)
-        .groupBy("token")
-        .agg(F.sum("m").cast("bigint").alias("df"))
-        .where("df > 0")
-    )
-    dn = sgn.agg(F.coalesce(F.sum(SIGN), F.lit(0)).alias("dn"))
-    n_new = (
-        meta.crossJoin(F.broadcast(dn))
-        .selectExpr("CAST(n_old + dn AS DOUBLE) AS n_docs_total")
-    )
-    arriving = sgn.where(F.col(SIGN) == 1)
-    tf = toks(arriving).groupBy("doc_id", "token").agg(
-        F.count("*").alias("tf")
-    )
-    scored = tf.join(new_df, "token").crossJoin(F.broadcast(n_new)).selectExpr(
-        "doc_id",
-        "token",
-        "CAST(tf AS BIGINT) AS tf",
-        "df",
-        f"{round_portable('tf * ln(CAST(n_docs_total AS DOUBLE) / df)', 6)}"
-        " AS tfidf",
-    )
-    w = W.partitionBy("doc_id").orderBy(F.desc("tfidf"), F.asc("token"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w).cast("bigint"))
-        .where("rnk <= 5")
-        .select("doc_id", "token", "tf", "df", "tfidf", "rnk")
-    )
-
-
 # -- IVF cell-index maintenance under vector deletes/updates -----------
 #
 # The coarse-quantizer sibling of signed_ann_maintenance: an IVF index
@@ -2246,16 +2072,12 @@ def q_signed_tfidf_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
 # vector plus the delta-sized merge.
 
 
-def q_signed_ivf_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _signed_ivf(spark: SparkSession, sf_dir: str, state) -> DataFrame:
     from ..functions import similarity
-    from .llm_pipeline import _IVF_CELLS, _shared
 
     cat = SignedDeltaCatalog(spark, sf_dir)
-    indexed, cents = similarity.ivf_index(
-        cat.old("embeddings"), id_col="vec_id", vec_col="embedding",
-        n_cells=_IVF_CELLS, persist=_shared,
-    )
-    stored = indexed.select("cell", "vec_id").withColumn("_w", F.lit(1))
+    cents, assign = _ivf_state(cat, state(cat, "embeddings"))
+    stored = assign.withColumn("_w", F.lit(1))
     v = (
         cat.signed_changes("embeddings")
         .selectExpr(
@@ -2273,6 +2095,10 @@ def q_signed_ivf_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").cast("bigint").alias("n_vecs"),
         F.min("vec_id").alias("min_vec"),
     )
+
+
+q_signed_ivf_maintenance = partial(_signed_ivf, state=_recompute)
+q_signed_ivf_stored = partial(_signed_ivf, state=_stored)
 
 
 def _signed_ivf_oracle() -> str:
@@ -2316,19 +2142,17 @@ FROM idx GROUP BY cell
 """
 
 
-def _stored_ivf_half(spark: SparkSession, cat: SignedDeltaCatalog, fp: str):
+def _ivf_state(cat: SignedDeltaCatalog, load):
     """The coarse-quantizer half of the maintained IVF(-PQ) index:
-    (centroid table, (cell, vec_id) assignment), both PERSISTED
-    parquet tables built once per fixture from the OLD snapshot.
-    Shared — same state names, same fingerprint, same builders — by
-    ``q_signed_ivf_stored`` and ``q_signed_ivfpq_stored``, so the
-    composed twin reads the very tables the plain twin maintains and
-    adds no second corpus-sized build."""
+    (centroid table, (cell, vec_id) assignment) of the OLD snapshot.
+    Shared — same state names, same builders — by the IVF and IVF-PQ
+    bodies, so the stored composed index reads the very tables the
+    plain one maintains and adds no second corpus-sized build."""
     from ..functions import similarity
     from .llm_pipeline import _IVF_CELLS
 
-    cents = _stored_state(
-        spark, "ivf_cents", fp,
+    cents = load(
+        "ivf_cents",
         lambda: similarity.ivf_index(
             cat.old("embeddings"), id_col="vec_id", vec_col="embedding",
             n_cells=_IVF_CELLS,
@@ -2344,45 +2168,10 @@ def _stored_ivf_half(spark: SparkSession, cat: SignedDeltaCatalog, fp: str):
             "cell", "vec_id"
         )
 
-    assign = _stored_state(spark, "ivf_assign", fp, build_assign)
-    return cents, assign
+    return cents, load("ivf_assign", build_assign)
 
 
-def q_signed_ivf_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """``signed_ivf_maintenance`` against PERSISTED state: the
-    centroid table and the (cell, vec_id) assignment are READ from
-    parquet tables a previous refresh wrote (built once per fixture by
-    ``_stored_state``), so the per-run cost is assigning the CHANGE
-    batch against the frozen broadcast centroids plus the multiplicity
-    merge — never the corpus k-means + corpus re-assignment the
-    stand-in re-paid every run. Same result and oracle as
-    ``signed_ivf_maintenance``."""
-    from ..functions import similarity
-
-    cat = SignedDeltaCatalog(spark, sf_dir)
-    fp = _spec_fingerprint(sf_dir, "embeddings")
-    cents, assign = _stored_ivf_half(spark, cat, fp)
-    stored = assign.withColumn("_w", F.lit(1))
-    v = (
-        cat.signed_changes("embeddings")
-        .selectExpr(
-            "vec_id",
-            f"{similarity.as_double_array('embedding')} AS v",
-            f"{SIGN} AS _w",
-        )
-        .selectExpr("vec_id", "v", "_w", f"{similarity.norm('v')} AS nv")
-    )
-    delta = similarity._best_cell(v, cents, "v", "nv").select(
-        "cell", "vec_id", "_w"
-    )
-    live = _net_multiplicity(stored, delta, "cell", "vec_id")
-    return live.groupBy("cell").agg(
-        F.count("*").cast("bigint").alias("n_vecs"),
-        F.min("vec_id").alias("min_vec"),
-    )
-
-
-def q_signed_pq_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _signed_pq(spark: SparkSession, sf_dir: str, state) -> DataFrame:
     """PQ code tables maintained under embedding CDC — the maintenance
     leg of the IVF-PQ lifecycle (``llm_embedding_pq_adc`` builds,
     ``llm_embedding_ivf_pq`` serves, this maintains): per-subspace
@@ -2396,43 +2185,38 @@ def q_signed_pq_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     is |Δ| broadcast-argmin encodes + an index-sized merge; the corpus
     is never re-encoded. Summary certifies every (subspace, code)
     bucket with a count + id-checksum."""
-    from functools import reduce as _reduce
-
     from ..functions import similarity
-    from .curation import _km_assign, _km_centroids
-    from .llm_pipeline import _PQ_K, _PQ_M, _PQ_SUBDIM, _shared
+    from .curation import _km_assign
+    from .llm_pipeline import _PQ_M, _PQ_SUBDIM
 
     cat = SignedDeltaCatalog(spark, sf_dir)
     arr = similarity.as_double_array("embedding")
-    old_v = cat.old("embeddings").selectExpr("vec_id", f"{arr} AS v")
+    cbs, codes = _pq_state(cat, state(cat, "embeddings"))
+
     sgn = cat.signed_changes("embeddings").selectExpr(
         "vec_id", f"{arr} AS v", SIGN
     )
     outs = []
     for m in range(_PQ_M):
         s = m * _PQ_SUBDIM + 1
-        sub_old = old_v.selectExpr(
-            "vec_id", f"slice(v, {s}, {_PQ_SUBDIM}) AS v"
-        )
-        cb = _shared(_km_centroids(sub_old, _PQ_K))  # FROZEN codebook
-        # stored code table stand-in (disk read in production; module
-        # convention) — and the Δ images encoded against the SAME
-        # frozen codebook, each weighted by its CDC sign
+        cb_m = cbs.where(F.col("subspace") == m).select("cell", "c")
         stored = (
-            _km_assign(sub_old, cb)
-            .selectExpr("cell AS code", "vec_id")
+            codes.where(F.col("subspace") == m)
+            .select("code", "vec_id")
             .withColumn("_w", F.lit(1))
         )
+        # the Δ images encoded against the SAME frozen codebook, each
+        # weighted by its CDC sign
         d_base = sgn.selectExpr(
             "vec_id", f"slice(v, {s}, {_PQ_SUBDIM}) AS v", SIGN
         )
         plus = (
-            _km_assign(d_base.where(f"{SIGN} > 0").select("vec_id", "v"), cb)
+            _km_assign(d_base.where(f"{SIGN} > 0").select("vec_id", "v"), cb_m)
             .selectExpr("cell AS code", "vec_id")
             .withColumn("_w", F.lit(1))
         )
         minus = (
-            _km_assign(d_base.where(f"{SIGN} < 0").select("vec_id", "v"), cb)
+            _km_assign(d_base.where(f"{SIGN} < 0").select("vec_id", "v"), cb_m)
             .selectExpr("cell AS code", "vec_id")
             .withColumn("_w", F.lit(-1))
         )
@@ -2450,7 +2234,11 @@ def q_signed_pq_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "vec_checksum",
             )
         )
-    return _reduce(lambda a, b: a.unionByName(b), outs)
+    return reduce(lambda a, b: a.unionByName(b), outs)
+
+
+q_signed_pq_maintenance = partial(_signed_pq, state=_recompute)
+q_signed_pq_stored = partial(_signed_pq, state=_stored)
 
 
 def _signed_pq_oracle() -> str:
@@ -2526,15 +2314,11 @@ def _pq_subspaces(frame):
         )
 
 
-def _stored_pq_half(spark: SparkSession, cat: SignedDeltaCatalog, fp: str):
+def _pq_state(cat: SignedDeltaCatalog, load):
     """The compression half of the maintained (IVF-)PQ index:
-    (per-subspace codebooks, (subspace, code, vec_id) code table),
-    both PERSISTED parquet tables built once per fixture from the OLD
-    snapshot. Shared — same state names, same fingerprint, same
-    builders — by ``q_signed_pq_stored`` and
-    ``q_signed_ivfpq_stored``."""
-    from functools import reduce as _reduce
-
+    (per-subspace codebooks, (subspace, code, vec_id) code table) of
+    the OLD snapshot. Shared — same state names, same builders — by the
+    PQ and IVF-PQ bodies."""
     from ..functions import similarity
     from .curation import _km_assign, _km_centroids
     from .llm_pipeline import _PQ_K
@@ -2549,9 +2333,9 @@ def _stored_pq_half(spark: SparkSession, cat: SignedDeltaCatalog, fp: str):
             )
             for m, sub in _pq_subspaces(old_v)
         ]
-        return _reduce(lambda a, b: a.unionByName(b), outs)
+        return reduce(lambda a, b: a.unionByName(b), outs)
 
-    cbs = _stored_state(spark, "pq_codebooks", fp, build_codebooks)
+    cbs = load("pq_codebooks", build_codebooks)
 
     def build_codes():
         outs = [
@@ -2562,90 +2346,25 @@ def _stored_pq_half(spark: SparkSession, cat: SignedDeltaCatalog, fp: str):
             )
             for m, sub in _pq_subspaces(old_v)
         ]
-        return _reduce(lambda a, b: a.unionByName(b), outs)
+        return reduce(lambda a, b: a.unionByName(b), outs)
 
-    codes = _stored_state(spark, "pq_codes", fp, build_codes)
-    return cbs, codes
-
-
-def q_signed_pq_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PQ maintenance against a PERSISTED state store (r14 verdict
-    item 3): the per-subspace codebooks and the (subspace, code,
-    vec_id) code table are READ from parquet tables a previous refresh
-    wrote (built once per fixture by ``_stored_state``), so the
-    measured pass is the production shape — encode the CDC batch's
-    pre/post images against the frozen codebooks (Δ-sized, broadcast
-    argmin), merge the signed membership, summarize. No corpus k-means
-    and no corpus re-encode per run — the recompute those stand-ins
-    paid in ``signed_pq_maintenance`` is now a disk read. Same result
-    and oracle as ``signed_pq_maintenance``."""
-    from functools import reduce as _reduce
-
-    from ..functions import similarity
-    from .curation import _km_assign
-    from .llm_pipeline import _PQ_M, _PQ_SUBDIM
-
-    cat = SignedDeltaCatalog(spark, sf_dir)
-    arr = similarity.as_double_array("embedding")
-    fp = _spec_fingerprint(sf_dir, "embeddings")
-    cbs, codes = _stored_pq_half(spark, cat, fp)
-
-    sgn = cat.signed_changes("embeddings").selectExpr(
-        "vec_id", f"{arr} AS v", SIGN
-    )
-    outs = []
-    for m in range(_PQ_M):
-        s = m * _PQ_SUBDIM + 1
-        cb_m = cbs.where(F.col("subspace") == m).select("cell", "c")
-        stored = (
-            codes.where(F.col("subspace") == m)
-            .select("code", "vec_id")
-            .withColumn("_w", F.lit(1))
-        )
-        d_base = sgn.selectExpr(
-            "vec_id", f"slice(v, {s}, {_PQ_SUBDIM}) AS v", SIGN
-        )
-        plus = (
-            _km_assign(d_base.where(f"{SIGN} > 0").select("vec_id", "v"), cb_m)
-            .selectExpr("cell AS code", "vec_id")
-            .withColumn("_w", F.lit(1))
-        )
-        minus = (
-            _km_assign(d_base.where(f"{SIGN} < 0").select("vec_id", "v"), cb_m)
-            .selectExpr("cell AS code", "vec_id")
-            .withColumn("_w", F.lit(-1))
-        )
-        live = _net_multiplicity(
-            stored, plus.unionByName(minus), "code", "vec_id"
-        )
-        outs.append(
-            live.groupBy("code").agg(
-                F.count("*").cast("bigint").alias("n_vecs"),
-                F.sum("vec_id").cast("bigint").alias("vec_checksum"),
-            ).selectExpr(
-                f"CAST({m} AS INT) AS subspace",
-                "CAST(code AS INT) AS code",
-                "n_vecs",
-                "vec_checksum",
-            )
-        )
-    return _reduce(lambda a, b: a.unionByName(b), outs)
+    return cbs, load("pq_codes", build_codes)
 
 
 # -- Stored IVF-PQ composed index maintained under embedding CDC -------
 
 
-def q_signed_ivfpq_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _signed_ivfpq(spark: SparkSession, sf_dir: str, state) -> DataFrame:
     """The COMPOSED IVF-PQ index — the structure the serving query
     ``llm_embedding_ivf_pq`` reads (cells prune the scan, codes
-    compress it) — maintained under embedding CDC against PERSISTED
-    state. This closes the one index family whose maintained
+    compress it) — maintained under embedding CDC; the registry binds
+    it to the stored state source only. This closes the one index family whose maintained
     composition wasn't a registered row: the coarse-quantizer half
     (centroids + (cell, vec_id) assignment) and the compression half
     (per-subspace codebooks + (subspace, code, vec_id) code table)
-    are the SAME stored parquet tables ``signed_ivf_stored`` and
-    ``signed_pq_stored`` maintain — identical state names, builders,
-    and fingerprint, so the composition adds NO new corpus-sized
+    are the SAME state relations ``_ivf_state`` and ``_pq_state``
+    give the IVF and PQ maintainers — identical state names and
+    builders, so the stored composition adds NO new corpus-sized
     build; a warm cache serves all four tables from disk.
 
     Maintained relation: the composed membership
@@ -2667,21 +2386,18 @@ def q_signed_ivfpq_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
     vectors — the corpus is not rescanned and the summary is
     n_cells · M · K rows. Frozen-index semantics (centroids and
     codebooks retrain on a slow schedule) are the production cadence,
-    same as both parent twins."""
-    from functools import reduce as _reduce
-
+    same as the IVF and PQ maintainers."""
     from ..functions import similarity
     from .curation import _km_assign
-    from .llm_pipeline import _PQ_M
 
     cat = SignedDeltaCatalog(spark, sf_dir)
     arr = similarity.as_double_array("embedding")
-    fp = _spec_fingerprint(sf_dir, "embeddings")
-    cents, assign = _stored_ivf_half(spark, cat, fp)
-    cbs, codes = _stored_pq_half(spark, cat, fp)
+    load = state(cat, "embeddings")
+    cents, assign = _ivf_state(cat, load)
+    cbs, codes = _pq_state(cat, load)
 
     # stored composed membership: (cell, subspace, code, vec_id), one
-    # equi join of the two persisted tables — index-sized, no vectors
+    # equi join of the two state tables — index-sized, no vectors
     stored = (
         assign.join(codes, "vec_id")
         .select("cell", "subspace", "code", "vec_id")
@@ -2707,7 +2423,7 @@ def q_signed_ivfpq_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             for m, sub in _pq_subspaces(img)
         ]
-        code_all = _reduce(lambda a, b: a.unionByName(b), code_parts)
+        code_all = reduce(lambda a, b: a.unionByName(b), code_parts)
         return (
             cell.join(code_all, "vec_id")
             .select("cell", "subspace", "code", "vec_id")
@@ -2724,16 +2440,16 @@ def q_signed_ivfpq_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
         sgn.where(f"{SIGN} < 0").select("vec_id", "v"), -1
     )
 
-    live = (
-        stored.unionByName(plus).unionByName(minus)
-        .groupBy("cell", "subspace", "code", "vec_id")
-        .agg(F.sum("_w").alias("m"))
-        .where("m > 0")
+    live = _net_multiplicity(
+        stored, plus.unionByName(minus), "cell", "subspace", "code", "vec_id"
     )
     return live.groupBy("cell", "subspace", "code").agg(
         F.count("*").cast("bigint").alias("n_vecs"),
         F.sum("vec_id").cast("bigint").alias("vec_checksum"),
     )
+
+
+q_signed_ivfpq_stored = partial(_signed_ivfpq, state=_stored)
 
 
 def _signed_ivfpq_oracle() -> str:
@@ -2851,20 +2567,37 @@ GROUP BY i.cell, ca.subspace, ca.code
 # O(|Δ| · cluster_size), never a corpus rescan.
 
 
-def q_signed_semdedup_maintenance(
-    spark: SparkSession, sf_dir: str
+def _signed_semdedup(
+    spark: SparkSession, sf_dir: str, state, specs=None, k: int | None = None
 ) -> DataFrame:
+    """``k`` frozen cells (default ``curation._KMEANS_K``); the state
+    names carry it, so two cell counts never share stored state."""
     from ..functions import similarity
     from .curation import _KMEANS_K, _km_assign, _km_centroids, _ledger_of
-    from .llm_pipeline import _shared
 
-    cat = SignedDeltaCatalog(spark, sf_dir)
+    k = _KMEANS_K if k is None else k
+    cat = SignedDeltaCatalog(spark, sf_dir, specs)
+    load = state(cat, "embeddings")
     arr = similarity.as_double_array("embedding")
     old_v = cat.old("embeddings").selectExpr("vec_id", f"{arr} AS v")
-    cents = _shared(_km_centroids(old_v, _KMEANS_K))  # FROZEN, k rows
-    # stored state: old vectors' frozen-centroid assignment (two
-    # consumers — membership weights and the stored ledger)
-    assign_old = _shared(_km_assign(old_v, cents))
+    cents = load(  # FROZEN, k rows
+        f"semdedup_cents_k{k}", lambda: _km_centroids(old_v, k)
+    )
+    # the old vectors' frozen-centroid assignment feeds two state
+    # relations: (vec_id, cell) — all a deployment stores; vectors live
+    # in the base table — and the per-cluster keeper ledger
+    assign_old = load(
+        f"semdedup_assign_k{k}",
+        lambda: _km_assign(old_v, cents).select("vec_id", "cell"),
+    )
+    ledger_old = load(
+        f"semdedup_ledger_k{k}",
+        lambda: _ledger_of(
+            _km_assign(old_v, cents).selectExpr(
+                "vec_id", "cell", "v", f"{similarity.norm('v')} AS nrm"
+            )
+        ),
+    )
     stored = assign_old.select("cell", "vec_id").withColumn(
         "_w", F.lit(1)
     )
@@ -2895,11 +2628,7 @@ def q_signed_semdedup_maintenance(
             "vec_id", "cell", "v", f"{similarity.norm('v')} AS nrm"
         )
     )
-    untouched = _ledger_of(
-        assign_old.selectExpr(
-            "vec_id", "cell", "v", f"{similarity.norm('v')} AS nrm"
-        )
-    ).join(
+    untouched = ledger_old.join(
         F.broadcast(
             touched.selectExpr("CAST(cell AS INT) AS cluster_id")
         ),
@@ -2977,23 +2706,6 @@ GROUP BY n.cell
 """
 
 
-def q_signed_semdedup_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SemDeDup maintenance against a PERSISTED state store (r13
-    verdict item 4): frozen centroids, the (vec_id, cell) assignment
-    relation, and the per-cluster keeper ledger are all READ from
-    parquet tables a previous refresh wrote (built once per fixture by
-    ``_stored_state``), so the measured pass is the production shape —
-    assign the CDC batch's pre/post images against the frozen
-    centroids (Δ-sized, broadcast argmin), merge membership
-    multiplicities, repair the ledger for TOUCHED cells only, and
-    anti-join the stored ledger through for everyone else. No corpus
-    k-means, no corpus assignment, no corpus ledger recompute per run.
-    Same result and oracle as ``signed_semdedup_maintenance``."""
-    from .curation import _KMEANS_K
-
-    return _semdedup_stored(spark, sf_dir, specs=None, k=_KMEANS_K)
-
-
 # SPARSE regime for SemDeDup confinement (the r14 verdict's honest
 # caveat on the stored row: the registered embeddings spec relocates
 # ~30% of vectors, so with K=8 cells EVERY cell is touched and the
@@ -3014,81 +2726,16 @@ _SPARSE_EMB_SPECS = {
 }
 _SEMDEDUP_SPARSE_K = 64
 
-
-def q_signed_semdedup_sparse(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """``signed_semdedup_stored`` in the SPARSE regime: ~0.3% of
-    vectors change against K=64 frozen cells, so the touched-cell
-    semi join confines the intra-cluster pair repair to a small cell
-    fraction and the stored ledger's anti-join pass-through carries
-    the rest — the confinement economics the dense spec structurally
-    cannot show (it touches all K=8 cells). Same machinery, own
-    sparse exact oracle."""
-    return _semdedup_stored(
-        spark, sf_dir, specs=_SPARSE_EMB_SPECS, k=_SEMDEDUP_SPARSE_K
-    )
-
-
-def _semdedup_stored(
-    spark: SparkSession, sf_dir: str, specs, k: int
-) -> DataFrame:
-    from ..functions import similarity
-    from .curation import _km_assign, _km_centroids, _ledger_of
-
-    cat = SignedDeltaCatalog(spark, sf_dir, specs)
-    arr = similarity.as_double_array("embedding")
-    fp = _spec_fingerprint(sf_dir, "embeddings", specs) + f"|k={k}"
-    old_v = cat.old("embeddings").selectExpr("vec_id", f"{arr} AS v")
-    cents = _stored_state(
-        spark, "semdedup_cents", fp,
-        lambda: _km_centroids(old_v, k),
-    )
-    # a deployment stores (vec_id, cell) only — vectors live in the
-    # base table, and the refresh path never needs the old ones
-    assign_old = _stored_state(
-        spark, "semdedup_assign", fp,
-        lambda: _km_assign(old_v, cents).select("vec_id", "cell"),
-    )
-    ledger_old = _stored_state(
-        spark, "semdedup_ledger", fp,
-        lambda: _ledger_of(
-            assign_old.join(old_v, "vec_id").selectExpr(
-                "vec_id", "cell", "v", f"{similarity.norm('v')} AS nrm"
-            )
-        ),
-    )
-    stored = assign_old.select("cell", "vec_id").withColumn(
-        "_w", F.lit(1)
-    )
-    sgn = cat.signed_changes("embeddings").selectExpr(
-        "vec_id", f"{arr} AS v", SIGN
-    )
-    plus = _km_assign(
-        sgn.where(f"{SIGN} > 0").select("vec_id", "v"), cents
-    ).select("cell", "vec_id").withColumn("_w", F.lit(1))
-    minus = _km_assign(
-        sgn.where(f"{SIGN} < 0").select("vec_id", "v"), cents
-    ).select("cell", "vec_id").withColumn("_w", F.lit(-1))
-    delta = plus.unionByName(minus)
-    touched = delta.select("cell").distinct().localCheckpoint(eager=True)
-
-    live = _net_multiplicity(stored, delta, "cell", "vec_id")
-    new_v = cat.new("embeddings").selectExpr("vec_id", f"{arr} AS v")
-    repaired = _ledger_of(
-        live.join(F.broadcast(touched), "cell", "left_semi")
-        .select("cell", "vec_id")
-        .join(new_v, "vec_id")
-        .selectExpr(
-            "vec_id", "cell", "v", f"{similarity.norm('v')} AS nrm"
-        )
-    )
-    untouched = ledger_old.join(
-        F.broadcast(
-            touched.selectExpr("CAST(cell AS INT) AS cluster_id")
-        ),
-        "cluster_id",
-        "left_anti",
-    )
-    return untouched.unionByName(repaired)
+q_signed_semdedup_maintenance = partial(_signed_semdedup, state=_recompute)
+q_signed_semdedup_stored = partial(_signed_semdedup, state=_stored)
+# The sparse regime: ~0.3% of vectors change against K=64 frozen cells,
+# so the touched-cell semi join confines the intra-cluster pair repair
+# to a small cell fraction and the stored ledger's anti-join
+# pass-through carries the rest. Own sparse exact oracle.
+q_signed_semdedup_sparse = partial(
+    _signed_semdedup, state=_stored, specs=_SPARSE_EMB_SPECS,
+    k=_SEMDEDUP_SPARSE_K,
+)
 
 
 # -- Stored BM25 index maintained under document CDC -------------------
@@ -3106,27 +2753,25 @@ def _semdedup_stored(
 # llm_bm25_search over them.
 
 
-def q_signed_bm25_maintenance(
-    spark: SparkSession, sf_dir: str, stored_tf=None, stored_dl=None
-) -> DataFrame:
-    """``stored_tf``/``stored_dl`` (optional DataFrames) let the
-    stored-state variant supply the persisted postings and doc-length
-    relations instead of the old-snapshot recomputes."""
+def _signed_bm25(spark: SparkSession, sf_dir: str, state) -> DataFrame:
+    from ..functions import text as _text
     from .llm_pipeline import _BM25_NTERMS, _BM25_TOPK, _bm25_rank, _bm25_tf
 
     cat = SignedDeltaCatalog(spark, sf_dir)
-    # stored index realization: tf postings + doc lengths of the old
-    # state (a disk read in production — which is exactly what
-    # q_signed_bm25_stored passes in; see module convention)
-    if stored_tf is None:
-        stored_tf = _bm25_tf(cat.old("documents"))
+    load = state(cat, "documents")
+    # state: tf postings + doc lengths of the old corpus
+    stored_tf = load("bm25_tf", lambda: _bm25_tf(cat.old("documents")))
+    stored_dl = load(
+        "bm25_dl",
+        lambda: stored_tf.groupBy("doc_id").agg(
+            F.sum("tf").cast("bigint").alias("w_dl")
+        ),
+    )
     sgn_docs = cat.signed_changes("documents")
     # per-image tokenize: an update's pre and post rows share doc_id
     # but tokenize separately, each token occurrence weighted by its
     # image's sign — net tf per (token, doc) after the merge is
     # exactly the new state's tf
-    from ..functions import text as _text
-
     norm = _text.norm_text("text")
     d_tf = (
         sgn_docs.selectExpr(
@@ -3143,10 +2788,6 @@ def q_signed_bm25_maintenance(
         .agg(F.sum("w_tf").cast("bigint").alias("tf"))
         .where("tf > 0")
     )
-    if stored_dl is None:
-        stored_dl = stored_tf.groupBy("doc_id").agg(
-            F.sum("tf").cast("bigint").alias("w_dl")
-        )
     d_dl = d_tf.groupBy("doc_id").agg(
         F.sum("w_tf").cast("bigint").alias("w_dl")
     )
@@ -3172,37 +2813,14 @@ def q_signed_bm25_maintenance(
     return _bm25_rank(lists, live_dl, _BM25_TOPK)
 
 
+q_signed_bm25_maintenance = partial(_signed_bm25, state=_recompute)
+q_signed_bm25_stored = partial(_signed_bm25, state=_stored)
+
+
 def _signed_bm25_oracle() -> str:
     from .llm_pipeline import _bm25_oracle
 
     return _bm25_oracle(f"({_new_sql('documents')})")
-
-
-def q_signed_bm25_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BM25 index maintenance against PERSISTED postings + doc-length
-    tables (r13 verdict item 4 pattern): both relations are read from
-    parquet a previous refresh wrote (built once per fixture), so the
-    measured pass is the true production shape — tokenize the CDC
-    batch, merge O(Δ) postings into the stored lists, re-derive
-    df/N/avgdl from the maintained relations, replay the quantized
-    top-20. No corpus re-tokenize per run. Same result and oracle as
-    ``signed_bm25_maintenance``."""
-    from .llm_pipeline import _bm25_tf
-
-    cat = SignedDeltaCatalog(spark, sf_dir)
-    fp = _spec_fingerprint(sf_dir, "documents")
-    stored_tf = _stored_state(
-        spark, "bm25_tf", fp, lambda: _bm25_tf(cat.old("documents"))
-    )
-    stored_dl = _stored_state(
-        spark, "bm25_dl", fp,
-        lambda: stored_tf.groupBy("doc_id").agg(
-            F.sum("tf").cast("bigint").alias("w_dl")
-        ),
-    )
-    return q_signed_bm25_maintenance(
-        spark, sf_dir, stored_tf=stored_tf, stored_dl=stored_dl
-    )
 
 
 # -- Stored inverted-index maintenance under document CDC --------------
@@ -3218,13 +2836,14 @@ def q_signed_bm25_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
 # a signed twin (r10 verdict gap #3).
 
 
-def q_signed_inverted_index_maintenance(
-    spark: SparkSession, sf_dir: str
+def _signed_inverted_index(
+    spark: SparkSession, sf_dir: str, state
 ) -> DataFrame:
     from ..functions import text
     from .llm_pipeline import _norm_df
 
     cat = SignedDeltaCatalog(spark, sf_dir)
+    load = state(cat, "documents")
 
     def postings(df: DataFrame, carry: tuple[str, ...] = ()) -> DataFrame:
         return (
@@ -3235,14 +2854,12 @@ def q_signed_inverted_index_maintenance(
             .where("length(token) >= 3")
         )
 
-    stored = (  # the persisted posting lists (recomputed from the old
-        # snapshot for fixture reasons; q_signed_inverted_stored reads
-        # the same relation from a persisted _stored_state table)
-        postings(cat.old("documents"))
+    stored = load(
+        "inv_postings",
+        lambda: postings(cat.old("documents"))
         .select("token", "doc_id")
-        .distinct()
-        .withColumn("_w", F.lit(1))
-    )
+        .distinct(),
+    ).withColumn("_w", F.lit(1))
     sgn = cat.signed_changes("documents")
     delta = (  # net per-(token, doc) PRESENCE change of the batch
         postings(sgn.withColumnRenamed(SIGN, "_w"), carry=("_w",))
@@ -3255,9 +2872,7 @@ def q_signed_inverted_index_maintenance(
     # green row certifies every bucket directory's post-maintenance
     # content.
     return (
-        live.withColumn(
-            "bucket", F.expr(token_bucket("token"))
-        )
+        live.withColumn("bucket", F.expr(token_bucket("token")))
         .groupBy("bucket")
         .agg(
             F.count("*").cast("bigint").alias("n_postings"),
@@ -3265,6 +2880,12 @@ def q_signed_inverted_index_maintenance(
             F.sum("doc_id").cast("bigint").alias("doc_checksum"),
         )
     )
+
+
+q_signed_inverted_index_maintenance = partial(
+    _signed_inverted_index, state=_recompute
+)
+q_signed_inverted_stored = partial(_signed_inverted_index, state=_stored)
 
 
 def _signed_inverted_index_oracle() -> str:
@@ -3293,51 +2914,6 @@ FROM b GROUP BY bucket
 """
 
 
-def q_signed_inverted_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Inverted-index maintenance against a PERSISTED posting store
-    (r14 verdict item 6): the (token, doc_id) posting lists are READ
-    from a parquet table a previous refresh wrote (built once per
-    fixture by ``_stored_state``). The per-run cost is tokenizing the
-    CHANGE BATCH only — a Δ presence merge into the stored postings —
-    never a corpus re-tokenize. Same result and oracle as
-    ``signed_inverted_index_maintenance``."""
-    from ..functions import text
-    from .llm_pipeline import _norm_df
-
-    cat = SignedDeltaCatalog(spark, sf_dir)
-    fp = _spec_fingerprint(sf_dir, "documents")
-
-    def postings(df: DataFrame, carry: tuple[str, ...] = ()) -> DataFrame:
-        return (
-            _norm_df(df, carry)
-            .selectExpr(
-                "doc_id", f"explode({text.words('norm')}) AS token", *carry
-            )
-            .where("length(token) >= 3")
-        )
-
-    stored = _stored_state(
-        spark, "inv_postings", fp,
-        lambda: postings(cat.old("documents"))
-        .select("token", "doc_id")
-        .distinct(),
-    ).withColumn("_w", F.lit(1))
-    sgn = cat.signed_changes("documents")
-    delta = (
-        postings(sgn.withColumnRenamed(SIGN, "_w"), carry=("_w",))
-        .select("token", "doc_id", "_w")
-        .distinct()
-    )
-    live = _net_multiplicity(stored, delta, "token", "doc_id")
-    return (
-        live.withColumn("bucket", F.expr(token_bucket("token")))
-        .groupBy("bucket")
-        .agg(
-            F.count("*").cast("bigint").alias("n_postings"),
-            F.countDistinct("token").cast("bigint").alias("n_tokens"),
-            F.sum("doc_id").cast("bigint").alias("doc_checksum"),
-        )
-    )
 
 
 # -- Positional (phrase) index maintenance under document CDC ----------
@@ -3349,24 +2925,22 @@ def q_signed_inverted_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
 # so the merge is O(|Δ| tokens), and the stored side never rescans.
 
 
-def q_signed_phrase_index_maintenance(
-    spark: SparkSession, sf_dir: str
+def _signed_phrase_index(
+    spark: SparkSession, sf_dir: str, state
 ) -> DataFrame:
+    from ..functions import text
     from .llm_pipeline import _norm_df
 
     cat = SignedDeltaCatalog(spark, sf_dir)
+    load = state(cat, "documents")
 
     def pos_postings(df: DataFrame, carry: tuple[str, ...] = ()) -> DataFrame:
-        from ..functions import text
-
         # text.words, not an inline split: tokenization stays
         # single-sourced with the batch-side index builders
         return (
             _norm_df(df, carry)
             .selectExpr("doc_id", f"{text.words('norm')} AS w", *carry)
-            .selectExpr(
-                "doc_id", "posexplode(w) AS (pos0, token)", *carry
-            )
+            .selectExpr("doc_id", "posexplode(w) AS (pos0, token)", *carry)
             .selectExpr(
                 "doc_id", "token",
                 "CAST(pos0 + 1 AS BIGINT) AS pos", *carry,
@@ -3374,8 +2948,11 @@ def q_signed_phrase_index_maintenance(
             .where("length(token) >= 3")
         )
 
-    stored = pos_postings(cat.old("documents")).select(
-        "token", "doc_id", "pos"
+    stored = load(
+        "phrase_postings",
+        lambda: pos_postings(cat.old("documents")).select(
+            "token", "doc_id", "pos"
+        ),
     ).withColumn("_w", F.lit(1))
     sgn = cat.signed_changes("documents")
     delta = pos_postings(
@@ -3383,16 +2960,9 @@ def q_signed_phrase_index_maintenance(
     ).select("token", "doc_id", "pos", "_w")
     # (doc_id, pos) is unique within one doc version, so no distinct:
     # pre(-1)/post(+1) rows at identical (token, pos) cancel directly.
-    live = (
-        stored.unionByName(delta)
-        .groupBy("token", "doc_id", "pos")
-        .agg(F.sum("_w").alias("m"))
-        .where("m > 0")
-    )
+    live = _net_multiplicity(stored, delta, "token", "doc_id", "pos")
     return (
-        live.withColumn(
-            "bucket", F.expr(token_bucket("token"))
-        )
+        live.withColumn("bucket", F.expr(token_bucket("token")))
         .groupBy("bucket")
         .agg(
             F.count("*").cast("bigint").alias("n_postings"),
@@ -3401,6 +2971,12 @@ def q_signed_phrase_index_maintenance(
             F.sum("pos").cast("bigint").alias("pos_checksum"),
         )
     )
+
+
+q_signed_phrase_index_maintenance = partial(
+    _signed_phrase_index, state=_recompute
+)
+q_signed_phrase_stored = partial(_signed_phrase_index, state=_stored)
 
 
 def _signed_phrase_index_oracle() -> str:
@@ -3431,58 +3007,6 @@ FROM b GROUP BY bucket
 """
 
 
-def q_signed_phrase_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Positional-index maintenance against a PERSISTED posting store
-    (r14 verdict item 6): the (token, doc_id, pos) relation is READ
-    from a parquet table a previous refresh wrote (built once per
-    fixture by ``_stored_state``). The per-run cost is position-
-    tokenizing the CHANGE BATCH only — an edit's unchanged prefix
-    cancels exactly in the signed merge — never a corpus re-tokenize.
-    Same result and oracle as ``signed_phrase_index_maintenance``."""
-    from ..functions import text
-    from .llm_pipeline import _norm_df
-
-    cat = SignedDeltaCatalog(spark, sf_dir)
-    fp = _spec_fingerprint(sf_dir, "documents")
-
-    def pos_postings(df: DataFrame, carry: tuple[str, ...] = ()) -> DataFrame:
-        return (
-            _norm_df(df, carry)
-            .selectExpr("doc_id", f"{text.words('norm')} AS w", *carry)
-            .selectExpr("doc_id", "posexplode(w) AS (pos0, token)", *carry)
-            .selectExpr(
-                "doc_id", "token",
-                "CAST(pos0 + 1 AS BIGINT) AS pos", *carry,
-            )
-            .where("length(token) >= 3")
-        )
-
-    stored = _stored_state(
-        spark, "phrase_postings", fp,
-        lambda: pos_postings(cat.old("documents")).select(
-            "token", "doc_id", "pos"
-        ),
-    ).withColumn("_w", F.lit(1))
-    sgn = cat.signed_changes("documents")
-    delta = pos_postings(
-        sgn.withColumnRenamed(SIGN, "_w"), carry=("_w",)
-    ).select("token", "doc_id", "pos", "_w")
-    live = (
-        stored.unionByName(delta)
-        .groupBy("token", "doc_id", "pos")
-        .agg(F.sum("_w").alias("m"))
-        .where("m > 0")
-    )
-    return (
-        live.withColumn("bucket", F.expr(token_bucket("token")))
-        .groupBy("bucket")
-        .agg(
-            F.count("*").cast("bigint").alias("n_postings"),
-            F.countDistinct("token").cast("bigint").alias("n_tokens"),
-            F.sum("doc_id").cast("bigint").alias("doc_checksum"),
-            F.sum("pos").cast("bigint").alias("pos_checksum"),
-        )
-    )
 
 
 # -- Duplicate-SPAN table maintained under document CDC ----------------
@@ -3502,7 +3026,7 @@ def q_signed_phrase_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _dupspan_parts(
-    spark: SparkSession, sf_dir: str, stored: bool = False, specs=None
+    spark: SparkSession, sf_dir: str, state, specs=None
 ) -> dict[str, DataFrame]:
     from .llm_pipeline import (
         _gram_positions,
@@ -3511,53 +3035,37 @@ def _dupspan_parts(
     )
 
     cat = SignedDeltaCatalog(spark, sf_dir, specs)
+    load = state(cat, "documents")
 
     # single-sourced tokenization: the maintainer MUST gram exactly
     # like the batch detector (llm_pipeline._gram_positions) or the
     # maintained state silently desynchronizes from the oracle
     gram_pos = _gram_positions
 
-    if stored:
-        # the real production shape: gram positions, per-gram counts,
-        # and the span table are PERSISTED parquet tables a previous
-        # refresh wrote (built once per fixture) — the per-run cost is
-        # the Δ merge + scoped re-islanding, never a corpus re-gram.
-        # The OLD snapshot (and so the stored state) depends on the
-        # CDC spec's insert class — key the cache on it.
-        fp = _spec_fingerprint(sf_dir, "documents", specs)
-        gp_t = _stored_state(
-            spark, "dupspan_gp", fp,
-            lambda: gram_pos(cat.old("documents")),
-        )
-        stored_gp = gp_t.withColumn("_w", F.lit(1))
-        old_cnt = _stored_state(
-            spark, "dupspan_cnt", fp,
-            lambda: gp_t.groupBy("g").agg(
-                F.count("*").cast("bigint").alias("c_old")
-            ),
-        )
-        old_spans = _stored_state(
-            spark, "dupspan_spans", fp,
-            lambda: _spans_from_positions(
-                gp_t.join(
-                    old_cnt.where("c_old >= 2").select("g"), "g"
-                ).select("doc_id", "i")
-            ),
-        )
-    else:
-        # stored state stand-ins (recomputed from the old snapshot for
-        # fixture reasons, as in the module's pre-r14 maintainers)
-        stored_gp = _shared(
-            gram_pos(cat.old("documents")).withColumn("_w", F.lit(1))
-        )
-        old_cnt = stored_gp.groupBy("g").agg(
+    # state: gram positions, per-gram counts, and the span table of the
+    # old corpus. The recompute binding pins the gram positions, which
+    # the counts, the spans and both scoped merges below all derive
+    # from: unpinned, the spans still match the DuckDB oracle, but
+    # comparing them with a same-session rebuild
+    # (test_dupspan_repair_is_scoped_and_complete) fails — the
+    # same-lineage hazard described at the line-dedup maintainer
+    gp_old = load(
+        "dupspan_gp", lambda: _shared(gram_pos(cat.old("documents")))
+    )
+    stored_gp = gp_old.withColumn("_w", F.lit(1))
+    old_cnt = load(
+        "dupspan_cnt",
+        lambda: gp_old.groupBy("g").agg(
             F.count("*").cast("bigint").alias("c_old")
-        )
-        old_spans = _spans_from_positions(
-            stored_gp.join(
-                old_cnt.where("c_old >= 2").select("g"), "g"
-            ).select("doc_id", "i")
-        )
+        ),
+    )
+    old_spans = load(
+        "dupspan_spans",
+        lambda: _spans_from_positions(
+            gp_old.join(old_cnt.where("c_old >= 2").select("g"), "g")
+            .select("doc_id", "i")
+        ),
+    )
 
     sgn = cat.signed_changes("documents")
     d_gp = _shared(
@@ -3578,69 +3086,36 @@ def _dupspan_parts(
     touched = sgn.select("doc_id").distinct()
     live_dup = new_cnt.where("c_new >= 2").select("g")
 
-    # (doc_id, i) is unique within one doc version → pre(-1)/post(+1)
-    # rows at identical (i, g) cancel directly, no distinct needed.
-    def net_live(gp_rows: DataFrame) -> DataFrame:
-        return (
-            gp_rows.groupBy("doc_id", "i", "g")
-            .agg(F.sum("_w").alias("m"))
-            .where("m > 0")
-        )
-
-    if stored:
-        # SCOPED merges: the global (doc_id, i, g) groupBy commutes
-        # with restriction, so the two consumers each net-sum only the
-        # rows they need — flipped grams' holders (shuffle volume =
-        # the flipped grams' posting mass) and affected docs' grams
-        # (shuffle volume = the affected docs' token mass). The stored
-        # gp scan stays corpus-sized here (a deployment would bucket
-        # the table by md5(g) for pruned reads, like the inverted
-        # index); what this plan removes is the corpus-sized SHUFFLE
-        # the recompute variant pays.
-        hf_live = net_live(
-            stored_gp.join(flipped, "g", "left_semi").unionByName(
-                d_gp.join(flipped, "g", "left_semi")
-            )
-        )
-        affected = _shared(
-            touched.unionByName(hf_live.select("doc_id")).distinct()
-        )
-        live_aff = net_live(
-            stored_gp.join(affected, "doc_id", "left_semi").unionByName(
-                d_gp.join(affected, "doc_id", "left_semi")
-            )
-        )
-        respans = _spans_from_positions(
-            live_aff.join(live_dup, "g").select("doc_id", "i")
-        )
-    else:
-        # Same SCOPED merges as the stored branch (r17): the global
-        # (doc_id, i, g) groupBy commutes with restriction, so netting
-        # only the flipped grams' holders and then only the affected
-        # docs' grams replaces the corpus-sized (doc, i, g) shuffle
-        # with two broadcast-semi-restricted ones — the stand-in gp
-        # relation is persisted, so the extra pass over it reads
-        # cached blocks. Even under the dense registered spec (~1/3 of
-        # docs touched) the restricted net-merge shuffles less than
-        # the full corpus merge did.
-        hf_live = net_live(
-            stored_gp.join(flipped, "g", "left_semi").unionByName(
-                d_gp.join(flipped, "g", "left_semi")
-            )
-        )
-        affected = _shared(
-            touched.unionByName(hf_live.select("doc_id")).distinct()
-        )
-        live_aff = net_live(
-            stored_gp.join(affected, "doc_id", "left_semi").unionByName(
-                d_gp.join(affected, "doc_id", "left_semi")
-            )
-        )
-        # scoped repair: re-island ONLY affected docs against the
-        # maintained dup-gram set; everyone else's spans carry over
-        respans = _spans_from_positions(
-            live_aff.join(live_dup, "g").select("doc_id", "i")
-        )
+    # SCOPED merges: the global (doc_id, i, g) groupBy commutes with
+    # restriction, so the two consumers each net-sum only the rows they
+    # need — flipped grams' holders (shuffle volume = the flipped
+    # grams' posting mass) and affected docs' grams (shuffle volume =
+    # the affected docs' token mass). (doc_id, i) is unique within one
+    # doc version → pre(-1)/post(+1) rows at identical (i, g) cancel
+    # directly, no distinct needed. The stored gp scan stays
+    # corpus-sized (a deployment would bucket the table by md5(g) for
+    # pruned reads, like the inverted index); what this plan removes is
+    # the corpus-sized (doc, i, g) SHUFFLE — even under the dense
+    # registered spec (~1/3 of docs touched) the restricted merges
+    # shuffle less than the full corpus merge did.
+    hf_live = _net_multiplicity(
+        stored_gp.join(flipped, "g", "left_semi"),
+        d_gp.join(flipped, "g", "left_semi"),
+        "doc_id", "i", "g",
+    )
+    affected = _shared(
+        touched.unionByName(hf_live.select("doc_id")).distinct()
+    )
+    live_aff = _net_multiplicity(
+        stored_gp.join(affected, "doc_id", "left_semi"),
+        d_gp.join(affected, "doc_id", "left_semi"),
+        "doc_id", "i", "g",
+    )
+    # scoped repair: re-island ONLY affected docs against the
+    # maintained dup-gram set; everyone else's spans carry over
+    respans = _spans_from_positions(
+        live_aff.join(live_dup, "g").select("doc_id", "i")
+    )
     carried = old_spans.join(affected, "doc_id", "left_anti")
     return {
         "affected": affected,
@@ -3650,10 +3125,10 @@ def _dupspan_parts(
     }
 
 
-def q_signed_dupspan_maintenance(
-    spark: SparkSession, sf_dir: str
+def _signed_dupspan(
+    spark: SparkSession, sf_dir: str, state, specs=None
 ) -> DataFrame:
-    p = _dupspan_parts(spark, sf_dir)
+    p = _dupspan_parts(spark, sf_dir, state, specs)
     return p["carried"].unionByName(p["respans"])
 
 
@@ -3673,21 +3148,13 @@ _DUPSPAN_SPARSE_SPECS = {
     )
 }
 
-
-def q_signed_dupspan_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Dup-span maintenance against PERSISTED state in the sparse-CDC
-    regime (r13 verdict item 4 pattern): gram positions, per-gram
-    counts, and the stored span table are read from parquet a previous
-    refresh wrote, and BOTH net-multiplicity merges are scoped — the
-    flipped-gram holder lookup shuffles only those grams' postings,
-    the re-islanding shuffles only affected docs' grams — so the
-    per-run cost tracks the batch's gram fan-out, never the corpus
-    (the recompute sibling pays a corpus-wide (doc, i, g) shuffle
-    every run). Exact oracle over the sparse-spec post-state."""
-    p = _dupspan_parts(
-        spark, sf_dir, stored=True, specs=_DUPSPAN_SPARSE_SPECS
-    )
-    return p["carried"].unionByName(p["respans"])
+q_signed_dupspan_maintenance = partial(_signed_dupspan, state=_recompute)
+# The production shape: stored state under the sparse spec, so the
+# per-run cost tracks the batch's gram fan-out, never the corpus.
+# Exact oracle over the sparse-spec post-state.
+q_signed_dupspan_stored = partial(
+    _signed_dupspan, state=_stored, specs=_DUPSPAN_SPARSE_SPECS
+)
 
 
 def _signed_dupspan_oracle() -> str:
@@ -3828,14 +3295,11 @@ def _tri_touching(edges: DataFrame, delta: DataFrame) -> DataFrame:
     return tri.agg(F.count("*").cast("bigint").alias("n"))
 
 
-def q_signed_triangle_maintenance(
-    spark: SparkSession, sf_dir: str, specs=None, sup_old=None
+def _signed_triangle(
+    spark: SparkSession, sf_dir: str, state, specs=None
 ) -> DataFrame:
     """``specs`` (optional dict of CdcSpec) lets the test suite pin
-    the cancellation property under alternative change batches;
-    ``sup_old`` (optional DataFrame) lets the stored-state variant
-    supply the persisted edge-support table instead of the
-    old-snapshot recompute."""
+    the cancellation property under alternative change batches."""
     from .llm_pipeline import _shared
 
     cat = SignedDeltaCatalog(spark, sf_dir, specs)
@@ -3847,13 +3311,11 @@ def q_signed_triangle_maintenance(
 
     pairs = _copurchase_pairs
 
-    # stored edge-support state (disk read in production — which is
-    # exactly what q_signed_triangle_stored passes in; recomputed from
-    # the old snapshot otherwise, for fixture reasons)
-    if sup_old is None:
-        sup_old = _shared(
-            pairs(li_old).groupBy("u", "v").agg(F.count("*").alias("s"))
-        )
+    # state: the per-edge support of the old graph
+    sup_old = state(cat, "lineitem")(
+        "tri_support",
+        lambda: pairs(li_old).groupBy("u", "v").agg(F.count("*").alias("s")),
+    )
     # scoped support delta: pair sets of TOUCHED orders only, old and
     # new images sign-weighted — a changed line pairs with its order's
     # unchanged lines, so the slice is the touched orders' full line
@@ -3883,7 +3345,6 @@ def q_signed_triangle_maintenance(
     e_old = merged.where("s_old > 0").select("u", "v")
     e_new = merged.where("s_new > 0").select("u", "v")
 
-
     return (
         e_new.agg(F.count("*").cast("bigint").alias("n_edges_new"))
         .crossJoin(
@@ -3907,7 +3368,6 @@ def q_signed_triangle_maintenance(
             "_ta - _tr AS tri_delta",
         )
     )
-
 
 # Brute force: two full triangle counts (old and new states) plus the
 # edge-set diff — the identity the incremental path must land on.
@@ -3960,10 +3420,6 @@ _TRI_SPARSE_SPECS = {
 }
 
 
-def q_signed_triangle_sparse(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return q_signed_triangle_maintenance(
-        spark, sf_dir, specs=_TRI_SPARSE_SPECS
-    )
 
 
 def _signed_triangle_sparse_oracle() -> str:
@@ -3973,41 +3429,19 @@ def _signed_triangle_sparse_oracle() -> str:
     )
 
 
-def q_signed_triangle_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The triangle maintainer in the PRODUCTION configuration (r13
-    verdict item 4): sparse CDC batch (~2% of lines — the 100 TB
-    regime, same spec and exact oracle as ``signed_triangle_sparse``)
-    with the per-edge support state READ from a PERSISTED parquet
-    ledger (``_stored_state``, built once per fixture) instead of the
-    old-snapshot recompute. The sparse row showed the stand-ins WERE
-    its dominant cost ("the remaining cost is the fixed
-    stored-support/adjacency stand-ins" — SCALE.md r13); with the
-    ledger on disk, every run pays only the stored scan, the
-    batch-proportional support delta, and the delta-anchored T-terms.
-    Under the DENSE spec the T-terms approach a recount by
-    construction and the state source is noise — that comparison
-    stays with ``signed_triangle_maintenance``; this row pins the
-    claim that actually matters at scale: maintenance cost tracks the
-    batch once state is stored."""
-
-    def build() -> DataFrame:
-        cat = SignedDeltaCatalog(spark, sf_dir, _TRI_SPARSE_SPECS)
-        li_old = cat.old("lineitem").select("l_orderkey", "l_partkey")
-        return (
-            _copurchase_pairs(li_old)
-            .groupBy("u", "v")
-            .agg(F.count("*").alias("s"))
-        )
-
-    sup = _stored_state(
-        spark,
-        "tri_support",
-        _spec_fingerprint(sf_dir, "lineitem", _TRI_SPARSE_SPECS),
-        build,
-    )
-    return q_signed_triangle_maintenance(
-        spark, sf_dir, specs=_TRI_SPARSE_SPECS, sup_old=sup
-    )
+q_signed_triangle_maintenance = partial(_signed_triangle, state=_recompute)
+q_signed_triangle_sparse = partial(
+    _signed_triangle, state=_recompute, specs=_TRI_SPARSE_SPECS
+)
+# The production configuration: the sparse batch against stored
+# support. Under the DENSE spec the T-terms approach a recount by
+# construction and the state source is noise; under the sparse one the
+# old-support recompute is the dominant cost (SCALE.md r13), so with
+# the support on disk every run pays only the stored scan, the
+# batch-proportional support delta and the delta-anchored T-terms.
+q_signed_triangle_stored = partial(
+    _signed_triangle, state=_stored, specs=_TRI_SPARSE_SPECS
+)
 
 
 # -- Line-frequency (boilerplate) state maintained under doc CDC -------
@@ -4022,27 +3456,21 @@ def q_signed_triangle_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
 # != 0 — an edit's unchanged lines cancel exactly) can enter or leave
 # the boilerplate set, so the stored boilerplate COUNT updates by pure
 # integer arithmetic (old − left + entered) with O(|Δ| lines) work —
-# never a corpus rescan. The full-scan terms below (stored presence,
-# old boilerplate count) are the stored-state stand-ins of the
-# recompute maintainer; ``q_signed_line_dedup_stored`` reads the same
-# presence relation from a persisted ``_stored_state`` parquet table.
+# never a corpus rescan. The full-scan terms below (the presence state,
+# old boilerplate count) come through the ``state`` source.
 
 
-def q_signed_line_dedup_maintenance(
-    spark: SparkSession, sf_dir: str, specs=None, stored_presence=None
+def _signed_line_dedup(
+    spark: SparkSession, sf_dir: str, state, specs=None
 ) -> DataFrame:
     """``specs`` (optional dict of CdcSpec) lets the property suite
     drive the same repair logic under random CDC batches; the
-    registered query uses the fixture specs. ``stored_presence`` lets
-    the stored twin substitute a PERSISTED (line, doc_id) presence
-    table for the old-snapshot recompute."""
+    registered query uses the fixture specs."""
     from .llm_pipeline import _LINE_DF, _line_presence
 
     cat = SignedDeltaCatalog(spark, sf_dir, specs=specs)
-    stored = (
-        stored_presence
-        if stored_presence is not None
-        else _line_presence(cat.old("documents"))
+    stored = state(cat, "documents")(
+        "linededup_presence", lambda: _line_presence(cat.old("documents"))
     ).withColumn("_w", F.lit(1))
     delta = _line_presence(
         cat.signed_changes("documents").withColumnRenamed(SIGN, "_w"),
@@ -4179,25 +3607,10 @@ FROM x
 """
 
 
-def q_signed_line_dedup_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Line-dedup maintenance against a PERSISTED presence store (r14
-    verdict item 6): the (line, doc_id) presence relation is READ from
-    a parquet table a previous refresh wrote (built once per fixture
-    by ``_stored_state``) — the vocabulary synopsis (old per-line doc
-    counts) derives from the stored table with an index-sized groupBy,
-    never a corpus re-shingle. Repair logic is shared verbatim with
-    ``q_signed_line_dedup_maintenance`` (same result, same oracle)."""
-    from .llm_pipeline import _line_presence
-
-    cat = SignedDeltaCatalog(spark, sf_dir)
-    fp = _spec_fingerprint(sf_dir, "documents")
-    presence = _stored_state(
-        spark, "linededup_presence", fp,
-        lambda: _line_presence(cat.old("documents")),
-    )
-    return q_signed_line_dedup_maintenance(
-        spark, sf_dir, stored_presence=presence
-    )
+q_signed_line_dedup_maintenance = partial(
+    _signed_line_dedup, state=_recompute
+)
+q_signed_line_dedup_stored = partial(_signed_line_dedup, state=_stored)
 
 
 # -- Curation-funnel report maintained under retractions ---------------
@@ -4211,8 +3624,7 @@ def q_signed_line_dedup_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
 # COUNT DISTINCT case: per-hash multiplicity state among gate-passers,
 # netted by the signed batch (an edit moves its hash; deleting the
 # last copy of a duplicated text retires the hash). Stored sides are
-# recomputed from the old snapshot only for fixture reasons, as
-# everywhere in this module.
+# recomputed from the old snapshot (this report has no stored binding).
 
 
 def q_signed_funnel_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -31,7 +31,6 @@ via staging. The reference has no DML surface at all.
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -342,14 +341,7 @@ def execute_merge(
             )
             for part in changed_parts:
                 out = out.unionByName(part)
-            staging = target_path.rstrip("/") + ".__staging__"
-            if os.path.exists(staging):
-                shutil.rmtree(staging)
-            out.write.format(fmt).mode("overwrite").save(staging)
-            spark.read.format(fmt).load(staging).write.format(fmt).mode(
-                "overwrite"
-            ).save(target_path)
-            shutil.rmtree(staging)
+            _swap_write(out, target_path, fmt)
             return
 
         # Partition-pruned rewrite: touched = old partitions of every
@@ -407,17 +399,12 @@ def execute_merge(
 # ---------------------------------------------------------------------------
 
 
-def _swap_write(
-    spark: SparkSession, out: DataFrame, target_path: str, fmt: str
-) -> None:
-    staging = target_path.rstrip("/") + ".__staging__"
-    if os.path.exists(staging):
-        shutil.rmtree(staging)
-    out.write.format(fmt).mode("overwrite").save(staging)
-    spark.read.format(fmt).load(staging).write.format(fmt).mode(
-        "overwrite"
-    ).save(target_path)
-    shutil.rmtree(staging)
+def _swap_write(out: DataFrame, target_path: str, fmt: str) -> None:
+    from ..sources.sinks import staged_swap
+
+    staged_swap(
+        target_path, lambda p: out.write.format(fmt).mode("overwrite").save(p)
+    )
 
 
 def execute_delete(
@@ -450,7 +437,7 @@ def execute_delete(
     target = spark.read.format(fmt).load(target_path)
     keep = f"NOT coalesce(({pred}), false)"
     if partition_cols is None:
-        _swap_write(spark, target.where(keep), target_path, fmt)
+        _swap_write(target.where(keep), target_path, fmt)
         return
     from ..sources.sinks import (
         _touched_stats,
@@ -526,7 +513,7 @@ def execute_update(
         )
 
     if partition_cols is None:
-        _swap_write(spark, _apply(target), target_path, fmt)
+        _swap_write(_apply(target), target_path, fmt)
         return
     from ..sources.sinks import (
         _touched_stats,
@@ -679,7 +666,7 @@ def execute_insert_overwrite(
     rows = rows.select(*t_cols)
 
     if partition_cols is None:
-        _swap_write(spark, rows, target_path, fmt)
+        _swap_write(rows, target_path, fmt)
         return
     from ..sources.sinks import _touched_stats, overwrite_touched_partitions
 
@@ -810,9 +797,6 @@ def execute_optimize(
                 )
             total_bytes += os.path.getsize(local)
         n_files = max(1, math.ceil(total_bytes / target_file_bytes))
-        staging = path.rstrip("/") + ".__staging__"
-        if os.path.exists(staging):
-            shutil.rmtree(staging)
         if spec["zorder"]:
             missing = [c for c in spec["zorder"] if c not in df.columns]
             if missing:
@@ -821,16 +805,19 @@ def execute_optimize(
                 )
             from ..sources.layout import zorder_write
 
-            zorder_write(df, staging, spec["zorder"], n_files=n_files)
+            def write(staging: str) -> None:
+                zorder_write(df, staging, spec["zorder"], n_files=n_files)
         else:
-            df.repartition(n_files).write.format(fmt).mode(
-                "errorifexists"
-            ).save(staging)
+            def write(staging: str) -> None:
+                df.repartition(n_files).write.format(fmt).mode(
+                    "errorifexists"
+                ).save(staging)
         # Swap the staged dir in by rename: copying it back through
         # Spark would re-pack its files into read splits sized by the
         # host's core count and merge away the n_files layout.
-        shutil.rmtree(path)
-        os.rename(staging, path)
+        from ..sources.sinks import staged_swap
+
+        staged_swap(path, write)
         after = len(set(spark.read.format(fmt).load(path).inputFiles()))
         return len(files_before), after
 

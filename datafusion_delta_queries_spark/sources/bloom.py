@@ -46,7 +46,6 @@ beyond-the-reference 100 TB surface, paired with ``zonemap.py``.
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -279,12 +278,12 @@ class BloomFileIndex:
             merged = frames[0]
             for f in frames[1:]:
                 merged = merged.unionByName(f)
-            staging = self.state_path + ".__staging__"
-            merged.write.mode("overwrite").parquet(staging)
-            self.spark.read.parquet(staging).write.mode(
-                "overwrite"
-            ).parquet(self.state_path)
-            shutil.rmtree(staging)
+            from .sinks import staged_swap
+
+            staged_swap(
+                self.state_path,
+                lambda p: merged.write.mode("overwrite").parquet(p),
+            )
         elif new:
             self._filter_frame(self._read_files(new)).write.mode(
                 "append"

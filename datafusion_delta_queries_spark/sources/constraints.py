@@ -35,7 +35,6 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -152,15 +151,10 @@ class ConstrainedTable:
 
     def overwrite(self, df: DataFrame) -> None:
         self.validate(df)
-        staging = self.path.rstrip("/") + ".__staging__"
-        if os.path.exists(staging):
-            shutil.rmtree(staging)
-        df.write.parquet(staging)
-        self.spark.read.parquet(staging).write.mode("overwrite").parquet(
-            self.path
-        )
-        shutil.rmtree(staging)
-        self._save()  # overwrite wiped the sidecar; restore it
+        from .sinks import staged_swap
+
+        staged_swap(self.path, lambda p: df.write.parquet(p))
+        self._save()  # the swap retired the old sidecar; restore it
 
     def read(self) -> DataFrame:
         df = self._read()

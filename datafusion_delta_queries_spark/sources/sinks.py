@@ -103,6 +103,36 @@ def write_clustered(
     w.write.format(fmt).mode("overwrite").save(path)
 
 
+def staged_swap(target_path: str, write) -> None:
+    """Replace the directory ``target_path`` with the one
+    ``write(staging_path)`` writes: stage to a sibling directory, rename
+    the target to a retired sibling, rename the staging dir in, then
+    remove the retired copy. The one whole-table rewrite of the
+    package.
+
+    An in-place ``mode("overwrite")`` deletes the target before
+    writing, so a mid-write failure (or executor loss) would lose the
+    table with no retry path; staging means a failed write leaves the
+    original untouched. It also removes the read-while-overwrite hazard
+    — a frame that reads the target is fully written before the target
+    moves — and, unlike copying the staged output back through a second
+    Spark write, it writes the data once and keeps the staged file
+    layout. The two renames are the remaining non-transactional window:
+    a crash between them leaves the table parked at
+    ``*.__retired__`` (recoverable by hand) rather than lost. A
+    transaction-log table format closes this window with an atomic
+    metadata commit."""
+    base = target_path.rstrip("/")
+    staging, retired = base + ".__staging__", base + ".__retired__"
+    for leftover in (staging, retired):
+        shutil.rmtree(leftover, ignore_errors=True)
+    write(staging)
+    if os.path.exists(base):
+        os.rename(base, retired)
+    os.rename(staging, base)
+    shutil.rmtree(retired, ignore_errors=True)
+
+
 def _touched_frame(
     updates: DataFrame,
     key_cols: list[str],
@@ -214,27 +244,12 @@ def upsert(
         )
     target = spark.read.format(fmt).schema(updates.schema).load(target_path)
     merged = replace_touched(target, updates, touched)
-    # Stage to a temp sibling directory, then swap into place. An
-    # in-place mode("overwrite") deletes the target before writing, so
-    # a mid-write failure (or executor loss) would lose the table with
-    # no retry path; staging means a failed write leaves the original
-    # untouched. It also removes the read-while-overwrite hazard — the
-    # scan and the write never touch the same directory — so no
+    # The scan and the write never touch the same directory, so no
     # checkpoint materialization is needed.
-    base = target_path.rstrip("/")
-    staging_path = base + ".__upsert_staging__"
-    retired_path = base + ".__upsert_retired__"
-    for leftover in (staging_path, retired_path):
-        if os.path.exists(leftover):
-            shutil.rmtree(leftover)
-    merged.write.format(fmt).mode("overwrite").save(staging_path)
-    # The two renames below are the remaining non-transactional window:
-    # a crash between them leaves the table parked at *.__upsert_retired__
-    # (recoverable by hand) rather than lost. A transaction-log table
-    # format closes this window with an atomic metadata commit.
-    os.rename(base, retired_path)
-    os.rename(staging_path, base)
-    shutil.rmtree(retired_path)
+    staged_swap(
+        target_path,
+        lambda p: merged.write.format(fmt).mode("overwrite").save(p),
+    )
 
 
 # Characters Hive/Spark percent-escape when writing a partition value

@@ -179,14 +179,12 @@ class ZoneMapIndex:
             merged = frames[0]
             for f in frames[1:]:
                 merged = merged.unionByName(f)
-            staging = self.state_path + ".__staging__"
-            merged.write.mode("overwrite").parquet(staging)
-            self.spark.read.parquet(staging).write.mode(
-                "overwrite"
-            ).parquet(self.state_path)
-            import shutil
+            from .sinks import staged_swap
 
-            shutil.rmtree(staging)
+            staged_swap(
+                self.state_path,
+                lambda p: merged.write.mode("overwrite").parquet(p),
+            )
         elif new:
             self._stats_df(new).write.mode("append").parquet(
                 self.state_path

@@ -12,9 +12,11 @@ sf0.1 A/B measured it SLOWER than its recompute sibling (1.70 vs
 1.28 s — scanning the pre-exploded (fp, doc_id) state from parquet
 costs more than the Arrow-vectorized corpus re-fingerprint; SCALE.md
 round-16 notes), so it stays a tested NEGATIVE outside the registry
-per the triangle-indexed precedent. Its oracle parity is pinned here;
-its state-store contract and row-identity vs the recompute sibling
-are pinned in test_stored_state.py.
+per the triangle-indexed precedent. Like every stored twin it is the
+recompute sibling's maintainer body bound to the stored ``state``
+source, not a copy of it. Its oracle parity is pinned here; its
+state-store contract, its one-body binding and its row-identity vs
+the recompute sibling are pinned in test_stored_state.py.
 """
 
 from __future__ import annotations

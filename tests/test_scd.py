@@ -392,3 +392,32 @@ def test_bucketed_tombstone_only_batch_for_absent_keys_is_noop(spark, tmp_path):
         )
     )
     assert _hist_map(table.read()) == before
+
+
+def test_chained_apply_plan_grows_linearly(spark):
+    """Chaining ``scd2_apply`` calls grows the logical plan by the same
+    number of lines per call: each call's output references its input
+    history once. When the touched slice stayed lazy the output held
+    the input's plan three times, and 7 chained calls reached 45,908
+    plan lines."""
+    hist = scd2_initialize(_mk_dim(spark), ["k"], ["tier"], "2020-01-01")
+    sizes = []
+    for i in range(10):
+        changes = _mk_changes(
+            spark, [(1 + i % 3, f"t{i}", f"{2021 + i}-01-01", "upsert")]
+        )
+        hist = scd2_apply(hist, changes, ["k"], ["tier"])
+        sizes.append(
+            len(hist._jdf.queryExecution().logical().toString().splitlines())
+        )
+        if i >= 2:
+            assert sizes[i] - sizes[i - 1] == sizes[1] - sizes[0], sizes
+    m = _hist_map(hist)
+    # 10 upserts over 3 keys: every key keeps its seed version plus one
+    # version per upsert, and only the last of each chain is current
+    assert {k: len(v) for k, v in m.items()} == {1: 5, 2: 4, 3: 4}
+    assert [v[-1] for v in (m[1], m[2], m[3])] == [
+        ("t9", "2030-01-01", "9999-12-31", True),
+        ("t7", "2028-01-01", "9999-12-31", True),
+        ("t8", "2029-01-01", "9999-12-31", True),
+    ]

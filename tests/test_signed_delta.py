@@ -436,9 +436,10 @@ def test_dupspan_repair_is_scoped_and_complete(spark):
     )
     from datafusion_delta_queries_spark.operators.signed_queries import (
         _dupspan_parts,
+        _recompute,
     )
 
-    p = _dupspan_parts(spark, SF_SMALL)
+    p = _dupspan_parts(spark, SF_SMALL, _recompute)
     maintained = p["carried"].unionByName(p["respans"])
 
     cat = SignedDeltaCatalog(spark, SF_SMALL)

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from datafusion_delta_queries_spark.catalog import load_table
@@ -684,3 +686,53 @@ def test_pruned_merge_drivers_only_the_emptied_list(spark, tmp_path):
     assert (
         "dynamicpruning" in plan.lower() or "PartitionFilters" in plan
     ), plan
+
+
+def test_whole_table_rewrites_write_once(spark, tmp_path, monkeypatch):
+    """A whole-table DELETE and a constrained-table overwrite each make
+    ONE Spark write: the staged output is renamed into place, not
+    copied back through a second write that first deletes the
+    target."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from datafusion_delta_queries_spark.plans.merge_sql import execute_delete
+    from datafusion_delta_queries_spark.sources.constraints import (
+        ConstrainedTable,
+    )
+
+    writes = []
+    for method in ("save", "parquet"):
+        real = getattr(DataFrameWriter, method)
+
+        def counted(self, *a, _real=real, **kw):
+            writes.append(a[0] if a else kw.get("path"))
+            return _real(self, *a, **kw)
+
+        monkeypatch.setattr(DataFrameWriter, method, counted)
+
+    rows = spark.createDataFrame(
+        [(1, "a", 10), (2, "b", 20), (3, "c", 30)], "k int, v string, amt int"
+    )
+    path = str(tmp_path / "t")
+    rows.write.parquet(path)
+    writes.clear()
+    execute_delete(spark, "DELETE FROM t WHERE k = 2", path)
+    assert len(writes) == 1, writes
+    got = sorted(tuple(r) for r in spark.read.parquet(path).collect())
+    assert got == [(1, "a", 10), (3, "c", 30)]
+
+    table = ConstrainedTable(spark, str(tmp_path / "c"))
+    table.add_check("amt_pos", "amt > 0")
+    table.append(rows)
+    writes.clear()
+    table.overwrite(rows.where("k != 1"))
+    assert len(writes) == 1, writes
+    got = sorted(tuple(r) for r in table.read().collect())
+    assert got == [(2, "b", 20), (3, "c", 30)]
+    # the constraint sidecar survives the swap
+    assert ConstrainedTable(spark, str(tmp_path / "c")).checks == {
+        "amt_pos": "amt > 0"
+    }
+    assert not [
+        n for n in os.listdir(tmp_path) if "__staging__" in n or "__retired__" in n
+    ]

@@ -1,16 +1,20 @@
 """Persisted operator-state store (signed_queries._stored_state) and
-the two stored-state maintainers built on it (r13 verdict item 4).
+the index maintainers that read their state through it.
 
-The stored variants' CORRECTNESS is pinned by the shared oracles
-(test_oracle_parity runs signed_triangle_stored /
-signed_semdedup_stored against the same DuckDB SQL as their recompute
-siblings); these tests pin the state-store CONTRACT: build-once,
-fingerprint invalidation, and the plans actually reading the
-persisted tables instead of recomputing corpus-sized state."""
+Every index maintainer in signed_queries is ONE body taking a
+``state`` source; the registry binds it to ``_recompute`` (state built
+from the old snapshot each run) for ``*_maintenance`` and to
+``_stored`` (state read from a persisted ``_stored_state`` table) for
+``*_stored``. Correctness is pinned by the shared oracles
+(test_oracle_parity); these tests pin the state-store CONTRACT —
+build-once, fingerprint invalidation, the plans actually reading the
+persisted tables — and that each twin pair is one body whose output
+does not depend on its state source."""
 
 from __future__ import annotations
 
 import os
+from functools import partial
 
 import pytest
 
@@ -272,22 +276,47 @@ def test_semdedup_stored_repair_is_touched_cells_only(spark):
     assert "LeftAnti" in plan
 
 
-@pytest.mark.parametrize(
-    "stored_q,recompute_q",
-    [
-        ("signed_pq_stored", "signed_pq_maintenance"),
-        ("signed_tfidf_stored", "signed_tfidf_maintenance"),
-        ("signed_inverted_stored", "signed_inverted_index_maintenance"),
-        ("signed_phrase_stored", "signed_phrase_index_maintenance"),
-        ("signed_line_dedup_stored", "signed_line_dedup_maintenance"),
-        # the r16 tranche (registered r17; winnow is the tested negative)
-        ("signed_lsh_stored", "signed_lsh_maintenance"),
-        ("signed_ann_stored", "signed_ann_maintenance"),
-        ("signed_winnow_stored", "signed_winnow_maintenance"),
-        ("signed_cluster_stored", "signed_cluster_maintenance"),
-        ("signed_ivf_stored", "signed_ivf_maintenance"),
-    ],
-)
+_TWINS = [
+    ("signed_pq_stored", "signed_pq_maintenance"),
+    ("signed_tfidf_stored", "signed_tfidf_maintenance"),
+    ("signed_inverted_stored", "signed_inverted_index_maintenance"),
+    ("signed_phrase_stored", "signed_phrase_index_maintenance"),
+    ("signed_line_dedup_stored", "signed_line_dedup_maintenance"),
+    # the r16 tranche (registered r17; winnow is the tested negative)
+    ("signed_lsh_stored", "signed_lsh_maintenance"),
+    ("signed_ann_stored", "signed_ann_maintenance"),
+    ("signed_winnow_stored", "signed_winnow_maintenance"),
+    ("signed_cluster_stored", "signed_cluster_maintenance"),
+    ("signed_ivf_stored", "signed_ivf_maintenance"),
+    ("signed_semdedup_stored", "signed_semdedup_maintenance"),
+    ("signed_bm25_stored", "signed_bm25_maintenance"),
+    # same sparse spec on both sides; only the state source differs
+    ("signed_triangle_stored", "signed_triangle_sparse"),
+]
+
+
+def test_stored_twins_share_one_body():
+    """Each twin pair is ONE maintainer body bound to the two state
+    sources and otherwise identical arguments — a twin re-forked into
+    its own copy of the algorithm fails here."""
+    from datafusion_delta_queries_spark.operators import registry
+    from datafusion_delta_queries_spark.operators.signed_queries import (
+        _recompute,
+        _stored,
+    )
+
+    queries, _ = registry()
+    queries = {**queries, **_unregistered()}
+    for stored_q, recompute_q in _TWINS:
+        a, b = queries[stored_q], queries[recompute_q]
+        assert isinstance(a, partial) and isinstance(b, partial), stored_q
+        assert a.func is b.func, (stored_q, recompute_q)
+        ka, kb = dict(a.keywords), dict(b.keywords)
+        assert (ka.pop("state"), kb.pop("state")) == (_stored, _recompute)
+        assert a.args == b.args and ka == kb, (stored_q, ka, kb)
+
+
+@pytest.mark.parametrize("stored_q,recompute_q", _TWINS)
 def test_stored_twin_equals_recompute_sibling(spark, stored_q, recompute_q):
     """Beyond sharing an oracle: the stored twin's OUTPUT must be
     row-identical to its recompute sibling's — the state source
@@ -337,12 +366,11 @@ def test_semdedup_sparse_confinement_is_real(spark):
 
     cat = SignedDeltaCatalog(spark, SF_MED, _SPARSE_EMB_SPECS)
     arr = similarity.as_double_array("embedding")
-    # mirror _semdedup_parts' cache key exactly (helper + |k suffix)
-    fp = (
-        _spec_fingerprint(SF_MED, "embeddings", _SPARSE_EMB_SPECS)
-        + f"|k={_SEMDEDUP_SPARSE_K}"
-    )
-    cents = _stored_state(spark, "semdedup_cents", fp, lambda: None)
+    # mirror the stored source's cache key exactly (the spec's
+    # fingerprint; the state names carry k)
+    fp = _spec_fingerprint(SF_MED, "embeddings", _SPARSE_EMB_SPECS)
+    k = _SEMDEDUP_SPARSE_K
+    cents = _stored_state(spark, f"semdedup_cents_k{k}", fp, lambda: None)
     sgn = cat.signed_changes("embeddings").selectExpr(
         "vec_id", f"{arr} AS v", SIGN
     )
@@ -354,7 +382,7 @@ def test_semdedup_sparse_confinement_is_real(spark):
     )
     n_cells = cents.count()
     assert touched < n_cells / 2, (touched, n_cells)
-    ledger = _stored_state(spark, "semdedup_ledger", fp, lambda: None)
+    ledger = _stored_state(spark, f"semdedup_ledger_k{k}", fp, lambda: None)
     untouched = ledger.count()
     assert untouched > 0
 
