@@ -29,9 +29,11 @@ sum/count/avg merge algebraically from signed partials, and min/max
 (which cannot absorb a retraction) recompute delta-scoped from the
 post-change base, touched groups only.
 
-Every maintainer here writes through the one merge primitive,
-``sinks.upsert``/``upsert_partitioned``, as "replace the touched
-groups": the state becomes ``state ⋉̸ touched ∪ fresh``, where
+Every maintainer here keeps its state in a ``sources.state.StateStore``
+(schema-known reads, the initial write, replay markers, retention
+predicates) and writes each refresh through its one merge,
+``StateStore.replace_touched``, as "replace the touched groups": the
+state becomes ``state ⋉̸ touched ∪ fresh``, where
 ``fresh`` holds the complete new rows of the touched groups. A group
 whose live row count reaches zero (a pair netted to zero, a day whose
 hours all died, a row displaced from a top-k) is touched and has no
@@ -54,58 +56,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..plans.sql_frontend import _DECOMPOSABLE, UnsupportedSQL, parse_agg_sql
-from ..sources.sinks import upsert
-
-
-def stream_ns(checkpoint_dir: str) -> str:
-    """Stable namespace for a stream's replay markers — derived from
-    the checkpoint path (the analog of Delta's ``txnAppId``), so two
-    streams feeding one state table can't collide on batch id 0."""
-    import hashlib
-
-    return hashlib.sha1(
-        os.path.abspath(checkpoint_dir).encode()
-    ).hexdigest()[:12]
-
-
-def apply_batch_once(
-    state_path: str, batch_id: int, apply, ns: str = ""
-) -> None:
-    """Shared foreachBatch replay guard for NON-idempotent appliers
-    (partial merges double-count; SCD chain rebuilds duplicate
-    version rows). A marker file per (stream ns, batch id) skips
-    at-least-once redeliveries; the marker is written after the
-    applier's staged swap completes, so the remaining failure window
-    is a crash BETWEEN swap and marker — same class as the upsert's
-    own rename window, closed in production by a transactional table
-    format committing data and txn id together. State initializers
-    clear ``<state>.__applied__`` so a rebuilt state never mistakes a
-    fresh stream for a replay."""
-    marker_dir = os.path.join(
-        state_path.rstrip("/") + ".__applied__", ns or "_default"
-    )
-    marker = os.path.join(marker_dir, str(batch_id))
-    if os.path.exists(marker):
-        return
-    apply()
-    os.makedirs(marker_dir, exist_ok=True)
-    with open(marker, "w") as f:
-        f.write("applied")
-
-
-
-def _read_state_memo(spark: SparkSession, path: str, schemas: dict) -> DataFrame:
-    """Parquet state read with a per-instance schema memo: the first
-    read of each path infers (and records) the on-disk schema; later
-    reads skip the footer-read job (~0.3 s per read). State tables are
-    written by the same instance, so the memo cannot go stale within a
-    lifecycle; rebuilders clear their memo on initialize."""
-    s = schemas.get(path)
-    if s is None:
-        df = spark.read.parquet(path)
-        schemas[path] = df.schema
-        return df
-    return spark.read.schema(s).parquet(path)
+from ..sources.state import StateStore
 
 
 class ContinuousAggregate:
@@ -128,26 +79,8 @@ class ContinuousAggregate:
         self.path = path
         self.spec = parse_agg_sql(sql)
         self.partition_on = list(partition_on or [])
-        self._state_schema = None
+        self.store = StateStore(spark, path, self.partition_on)
         self._init_exprs()
-
-    def _read_state(self) -> DataFrame:
-        """State read without per-read schema inference: the first
-        read memoizes the on-disk schema (exactly as inferred, so
-        partition-column order is preserved); every later read skips
-        the footer-read job — ~0.3 s per read, and a refresh lifecycle
-        reads the state table several times. Production analogue: a
-        catalogued table serves its schema from metadata instead of
-        file footers. The schema is this instance's own write, so the
-        memo cannot go stale within a lifecycle (initialize() resets
-        it before rebuilding the table)."""
-        if self._state_schema is None:
-            df = self.spark.read.parquet(self.path)
-            self._state_schema = df.schema
-            return df
-        return self.spark.read.schema(self._state_schema).parquet(
-            self.path
-        )
 
     def _init_exprs(self) -> None:
         """Build the partial/combine/final/signed expression sets from
@@ -293,37 +226,16 @@ class ContinuousAggregate:
     # -- lifecycle -----------------------------------------------------
 
     def initialize(self, base_df: DataFrame) -> None:
-        """Full aggregate of the initial data → stored partial state.
-
-        Also clears any replay markers from a previous life of this
-        state path: markers outliving a rebuilt state would make a new
-        stream's batch ids (restarting at 0) look like replays and
-        silently freeze the view at the initialize() snapshot.
-        """
-        import shutil
-
-        marker_root = self.path.rstrip("/") + ".__applied__"
-        if os.path.isdir(marker_root):
-            shutil.rmtree(marker_root)
-        # A rebuilt state starts a new retention life too: stale
-        # predicates would silently drop fresh groups.
-        if os.path.exists(self._retention_path):
-            os.remove(self._retention_path)
-        self._state_schema = None  # rebuilt table: re-infer once
-        w = self._partial_of(base_df).write.mode("errorifexists")
-        if self.partition_on:
-            w = w.partitionBy(*self.partition_on)
-        w.parquet(self.path)
+        """Full aggregate of the initial data → stored partial state,
+        replacing any previous table (and its replay markers and
+        retention predicates) at this path."""
+        self.store.create(self._partial_of(base_df))
 
     # -- retention (TimescaleDB drop_chunks) ----------------------------
 
-    @property
-    def _retention_path(self) -> str:
-        return self.path.rstrip("/") + ".__retention__"
-
     def _retention_predicates(self) -> list[str]:
         try:
-            with open(self._retention_path, encoding="utf-8") as fh:
+            with open(self.store.retention_path, encoding="utf-8") as fh:
                 return [ln for ln in fh.read().splitlines() if ln.strip()]
         except FileNotFoundError:
             return []
@@ -348,7 +260,7 @@ class ContinuousAggregate:
                 "drop_chunks needs partition_on state — retention is a "
                 "directory drop, not a table rewrite"
             )
-        state = self._read_state()
+        state = self.store.read()
         doomed = [
             tuple(r)
             for r in state.select(*self.partition_on)
@@ -360,7 +272,7 @@ class ContinuousAggregate:
             shutil.rmtree(
                 _partition_dir(self.path, self.partition_on, values)
             )
-        with open(self._retention_path, "a", encoding="utf-8") as fh:
+        with open(self.store.retention_path, "a", encoding="utf-8") as fh:
             fh.write(where + "\n")
         return len(doomed)
 
@@ -376,28 +288,18 @@ class ContinuousAggregate:
     ) -> None:
         """Persist a refresh by replacing the touched groups (``touched``
         defaults to the keys of ``updates``; a touched group with no
-        row in ``updates`` leaves the table): partition-pruned when the
-        state table is partitioned, whole-table staged swap otherwise.
-        Groups inside a recorded retention window never re-enter the
-        state, and their directories are never rewritten. Every
-        caller's ``updates`` is the output of a ``groupBy`` on the key
-        columns — key-unique by construction — so the upsert's
-        duplicate-key guard job is skipped."""
-        keys = list(self.spec["key_names"])
-        updates = self._apply_retention(updates)
-        touched = self._apply_retention(touched)
-        if self.partition_on:
-            from ..sources.sinks import upsert_partitioned
-
-            upsert_partitioned(
-                self.spark, self.path, updates, keys, self.partition_on,
-                touched=touched, assume_unique_keys=True,
-            )
-        else:
-            upsert(
-                self.spark, self.path, updates, keys, touched=touched,
-                assume_unique_keys=True,
-            )
+        row in ``updates`` leaves the table). Groups inside a recorded
+        retention window never re-enter the state, and their
+        directories are never rewritten. Every caller's ``updates`` is
+        the output of a ``groupBy`` on the key columns — key-unique by
+        construction — so the upsert's duplicate-key guard job is
+        skipped."""
+        self.store.replace_touched(
+            self._apply_retention(updates),
+            list(self.spec["key_names"]),
+            touched=self._apply_retention(touched),
+            assume_unique_keys=True,
+        )
 
     def refresh(self, delta_df: DataFrame) -> None:
         """Merge one delta batch into the stored state.
@@ -421,7 +323,7 @@ class ContinuousAggregate:
                     "batch — a NULL-key state row can never be replaced "
                     "by a keyed upsert (coalesce the key in the statement)"
                 )
-            stored = self._read_state()
+            stored = self.store.read()
             touched = stored.join(delta_p.select(*keys), keys, "left_semi")
             merged = self._combine_of(touched.unionByName(delta_p))
             self._upsert_state(merged)
@@ -524,7 +426,7 @@ class ContinuousAggregate:
                 a["del"] for a in self._mm_aux
             ]
             delta_p = delta_full.drop(*probe_cols)
-            stored = self._read_state()
+            stored = self.store.read()
             touched_keys = delta_p.select(*keys)
             touched = stored.join(touched_keys, keys, "left_semi")
             if self._minmax_cols:
@@ -639,32 +541,14 @@ class ContinuousAggregate:
         lakehouse-table upsert; only the two endpoints change.
         """
         src = self.spark.readStream.schema(schema).parquet(source_dir)
-        ns = self._stream_ns(checkpoint_dir)
-
-        def _refresh(batch_df: DataFrame, batch_id: int) -> None:
-            if not batch_df.isEmpty():
-                self._apply_once(
-                    batch_id, lambda: self.refresh(batch_df), stream_ns=ns
-                )
-
         return (
-            src.writeStream.foreachBatch(_refresh)
+            src.writeStream.foreachBatch(
+                self.store.foreach_batch(checkpoint_dir, self.refresh)
+            )
             .option("checkpointLocation", checkpoint_dir)
             .trigger(availableNow=True)
             .start()
         )
-
-    def _apply_once(self, batch_id: int, apply, stream_ns: str = "") -> None:
-        """Replay guard — delegates to the shared module-level
-        ``apply_batch_once`` (also used by ``scd.Scd2Table``); see its
-        docstring for the marker contract. ``initialize`` clears the
-        marker root so a rebuilt state never mistakes a fresh stream
-        for a replay."""
-        apply_batch_once(self.path, batch_id, apply, ns=stream_ns)
-
-    @staticmethod
-    def _stream_ns(checkpoint_dir: str) -> str:
-        return stream_ns(checkpoint_dir)
 
     def stream_into_cdf(
         self,
@@ -731,19 +615,15 @@ class ContinuousAggregate:
             .option("maxFilesPerTrigger", 1)
             .parquet(source_dir)
         )
-        ns = self._stream_ns(checkpoint_dir)
 
-        def _refresh(batch_df: DataFrame, batch_id: int) -> None:
-            if not batch_df.isEmpty():
-                base = base_reader() if base_reader is not None else None
-                self._apply_once(
-                    batch_id,
-                    lambda: self.refresh_signed(batch_df, base_new_df=base),
-                    stream_ns=ns,
-                )
+        def _refresh(batch_df: DataFrame) -> None:
+            base = base_reader() if base_reader is not None else None
+            self.refresh_signed(batch_df, base_new_df=base)
 
         return (
-            src.writeStream.foreachBatch(_refresh)
+            src.writeStream.foreachBatch(
+                self.store.foreach_batch(checkpoint_dir, _refresh)
+            )
             .option("checkpointLocation", checkpoint_dir)
             .trigger(availableNow=True)
             .start()
@@ -751,7 +631,7 @@ class ContinuousAggregate:
 
     def read(self) -> DataFrame:
         """Finals over the stored state; HAVING applied at the end."""
-        state = self._read_state()
+        state = self.store.read()
         out = state.select(
             *[state[n] for n in self.spec["key_names"]],
             *[F.expr(e) for e in self._final],
@@ -773,7 +653,7 @@ class ContinuousAggregate:
         refresh pays, minus every write. On a partitioned state the
         scan still prunes via ``partition_on``. HAVING applies after
         the merge, exactly as a refreshed ``read()`` would."""
-        stored = self._read_state()
+        stored = self.store.read()
         tail_p = self._partial_of(tail_df)
         merged = self._combine_of(
             stored.select(*tail_p.columns).unionByName(tail_p)
@@ -836,7 +716,7 @@ class ContinuousJoinAggregate(ContinuousAggregate):
         self.spark = spark
         self.path = path
         self.partition_on = list(partition_on or [])
-        self._state_schema = None
+        self.store = StateStore(spark, path, self.partition_on)
         jspec = parse_join_agg_sql(sql)
         self._ir = sql_to_ir(jspec["fragment_sql"])
         self.fact = fact
@@ -1049,20 +929,14 @@ class ContinuousJoinAggregate(ContinuousAggregate):
             .option("maxFilesPerTrigger", 1)
             .parquet(source_dir)
         )
-        ns = self._stream_ns(checkpoint_dir)
 
-        def _refresh(batch_df: DataFrame, batch_id: int) -> None:
-            if not batch_df.isEmpty():
-                self._apply_once(
-                    batch_id,
-                    lambda: self.refresh_dim_signed(
-                        dim, batch_df, fact_reader(), dim_reader()
-                    ),
-                    stream_ns=ns,
-                )
+        def _refresh(batch_df: DataFrame) -> None:
+            self.refresh_dim_signed(dim, batch_df, fact_reader(), dim_reader())
 
         return (
-            src.writeStream.foreachBatch(_refresh)
+            src.writeStream.foreachBatch(
+                self.store.foreach_batch(checkpoint_dir, _refresh)
+            )
             .option("checkpointLocation", checkpoint_dir)
             .trigger(availableNow=True)
             .start()
@@ -1099,7 +973,6 @@ class ContinuousDistinctAggregate:
     def __init__(self, spark: SparkSession, path: str, sql: str) -> None:
         self.spark = spark
         self.path = path.rstrip("/")
-        self._schemas: dict = {}
         self.spec = parse_agg_sql(sql)
         self.cds = [
             a for a in self.spec["aggs"] if a["fn"] == "count_distinct"
@@ -1127,9 +1000,11 @@ class ContinuousDistinctAggregate:
             F.expr(k).alias(n)
             for k, n in zip(self.spec["keys"], self.spec["key_names"])
         ]
-
-    def _table(self, i: int) -> str:
-        return os.path.join(self.path, f"cd{i}")
+        # One pair table per DISTINCT aggregate.
+        self.stores = [
+            StateStore(spark, os.path.join(self.path, f"cd{i}"))
+            for i in range(len(self.cds))
+        ]
 
     def _pairs_of(self, df: DataFrame, arg: str, weight: str) -> DataFrame:
         if self.spec["where"]:
@@ -1152,15 +1027,12 @@ class ContinuousDistinctAggregate:
         return pairs
 
     def initialize(self, base_df: DataFrame) -> None:
-        self._schemas.clear()  # rebuilt tables: re-infer once
-        for i, a in enumerate(self.cds):
-            self._pairs_of(base_df, a["arg"], "count(*)").write.mode(
-                "errorifexists"
-            ).parquet(self._table(i))
+        for store, a in zip(self.stores, self.cds):
+            store.create(self._pairs_of(base_df, a["arg"], "count(*)"))
 
     def _merge(self, i: int, delta_pairs: DataFrame) -> None:
         keys = self.spec["key_names"] + ["_v"]
-        stored = _read_state_memo(self.spark, self._table(i), self._schemas)
+        stored = self.stores[i].read()
         touched = stored.join(delta_pairs.select(*keys), keys, "left_semi")
         merged = (
             touched.unionByName(delta_pairs)
@@ -1175,9 +1047,7 @@ class ContinuousDistinctAggregate:
                 )
             # Replace every touched pair: a pair netted to zero is
             # touched with no fresh row, so it leaves the table.
-            upsert(
-                self.spark,
-                self._table(i),
+            self.stores[i].replace_touched(
                 merged.where("_m > 0"),
                 keys,
                 touched=merged.select(*keys),
@@ -1209,7 +1079,7 @@ class ContinuousDistinctAggregate:
         keys = self.spec["key_names"]
         out = None
         for i, a in enumerate(self.cds):
-            state = _read_state_memo(self.spark, self._table(i), self._schemas)
+            state = self.stores[i].read()
             aggs = [F.count("*").cast("bigint").alias(a["out"])]
             if i == 0:
                 # count(*) = WHERE-passing row multiplicity, derivable
@@ -1275,7 +1145,7 @@ class ContinuousTopK:
             )
         self.spark = spark
         self.path = path.rstrip("/")
-        self._schemas: dict = {}
+        self.store = StateStore(spark, path)
         self.group_cols = list(group_cols)
         self.order_col = order_col
         self.k = k
@@ -1301,11 +1171,10 @@ class ContinuousTopK:
         )
 
     def initialize(self, base_df: DataFrame) -> None:
-        self._schemas.clear()  # rebuilt table: re-infer once
-        self._rank(base_df).write.mode("errorifexists").parquet(self.path)
+        self.store.create(self._rank(base_df))
 
     def refresh(self, delta_df: DataFrame) -> None:
-        stored = _read_state_memo(self.spark, self.path, self._schemas)
+        stored = self.store.read()
         batch_top = self._rank(delta_df)
         touched = batch_top.select(*self.group_cols).distinct()
         cand = stored.join(
@@ -1314,9 +1183,9 @@ class ContinuousTopK:
         # ``touched`` holds group columns only: every stored row of a
         # touched group leaves, so rows displaced from its top-k are
         # simply not re-written.
-        upsert(
-            self.spark, self.path, self._rank(cand),
-            self.group_cols + self.id_cols, touched=touched,
+        self.store.replace_touched(
+            self._rank(cand), self.group_cols + self.id_cols,
+            touched=touched,
         )
 
     def refresh_signed(
@@ -1331,7 +1200,7 @@ class ContinuousTopK:
                 "refresh_signed needs a _change_type (CDF) or _sign "
                 "column; for plain insert batches use refresh()"
             )
-        stored = _read_state_memo(self.spark, self.path, self._schemas)
+        stored = self.store.read()
         gcols = self.group_cols
         dels = changes_df.where(f"{SIGN} < 0")
         ins = changes_df.where(f"{SIGN} > 0").drop(SIGN)
@@ -1416,15 +1285,15 @@ class ContinuousTopK:
                 fresh_safe if fresh_unsafe is None
                 else fresh_safe.unionByName(fresh_unsafe.select(*stored.columns))
             )
-            upsert(
-                self.spark, self.path, fresh, gcols + self.id_cols,
+            self.store.replace_touched(
+                fresh, gcols + self.id_cols,
                 touched=safe_touch.unionByName(unsafe),
             )
         finally:
             dec.unpersist()
 
     def read(self) -> DataFrame:
-        return _read_state_memo(self.spark, self.path, self._schemas)
+        return self.store.read()
 
 
 class ContinuousCube(ContinuousAggregate):
@@ -1574,7 +1443,6 @@ class ContinuousRollupCascade:
         tier's repair cost stays O(touched groups × fan-in)."""
         self.spark = spark
         self.root_path = root_path
-        self._schemas: dict = {}
         self.fine = ContinuousAggregate(
             spark, os.path.join(root_path, "fine"), sql,
             partition_on=partition_on,
@@ -1603,15 +1471,17 @@ class ContinuousRollupCascade:
                     f"cascade level key {key!r} collides with an "
                     "existing grouping column"
                 )
+            path = os.path.join(
+                root_path, "coarse" if i == 0 else f"coarse{i + 1}"
+            )
             self.levels.append(
                 {
                     "key": key,
                     "expr": expr,
                     "prev_key": prev_key,
                     "keys": [key] + other,
-                    "path": os.path.join(
-                        root_path, "coarse" if i == 0 else f"coarse{i + 1}"
-                    ),
+                    "path": path,
+                    "store": StateStore(spark, path),
                 }
             )
             prev_key = key
@@ -1658,24 +1528,11 @@ class ContinuousRollupCascade:
     # -- lifecycle -----------------------------------------------------
 
     def initialize(self, base_df: DataFrame) -> None:
-        import shutil
-
-        # A rebuilt cascade must not mistake a fresh stream for a
-        # replay (same contract as ContinuousAggregate.initialize).
-        shutil.rmtree(
-            self.root_path.rstrip("/") + ".__applied__",
-            ignore_errors=True,
-        )
-        self._schemas.clear()
         self.fine.initialize(base_df)
-        prev = self.fine._read_state()
+        prev = self.fine.store.read()
         for lvl in self.levels:
-            self._level_of(prev, lvl).write.mode(
-                "errorifexists"
-            ).parquet(lvl["path"])
-            prev = _read_state_memo(
-                self.spark, lvl["path"], self._schemas
-            )
+            lvl["store"].create(self._level_of(prev, lvl))
+            prev = lvl["store"].read()
 
     def _repair_plan(self, touched_c: DataFrame, level: int = 0) -> DataFrame:
         """The touched groups' complete new partials at one level,
@@ -1685,14 +1542,9 @@ class ContinuousRollupCascade:
         is the cascade invariant the plan audit pins, on the write
         plan ``sinks.replace_touched`` builds from this frame."""
         lvl = self.levels[level]
-        prev_path = (
-            self.fine.path if level == 0 else self.levels[level - 1]["path"]
-        )
         prev_state = (
-            self.fine._read_state()
-            if level == 0
-            else _read_state_memo(self.spark, prev_path, self._schemas)
-        )
+            self.fine.store if level == 0 else self.levels[level - 1]["store"]
+        ).read()
         sliced = prev_state.withColumn(
             lvl["key"], F.expr(lvl["expr"])
         ).join(F.broadcast(touched_c), lvl["keys"], "left_semi")
@@ -1709,8 +1561,8 @@ class ContinuousRollupCascade:
         key-unique by construction (a groupBy output), so the upsert's
         duplicate-key guard job is skipped."""
         lvl = self.levels[level]
-        upsert(
-            self.spark, lvl["path"], self._repair_plan(touched_c, level),
+        lvl["store"].replace_touched(
+            self._repair_plan(touched_c, level),
             lvl["keys"], touched=touched_c, assume_unique_keys=True,
         )
 
@@ -1772,22 +1624,17 @@ class ContinuousRollupCascade:
             .option("maxFilesPerTrigger", 1)
             .parquet(source_dir)
         )
-        ns = stream_ns(checkpoint_dir)
 
-        def _refresh(batch_df: DataFrame, batch_id: int) -> None:
-            if not batch_df.isEmpty():
-                base = base_reader() if base_reader is not None else None
-                apply_batch_once(
-                    self.root_path,
-                    batch_id,
-                    lambda: self.refresh_signed(
-                        batch_df, base_new_df=base
-                    ),
-                    ns=ns,
-                )
+        def _refresh(batch_df: DataFrame) -> None:
+            base = base_reader() if base_reader is not None else None
+            self.refresh_signed(batch_df, base_new_df=base)
 
+        # The fine tier's markers guard the whole cascade: every batch
+        # refreshes the fine tier first, and initialize() clears them.
         return (
-            src.writeStream.foreachBatch(_refresh)
+            src.writeStream.foreachBatch(
+                self.fine.store.foreach_batch(checkpoint_dir, _refresh)
+            )
             .option("checkpointLocation", checkpoint_dir)
             .trigger(availableNow=True)
             .start()
@@ -1801,7 +1648,7 @@ class ContinuousRollupCascade:
     def read(self, level: int = 0) -> DataFrame:
         """Finals at the given cascade level (0 = first coarse tier)."""
         lvl = self.levels[level]
-        state = _read_state_memo(self.spark, lvl["path"], self._schemas)
+        state = lvl["store"].read()
         return state.select(
             *[state[k] for k in lvl["keys"]],
             *[F.expr(e) for e in self.fine._final],

@@ -41,6 +41,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..catalog import load_table
+from ..sources.sinks import overwrite_touched_partitions, staged_swap
+from ..sources.state import StateStore
 
 HIGH_TS = "9999-12-31 00:00:00"
 OP_UPSERT = "upsert"
@@ -487,25 +489,25 @@ class Scd2Table:
     state is the interval table itself; each CDC batch runs
     ``scd2_apply`` (touched keys' chains rebuilt, untouched rows cross
     a broadcast anti join) and the result swaps in via staged rename —
-    a failed write never loses the table. ``stream_cdc`` drives the
-    same apply from a parquet file stream with ``foreachBatch``;
-    chain rebuilding is NOT idempotent under replay (a replayed batch
-    would duplicate version rows), so a per-(stream, batch) marker
-    skips foreachBatch's at-least-once redeliveries — the same guard
-    discipline as ``ContinuousAggregate._apply_once``.
+    a failed write never loses the table. The table lives in a
+    ``sources.state.StateStore``. ``stream_cdc`` drives the same apply
+    from a parquet file stream with ``foreachBatch``; chain rebuilding
+    is NOT idempotent under replay (a replayed batch would duplicate
+    version rows), so the store's ``apply_once`` marker per (stream,
+    batch) skips foreachBatch's at-least-once redeliveries — the same
+    guard the continuous aggregates use.
 
     With ``n_buckets`` the state is laid out as one directory per key
     bucket (``_kb = pmod(hash(keys), n)``) and a CDC batch rewrites
     ONLY the buckets its keys land in: the state read prunes to those
-    directories at planning time (static ``isin`` on the partition
-    column), the merged slice stages to a sibling dir (the write never
-    scans what it replaces, a failed merge leaves the table intact),
-    and the commit is a per-write dynamic partition overwrite — the
-    same discipline as ``sources/sinks.upsert_partitioned``. Untouched
-    buckets' bytes are never rewritten (test-pinned). Bucket dirs
-    never empty (deletes close intervals, they do not remove rows), so
-    no emptied-partition cleanup is needed. On a lakehouse table the
-    swap is ``MERGE INTO`` on the key.
+    directories at run time (a broadcast semi join on the partition
+    column), and the rebuilt slice commits through
+    ``sources.sinks.overwrite_touched_partitions`` — written once to a
+    sibling dir (a failed rebuild leaves the table intact), then each
+    bucket dir renamed in, the tail ``upsert_partitioned`` uses.
+    Untouched buckets' bytes are never rewritten (test-pinned). Bucket
+    dirs never empty (deletes close intervals, they do not remove
+    rows). On a lakehouse table the swap is ``MERGE INTO`` on the key.
     """
 
     _KB = "_kb"
@@ -523,6 +525,9 @@ class Scd2Table:
         self.keys = keys
         self.tracked = tracked
         self.n_buckets = n_buckets
+        self.store = StateStore(
+            spark, state_path, [] if n_buckets is None else [self._KB]
+        )
 
     def _with_bucket(self, df: DataFrame) -> DataFrame:
         return df.withColumn(
@@ -530,19 +535,13 @@ class Scd2Table:
         )
 
     def initialize(self, dim: DataFrame, initial_from: str) -> None:
-        import shutil
-
         hist0 = scd2_initialize(dim, self.keys, self.tracked, initial_from)
-        shutil.rmtree(self._marker_dir(), ignore_errors=True)
-        if self.n_buckets is None:
-            hist0.write.mode("overwrite").parquet(self.state_path)
-        else:
-            self._with_bucket(hist0).write.mode("overwrite").partitionBy(
-                self._KB
-            ).parquet(self.state_path)
+        self.store.create(
+            hist0 if self.n_buckets is None else self._with_bucket(hist0)
+        )
 
     def read(self) -> DataFrame:
-        df = self.spark.read.parquet(self.state_path)
+        df = self.store.read()
         if self.n_buckets is not None:
             df = df.drop(self._KB)
         return df
@@ -568,7 +567,9 @@ class Scd2Table:
             new_hist = scd2_apply(
                 self.read(), changes, self.keys, self.tracked
             )
-            self._swap_write(new_hist)
+            staged_swap(
+                self.state_path, lambda p: new_hist.write.parquet(p)
+            )
             return
         # Touched buckets never leave the executors: the state read is
         # confined by a semi join of its partition column against the
@@ -589,79 +590,34 @@ class Scd2Table:
             .distinct()
         )
         sliced = (
-            self.spark.read.parquet(self.state_path)
+            self.store.read()
             .join(F.broadcast(touched_kb), self._KB, "left_semi")
             .drop(self._KB)
         )
-        # Persist: the rebuild plan (pruned state read + union + window
-        # sort) feeds both the emptiness probe and the staged write —
-        # unpinned it would run twice per batch.
-        rebuilt = scd2_apply(sliced, changes, self.keys, self.tracked).persist()
-        try:
-            # Tombstone-only batch for keys with no history: nothing
-            # survives the rebuild and nothing was stored — the state
-            # is already correct, and staging an empty parquet dir
-            # would fail schema inference on re-read. Buckets never
-            # shrink to empty otherwise (closed versions persist), so
-            # this is the only empty case.
-            if rebuilt.limit(1).count() == 0:
-                return
-            self._overwrite_buckets(self._with_bucket(rebuilt))
-        finally:
-            rebuilt.unpersist()
-
-    def _overwrite_buckets(self, rebuilt_with_kb: DataFrame) -> None:
-        import os
-        import shutil
-
-        staging = self.state_path + ".__staging__"
-        if os.path.exists(staging):
-            shutil.rmtree(staging)
-        rebuilt_with_kb.write.mode("overwrite").parquet(staging)
-        staged = self.spark.read.parquet(staging)
-        # Per-write option, not spark.conf.set (see upsert_partitioned:
-        # mutating session conf races with concurrent writers).
-        staged.write.mode("overwrite").option(
-            "partitionOverwriteMode", "dynamic"
-        ).partitionBy(self._KB).parquet(self.state_path)
-        shutil.rmtree(staging)
+        # A tombstone-only batch for keys with no history rebuilds to
+        # no rows: nothing is staged and the touched buckets, which
+        # held no rows, stay absent. Buckets never shrink to empty
+        # otherwise (closed versions persist).
+        rebuilt = scd2_apply(sliced, changes, self.keys, self.tracked)
+        overwrite_touched_partitions(
+            self.spark, self.state_path, self._with_bucket(rebuilt),
+            [self._KB], touched_kb,
+        )
 
     def stream_cdc(self, source_dir: str, schema, checkpoint_dir: str):
         """Apply CDC files as they arrive; ``availableNow`` drains and
         stops, and a restart on the same checkpoint resumes after the
         last committed batch. Chain rebuilding is not idempotent under
-        at-least-once redelivery, so batches run through the shared
-        ``continuous_agg.apply_batch_once`` replay guard."""
-        from .continuous_agg import apply_batch_once, stream_ns
-
-        ns = stream_ns(checkpoint_dir)
-
-        def _apply(batch_df: DataFrame, batch_id: int) -> None:
-            if not batch_df.isEmpty():
-                apply_batch_once(
-                    self.state_path,
-                    batch_id,
-                    lambda: self.apply(batch_df),
-                    ns=ns,
-                )
-
+        at-least-once redelivery, so batches run through the store's
+        replay guard."""
         src = self.spark.readStream.schema(schema).parquet(source_dir)
         return (
-            src.writeStream.foreachBatch(_apply)
+            src.writeStream.foreachBatch(
+                self.store.foreach_batch(checkpoint_dir, self.apply)
+            )
             .option("checkpointLocation", checkpoint_dir)
             .trigger(availableNow=True)
             .start()
-        )
-
-    def _marker_dir(self) -> str:
-        return self.state_path + ".__applied__"
-
-    def _swap_write(self, new_hist: DataFrame) -> None:
-        from ..sources.sinks import staged_swap
-
-        staged_swap(
-            self.state_path,
-            lambda p: new_hist.write.mode("overwrite").parquet(p),
         )
 
 

@@ -41,7 +41,7 @@ line-dedup) is written once, as a body that takes a ``state`` source
 and reads each corpus-sized state relation through it. ``_recompute``
 builds the relation from the old snapshot on every run (a
 corpus-proportional stand-in); ``_stored`` reads it from a persisted
-``_stored_state`` parquet table built once per input bytes and CDC
+``StateStore.cached`` parquet table built once per input bytes and CDC
 spec, so a run pays only the O(Δ) merge — the production state-store
 economics. Each registry entry binds one body to one source (and, for
 the sparse variants, a CDC spec): a ``*_maintenance`` name and its
@@ -65,6 +65,7 @@ from ..plans.signed import (
     compile_signed_delta,
     consolidate,
 )
+from ..sources.state import StateStore
 
 # ----------------------------------------------------------------------
 # Oracle-side old/new state SQL, generated from the SAME CDC_SPECS the
@@ -713,10 +714,10 @@ def _recompute(cat: SignedDeltaCatalog, table: str):
 
 def _stored(cat: SignedDeltaCatalog, table: str):
     """State source: read every state relation from its persisted
-    ``_stored_state`` table, keyed on ``table``'s bytes and ``cat``'s
+    ``StateStore.cached`` table, keyed on ``table``'s bytes and ``cat``'s
     CDC spec and built from the old snapshot on first use."""
     fp = _spec_fingerprint(cat.sf_dir, table, cat.specs)
-    return lambda name, build: _stored_state(cat.spark, name, fp, build)
+    return lambda name, build: StateStore.cached(cat.spark, name, fp, build)
 
 
 def _net_multiplicity(
@@ -735,10 +736,6 @@ def _net_multiplicity(
     )
 
 
-_STORED_STATE_VERSION = "v1"
-_STORED_KEEP = 8  # newest same-name state dirs kept per prune
-
-
 def _table_fingerprint(sf_dir: str, table: str) -> str:
     """Identity of a fixture table's bytes (path + mtime + size) — the
     stored-state cache key component that forces a rebuild whenever
@@ -748,87 +745,6 @@ def _table_fingerprint(sf_dir: str, table: str) -> str:
     p = os.path.join(sf_dir, f"{table}.parquet")
     st = os.stat(p)
     return f"{p}:{st.st_mtime_ns}:{st.st_size}"
-
-
-def _stored_state(spark: SparkSession, name: str, fingerprint: str, build):
-    """A PERSISTED operator-state table: built once per (name,
-    fingerprint) and read back from parquet on every later run —
-    across processes too — the way a deployment's maintenance job
-    reads the state its previous run wrote. This is the difference
-    between the module's old-snapshot recompute stand-ins (honest but
-    corpus-proportional every run) and the real production economics:
-    a query built on this helper pays the corpus-sized build exactly
-    once per fixture, then measures the true O(Δ) repair cost. The
-    fingerprint ties the cache to the exact input bytes, so a
-    regenerated fixture rebuilds instead of serving stale state; the
-    staging → ``os.replace`` swap keeps a crashed build invisible
-    (the unswapped staging dir is simply rebuilt next run)."""
-    import hashlib
-    import os
-    import shutil
-
-    key = hashlib.md5(
-        f"{name}|{fingerprint}|{_STORED_STATE_VERSION}".encode()
-    ).hexdigest()
-    root = _stored_state_root()
-    path = os.path.join(root, f"{name}_{key}")
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        os.makedirs(root, exist_ok=True)
-        staging = f"{path}.__staging__{os.getpid()}"
-        shutil.rmtree(staging, ignore_errors=True)
-        build().write.mode("overwrite").parquet(staging)
-        shutil.rmtree(path, ignore_errors=True)
-        os.replace(staging, path)
-        # bounded keep: fingerprints churn whenever a fixture
-        # regenerates, so same-name dirs for dead keys accumulate
-        # across sessions — prune to the newest _STORED_KEEP (never
-        # the one just written; a pruned live dir merely rebuilds).
-        # A concurrent run may prune a listed dir mid-sort: the
-        # tolerant mtime maps missing dirs to 0 (prunes first, and
-        # its rmtree is already a no-op on an absent path).
-        def _mtime(d: str) -> float:
-            try:
-                return os.path.getmtime(d)
-            except OSError:
-                return 0.0
-
-        same = sorted(
-            (
-                os.path.join(root, d)
-                for d in os.listdir(root)
-                if d.startswith(f"{name}_") and "__staging__" not in d
-            ),
-            key=_mtime,
-        )
-        for stale in same[: max(0, len(same) - _STORED_KEEP)]:
-            if stale != path:
-                shutil.rmtree(stale, ignore_errors=True)
-    # Schema from the parquet footer on the driver (memoized per
-    # (dir, mtime)): stored-state dirs are immutable once swapped in,
-    # and every *_stored run otherwise pays a footer-inference job
-    # per state table read (~0.3 s each; some twins read three).
-    from ..sources.versioned import _dir_schema
-
-    known = _dir_schema(path)
-    if known is not None:
-        return spark.read.schema(known).parquet(path)
-    return spark.read.parquet(path)
-
-
-def _stored_state_root() -> str:
-    """Repo-local stored-state root: ``spark-warehouse/.stored_state``
-    next to the package, overridable via ``DFDQ_STORED_STATE_DIR``.
-    Repo-local (not ``/tmp``) so (a) ``*_stored`` bench numbers
-    survive reboots and tmp-cleaners instead of silently reverting to
-    cold-build cost, and (b) the cache is never a world-shared path
-    two users could collide on."""
-    import os
-
-    env = os.environ.get("DFDQ_STORED_STATE_DIR")
-    if env:
-        return os.path.join(env, "dfdq_stored_state")
-    repo = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    return os.path.join(repo, "spark-warehouse", ".stored_state", "dfdq_stored_state")
 
 
 def _spec_fingerprint(sf_dir: str, table: str, specs=None) -> str:
@@ -1825,7 +1741,7 @@ def q_signed_sessionize_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The full maintained session TABLE against a PERSISTED state
     store, under the sparse CDC spec (≈0.8% of users): the stored
     session table is READ from a parquet table a previous refresh
-    wrote (built once per fixture by ``_stored_state``); per-run work
+    wrote (built once per fixture by ``StateStore.cached``); per-run work
     is re-sessionizing the TOUCHED users' new events (broadcast semi
     join prunes the event scan) and anti-joining every other user's
     stored sessions through untouched — the repair cost is the touched
@@ -1841,7 +1757,7 @@ def q_signed_sessionize_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
     # dense/sparse variant sharing the state name can never serve
     # stale state from a warm cache
     fp = _spec_fingerprint(sf_dir, "events", _SPARSE_EVENTS_SPECS)
-    stored = _stored_state(
+    stored = StateStore.cached(
         spark, "sessions_tbl", fp,
         lambda: _sessions_of(cat.old("events")),
     )

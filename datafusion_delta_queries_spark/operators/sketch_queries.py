@@ -37,6 +37,7 @@ from ..functions.sketches import (
     hll_portable_registers,
     hll_summary,
 )
+from ..sources.state import StateStore
 
 _GROUP = "o_orderpriority"
 _VALUE = "o_custkey"
@@ -387,18 +388,6 @@ FROM stats s LEFT JOIN exact USING (g1, g2)
 # ---------------------------------------------------------------------------
 
 
-
-def _read_state_memo(spark, path, schemas):
-    """Schema-memoized parquet state read (see continuous_agg):
-    skips the per-read footer-inference job after the first read."""
-    s = schemas.get(path)
-    if s is None:
-        df = spark.read.parquet(path)
-        schemas[path] = df.schema
-        return df
-    return spark.read.schema(s).parquet(path)
-
-
 class ContinuousHllNdv:
     """A stored approximate-NDV view: state is the portable register
     table (≤ 256 rows per group at any scale), a refresh hashes ONLY
@@ -427,20 +416,18 @@ class ContinuousHllNdv:
         self.state_path = state_path
         self.group_cols = group_cols
         self.value_col = value_col
-        self._schemas: dict = {}
+        self.store = StateStore(spark, state_path)
 
     def initialize(self, df: DataFrame) -> None:
-        self._schemas.clear()  # rebuilt table: re-infer once
-        regs = hll_portable_registers(df, self.group_cols, self.value_col)
-        regs.write.mode("overwrite").parquet(self.state_path)
+        self.store.create(
+            hll_portable_registers(df, self.group_cols, self.value_col)
+        )
 
     def refresh(self, batch: DataFrame) -> None:
-        from ..sources.sinks import upsert
-
         batch_regs = hll_portable_registers(
             batch, self.group_cols, self.value_col
         )
-        state = _read_state_memo(self.spark, self.state_path, self._schemas)
+        state = self.store.read()
         on = [*self.group_cols, "bucket"]
         # Persist: the raised-registers plan (batch hash + state join)
         # feeds the no-op probe, the upsert's duplicate-key guard, and
@@ -458,15 +445,12 @@ class ContinuousHllNdv:
             # the (tiny) state table. No-op batches skip the write.
             if raised.limit(1).count() == 0:
                 return
-            upsert(self.spark, self.state_path, raised, key_cols=on)
+            self.store.replace_touched(raised, on)
         finally:
             raised.unpersist()
 
     def read_summary(self) -> DataFrame:
-        return hll_summary(
-            _read_state_memo(self.spark, self.state_path, self._schemas),
-            self.group_cols,
-        )
+        return hll_summary(self.store.read(), self.group_cols)
 
 
 def q_continuous_hll_ndv(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -632,15 +616,14 @@ class ContinuousCms:
         self.group_cols = group_cols
         self.value_col = value_col
         self._keys = [*group_cols, "row", "bucket"]
-        self._schemas: dict = {}
+        self.store = StateStore(spark, state_path)
 
     def initialize(self, df: DataFrame) -> None:
         from ..functions.sketches import cms_counters
 
-        self._schemas.clear()  # rebuilt table: re-infer once
-        cms_counters(df, self.group_cols, self.value_col).write.mode(
-            "overwrite"
-        ).parquet(self.state_path)
+        self.store.create(
+            cms_counters(df, self.group_cols, self.value_col)
+        )
 
     def refresh_signed(self, signed_batch: DataFrame) -> None:
         """``signed_batch`` carries the CDF rows normalized to ``_sign``
@@ -649,12 +632,11 @@ class ContinuousCms:
 
         from ..functions.sketches import cms_counters
         from ..plans.signed import SIGN
-        from ..sources.sinks import upsert
 
         delta = cms_counters(
             signed_batch, self.group_cols, self.value_col, weight=F.col(SIGN)
         )
-        state = _read_state_memo(self.spark, self.state_path, self._schemas)
+        state = self.store.read()
         # Net only the touched counters; everything else stays on disk
         # untouched. Persist: the netted plan feeds the no-op probe and
         # the write, which reads it twice (nonzero counters, touched
@@ -683,18 +665,16 @@ class ContinuousCms:
                 return
             # Replace every touched counter: one netted to zero is
             # touched with no fresh row, so it leaves the table.
-            upsert(
-                self.spark,
-                self.state_path,
+            self.store.replace_touched(
                 netted.where("cnt <> 0"),
-                key_cols=self._keys,
+                self._keys,
                 touched=netted.select(*self._keys),
             )
         finally:
             netted.unpersist()
 
     def read_counters(self) -> DataFrame:
-        return _read_state_memo(self.spark, self.state_path, self._schemas)
+        return self.store.read()
 
     def point_estimates(self, keys: DataFrame, key_col: str) -> DataFrame:
         from ..functions.sketches import cms_point_estimate

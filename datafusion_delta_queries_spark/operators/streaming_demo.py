@@ -585,9 +585,9 @@ def q_streaming_auto_loader(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     1. Stage 4 landing files; one ``availableNow`` drain with
        ``maxFilesPerTrigger=2`` commits them through ``foreachBatch``
-       as CDF insert versions, each behind the shared
-       ``apply_batch_once`` replay guard (at-least-once redelivery of
-       a batch can never double-commit).
+       as CDF insert versions, each behind the table's
+       ``StateStore.apply_once`` replay guard (at-least-once
+       redelivery of a batch can never double-commit).
     2. Two LATE files land; a RESTART on the same checkpoint streams
        ONLY those (the file-source checkpoint is the ingest ledger —
        O(#files) state, like COPY INTO's).
@@ -600,8 +600,8 @@ def q_streaming_auto_loader(spark: SparkSession, sf_dir: str) -> DataFrame:
     one write per micro-batch, and restart cost is checkpoint-read."""
     import os
 
+    from ..sources.state import StateStore
     from ..sources.versioned import CdfVersionedTable
-    from .continuous_agg import apply_batch_once, stream_ns
     from .signed_queries import _cagg_state_dir
 
     ws = _cagg_state_dir()
@@ -614,28 +614,20 @@ def q_streaming_auto_loader(spark: SparkSession, sf_dir: str) -> DataFrame:
         landing
     )
     vt = CdfVersionedTable(os.path.join(ws, "orders_stream"))
-    ns = stream_ns(ckpt)
+    commit_once = StateStore(spark, vt.root).foreach_batch(
+        ckpt,
+        lambda b: vt.write_version(
+            b.withColumn("_change_type", F.lit("insert"))
+        ),
+    )
     schema = spark.read.parquet(landing).schema
 
     def drain() -> None:
-        def _apply(batch_df: DataFrame, batch_id: int) -> None:
-            if not batch_df.isEmpty():
-                apply_batch_once(
-                    vt.root,
-                    batch_id,
-                    lambda: vt.write_version(
-                        batch_df.withColumn(
-                            "_change_type", F.lit("insert")
-                        )
-                    ),
-                    ns=ns,
-                )
-
         (
             spark.readStream.schema(schema)
             .option("maxFilesPerTrigger", 2)
             .parquet(landing)
-            .writeStream.foreachBatch(_apply)
+            .writeStream.foreachBatch(commit_once)
             .option("checkpointLocation", ckpt)
             .trigger(availableNow=True)
             .start()

@@ -181,8 +181,8 @@ def execute_merge(
     With ``partition_cols`` (a directory-PARTITIONED target), the
     write rewrites ONLY the partitions the batch touches — old
     partitions of matched rows plus destination partitions of updated
-    and inserted rows — through the same dynamic-partition-overwrite
-    tail ``sources.sinks.upsert_partitioned`` uses
+    and inserted rows — through the same partition-level commit
+    ``sources.sinks.upsert_partitioned`` uses
     (``overwrite_touched_partitions``). Untouched partition
     directories are never opened for write: at 100 TB a MERGE whose
     source batch touches 3 of 10,000 date partitions costs 3
@@ -691,7 +691,7 @@ def execute_insert_overwrite(
                 "INSERT OVERWRITE: NULL partition value in the batch"
             )
         if n == 0:
-            return  # empty SELECT overwrites nothing under dynamic mode
+            return  # an empty SELECT overwrites no partition
         overwrite_touched_partitions(
             spark, target_path, rows, partition_cols, tdf, fmt
         )
@@ -826,7 +826,7 @@ def execute_optimize(
         # A flat rewrite of a hive-partitioned directory would strip
         # the partition columns into data columns and replace the
         # day=/status= layout with flat files — after which the
-        # pruned DML executors' dynamic overwrites would duplicate
+        # pruned DML executors' partition commits would duplicate
         # and resurrect rows. Detect the layout and refuse.
         has_part_dirs = any(
             "=" in name

@@ -13,6 +13,13 @@ At 100 TB, layout is the cheapest optimization you'll ever buy:
 
 Bucketed tables require the session catalog (saveAsTable) — files
 alone can't carry bucket metadata.
+
+Rewrites of an existing table write their data once, to a sibling
+``*.__staging__`` dir, and rename it in: ``staged_swap`` swaps the
+whole table, ``overwrite_touched_partitions`` each touched partition
+directory. ``upsert`` and ``upsert_partitioned`` are the keyed merge
+("replace the touched keys") on top of them; maintained state reaches
+them through ``sources.state.StateStore``.
 """
 
 from __future__ import annotations
@@ -103,6 +110,25 @@ def write_clustered(
     w.write.format(fmt).mode("overwrite").save(path)
 
 
+def _swap_in(staged: str, target: str, retired: str) -> None:
+    """Rename ``target`` (when present) to ``retired``, then ``staged``
+    to ``target``, creating parent directories as needed."""
+    if os.path.exists(target):
+        os.makedirs(os.path.dirname(retired), exist_ok=True)
+        os.rename(target, retired)
+    os.makedirs(os.path.dirname(target), exist_ok=True)
+    os.rename(staged, target)
+
+
+def _siblings(base: str) -> tuple[str, str]:
+    """The staging and retired siblings of the table at ``base``, with
+    any leftovers of a crashed earlier write removed."""
+    staging, retired = base + ".__staging__", base + ".__retired__"
+    for leftover in (staging, retired):
+        shutil.rmtree(leftover, ignore_errors=True)
+    return staging, retired
+
+
 def staged_swap(target_path: str, write) -> None:
     """Replace the directory ``target_path`` with the one
     ``write(staging_path)`` writes: stage to a sibling directory, rename
@@ -123,13 +149,9 @@ def staged_swap(target_path: str, write) -> None:
     transaction-log table format closes this window with an atomic
     metadata commit."""
     base = target_path.rstrip("/")
-    staging, retired = base + ".__staging__", base + ".__retired__"
-    for leftover in (staging, retired):
-        shutil.rmtree(leftover, ignore_errors=True)
+    staging, retired = _siblings(base)
     write(staging)
-    if os.path.exists(base):
-        os.rename(base, retired)
-    os.rename(staging, base)
+    _swap_in(staging, base, retired)
     shutil.rmtree(retired, ignore_errors=True)
 
 
@@ -352,12 +374,10 @@ def upsert_partitioned(
     through a broadcast semi join (planned as a
     ``dynamicpruningexpression`` on the scan — runtime directory
     pruning, no driver-side partition list); the merge runs on that
-    slice only; the write uses dynamic partition overwrite
-    (``partitionOverwriteMode=dynamic``), which replaces exactly the
-    partitions present in the output. A touched partition whose rows
-    are ALL removed produces no output rows, so dynamic overwrite
-    would leave it stale — those emptied directories are removed
-    explicitly.
+    slice only; ``overwrite_touched_partitions`` writes the slice once
+    and renames each of its partition directories in. A touched
+    partition whose rows are ALL removed produces no output rows —
+    those emptied directories are removed explicitly.
 
     ``partition_cols`` must be a subset of ``key_cols``: if the
     partition value were mutable, an update "moving" a key between
@@ -377,15 +397,8 @@ def upsert_partitioned(
     percent-escapes special characters in directory names on write, so
     the emptied-partition cleanup builds its ``col=value`` paths
     through the same escaping (``_escape_path_name``) rather than
-    literally.
-
-    Failure window: the merged slice is staged to a sibling temp dir
-    first (a failed merge computation leaves the table untouched), but
-    the final dynamic overwrite commits partition-by-partition — a
-    crash mid-commit can leave SOME touched partitions new and others
-    old (untouched partitions are never at risk). That per-partition
-    window is inherent to file-level tables; a lakehouse format's
-    MERGE closes it with one atomic metadata commit.
+    literally. The commit's failure window is per partition (see
+    ``overwrite_touched_partitions``).
     """
     missing = [c for c in partition_cols if c not in key_cols]
     if missing:
@@ -454,6 +467,20 @@ def upsert_partitioned(
         tdf.unpersist()
 
 
+def _partition_leaves(root: str, depth: int) -> list[str]:
+    """Relative paths of the ``col=value`` directories ``depth`` levels
+    under ``root`` — the partitions one partitioned write produced."""
+    level = [""]
+    for _ in range(depth):
+        level = [
+            os.path.join(rel, name)
+            for rel in level
+            for name in sorted(os.listdir(os.path.join(root, rel)))
+            if "=" in name and os.path.isdir(os.path.join(root, rel, name))
+        ]
+    return level
+
+
 def overwrite_touched_partitions(
     spark: SparkSession,
     target_path: str,
@@ -463,67 +490,60 @@ def overwrite_touched_partitions(
     fmt: str = "parquet",
 ) -> None:
     """Commit ``merged`` — ALL surviving rows of exactly the
-    partition-value tuples in ``touched_df`` — via dynamic partition
-    overwrite. Untouched partition directories are never opened for
-    write; touched partitions the batch emptied are removed
-    explicitly. The shared write tail of every partition-pruned
-    mutation (``upsert_partitioned`` and the pruned MERGE / UPDATE /
-    DELETE / INSERT OVERWRITE executors in ``plans.merge_sql``).
+    partition-value tuples in ``touched_df`` — partition by partition.
+    The slice is written ONCE, partitioned, to a sibling staging dir
+    (the write never scans the directories it replaces, and a failure
+    while computing the merge leaves the table untouched); each staged
+    partition directory is then renamed in, the way ``staged_swap``
+    swaps a whole table. Untouched partition directories are never
+    opened for write; touched partitions the batch emptied are removed.
+    The shared write tail of every partition-pruned mutation
+    (``upsert_partitioned``, the pruned MERGE / UPDATE / DELETE /
+    INSERT OVERWRITE executors in ``plans.merge_sql`` and the bucketed
+    ``Scd2Table.apply``).
 
     Driver-state contract: ``touched_df`` stays distributed — the only
     partition tuples collected are the EMPTIED set (touched minus
-    still-present, a DataFrame anti-diff), because deleting those
-    directories is per-path driver filesystem work anyway. A 100 TB
-    table with millions of partitions costs the driver O(#emptied),
-    not O(#touched)."""
+    staged, a DataFrame anti-diff), because deleting those directories
+    is per-path driver filesystem work anyway, as is renaming the
+    staged ones. A 100 TB table with millions of partitions costs the
+    driver O(#rewritten), not O(#partitions).
+
+    Failure window: the renames commit partition by partition, so a
+    crash mid-commit can leave SOME touched partitions new and others
+    old, with a replaced partition parked under ``*.__retired__``
+    (untouched partitions are never at risk). That per-partition
+    window is inherent to file-level tables; a lakehouse format's
+    MERGE closes it with one atomic metadata commit."""
     base = target_path.rstrip("/")
-    tdf = touched_df.select(*partition_cols).distinct()
-    if merged.limit(1).count() == 0:
-        # Deletes-only batch that empties every touched partition: an
-        # empty parquet write has no schema to re-read, so skip the
-        # staging round-trip and just drop the touched directories —
-        # here the emptied set IS the touched set, so collecting it is
-        # collecting the final rm list.
-        for t in [tuple(r) for r in tdf.collect()]:
-            d = _partition_dir(base, partition_cols, t)
-            if os.path.isdir(d):
-                shutil.rmtree(d)
-        return
-    staging = base + ".__upsert_part_staging__"
-    if os.path.exists(staging):
-        shutil.rmtree(staging)
-    # Stage the slice, then re-read it for the overwrite: the final
-    # write must not scan the directory it is replacing, and a failure
-    # while COMPUTING the merge leaves the table untouched. The staged
-    # copy is touched-partitions-sized, not table-sized.
-    merged.write.format(fmt).mode("overwrite").save(staging)
-    # The staged copy is this process's own write of `merged` —
-    # re-reading it with the known schema skips the inference job.
+    staging, retired = _siblings(base)
+    merged.write.format(fmt).mode("overwrite").partitionBy(
+        *partition_cols
+    ).save(staging)
+    # Partitions the batch emptied have no staged directory. Computed
+    # as a distributed anti-diff against the staged copy (read with the
+    # known schema: no inference job, and an empty slice reads as no
+    # rows); only this final rm list reaches the driver.
     staged = spark.read.format(fmt).schema(merged.schema).load(staging)
-    # Partitions the batch emptied (no surviving rows): dynamic
-    # overwrite will leave their old directories in place, so they are
-    # removed explicitly below. Computed as a distributed anti-diff
-    # from the staged copy BEFORE the overwrite (and before the
-    # staging dir is deleted); only this final rm list reaches the
-    # driver.
     emptied = [
         tuple(r)
-        for r in tdf.exceptAll(
-            staged.select(*partition_cols).distinct()
-        ).collect()
+        for r in touched_df.select(*partition_cols)
+        .distinct()
+        .exceptAll(staged.select(*partition_cols).distinct())
+        .collect()
     ]
-    # Per-write option, NOT spark.conf.set: mutating the session conf
-    # races with any concurrent writer in the same session (a restore
-    # to 'static' mid-write would turn this into a full-table replace
-    # that deletes untouched partitions).
-    staged.write.format(fmt).mode("overwrite").option(
-        "partitionOverwriteMode", "dynamic"
-    ).partitionBy(*partition_cols).save(base)
-    shutil.rmtree(staging)
+    for rel in _partition_leaves(staging, len(partition_cols)):
+        _swap_in(
+            os.path.join(staging, rel),
+            os.path.join(base, rel),
+            os.path.join(retired, rel),
+        )
     for t in emptied:
         d = _partition_dir(base, partition_cols, t)
         if os.path.isdir(d):
             shutil.rmtree(d)
+    shutil.rmtree(staging, ignore_errors=True)
+    shutil.rmtree(retired, ignore_errors=True)
 
 
 def compact(

@@ -322,11 +322,11 @@ def test_batch_replay_is_idempotent(spark, tmp_path):
     )
     view.initialize(t0)
     batch = spark.createDataFrame([("a", 10)], "k: string, v: int")
-    view._apply_once(7, lambda: view.refresh(batch))
-    view._apply_once(7, lambda: view.refresh(batch))  # replay: no-op
+    view.store.apply_once(7, lambda: view.refresh(batch))
+    view.store.apply_once(7, lambda: view.refresh(batch))  # replay: no-op
     got = [tuple(r) for r in view.read().collect()]
     assert got == [("a", 11, 2)]
-    view._apply_once(8, lambda: view.refresh(batch))  # new id applies
+    view.store.apply_once(8, lambda: view.refresh(batch))  # new id applies
     assert [tuple(r) for r in view.read().collect()] == [("a", 21, 3)]
 
 
@@ -389,15 +389,15 @@ def test_reinitialize_clears_replay_markers(spark, tmp_path):
     )
     view.initialize(t0)
     batch = spark.createDataFrame([("a", 10)], "k: string, v: int")
-    view._apply_once(0, lambda: view.refresh(batch), stream_ns="ck1")
+    view.store.apply_once(0, lambda: view.refresh(batch), "ck1")
     assert [tuple(r) for r in view.read().collect()] == [("a", 11)]
     # Rebuild the view from scratch (state dir deleted, markers stale).
     shutil.rmtree(str(tmp_path / "s"))
     view.initialize(t0)
-    view._apply_once(0, lambda: view.refresh(batch), stream_ns="ck1")
+    view.store.apply_once(0, lambda: view.refresh(batch), "ck1")
     assert [tuple(r) for r in view.read().collect()] == [("a", 11)]
     # Distinct stream namespaces never collide on batch ids.
-    view._apply_once(0, lambda: view.refresh(batch), stream_ns="ck2")
+    view.store.apply_once(0, lambda: view.refresh(batch), "ck2")
     assert [tuple(r) for r in view.read().collect()] == [("a", 21)]
 
 

@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import datetime
 import os
 
 import pytest
@@ -733,6 +734,86 @@ def test_whole_table_rewrites_write_once(spark, tmp_path, monkeypatch):
     assert ConstrainedTable(spark, str(tmp_path / "c")).checks == {
         "amt_pos": "amt > 0"
     }
+    assert not [
+        n for n in os.listdir(tmp_path) if "__staging__" in n or "__retired__" in n
+    ]
+
+
+def test_partition_commits_write_once(spark, tmp_path, monkeypatch):
+    """A partitioned upsert, a pruned MERGE and a bucketed SCD2 apply
+    each make ONE Spark write: the touched slice is staged once,
+    partitioned, and each staged partition dir is renamed in — not
+    copied back through a second dynamic-overwrite write."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from datafusion_delta_queries_spark.operators.scd import Scd2Table
+    from datafusion_delta_queries_spark.plans.merge_sql import execute_merge
+    from datafusion_delta_queries_spark.sources.sinks import (
+        upsert_partitioned,
+    )
+
+    writes = []
+    for method in ("save", "parquet"):
+        real = getattr(DataFrameWriter, method)
+
+        def counted(self, *a, _real=real, **kw):
+            writes.append(a[0] if a else kw.get("path"))
+            return _real(self, *a, **kw)
+
+        monkeypatch.setattr(DataFrameWriter, method, counted)
+
+    schema = "k int, day string, amt int"
+    rows = spark.createDataFrame(
+        [(1, "d1", 10), (2, "d1", 20), (3, "d2", 30), (4, "d3", 40)], schema
+    )
+    path = str(tmp_path / "u")
+    write_partitioned(rows, path, ["day"])
+    writes.clear()
+    upsert_partitioned(
+        spark, path, spark.createDataFrame([(2, "d1", 21)], schema),
+        ["k", "day"], ["day"],
+    )
+    assert len(writes) == 1, writes
+    got = sorted(
+        tuple(r) for r in spark.read.parquet(path).select("k", "day", "amt").collect()
+    )
+    assert got == [(1, "d1", 10), (2, "d1", 21), (3, "d2", 30), (4, "d3", 40)]
+
+    path = str(tmp_path / "m")
+    write_partitioned(rows, path, ["day"])
+    writes.clear()
+    execute_merge(
+        spark,
+        "MERGE INTO t USING s ON t.k = s.k "
+        "WHEN MATCHED THEN UPDATE SET amt = s.amt "
+        "WHEN NOT MATCHED THEN INSERT *",
+        path,
+        spark.createDataFrame([(3, "d2", 31), (5, "d2", 50)], schema),
+        partition_cols=["day"],
+    )
+    assert len(writes) == 1, writes
+    got = sorted(
+        tuple(r) for r in spark.read.parquet(path).select("k", "day", "amt").collect()
+    )
+    assert got == [
+        (1, "d1", 10), (2, "d1", 20), (3, "d2", 31), (4, "d3", 40), (5, "d2", 50)
+    ]
+
+    table = Scd2Table(spark, str(tmp_path / "scd"), ["k"], ["tier"], n_buckets=4)
+    table.initialize(
+        spark.createDataFrame([(1, "gold"), (2, "silver")], "k int, tier string"),
+        "2020-01-01",
+    )
+    writes.clear()
+    table.apply(
+        spark.createDataFrame(
+            [(1, "plat", datetime.datetime(2021, 1, 1), "upsert")],
+            "k int, tier string, effective_ts timestamp, op string",
+        )
+    )
+    assert len(writes) == 1, writes
+    got = sorted((r.k, r.tier, r.is_current) for r in table.read().collect())
+    assert got == [(1, "gold", False), (1, "plat", True), (2, "silver", True)]
     assert not [
         n for n in os.listdir(tmp_path) if "__staging__" in n or "__retired__" in n
     ]

@@ -1,10 +1,10 @@
-"""Persisted operator-state store (signed_queries._stored_state) and
+"""Persisted operator-state store (sources.state.StateStore.cached) and
 the index maintainers that read their state through it.
 
 Every index maintainer in signed_queries is ONE body taking a
 ``state`` source; the registry binds it to ``_recompute`` (state built
 from the old snapshot each run) for ``*_maintenance`` and to
-``_stored`` (state read from a persisted ``_stored_state`` table) for
+``_stored`` (state read from a persisted ``StateStore.cached`` table) for
 ``*_stored``. Correctness is pinned by the shared oracles
 (test_oracle_parity); these tests pin the state-store CONTRACT —
 build-once, fingerprint invalidation, the plans actually reading the
@@ -19,8 +19,12 @@ from functools import partial
 import pytest
 
 from datafusion_delta_queries_spark.operators.signed_queries import (
-    _stored_state,
     _table_fingerprint,
+)
+from datafusion_delta_queries_spark.sources.state import (
+    CACHE_KEEP,
+    StateStore,
+    cache_root,
 )
 
 from .conftest import SF_SMALL
@@ -46,9 +50,9 @@ def test_stored_state_builds_once(spark, tmp_path, monkeypatch):
         calls.append(1)
         return spark.range(5).selectExpr("id", "id * 2 AS x")
 
-    a = _stored_state(spark, "t1", "fp-A", build)
+    a = StateStore.cached(spark, "t1", "fp-A", build)
     assert a.count() == 5
-    b = _stored_state(spark, "t1", "fp-A", build)
+    b = StateStore.cached(spark, "t1", "fp-A", build)
     assert b.count() == 5
     assert len(calls) == 1, "second call must read, not rebuild"
     # the read-back frame scans the persisted parquet
@@ -63,15 +67,15 @@ def test_stored_state_fingerprint_invalidates(spark, tmp_path, monkeypatch):
         calls.append(1)
         return spark.range(3).selectExpr("id")
 
-    _stored_state(spark, "t2", "fp-A", build)
-    _stored_state(spark, "t2", "fp-B", build)
+    StateStore.cached(spark, "t2", "fp-A", build)
+    StateStore.cached(spark, "t2", "fp-B", build)
     assert len(calls) == 2, "a new fingerprint must rebuild"
 
 
 def test_stored_state_recovers_from_crashed_build(spark, tmp_path, monkeypatch):
     """A build that died mid-write leaves only an unswapped staging
     dir — the next call must rebuild cleanly (the committed state dir
-    appears only via the atomic os.replace swap)."""
+    appears only via the staged swap's rename) and remove it."""
     monkeypatch.setenv("DFDQ_STORED_STATE_DIR", str(tmp_path))
     # simulate the crash: a stale staging dir with junk inside
     root = tmp_path / "dfdq_stored_state"
@@ -79,34 +83,31 @@ def test_stored_state_recovers_from_crashed_build(spark, tmp_path, monkeypatch):
     import hashlib
 
     key = hashlib.md5(b"t3|fp-A|v1").hexdigest()
-    stale = root / f"t3_{key}.__staging__999"
+    stale = root / f"t3_{key}.__staging__"
     stale.mkdir()
     (stale / "part-junk").write_bytes(b"corrupt")
-    df = _stored_state(
+    df = StateStore.cached(
         spark, "t3", "fp-A", lambda: spark.range(4).selectExpr("id")
     )
     assert df.count() == 4
+    assert os.listdir(root) == [f"t3_{key}"], os.listdir(root)
 
 
 def test_stored_state_prunes_dead_fingerprints(spark, tmp_path, monkeypatch):
     """Fingerprints churn whenever a fixture regenerates; same-name
-    dirs for dead keys must prune to the newest _STORED_KEEP, and the
+    dirs for dead keys must prune to the newest CACHE_KEEP, and the
     just-written dir always survives."""
     import os
 
-    from datafusion_delta_queries_spark.operators.signed_queries import (
-        _STORED_KEEP,
-    )
-
     monkeypatch.setenv("DFDQ_STORED_STATE_DIR", str(tmp_path))
-    for i in range(_STORED_KEEP + 3):
-        df = _stored_state(
+    for i in range(CACHE_KEEP + 3):
+        df = StateStore.cached(
             spark, "t4", f"fp-{i}", lambda: spark.range(2).selectExpr("id")
         )
         assert df.count() == 2
     root = tmp_path / "dfdq_stored_state"
     dirs = [d for d in os.listdir(root) if d.startswith("t4_")]
-    assert len(dirs) == _STORED_KEEP
+    assert len(dirs) == CACHE_KEEP
     # the newest key still reads back without a rebuild
     calls = []
 
@@ -114,7 +115,7 @@ def test_stored_state_prunes_dead_fingerprints(spark, tmp_path, monkeypatch):
         calls.append(1)
         return spark.range(2).selectExpr("id")
 
-    _stored_state(spark, "t4", f"fp-{_STORED_KEEP + 2}", build)
+    StateStore.cached(spark, "t4", f"fp-{CACHE_KEEP + 2}", build)
     assert not calls
 
 
@@ -127,7 +128,7 @@ def test_stored_state_prune_tolerates_concurrent_delete(
     import os as _os
 
     monkeypatch.setenv("DFDQ_STORED_STATE_DIR", str(tmp_path))
-    _stored_state(spark, "t5", "fp-A", lambda: spark.range(2).selectExpr("id"))
+    StateStore.cached(spark, "t5", "fp-A", lambda: spark.range(2).selectExpr("id"))
     real_getmtime = _os.path.getmtime
 
     def racy_getmtime(p):
@@ -136,7 +137,7 @@ def test_stored_state_prune_tolerates_concurrent_delete(
         return real_getmtime(p)
 
     monkeypatch.setattr(_os.path, "getmtime", racy_getmtime)
-    df = _stored_state(
+    df = StateStore.cached(
         spark, "t5", "fp-B", lambda: spark.range(3).selectExpr("id")
     )
     assert df.count() == 3
@@ -146,12 +147,8 @@ def test_default_root_is_repo_local(monkeypatch):
     """Without the env override the root lives under the repo's
     spark-warehouse — never a world-shared tmp path (r14 verdict
     item 5 + ADVICE ownership note)."""
-    from datafusion_delta_queries_spark.operators.signed_queries import (
-        _stored_state_root,
-    )
-
     monkeypatch.delenv("DFDQ_STORED_STATE_DIR", raising=False)
-    root = _stored_state_root()
+    root = cache_root()
     assert "spark-warehouse" in root
     assert not root.startswith("/tmp")
 
@@ -201,14 +198,10 @@ def test_stored_variants_read_persisted_state(spark, qname, state_marker):
 
     # the repo-local state root makes scan paths longer than the
     # 100-char metadata default truncates at — widen for this audit
-    from datafusion_delta_queries_spark.operators.signed_queries import (
-        _stored_state_root,
-    )
-
     spark.conf.set("spark.sql.maxMetadataStringLength", "500")
     queries, _ = registry()
     queries = {**queries, **_unregistered()}
-    root = _stored_state_root()
+    root = cache_root()
 
     def _state_dirs() -> set[str]:
         if not os.path.isdir(root):
@@ -348,7 +341,6 @@ def test_semdedup_sparse_confinement_is_real(spark):
         _SEMDEDUP_SPARSE_K,
         _SPARSE_EMB_SPECS,
         _spec_fingerprint,
-        _stored_state,
     )
     from datafusion_delta_queries_spark.operators.curation import _km_assign
     from datafusion_delta_queries_spark.operators.signed_queries import (
@@ -370,7 +362,7 @@ def test_semdedup_sparse_confinement_is_real(spark):
     # fingerprint; the state names carry k)
     fp = _spec_fingerprint(SF_MED, "embeddings", _SPARSE_EMB_SPECS)
     k = _SEMDEDUP_SPARSE_K
-    cents = _stored_state(spark, f"semdedup_cents_k{k}", fp, lambda: None)
+    cents = StateStore.cached(spark, f"semdedup_cents_k{k}", fp, lambda: None)
     sgn = cat.signed_changes("embeddings").selectExpr(
         "vec_id", f"{arr} AS v", SIGN
     )
@@ -382,7 +374,7 @@ def test_semdedup_sparse_confinement_is_real(spark):
     )
     n_cells = cents.count()
     assert touched < n_cells / 2, (touched, n_cells)
-    ledger = _stored_state(spark, f"semdedup_ledger_k{k}", fp, lambda: None)
+    ledger = StateStore.cached(spark, f"semdedup_ledger_k{k}", fp, lambda: None)
     untouched = ledger.count()
     assert untouched > 0
 
