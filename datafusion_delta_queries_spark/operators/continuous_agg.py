@@ -39,13 +39,18 @@ whose live row count reaches zero (a pair netted to zero, a day whose
 hours all died, a row displaced from a top-k) is touched and has no
 fresh row, so it leaves without a separate delete frame.
 
-``count(DISTINCT)`` is rejected here: its mergeable state is the
-distinct (keys, value) pair set, which belongs in its own table —
-``maintain_agg_of_sql`` carries the exact construction and
-``delta_ndv_maintenance`` the bounded-sketch one. NULL grouping keys
-are rejected at refresh time: the keyed upsert matches on key
-equality, and SQL NULL never equals itself, so a NULL-key state row
-could not be replaced.
+Every aggregate class here takes its expression lists from the one
+aggregate algebra (``plans.sql_frontend.AggAlgebra``) the
+``maintain_*_of_sql`` plans run on; only the state and the refresh
+cycle are this module's.
+
+``count(DISTINCT)`` is rejected by ``ContinuousAggregate``: its
+mergeable state is the distinct (keys, value) pair set, which belongs
+in its own table — ``ContinuousDistinctAggregate`` (below) stores it
+exactly, and ``delta_ndv_maintenance`` carries the bounded-sketch
+alternative. NULL grouping keys are rejected at refresh time: the keyed
+upsert matches on key equality, and SQL NULL never equals itself, so a
+NULL-key state row could not be replaced.
 """
 
 from __future__ import annotations
@@ -55,7 +60,15 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..plans.sql_frontend import _DECOMPOSABLE, UnsupportedSQL, parse_agg_sql
+from ..plans.sql_frontend import (
+    NET_ROWS,
+    ROWS,
+    AggAlgebra,
+    UnsupportedSQL,
+    _semi_on_keys,
+    agg_pairs,
+    parse_agg_sql,
+)
 from ..sources.state import StateStore
 
 
@@ -75,18 +88,18 @@ class ContinuousAggregate:
         sql: str,
         partition_on: list[str] | None = None,
     ) -> None:
-        self.spark = spark
-        self.path = path
-        self.spec = parse_agg_sql(sql)
-        self.partition_on = list(partition_on or [])
-        self.store = StateStore(spark, path, self.partition_on)
-        self._init_exprs()
+        self._bind(spark, path, parse_agg_sql(sql), partition_on)
 
-    def _init_exprs(self) -> None:
-        """Build the partial/combine/final/signed expression sets from
-        ``self.spec`` (shared with the join subclass, whose spec maps
-        fragment-projected ``_k{i}``/``_a{i}`` columns instead of raw
-        base columns).
+    def _bind(
+        self,
+        spark: SparkSession,
+        path: str,
+        spec: dict,
+        partition_on: list[str] | None,
+    ) -> None:
+        """Bind the state store and the aggregate algebra of ``spec``
+        (the join subclass passes its fragment-folded spec, whose keys
+        and arguments are the projected ``_k{i}``/``_a{i}`` columns).
 
         ``partition_on`` (optional grouping-key OUTPUT names) lays the
         state table out as directory partitions on those keys and
@@ -96,111 +109,24 @@ class ContinuousAggregate:
         merge keys are the grouping keys, so the partition columns are
         key columns by construction — exactly the contract
         ``upsert_partitioned`` demands."""
-        bad = [c for c in self.partition_on
-               if c not in self.spec["key_names"]]
+        self.spark = spark
+        self.path = path
+        self.spec = spec
+        self.partition_on = list(partition_on or [])
+        bad = [c for c in self.partition_on if c not in spec["key_names"]]
         if bad:
             raise ValueError(
                 f"partition_on columns {bad} are not grouping-key "
-                f"output names {self.spec['key_names']}"
+                f"output names {spec['key_names']}"
             )
-        if any(a["fn"] == "count_distinct" for a in self.spec["aggs"]):
+        if any(a["fn"] == "count_distinct" for a in spec["aggs"]):
             raise UnsupportedSQL(
                 "count(DISTINCT) state is a distinct-pair set, not a "
-                "scalar — use maintain_agg_of_sql (exact) or "
-                "delta_ndv_maintenance (sketch) instead"
+                "scalar — use ContinuousDistinctAggregate (exact, stored "
+                "pair tables) or delta_ndv_maintenance (sketch) instead"
             )
-        self._key_cols = [
-            F.expr(k).alias(name)
-            for k, name in zip(self.spec["keys"], self.spec["key_names"])
-        ]
-        # Three expression sets over the same partial columns:
-        #   partial: base rows      -> _p{i} state columns
-        #   combine: state ∪ state  -> _p{i} state columns (same shape)
-        #   final:   state columns  -> declared output names
-        self._partial: list[str] = []
-        self._combine: list[str] = []
-        self._final: list[str] = []
-        # Signed-batch partials (refresh_signed): same state columns,
-        # computed from rows carrying ``_sign`` ∈ {±1}. min/max have no
-        # signed form (a retraction needs the runner-up) — their slots
-        # emit typed NULLs and are recomputed delta-scoped instead.
-        self._signed_partial: list[str] = []
-        self._minmax_cols: list[str] = []  # state cols recompute owns
-        self._minmax_partial: list[str] = []  # exprs for that recompute
-        self._mm_probe: list[str] = []  # batch probe exprs (_i{i}/_d{i})
-        self._mm_aux: list[dict] = []  # per-extremum repair metadata
-        for i, a in enumerate(self.spec["aggs"]):
-            if a["fn"] == "avg":
-                self._partial += [
-                    f"sum({a['arg']}) AS _p{i}s",
-                    f"count({a['arg']}) AS _p{i}n",
-                ]
-                self._combine += [
-                    f"sum(_p{i}s) AS _p{i}s",
-                    f"sum(_p{i}n) AS _p{i}n",
-                ]
-                self._signed_partial += [
-                    f"sum(_sign * ({a['arg']})) AS _p{i}s",
-                    f"sum(CASE WHEN ({a['arg']}) IS NOT NULL "
-                    f"THEN _sign ELSE 0 END) AS _p{i}n",
-                ]
-                self._final.append(f"_p{i}s / _p{i}n AS {a['out']}")
-            else:
-                pfn, mfn = _DECOMPOSABLE[a["fn"]]
-                self._partial.append(f"{pfn}({a['arg']}) AS _p{i}")
-                self._combine.append(f"{mfn}(_p{i}) AS _p{i}")
-                if a["fn"] == "sum":
-                    self._signed_partial.append(
-                        f"sum(_sign * ({a['arg']})) AS _p{i}"
-                    )
-                elif a["fn"] == "count":
-                    inner = (
-                        "_sign" if a["arg"].strip() == "*"
-                        else f"CASE WHEN ({a['arg']}) IS NOT NULL "
-                             f"THEN _sign ELSE 0 END"
-                    )
-                    self._signed_partial.append(f"sum({inner}) AS _p{i}")
-                else:  # min / max: merged when safe, recomputed when not
-                    self._signed_partial.append(
-                        f"min(CASE WHEN FALSE THEN ({a['arg']}) END) "
-                        f"AS _p{i}"
-                    )
-                    self._minmax_cols.append(f"_p{i}")
-                    self._minmax_partial.append(
-                        f"{pfn}({a['arg']}) AS _p{i}"
-                    )
-                    # Per-group probe columns over the signed batch:
-                    # the inserted-rows extremum (mergeable with the
-                    # stored one) and the most-threatening retracted
-                    # value (for min: the smallest value any
-                    # retraction carries; a retraction can only change
-                    # the stored min if it retracts a value ≤ it).
-                    self._mm_probe.append(
-                        f"{pfn}(CASE WHEN _sign > 0 THEN ({a['arg']}) "
-                        f"END) AS _i{i}"
-                    )
-                    self._mm_probe.append(
-                        f"{pfn}(CASE WHEN _sign < 0 THEN ({a['arg']}) "
-                        f"END) AS _d{i}"
-                    )
-                    self._mm_aux.append(
-                        {
-                            "col": f"_p{i}",
-                            "ins": f"_i{i}",
-                            "del": f"_d{i}",
-                            "threat_op": "<=" if a["fn"] == "min" else ">=",
-                            "merge_fn": (
-                                "least" if a["fn"] == "min" else "greatest"
-                            ),
-                        }
-                    )
-                self._final.append(f"_p{i} AS {a['out']}")
-        # Liveness column: WHERE-passing row multiplicity per group.
-        # Inserts count +1, retractions −1; a group at zero has left
-        # the aggregate and must leave the state table.
-        self._partial.append("count(*) AS _rows")
-        self._combine.append("sum(_rows) AS _rows")
-        self._signed_partial.append("sum(_sign) AS _rows")
+        self.store = StateStore(spark, path, self.partition_on)
+        self.alg = AggAlgebra(spec)
 
     # -- plan builders -------------------------------------------------
 
@@ -213,15 +139,7 @@ class ContinuousAggregate:
     def _partial_of(self, df: DataFrame) -> DataFrame:
         if self.spec["where"]:
             df = df.where(self.spec["where"])
-        df = self._project(df)
-        return df.groupBy(*self._key_cols).agg(
-            *[F.expr(e) for e in self._partial]
-        )
-
-    def _combine_of(self, df: DataFrame) -> DataFrame:
-        return df.groupBy(*[df[n] for n in self.spec["key_names"]]).agg(
-            *[F.expr(e) for e in self._combine]
-        )
+        return self.alg.grouped(self._project(df), self.alg.partial)
 
     # -- lifecycle -----------------------------------------------------
 
@@ -325,7 +243,7 @@ class ContinuousAggregate:
                 )
             stored = self.store.read()
             touched = stored.join(delta_p.select(*keys), keys, "left_semi")
-            merged = self._combine_of(touched.unionByName(delta_p))
+            merged = self.alg.combined(touched.unionByName(delta_p))
             self._upsert_state(merged)
         finally:
             delta_p.unpersist()
@@ -390,7 +308,9 @@ class ContinuousAggregate:
         (``base_new_df`` = post-change base for the recompute tier),
         and persists through the keyed upsert."""
         keys = self.spec["key_names"]
-        if self._minmax_cols and base_new_df is None:
+        mm = self.alg.minmax
+        mm_cols = [a["col"] for a in mm]
+        if mm and base_new_df is None:
             raise ValueError(
                 "statement carries min/max: signed partials cannot "
                 "retract an extremum — pass base_new_df (the "
@@ -399,9 +319,7 @@ class ContinuousAggregate:
         # One batch aggregation carries both the mergeable signed
         # partials and the min/max repair probes (_i{i}: inserted-rows
         # extremum, _d{i}: most-threatening retracted value).
-        delta_full = df.groupBy(*self._key_cols).agg(
-            *[F.expr(e) for e in self._signed_partial + self._mm_probe]
-        )
+        delta_full = self.alg.grouped(df, self.alg.signed + self.alg.probe)
         # Retention policy before the negative-count guard: stragglers
         # for dropped windows leave the batch here — a delete aimed at
         # a dropped group is not corruption, it is covered by the drop.
@@ -422,24 +340,22 @@ class ContinuousAggregate:
         # - the final merged frame, below.
         pinned = [delta_full.persist()]
         try:
-            probe_cols = [a["ins"] for a in self._mm_aux] + [
-                a["del"] for a in self._mm_aux
-            ]
+            probe_cols = [a["ins"] for a in mm] + [a["del"] for a in mm]
             delta_p = delta_full.drop(*probe_cols)
             stored = self.store.read()
             touched_keys = delta_p.select(*keys)
             touched = stored.join(touched_keys, keys, "left_semi")
-            if self._minmax_cols:
+            if mm:
                 touched = touched.persist()
                 pinned.append(touched)
-            merged = self._combine_of(touched.unionByName(delta_p))
-            if self._minmax_cols:
+            merged = self.alg.combined(touched.unionByName(delta_p))
+            if mm:
                 # Two-tier repair. Decision frame: per touched group,
                 # the batch's probe columns beside the STORED extrema
                 # (left join: a brand-new group has NULL stored state
                 # and is always safe — its extremum is the batch's).
                 dec = delta_full.select(*keys, *probe_cols).join(
-                    touched.select(*keys, *self._minmax_cols),
+                    touched.select(*keys, *mm_cols),
                     keys,
                     "left",
                 )
@@ -453,7 +369,7 @@ class ContinuousAggregate:
                 unsafe_cond = " OR ".join(
                     f"({a['del']} IS NOT NULL AND ({a['col']} IS NULL "
                     f"OR {a['del']} {a['threat_op']} {a['col']}))"
-                    for a in self._mm_aux
+                    for a in mm
                 )
                 safe_mm = dec.where(f"NOT ({unsafe_cond})").select(
                     *keys,
@@ -462,7 +378,7 @@ class ContinuousAggregate:
                             f"{a['merge_fn']}({a['col']}, {a['ins']}) "
                             f"AS {a['col']}"
                         )
-                        for a in self._mm_aux
+                        for a in mm
                     ],
                 )
                 unsafe_keys = dec.where(unsafe_cond).select(*keys)
@@ -476,17 +392,12 @@ class ContinuousAggregate:
                 # expression keys (no such column) and silently
                 # mis-restricts when the alias shadows a base column.
                 # Only the UNSAFE groups' slice is recomputed.
-                from ..plans.sql_frontend import _semi_on_keys
-
-                recomp_mm = (
-                    _semi_on_keys(base, unsafe_keys, self.spec["keys"],
-                                  keys)
-                    .groupBy(*self._key_cols)
-                    .agg(*[F.expr(e) for e in self._minmax_partial])
+                recomp_mm = self.alg.grouped(
+                    _semi_on_keys(base, unsafe_keys, self.spec["keys"], keys),
+                    [a["partial"] for a in mm],
                 )
-                mm = safe_mm.unionByName(recomp_mm)
-                merged = merged.drop(*self._minmax_cols).join(
-                    mm, keys, "left"
+                merged = merged.drop(*mm_cols).join(
+                    safe_mm.unionByName(recomp_mm), keys, "left"
                 )
             # Pinned: the final merged frame feeds the guard and the
             # write. The guard action builds the cache, so the write
@@ -594,7 +505,7 @@ class ContinuousAggregate:
         travel, ``sources/versioned.py`` snapshots) a version-pinned
         reader removes the constraint entirely.
         """
-        if self._minmax_cols and base_reader is None:
+        if self.alg.minmax and base_reader is None:
             raise UnsupportedSQL(
                 "min/max cannot be maintained from a pure change stream "
                 "(a retraction needs the post-change base); pass "
@@ -631,11 +542,7 @@ class ContinuousAggregate:
 
     def read(self) -> DataFrame:
         """Finals over the stored state; HAVING applied at the end."""
-        state = self.store.read()
-        out = state.select(
-            *[state[n] for n in self.spec["key_names"]],
-            *[F.expr(e) for e in self._final],
-        )
+        out = self.alg.finals(self.store.read())
         if self.spec["having"]:
             out = out.where(self.spec["having"])
         return out
@@ -655,13 +562,9 @@ class ContinuousAggregate:
         the merge, exactly as a refreshed ``read()`` would."""
         stored = self.store.read()
         tail_p = self._partial_of(tail_df)
-        merged = self._combine_of(
+        out = self.alg.finals(self.alg.combined(
             stored.select(*tail_p.columns).unionByName(tail_p)
-        )
-        out = merged.select(
-            *[merged[n] for n in self.spec["key_names"]],
-            *[F.expr(e) for e in self._final],
-        )
+        ))
         if self.spec["having"]:
             out = out.where(self.spec["having"])
         return out
@@ -711,12 +614,12 @@ class ContinuousJoinAggregate(ContinuousAggregate):
         partition_on: list[str] | None = None,
     ) -> None:
         from ..plans.nodes import Scan
-        from ..plans.sql_frontend import parse_join_agg_sql, sql_to_ir
+        from ..plans.sql_frontend import (
+            fold_join_spec,
+            parse_join_agg_sql,
+            sql_to_ir,
+        )
 
-        self.spark = spark
-        self.path = path
-        self.partition_on = list(partition_on or [])
-        self.store = StateStore(spark, path, self.partition_on)
         jspec = parse_join_agg_sql(sql)
         self._ir = sql_to_ir(jspec["fragment_sql"])
         self.fact = fact
@@ -747,48 +650,36 @@ class ContinuousJoinAggregate(ContinuousAggregate):
                 f"join fragment scans tables with no supplied dim "
                 f"DataFrame: {missing}"
             )
-        # Fold the join spec into the base class's shape: keys/args are
-        # the fragment's projected _k{i}/_a{i} columns; WHERE lives
-        # inside the fragment; count(*) keeps '*' (row-count semantics
-        # survive the join projection).
-        self.spec = {
-            "keys": [f"_k{i}" for i in range(len(jspec["keys"]))],
-            "key_names": list(jspec["key_names"]),
-            "aggs": [
-                {**a, "arg": "*" if a["arg"].strip() == "*" else f"_a{i}"}
-                for i, a in enumerate(jspec["aggs"])
-            ],
-            "where": None,
-            "having": jspec["having"],
-        }
-        self._init_exprs()
+        self._bind(spark, path, fold_join_spec(jspec), partition_on)
 
-    def _project(self, df: DataFrame) -> DataFrame:
-        """Compile the join fragment with the arriving batch as the
-        fact scan and the static DataFrames as the dims; a signed
-        batch's ``_sign`` column is carried through the root
-        projection (inner joins pass it untouched)."""
+    def _compile_fragment(self, scan, signed: bool) -> DataFrame:
+        """The join fragment compiled with ``scan`` (table name →
+        DataFrame) resolving every table; with ``signed``, the
+        ``_sign`` column rides through the root projection (the
+        fragment is linear in the signed table, so joins pass it
+        untouched)."""
         from ..plans.compiler import _compile, scan_by_name
         from ..plans.nodes import Projection
-        from ..plans.signed import SIGN
-
-        def scan(name: str) -> DataFrame:
-            return df if name == self.fact else self.dims[name]
-
-        def no_delta(name: str) -> DataFrame:
-            raise ValueError(
-                "continuous join aggregate compiles no delta scans"
-            )
+        from ..plans.signed import SIGN, _no_delta
 
         ir = self._ir
-        if SIGN in df.columns:
+        if signed:
             if not isinstance(ir, Projection):
                 raise ValueError(
                     "join fragment root is not a projection; cannot "
                     "carry the _sign column through"
                 )
             ir = Projection(list(ir.select_exprs) + [SIGN], ir.input)
-        return _compile(ir, scan=scan_by_name(scan), delta_scan=no_delta)
+        return _compile(ir, scan=scan_by_name(scan), delta_scan=_no_delta)
+
+    def _project(self, df: DataFrame) -> DataFrame:
+        """Compile the join fragment with the arriving batch as the
+        fact scan and the static DataFrames as the dims."""
+        from ..plans.signed import SIGN
+
+        return self._compile_fragment(
+            {**self.dims, self.fact: df}.__getitem__, SIGN in df.columns
+        )
 
     def refresh_dim_signed(
         self,
@@ -849,30 +740,10 @@ class ContinuousJoinAggregate(ContinuousAggregate):
                 "refresh_dim_signed needs a _change_type (CDF) or "
                 "_sign column on the dim batch"
             )
-
-        def scan(name: str) -> DataFrame:
-            if name == self.fact:
-                return fact_df
-            if name == dim:
-                return dim_changes_df
-            return self.dims[name]
-
-        def no_delta(name: str) -> DataFrame:
-            raise ValueError(
-                "continuous join aggregate compiles no delta scans"
-            )
-
-        from ..plans.compiler import _compile, scan_by_name
-        from ..plans.nodes import Projection
-
-        ir = self._ir
-        if not isinstance(ir, Projection):
-            raise ValueError(
-                "join fragment root is not a projection; cannot carry "
-                "the _sign column through"
-            )
-        ir = Projection(list(ir.select_exprs) + [SIGN], ir.input)
-        joined = _compile(ir, scan=scan_by_name(scan), delta_scan=no_delta)
+        joined = self._compile_fragment(
+            {**self.dims, self.fact: fact_df, dim: dim_changes_df}.__getitem__,
+            signed=True,
+        )
         # Install the post-change dim BEFORE the merge: the min/max
         # recompute tier projects base_new_df (the current fact)
         # through the fragment and must see the new dim. Roll the swap
@@ -996,10 +867,7 @@ class ContinuousDistinctAggregate:
                 f"and count(*) only; {[a['fn'] for a in extra]} belong "
                 "in a ContinuousAggregate over the same keys"
             )
-        self._key_cols = [
-            F.expr(k).alias(n)
-            for k, n in zip(self.spec["keys"], self.spec["key_names"])
-        ]
+        self._key_cols = AggAlgebra(self.spec).key_cols
         # One pair table per DISTINCT aggregate.
         self.stores = [
             StateStore(spark, os.path.join(self.path, f"cd{i}"))
@@ -1010,9 +878,7 @@ class ContinuousDistinctAggregate:
         if self.spec["where"]:
             df = df.where(self.spec["where"])
         keys = self.spec["key_names"]
-        pairs = df.groupBy(
-            *self._key_cols, F.expr(arg).alias("_v")
-        ).agg(F.expr(weight).cast("bigint").alias("_m"))
+        pairs = agg_pairs(df, self._key_cols, arg, weight)
         bad = " OR ".join(
             [f"`{n}` IS NULL" for n in keys] + ["_v IS NULL"]
         )
@@ -1028,7 +894,7 @@ class ContinuousDistinctAggregate:
 
     def initialize(self, base_df: DataFrame) -> None:
         for store, a in zip(self.stores, self.cds):
-            store.create(self._pairs_of(base_df, a["arg"], "count(*)"))
+            store.create(self._pairs_of(base_df, a["arg"], ROWS))
 
     def _merge(self, i: int, delta_pairs: DataFrame) -> None:
         keys = self.spec["key_names"] + ["_v"]
@@ -1058,7 +924,7 @@ class ContinuousDistinctAggregate:
 
     def refresh(self, delta_df: DataFrame) -> None:
         for i, a in enumerate(self.cds):
-            self._merge(i, self._pairs_of(delta_df, a["arg"], "count(*)"))
+            self._merge(i, self._pairs_of(delta_df, a["arg"], ROWS))
 
     def refresh_signed(self, changes_df: DataFrame) -> None:
         from ..plans.signed import SIGN, signed_of_cdf
@@ -1071,9 +937,7 @@ class ContinuousDistinctAggregate:
                 "column; for plain insert batches use refresh()"
             )
         for i, a in enumerate(self.cds):
-            self._merge(
-                i, self._pairs_of(changes_df, a["arg"], f"sum({SIGN})")
-            )
+            self._merge(i, self._pairs_of(changes_df, a["arg"], NET_ROWS))
 
     def read(self) -> DataFrame:
         keys = self.spec["key_names"]
@@ -1388,7 +1252,7 @@ class ContinuousRollupCascade:
     continuous aggregates (hour → day → month), built on the partial
     state ``ContinuousAggregate`` already stores: fine partials are
     mergeable by construction, so each coarse tier is just the fine
-    tier's ``_combine`` expressions grouped by its coarser key.
+    tier's ``combine`` expressions grouped by its coarser key.
     ``more_levels`` chains further tiers (day → month → …): level
     ``i+1`` refreshes from level ``i``'s stored partials, so the
     month tier's repair reads ≤31 day rows per touched month no
@@ -1458,7 +1322,6 @@ class ContinuousRollupCascade:
                 f"fine_key {fine_key!r} is not a grouping output "
                 f"column of the fine statement {names}"
             )
-        self.fine_key = fine_key
         # Non-time dimensions carry through every tier unchanged.
         other = [k for k in names if k != fine_key]
         self.levels: list[dict] = []
@@ -1485,22 +1348,18 @@ class ContinuousRollupCascade:
                 }
             )
             prev_key = key
-        # Two-tier compatibility aliases (tests, plan audits, docs).
-        self.coarse_key = self.levels[0]["key"]
-        self.coarse_expr = self.levels[0]["expr"]
-        self.coarse_keys = self.levels[0]["keys"]
         self.coarse_path = self.levels[0]["path"]
 
     # -- plan builders -------------------------------------------------
 
     def _level_of(self, prev_state: DataFrame, lvl: dict) -> DataFrame:
         """Level partials from the previous tier's partials: the fine
-        ``_combine`` merge grouped by this level's keys — the same
+        ``combine`` merge grouped by this level's keys — the same
         re-aggregation a map-side partial crosses a shuffle with."""
         with_k = prev_state.withColumn(lvl["key"], F.expr(lvl["expr"]))
         return with_k.groupBy(
             *[F.col(k) for k in lvl["keys"]]
-        ).agg(*[F.expr(e) for e in self.fine._combine])
+        ).agg(*[F.expr(e) for e in self.fine.alg.combine])
 
     def _touched_chain(self, batch_df: DataFrame) -> list[DataFrame]:
         """Per-level distinct touched keys — all derived from the
@@ -1511,7 +1370,7 @@ class ContinuousRollupCascade:
         df = batch_df
         if self.fine.spec["where"]:
             df = df.where(self.fine.spec["where"])
-        prev = df.select(*self.fine._key_cols)
+        prev = df.select(*self.fine.alg.key_cols)
         out = []
         for lvl in self.levels:
             prev = (
@@ -1550,7 +1409,7 @@ class ContinuousRollupCascade:
         ).join(F.broadcast(touched_c), lvl["keys"], "left_semi")
         return sliced.groupBy(
             *[F.col(k) for k in lvl["keys"]]
-        ).agg(*[F.expr(e) for e in self.fine._combine])
+        ).agg(*[F.expr(e) for e in self.fine.alg.combine])
 
     def _repair(self, touched_c: DataFrame, level: int = 0) -> None:
         """Replace every touched group at one level from the (already
@@ -1608,7 +1467,7 @@ class ContinuousRollupCascade:
         cannot double-apply either tier. ``base_reader`` as in
         ``stream_into_cdf`` — required iff the statement carries
         min/max."""
-        if self.fine._minmax_cols and base_reader is None:
+        if self.fine.alg.minmax and base_reader is None:
             raise UnsupportedSQL(
                 "min/max cannot be maintained from a pure change stream "
                 "(a retraction needs the post-change base); pass "
@@ -1651,7 +1510,7 @@ class ContinuousRollupCascade:
         state = lvl["store"].read()
         return state.select(
             *[state[k] for k in lvl["keys"]],
-            *[F.expr(e) for e in self.fine._final],
+            *[F.expr(e) for e in self.fine.alg.final],
         )
 
     def read_coarsest(self) -> DataFrame:

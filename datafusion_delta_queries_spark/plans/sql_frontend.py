@@ -44,6 +44,7 @@ from .compiler import (
     compile_snapshot,
 )
 from .nodes import CrossJoin, Filter, Join, Plan, Projection, Scan, Union
+from .signed import SIGN
 
 
 class UnsupportedSQL(ValueError):
@@ -642,22 +643,167 @@ def full_of_sql(
 # ------------------------------------------------------------------
 # SQL surface for incremental AGGREGATE maintenance — the case the
 # delta fragment rejects. The reference declines aggregates outright
-# (mod.rs:187); our maintenance operators (operators/delta_queries.py)
-# merge old partials with delta partials for decomposable aggregates:
-#     agg(T ∪ ΔT) == merge(agg(T), agg(ΔT))
-# maintain_agg_of_sql gives that pattern a SQL entry point: parse
-# SELECT <keys + aggs> FROM t [WHERE p] GROUP BY <keys>, then build the
-# partial-union-merge plan. Only ΔT is scanned fresh per refresh (the
-# snapshot partial stands in for the stored materialized aggregate).
+# (mod.rs:187). Every maintained GROUP BY here and in
+# operators/continuous_agg.py runs on ONE decomposable-aggregate
+# algebra, ``AggAlgebra``, built from a parsed spec:
+#     agg(T ∪ ΔT) == combine(partial(T), partial(ΔT))
+# and under retractions the change batch's sign-weighted partials merge
+# into the same partial columns. Two merge bodies consume it:
+# ``_merge_positive`` (append-only deltas) and ``_merge_signed``
+# (deletes and updates). The maintain_*_of_sql entry points only source
+# their frames — catalog reads for one table, the compiled join
+# fragment (on the same spec shape via ``fold_join_spec``) for joins —
+# and call a body. The snapshot side stands in for the stored state;
+# only the delta is scanned fresh per refresh.
 # ------------------------------------------------------------------
 
-# fn → (partial expr over raw col, merge fn over partial col)
+# fn → (partial fn over the raw argument, combine fn over the partial)
 _DECOMPOSABLE = {
     "count": ("count", "sum"),
     "sum": ("sum", "sum"),
     "min": ("min", "min"),
     "max": ("max", "max"),
 }
+
+# Pair multiplicity weights for ``agg_pairs``: a batch of rows counts
+# each row once, a signed batch nets its signs.
+ROWS = "count(*)"
+NET_ROWS = f"sum({SIGN})"
+
+
+class AggAlgebra:
+    """The expression sets of one GROUP BY spec, over ``_p{i}`` partial
+    columns (``_p{i}s``/``_p{i}n`` for avg) plus ``_rows``, the
+    WHERE-passing row multiplicity per group (a group at zero has left
+    the aggregate):
+
+    - ``partial``: input rows → partial columns;
+    - ``combine``: partials ∪ partials → partials (same shape);
+    - ``final``: partial columns → the declared output names;
+    - ``merge``: ``combine`` and ``final`` in one aggregate, for a plan
+      that stores no state (a HAVING filter then plans above it);
+    - ``signed``: rows carrying ``_sign`` ∈ {±1} → the same partial
+      columns. min/max have no signed form (a retraction needs the
+      runner-up): their slots are typed NULLs, repaired by recompute;
+    - ``probe``: per min/max over a signed batch, the inserted-rows
+      extremum ``_i{i}`` (mergeable with the stored one) and the most
+      threatening retracted value ``_d{i}`` (for min the smallest: a
+      retraction can only change a stored min it is ≤ to);
+    - ``minmax``: per min/max, its state column, positive partial,
+      probe columns and the two-tier repair's threat and merge
+      operators.
+
+    ``distinct`` lists the count(DISTINCT) aggregates, which have no
+    scalar partial (their state is ``agg_pairs``). ``key_cols``
+    evaluates the grouping keys under their output names, so expression
+    keys (``GROUP BY date_trunc('hour', ts)``) regroup by the computed
+    column after the partial stage.
+    """
+
+    def __init__(self, spec: dict) -> None:
+        self.key_names = list(spec["key_names"])
+        self.key_cols = [
+            F.expr(k).alias(n) for k, n in zip(spec["keys"], self.key_names)
+        ]
+        self.distinct = [
+            a for a in spec["aggs"] if a["fn"] == "count_distinct"
+        ]
+        self.partial: list[str] = []
+        self.combine: list[str] = []
+        self.final: list[str] = []
+        self.merge: list[str] = []
+        self.signed: list[str] = []
+        self.probe: list[str] = []
+        self.minmax: list[dict] = []
+        for i, a in enumerate(spec["aggs"]):
+            fn, arg, out, p = a["fn"], a["arg"], a["out"], f"_p{i}"
+            if fn == "count_distinct":
+                continue
+            # A row's signed contribution to count(arg): count(*) counts
+            # every row, count(col) only non-NULL values.
+            live = (
+                SIGN if arg == "*"
+                else f"CASE WHEN ({arg}) IS NOT NULL THEN {SIGN} ELSE 0 END"
+            )
+            if fn == "avg":
+                self.partial += [
+                    f"sum({arg}) AS {p}s", f"count({arg}) AS {p}n"
+                ]
+                self.combine += [f"sum({p}s) AS {p}s", f"sum({p}n) AS {p}n"]
+                self.signed += [
+                    f"sum({SIGN} * ({arg})) AS {p}s", f"sum({live}) AS {p}n"
+                ]
+                self.final.append(f"{p}s / {p}n AS {out}")
+                self.merge.append(f"sum({p}s) / sum({p}n) AS {out}")
+                continue
+            pfn, cfn = _DECOMPOSABLE[fn]
+            self.partial.append(f"{pfn}({arg}) AS {p}")
+            self.combine.append(f"{cfn}({p}) AS {p}")
+            self.final.append(f"{p} AS {out}")
+            self.merge.append(f"{cfn}({p}) AS {out}")
+            if fn == "sum":
+                self.signed.append(f"sum({SIGN} * ({arg})) AS {p}")
+            elif fn == "count":
+                self.signed.append(f"sum({live}) AS {p}")
+            else:
+                self.signed.append(
+                    f"min(CASE WHEN FALSE THEN ({arg}) END) AS {p}"
+                )
+                self.probe += [
+                    f"{pfn}(CASE WHEN {SIGN} > 0 THEN ({arg}) END) AS _i{i}",
+                    f"{pfn}(CASE WHEN {SIGN} < 0 THEN ({arg}) END) AS _d{i}",
+                ]
+                self.minmax.append({
+                    "col": p,
+                    "partial": f"{pfn}({arg}) AS {p}",
+                    "ins": f"_i{i}",
+                    "del": f"_d{i}",
+                    "threat_op": "<=" if fn == "min" else ">=",
+                    "merge_fn": "least" if fn == "min" else "greatest",
+                })
+        self.partial.append("count(*) AS _rows")
+        self.combine.append("sum(_rows) AS _rows")
+        self.signed.append(f"sum({SIGN}) AS _rows")
+
+    def grouped(self, df: DataFrame, exprs: list[str]) -> DataFrame:
+        """``exprs`` aggregated per group of ``df``'s evaluated keys."""
+        return df.groupBy(*self.key_cols).agg(*[F.expr(e) for e in exprs])
+
+    def combined(
+        self, df: DataFrame, exprs: list[str] | None = None
+    ) -> DataFrame:
+        """``exprs`` (default ``combine``) aggregated per group of a
+        partials frame."""
+        # df[n] is an exact-name lookup — expression-derived key names
+        # (parens, quotes) must not go through string re-parsing.
+        return df.groupBy(*[df[n] for n in self.key_names]).agg(
+            *[F.expr(e) for e in exprs or self.combine]
+        )
+
+    def finals(self, state: DataFrame) -> DataFrame:
+        return state.select(
+            *[state[n] for n in self.key_names],
+            *[F.expr(e) for e in self.final],
+        )
+
+
+def agg_pairs(
+    df: DataFrame, key_cols: list, arg: str, weight: str
+) -> DataFrame:
+    """The count(DISTINCT ``arg``) partial of ``df``: its (keys, value)
+    pairs, value ``_v``, each with its multiplicity ``_m`` under
+    ``weight`` (``ROWS`` or ``NET_ROWS``).
+
+    Scalar distinct counts don't merge; pair multiplicities do — sum
+    them per pair, keep ``_m > 0``, count the values per group. That is
+    the standard exact IVM construction for distinct counts; the stored
+    form is ``ContinuousDistinctAggregate``'s pair tables, and the
+    bounded-state alternative is ``delta_ndv_maintenance``'s mergeable
+    HLL partials. NULL values stay pairs, so every group stays present
+    (count() then skips them, matching SQL)."""
+    return df.groupBy(*key_cols, F.expr(arg).alias("_v")).agg(
+        F.expr(weight).cast("bigint").alias("_m")
+    )
 
 
 def parse_agg_sql(sql: str) -> dict:
@@ -870,37 +1016,6 @@ def _rewrite_having(
     return _expr_text(out)
 
 
-def _count_distinct_frame(
-    snap: DataFrame,
-    delt: DataFrame,
-    key_cols: list,
-    key_names: list[str],
-    arg_expr: str,
-    out: str,
-) -> DataFrame:
-    """Exact COUNT(DISTINCT) maintenance via distinct-pair partials.
-
-    The mergeable partial for a distinct count is the per-side distinct
-    (keys, value) pair set: union the snapshot's pairs with the delta's,
-    re-distinct, count non-NULL values per group. In a deployed
-    continuous aggregate the snapshot-side pair set IS the stored
-    auxiliary state (the standard exact IVM construction for distinct
-    counts) — only ΔT's pairs are computed fresh. NULL values are kept
-    through the pair stage so every group stays present (count() then
-    skips them, matching SQL), and the sketch alternative for when the
-    pair set outgrows storage remains delta_ndv_maintenance's mergeable
-    HLL partials.
-    """
-
-    def pairs(df: DataFrame) -> DataFrame:
-        return df.select(*key_cols, F.expr(arg_expr).alias("_cd")).distinct()
-
-    merged = pairs(snap).unionByName(pairs(delt)).distinct()
-    return merged.groupBy(*[merged[n] for n in key_names]).agg(
-        F.count("_cd").alias(out)
-    )
-
-
 def _join_on_keys(
     left: DataFrame, right: DataFrame, key_names: list[str]
 ) -> DataFrame:
@@ -915,89 +1030,125 @@ def _join_on_keys(
     return left.join(right, cond, "inner").select(left["*"], *extra)
 
 
+def _merge_positive(spec: dict, old: DataFrame, delta: DataFrame) -> DataFrame:
+    """Append-only maintenance of ``spec``: partials of ``old`` (the
+    snapshot, standing in for the stored state) and of ``delta`` union
+    and combine — Catalyst plans both levels map-side-combinable, and
+    only the delta is scanned fresh. Exact for count/min/max (and avg's
+    count); double sums merge in a different addition order than a
+    single-pass aggregate, same as any distributed re-aggregation."""
+    alg = AggAlgebra(spec)
+    result = None
+    if alg.merge:
+        result = alg.combined(
+            alg.grouped(old, alg.partial).unionByName(
+                alg.grouped(delta, alg.partial)
+            ),
+            alg.merge,
+        )
+    return _finish(spec, alg, result, old, delta, ROWS)
+
+
+def _merge_signed(
+    spec: dict,
+    old: DataFrame,
+    signed: DataFrame,
+    new: DataFrame | None = None,
+) -> DataFrame:
+    """Maintenance of ``spec`` under deletes and updates: ``old`` is the
+    pre-change input (standing in for the stored state), ``signed`` its
+    change batch carrying ``_sign``. Sign-weighted partials merge into
+    the old partials, and a group whose live row count reaches zero
+    leaves, as GROUP BY over the new state does. min/max cannot absorb a
+    retraction, so they recompute from ``new`` (the post-change input)
+    restricted to the touched groups; untouched groups keep their old
+    extremum, and statements carrying min/max require ``new``."""
+    alg = AggAlgebra(spec)
+    keys = alg.key_names
+    d = alg.grouped(signed, alg.signed)
+    merged = alg.combined(
+        alg.grouped(old, alg.partial).unionByName(d)
+    ).where("_rows > 0")
+    if alg.minmax:
+        if new is None:
+            raise ValueError(
+                "statement carries min/max: signed partials cannot "
+                "retract an extremum — pass the post-change input for "
+                "delta-scoped recompute"
+            )
+        # ONE extrema frame for every min/max output: the old extrema
+        # of untouched groups beside the touched groups' recompute.
+        extrema = [m["partial"] for m in alg.minmax]
+        touched = d.select(*keys)
+        untouched = _anti_on_keys(alg.grouped(old, extrema), touched, keys)
+        recomputed = alg.grouped(
+            _semi_on_keys(new, touched, spec["keys"], keys), extrema
+        )
+        merged = _join_on_keys(
+            merged.drop(*[m["col"] for m in alg.minmax]),
+            untouched.unionByName(recomputed),
+            keys,
+        )
+    return _finish(spec, alg, alg.finals(merged), old, signed, NET_ROWS)
+
+
+def _finish(
+    spec: dict,
+    alg: AggAlgebra,
+    result: DataFrame | None,
+    old: DataFrame,
+    delta: DataFrame,
+    weight: str,
+) -> DataFrame:
+    """Stitch each count(DISTINCT) onto the scalar ``result`` (pairs of
+    ``old`` and of ``delta`` under ``weight``, netted, values counted per
+    group), apply HAVING and restore the declared column order."""
+    keys = alg.key_names
+    for a in alg.distinct:
+        pairs = agg_pairs(old, alg.key_cols, a["arg"], ROWS).unionByName(
+            agg_pairs(delta, alg.key_cols, a["arg"], weight)
+        )
+        live = (
+            pairs.groupBy(*[pairs[n] for n in keys], pairs["_v"])
+            .agg(F.sum("_m").alias("_m"))
+            .where("_m > 0")
+        )
+        frame = live.groupBy(*[live[n] for n in keys]).agg(
+            F.count("_v").alias(a["out"])
+        )
+        # Both frames carry exactly the live groups (the pair stage
+        # keeps NULL values), so the null-safe inner join loses nothing.
+        result = (
+            frame if result is None else _join_on_keys(result, frame, keys)
+        )
+    if spec["having"]:
+        # HAVING over the merged totals — after the merge, never inside
+        # the partials (a group may qualify only once ΔT arrives).
+        result = result.where(spec["having"])
+    return result.select(
+        *[result[n] for n in keys],
+        *[result[a["out"]] for a in spec["aggs"]],
+    )
+
+
+def _table_inputs(spec: dict, *reads) -> list[DataFrame]:
+    """The spec's table through each catalog read, WHERE applied."""
+    frames = [read(spec["table"]) for read in reads]
+    return [f.where(spec["where"]) if spec["where"] else f for f in frames]
+
+
 def maintain_agg_of_sql(
     spark: SparkSession,
     sf_dir: str,
     sql: str,
     delta_predicates: dict[str, str] | None = None,
 ) -> DataFrame:
-    """SQL GROUP BY → incrementally-maintained aggregate DataFrame.
-
-    Builds partial aggregates over the old snapshot (the stored state)
-    and the delta batch, unions them, and merges — Catalyst plans both
-    levels map-side-combinable, and only ΔT is scanned fresh. The
-    result equals the aggregate over the full current state exactly
-    for count/min/max (and avg's count); double sums merge in a
-    different addition order than a single-pass aggregate, same as any
-    distributed re-aggregation.
-    """
+    """SQL GROUP BY → incrementally-maintained aggregate DataFrame: the
+    old snapshot's partials (standing in for the stored state) merged
+    with the delta batch's (``_merge_positive``)."""
     spec = parse_agg_sql(sql)
     cat = DeltaCatalog(spark, sf_dir, delta_predicates)
-    snap, delt = cat.snapshot(spec["table"]), cat.delta(spec["table"])
-    if spec["where"]:
-        snap, delt = snap.where(spec["where"]), delt.where(spec["where"])
-
-    # Keys are aliased through the partial stage so *expression* keys
-    # (time buckets: GROUP BY date_trunc('hour', ts)) regroup by the
-    # computed column, not by re-resolving the expression text.
-    key_cols = [
-        F.expr(k).alias(name)
-        for k, name in zip(spec["keys"], spec["key_names"])
-    ]
-    regular = [(i, a) for i, a in enumerate(spec["aggs"])
-               if a["fn"] != "count_distinct"]
-    cds = [(i, a) for i, a in enumerate(spec["aggs"])
-           if a["fn"] == "count_distinct"]
-    partial_exprs, merge_exprs = [], []
-    for i, a in regular:
-        if a["fn"] == "avg":
-            partial_exprs += [
-                f"sum({a['arg']}) AS _p{i}s",
-                f"count({a['arg']}) AS _p{i}n",
-            ]
-            merge_exprs.append(
-                f"sum(_p{i}s) / sum(_p{i}n) AS {a['out']}"
-            )
-        else:
-            pfn, mfn = _DECOMPOSABLE[a["fn"]]
-            partial_exprs.append(f"{pfn}({a['arg']}) AS _p{i}")
-            merge_exprs.append(f"{mfn}(_p{i}) AS {a['out']}")
-
-    def partial(df: DataFrame) -> DataFrame:
-        return df.groupBy(*key_cols).agg(*[F.expr(e) for e in partial_exprs])
-
-    frames: list[DataFrame] = []
-    if regular:
-        merged = partial(snap).unionByName(partial(delt))
-        # merged[name] is an exact-name lookup — expression-derived key
-        # names (parens, quotes) must not go through string re-parsing.
-        frames.append(
-            merged.groupBy(*[merged[n] for n in spec["key_names"]]).agg(
-                *[F.expr(e) for e in merge_exprs]
-            )
-        )
-    for _, a in cds:
-        frames.append(_count_distinct_frame(
-            snap, delt, key_cols, spec["key_names"], a["arg"], a["out"]
-        ))
-    result = frames[0]
-    for f in frames[1:]:
-        # Both frames carry exactly the groups of snapshot ∪ delta (the
-        # pair stage keeps NULL values), so the null-safe inner join
-        # loses nothing.
-        result = _join_on_keys(result, f, spec["key_names"])
-    if spec.get("having"):
-        # HAVING over the merged totals — after the merge, never inside
-        # the partials (a group may qualify only once ΔT arrives).
-        result = result.where(spec["having"])
-    # Frame stitching appends count-distinct columns after the merge
-    # aggregates — restore the statement's declared column order.
-    # result[name] lookups: expression-derived key names (parens,
-    # quotes) must not go through string re-parsing.
-    return result.select(
-        *[result[n] for n in spec["key_names"]],
-        *[result[a["out"]] for a in spec["aggs"]],
-    )
+    return _merge_positive(spec, *_table_inputs(spec, cat.snapshot, cat.delta))
 
 
 # ------------------------------------------------------------------
@@ -1126,6 +1277,24 @@ def parse_join_agg_sql(sql: str) -> dict:
     }
 
 
+def fold_join_spec(jspec: dict) -> dict:
+    """A ``parse_join_agg_sql`` spec on the single-table spec shape,
+    over the join fragment's output: keys and arguments become the
+    projected ``_k{i}``/``_a{i}`` columns, WHERE lives inside the
+    fragment, and count(*) keeps ``*`` (row-count semantics survive the
+    projection)."""
+    return {
+        "keys": [f"_k{i}" for i in range(len(jspec["keys"]))],
+        "key_names": list(jspec["key_names"]),
+        "aggs": [
+            {**a, "arg": "*" if a["arg"] == "*" else f"_a{i}"}
+            for i, a in enumerate(jspec["aggs"])
+        ],
+        "where": None,
+        "having": jspec["having"],
+    }
+
+
 def maintain_join_agg_of_sql(
     spark: SparkSession,
     sf_dir: str,
@@ -1140,116 +1309,27 @@ def maintain_join_agg_of_sql(
     snapshot partial) ∪ (join-delta partial). Exact for count/min/max
     and integer sums; HAVING filters the merged state.
     """
-    spec = parse_join_agg_sql(sql)
-    ir = sql_to_ir(spec["fragment_sql"])
+    jspec = parse_join_agg_sql(sql)
+    ir = sql_to_ir(jspec["fragment_sql"])
     cat = DeltaCatalog(spark, sf_dir, delta_predicates)
-    snap = compile_snapshot(ir, cat)
-    delt = compile_delta(ir, cat)
-
-    key_cols = [
-        F.col(f"_k{i}").alias(name)
-        for i, name in enumerate(spec["key_names"])
-    ]
-    regular = [(i, a) for i, a in enumerate(spec["aggs"])
-               if a["fn"] != "count_distinct"]
-    cds = [(i, a) for i, a in enumerate(spec["aggs"])
-           if a["fn"] == "count_distinct"]
-    partial_exprs, merge_exprs = [], []
-    for i, a in regular:
-        arg = f"_a{i}"
-        if a["fn"] == "avg":
-            partial_exprs += [f"sum({arg}) AS _p{i}s", f"count({arg}) AS _p{i}n"]
-            merge_exprs.append(f"sum(_p{i}s) / sum(_p{i}n) AS {a['out']}")
-        else:
-            pfn, mfn = _DECOMPOSABLE[a["fn"]]
-            pfn = "count" if a["arg"] == "*" else pfn
-            partial_exprs.append(f"{pfn}({arg}) AS _p{i}")
-            merge_exprs.append(f"{mfn}(_p{i}) AS {a['out']}")
-
-    def partial(df: DataFrame) -> DataFrame:
-        return df.groupBy(*key_cols).agg(*[F.expr(e) for e in partial_exprs])
-
-    frames: list[DataFrame] = []
-    if regular:
-        merged = partial(snap).unionByName(partial(delt))
-        frames.append(
-            merged.groupBy(*[merged[n] for n in spec["key_names"]]).agg(
-                *[F.expr(e) for e in merge_exprs]
-            )
-        )
-    for i, a in cds:
-        # The projected fragment already aliased this agg's argument to
-        # _a{i} on both the snapshot join and the join delta.
-        frames.append(_count_distinct_frame(
-            snap, delt, key_cols, spec["key_names"], f"_a{i}", a["out"]
-        ))
-    result = frames[0]
-    for f in frames[1:]:
-        result = _join_on_keys(result, f, spec["key_names"])
-    if spec["having"]:
-        result = result.where(spec["having"])
-    return result.select(
-        *[result[n] for n in spec["key_names"]],
-        *[result[a["out"]] for a in spec["aggs"]],
-    )
+    old, delta = compile_snapshot(ir, cat), compile_delta(ir, cat)
+    return _merge_positive(fold_join_spec(jspec), old, delta)
 
 
 # ------------------------------------------------------------------
-# Retraction-capable SQL aggregate maintenance: the signed sibling of
-# maintain_agg_of_sql. The change batch carries deletes and updates
-# (plans/signed.py CDC shape), and every aggregate class the grammar
-# accepts is maintained by its own strategy:
-#   sum/count/avg      — sign-weighted partials merged into the stored
-#                        state; groups whose live row count reaches
+# Retraction-capable SQL aggregate maintenance: the signed siblings of
+# the entry points above. The change batch carries deletes and updates
+# (plans/signed.py CDC shape) and ``_merge_signed`` maintains every
+# aggregate class the grammar accepts on the shared algebra:
+#   sum/count/avg      — sign-weighted partials merged into the old
+#                        partials; groups whose live row count reaches
 #                        zero vanish, as GROUP BY over the new state;
-#   count(DISTINCT x)  — per-(keys, value) multiplicity state adjusted
-#                        by signed counts; values at zero stop counting;
+#   count(DISTINCT x)  — ``agg_pairs`` multiplicities netted by signed
+#                        counts; values at zero stop counting;
 #   min/max            — no signed form (a retraction needs the
 #                        runner-up): delta-scoped recompute over the
 #                        post-change state, touched groups only.
 # ------------------------------------------------------------------
-
-
-def _signed_linear_exprs(linear, arg_of):
-    """Expression lists for sum/count/avg under signed maintenance —
-    shared by the single-table and join maintainers (one place to fix
-    the algebra). Returns (stored, signed, merge, final) lists, with
-    the ``_rows`` liveness column (group-existence under retractions)
-    always included. ``arg_of(i, a)`` names the agg's argument in the
-    frame being aggregated: the raw expression text single-table, the
-    fragment's ``_a{i}`` alias over a join output ('*' stays '*')."""
-    from .signed import SIGN
-
-    stored = ["count(*) AS _rows"]
-    signed = [f"sum({SIGN}) AS _rows"]
-    merge = ["sum(_rows) AS _rows"]
-    final: list[str] = []
-    for i, a in linear:
-        arg = arg_of(i, a)
-        if a["fn"] == "avg":
-            stored += [f"sum({arg}) AS _p{i}s", f"count({arg}) AS _p{i}n"]
-            signed += [
-                f"sum({SIGN} * ({arg})) AS _p{i}s",
-                f"sum(CASE WHEN ({arg}) IS NOT NULL THEN {SIGN} "
-                f"ELSE 0 END) AS _p{i}n",
-            ]
-            merge += [f"sum(_p{i}s) AS _p{i}s", f"sum(_p{i}n) AS _p{i}n"]
-            final.append(f"_p{i}s / _p{i}n AS {a['out']}")
-        elif a["fn"] == "sum":
-            stored.append(f"sum({arg}) AS _p{i}")
-            signed.append(f"sum({SIGN} * ({arg})) AS _p{i}")
-            merge.append(f"sum(_p{i}) AS _p{i}")
-            final.append(f"_p{i} AS {a['out']}")
-        else:  # count — count(arg) handles '*' and non-NULL args alike
-            inner = (
-                SIGN if arg == "*"
-                else f"CASE WHEN ({arg}) IS NOT NULL THEN {SIGN} ELSE 0 END"
-            )
-            stored.append(f"count({arg}) AS _p{i}")
-            signed.append(f"sum({inner}) AS _p{i}")
-            merge.append(f"sum(_p{i}) AS _p{i}")
-            final.append(f"cast(_p{i} AS BIGINT) AS {a['out']}")
-    return stored, signed, merge, final
 
 
 def maintain_agg_of_sql_signed(
@@ -1266,93 +1346,12 @@ def maintain_agg_of_sql_signed(
     full grammar (count-distinct and min/max included, since the
     catalog can serve the post-change base for scoped recompute).
     """
-    from .signed import SIGN, SignedDeltaCatalog
+    from .signed import SignedDeltaCatalog
 
     spec = parse_agg_sql(sql)
     cat = SignedDeltaCatalog(spark, sf_dir, specs)
-    table = spec["table"]
-    old, sgn, new = (
-        cat.old(table), cat.signed_changes(table), cat.new(table)
-    )
-    if spec["where"]:
-        old, sgn, new = (
-            old.where(spec["where"]), sgn.where(spec["where"]),
-            new.where(spec["where"]),
-        )
-
-    key_cols = [
-        F.expr(k).alias(name)
-        for k, name in zip(spec["keys"], spec["key_names"])
-    ]
-    key_names = spec["key_names"]
-    linear = [(i, a) for i, a in enumerate(spec["aggs"])
-              if a["fn"] in ("sum", "count", "avg")]
-    minmax = [(i, a) for i, a in enumerate(spec["aggs"])
-              if a["fn"] in ("min", "max")]
-    cds = [(i, a) for i, a in enumerate(spec["aggs"])
-           if a["fn"] == "count_distinct"]
-
-    stored_exprs, signed_exprs, merge_exprs, final_exprs = (
-        _signed_linear_exprs(
-            linear,
-            arg_of=lambda i, a: "*" if a["arg"].strip() == "*" else a["arg"],
-        )
-    )
-
-    stored = old.groupBy(*key_cols).agg(*[F.expr(e) for e in stored_exprs])
-    d = sgn.groupBy(*key_cols).agg(*[F.expr(e) for e in signed_exprs])
-    merged = stored.unionByName(d)
-    merged = merged.groupBy(*[merged[n] for n in key_names]).agg(
-        *[F.expr(e) for e in merge_exprs]
-    ).where("_rows > 0")
-    # merged[n] lookups: expression-derived key names must not go
-    # through string re-parsing (same discipline as maintain_agg_of_sql).
-    result = merged.select(
-        *[merged[n] for n in key_names],
-        *[F.expr(e) for e in final_exprs],
-    )
-
-    touched = d.select(*key_names).distinct()
-    if minmax:
-        # ONE extrema frame for every min/max output — N aggregates
-        # must not mean N old-state scans + N scoped recomputes.
-        mm_exprs = [f"{a['fn']}({a['arg']}) AS {a['out']}" for _, a in minmax]
-
-        def extrema(df: DataFrame) -> DataFrame:
-            return df.groupBy(*key_cols).agg(
-                *[F.expr(e) for e in mm_exprs]
-            )
-
-        untouched = _anti_on_keys(extrema(old), touched, key_names)
-        recomputed = extrema(
-            _semi_on_keys(new, touched, spec["keys"], key_names)
-        )
-        result = _join_on_keys(
-            result, untouched.unionByName(recomputed), key_names
-        )
-    for i, a in cds:
-
-        def pairs_mult(df: DataFrame, weight: str) -> DataFrame:
-            return df.groupBy(
-                *key_cols, F.expr(a["arg"]).alias("_cd")
-            ).agg(F.expr(weight).alias("_m"))
-
-        live = (
-            pairs_mult(old, "count(*)")
-            .unionByName(pairs_mult(sgn, f"sum({SIGN})"))
-            .groupBy(*key_names, "_cd")
-            .agg(F.sum("_m").alias("_m"))
-            .where("_m > 0")
-        )
-        frame = live.groupBy(*key_names).agg(
-            F.count("_cd").alias(a["out"])
-        )
-        result = _join_on_keys(result, frame, key_names)
-    if spec.get("having"):
-        result = result.where(spec["having"])
-    return result.select(
-        *[result[n] for n in key_names],
-        *[result[a["out"]] for a in spec["aggs"]],
+    return _merge_signed(
+        spec, *_table_inputs(spec, cat.old, cat.signed_changes, cat.new)
     )
 
 
@@ -1422,7 +1421,6 @@ def maintain_join_agg_of_sql_signed(
     ``ContinuousJoinAggregate`` (two-tier repair) instead.
     """
     from .signed import (
-        SIGN,
         SignedDeltaCatalog,
         UnsupportedIncrementalOperator,
         compile_old,
@@ -1431,15 +1429,15 @@ def maintain_join_agg_of_sql_signed(
         compile_signed_delta_scoped_join,
     )
 
-    spec = parse_join_agg_sql(sql)
-    if any(a["fn"] in ("min", "max") for a in spec["aggs"]):
+    jspec = parse_join_agg_sql(sql)
+    if any(a["fn"] in ("min", "max") for a in jspec["aggs"]):
         raise UnsupportedSQL(
             "min/max over a join cannot be maintained from signed "
             "partials (a retraction needs the runner-up) — use "
             "maintain_agg_of_sql_signed on a single table or recompute "
             "the touched slice explicitly"
         )
-    ir = sql_to_ir(spec["fragment_sql"])
+    ir = sql_to_ir(jspec["fragment_sql"])
     cat = SignedDeltaCatalog(spark, sf_dir, specs)
     old_j = compile_old(ir, cat)
     try:
@@ -1453,55 +1451,4 @@ def maintain_join_agg_of_sql_signed(
             sgn_j = compile_signed_delta_scoped_join(ir, cat)
         except UnsupportedIncrementalOperator:
             sgn_j = compile_signed_delta_scoped_chain(ir, cat)
-
-    key_cols = [
-        F.col(f"_k{i}").alias(name)
-        for i, name in enumerate(spec["key_names"])
-    ]
-    key_names = spec["key_names"]
-    linear = [(i, a) for i, a in enumerate(spec["aggs"])
-              if a["fn"] in ("sum", "count", "avg")]
-    cds = [(i, a) for i, a in enumerate(spec["aggs"])
-           if a["fn"] == "count_distinct"]
-
-    stored_exprs, signed_exprs, merge_exprs, final_exprs = (
-        _signed_linear_exprs(
-            linear,
-            arg_of=lambda i, a: "*" if a["arg"].strip() == "*" else f"_a{i}",
-        )
-    )
-
-    stored = old_j.groupBy(*key_cols).agg(*[F.expr(e) for e in stored_exprs])
-    d = sgn_j.groupBy(*key_cols).agg(*[F.expr(e) for e in signed_exprs])
-    merged = stored.unionByName(d)
-    merged = merged.groupBy(*[merged[n] for n in key_names]).agg(
-        *[F.expr(e) for e in merge_exprs]
-    ).where("_rows > 0")
-    result = merged.select(
-        *[merged[n] for n in key_names],
-        *[F.expr(e) for e in final_exprs],
-    )
-
-    for i, a in cds:
-        arg = f"_a{i}"
-
-        def pairs_mult(df: DataFrame, weight: str) -> DataFrame:
-            return df.groupBy(*key_cols, F.col(arg).alias("_cd")).agg(
-                F.expr(weight).alias("_m")
-            )
-
-        live = (
-            pairs_mult(old_j, "count(*)")
-            .unionByName(pairs_mult(sgn_j, f"sum({SIGN})"))
-            .groupBy(*key_names, "_cd")
-            .agg(F.sum("_m").alias("_m"))
-            .where("_m > 0")
-        )
-        frame = live.groupBy(*key_names).agg(F.count("_cd").alias(a["out"]))
-        result = _join_on_keys(result, frame, key_names)
-    if spec["having"]:
-        result = result.where(spec["having"])
-    return result.select(
-        *[result[n] for n in key_names],
-        *[result[a["out"]] for a in spec["aggs"]],
-    )
+    return _merge_signed(fold_join_spec(jspec), old_j, sgn_j)
