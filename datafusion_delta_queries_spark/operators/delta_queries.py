@@ -73,7 +73,7 @@ _PF_ORACLE = _except_all(
 )
 
 
-# -- Δ(R ⋈ S) — keyed-join rule (mod.rs:99-158), run as two branches ---
+# -- Δ(R ⋈ S) — keyed-join rule (mod.rs:99-158), run in one pass -------
 
 _JOIN_IR = Projection(
     [
@@ -483,8 +483,8 @@ def _sql_having_oracle() -> str:
 
 
 # JOIN + GROUP BY maintenance from one SQL string (round-7): the join
-# fragment runs through the PosDelta rewrite (executed as ΔL⋈R_new ∪
-# L_old⋈ΔR — nested for the 3-table chain),
+# fragment runs through the PosDelta rewrite (executed in one pass: one
+# join over the three tables' new state),
 # the aggregate through partial-union-merge. The reference has the two
 # halves (join rule mod.rs:99-158; aggregates declined mod.rs:187) but
 # never composes them.

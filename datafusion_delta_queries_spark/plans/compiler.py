@@ -19,16 +19,32 @@ Semantics (SURVEY §4.3, matching optimizer_rules/mod.rs:130-149):
       pre-update plan).
 
 The reference IR is three branches per join; the executed plan is
-two. The rule's union ``(Δ⋈Δ) ∪ (old⋈Δ) ∪ (Δ⋈old)`` runs as
-``ΔL⋈R_new ⊎ L_old⋈ΔR`` (``_join_delta``), with R_new one scan of the
-current state: join distributes over ⊎ and R_old ⊎ ΔR = R_new, so both
-equal new⋈new − old⋈old exactly on append-only inputs. ΔL is then
-joined once per level instead of twice, and a chain of n tables plans
-O(n²) joins instead of O(3ⁿ) (20 instead of 119 at six tables). The
-semi rule's ``R ∪ ΔR`` likewise runs as one scan of R's new state.
-``rewrite_pos_delta`` still returns the reference-shaped IR; the
-compiler recognizes those two shapes (``rewrite.split_join_delta``,
-``rewrite.split_new_state``) and compiles anything else literally.
+smaller, in one of two forms:
+
+- **One pass** (inner-join fragments). When the query has at least one
+  join and every node is an unpinned Scan, a Projection, a Filter, an
+  inner Join, a CrossJoin or a Union, ΔQ runs as ONE join over each
+  table's new state. On append-only inputs new⋈new = old⋈old ⊎ ΔQ, so
+  ΔQ is exactly the rows of that join with at least one appended
+  participant. Each leaf carries a boolean ``APPENDED`` flag
+  (``DeltaCatalog.flagged``); projections carry it, joins OR their
+  sides' flags, unions align it positionally, and the root keeps the
+  flagged rows (``_compile_flagged``). A chain of n tables plans n−1
+  joins and n scans (5 and 6 at six tables).
+- **Two branches** (every other fragment: semi joins, say). The
+  rule's union ``(Δ⋈Δ) ∪ (old⋈Δ) ∪ (Δ⋈old)`` runs as
+  ``ΔL⋈R_new ⊎ L_old⋈ΔR`` (``_join_delta``), with R_new one scan of
+  the current state: join distributes over ⊎ and R_old ⊎ ΔR = R_new,
+  so both equal new⋈new − old⋈old exactly on append-only inputs. The
+  semi rule's ``R ∪ ΔR`` likewise runs as one scan of R's new state.
+  The compiler recognizes those two shapes (``rewrite.split_join_delta``,
+  ``rewrite.split_new_state``) and compiles anything else literally.
+  Join-free fragments, pinned versions, a bare ``*`` projection
+  (it would carry the flag twice) and the signed compiler
+  (plans/signed.py) take this path too.
+
+``rewrite_pos_delta`` runs first either way: it still returns the
+reference-shaped IR, and its decline is ``compile_delta``'s refusal.
 
 ``DeltaCatalog`` models an append-only table version pair. Against the
 parquet fixtures, the snapshot/delta split is a deterministic predicate
@@ -36,10 +52,15 @@ on the key column — both sides stay *filters over the same parquet
 scan*, so predicate pushdown applies and no data is copied. Against a
 real lakehouse table the same two methods would be ``versionAsOf`` time
 travel (snapshot) and CDF insert-rows (delta); nothing above the
-catalog changes.
+catalog changes. The one-pass flag is the split predicate projected
+over that one scan; a catalog that overrides ``snapshot``/``delta``
+gets them tagged and unioned instead, so an override is never
+bypassed. The trade-off: a one-pass fragment's split predicate becomes
+a projected column, not a filter pushed into a delta-side scan.
 
-At 100 TB: delta batches are small relative to the base table, so the
-two join branches are naturally skewed — each joins a huge state
+At 100 TB, one pass costs about one recompute, since every leaf is read
+whole. In the two-branch form, delta batches are small relative to the
+base table, so the two join branches are naturally skewed — each joins a huge state
 (R_new or L_old) against a small Δ. AQE converts those to broadcast
 joins at runtime (Δ under the threshold), which is exactly the physical
 plan incremental maintenance wants; we deliberately do not hint.
@@ -47,7 +68,7 @@ plan incremental maintenance wants; we deliberately do not hint.
 
 from __future__ import annotations
 
-from functools import reduce
+from functools import partial, reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -64,7 +85,12 @@ from .nodes import (
     Scan,
     Union,
 )
-from .rewrite import rewrite_pos_delta, split_join_delta, split_new_state
+from .rewrite import (
+    _DELTA_SAFE_JOIN_TYPES,
+    rewrite_pos_delta,
+    split_join_delta,
+    split_new_state,
+)
 
 # Deterministic append-split predicates: rows matching the predicate are
 # the "appended since the last maintained version" delta batch; the rest
@@ -80,6 +106,9 @@ DELTA_PREDICATES: dict[str, str] = {
     "events": "event_id % 10 = 0",
     "documents": "doc_id % 9 = 0",
 }
+
+# The appended-row flag a one-pass leaf carries (``DeltaCatalog.flagged``).
+APPENDED = "__appended"
 
 
 class DeltaCatalog:
@@ -107,16 +136,30 @@ class DeltaCatalog:
         return load_table(self.spark, self.sf_dir, name)
 
     def snapshot(self, name: str) -> DataFrame:
-        """Old version: everything not in the delta batch."""
+        """Old version: everything not in the delta batch. A row whose
+        split predicate is NULL is old, so snapshot ⊎ delta = full."""
         pred = self.delta_predicates.get(name)
         df = self.full(name)
-        return df.where(f"NOT ({pred})") if pred else df
+        return df.where(f"NOT coalesce({pred}, false)") if pred else df
 
     def delta(self, name: str) -> DataFrame:
         """Appended rows only (empty for tables with no registered split)."""
         pred = self.delta_predicates.get(name)
         df = self.full(name)
         return df.where(pred) if pred else df.where(F.lit(False))
+
+    def flagged(self, name: str) -> DataFrame:
+        """Current state plus a boolean ``APPENDED`` column, true on the
+        delta batch's rows: the leaf of one-pass ΔQ. With this class's
+        own split it is one scan of ``full``; when a subclass overrides
+        ``snapshot`` or ``delta``, those are tagged and unioned."""
+        cls = type(self)
+        own = (cls.snapshot, cls.delta) == (DeltaCatalog.snapshot, DeltaCatalog.delta)
+        if not own:
+            return tag_split(self, name)
+        pred = self.delta_predicates.get(name)
+        flag = F.expr(f"coalesce({pred}, false)") if pred else F.lit(False)
+        return self.full(name).withColumn(APPENDED, flag)
 
     def versioned(self, name: str, version: int) -> DataFrame:
         """Time travel (SQL ``VERSION AS OF``). The plain parquet
@@ -127,6 +170,14 @@ class DeltaCatalog:
             f"parquet fixtures with no version history — use a "
             f"VersionedDeltaCatalog over VersionedTable storage"
         )
+
+
+def tag_split(catalog, name: str) -> DataFrame:
+    """``snapshot`` tagged false ⊎ ``delta`` tagged true: the flagged
+    leaf of any catalog with the snapshot/delta contract."""
+    return catalog.snapshot(name).withColumn(APPENDED, F.lit(False)).unionByName(
+        catalog.delta(name).withColumn(APPENDED, F.lit(True))
+    )
 
 
 def _join(node: Join | CrossJoin, left: DataFrame, right: DataFrame) -> DataFrame:
@@ -227,6 +278,54 @@ def _compile(node: Plan, scan, delta_scan, new_scan=None) -> DataFrame:
     raise TypeError(f"no compilation rule for {type(node).__name__}")
 
 
+def _nodes(node: Plan):
+    yield node
+    for child in node.children:
+        yield from _nodes(child)
+
+
+def _takes_one_pass(query: Plan) -> bool:
+    """True when ``query`` has a join and every node has a flag rule:
+    unpinned Scan, Projection without a bare ``*``, Filter, inner Join,
+    CrossJoin, Union."""
+    nodes = list(_nodes(query))
+    return any(isinstance(n, (Join, CrossJoin)) for n in nodes) and all(
+        isinstance(n, (Filter, CrossJoin, Union))
+        or (isinstance(n, Scan) and n.version is None)
+        or (isinstance(n, Projection) and "*" not in n.select_exprs)
+        or (isinstance(n, Join) and n.join_type in _DELTA_SAFE_JOIN_TYPES)
+        for n in nodes
+    )
+
+
+def _compile_flagged(node: Plan, leaf) -> DataFrame:
+    """Compile ``node`` over new state, ``APPENDED`` its last column.
+
+    ``leaf`` maps a table name to its flagged new state. A projection
+    carries the flag, a join ORs its sides' flags (the sides are
+    aliased ``l``/``r``), and a union aligns the flags positionally.
+    """
+
+    def rec(child: Plan) -> DataFrame:
+        return _compile_flagged(child, leaf)
+
+    if isinstance(node, Scan):
+        return leaf(node.table)
+    if isinstance(node, Projection):
+        return rec(node.input).selectExpr(*node.select_exprs, APPENDED)
+    if isinstance(node, Filter):
+        return rec(node.input).where(node.predicate)
+    if isinstance(node, (Join, CrossJoin)):
+        either = F.col(f"l.{APPENDED}") | F.col(f"r.{APPENDED}")
+        return (
+            _join(node, rec(node.left), rec(node.right))
+            .withColumn(f"{APPENDED}_or", either)
+            .drop(APPENDED)
+            .withColumnRenamed(f"{APPENDED}_or", APPENDED)
+        )
+    return reduce(lambda a, b: a.union(b), map(rec, node.inputs))
+
+
 def scan_by_name(method):
     """Adapt a name-based leaf resolver to the Scan-node protocol.
     Pinned versions are refused: the caller has no versioned storage,
@@ -275,6 +374,13 @@ def compile_delta(ir: Plan, catalog: DeltaCatalog) -> DataFrame:
     already-wrapped/already-rewritten plan. Raises ValueError when the
     rule declines (reference ``Ok(None)``, mod.rs:187) so callers never
     silently run a full query believing it incremental.
+
+    A query with a join whose every node is an unpinned Scan, a
+    Projection, a Filter, an inner Join, a CrossJoin or a Union runs in
+    one pass: one join over each table's flagged new state
+    (``catalog.flagged``, or ``tag_split`` for a catalog without it),
+    keeping the rows with an appended participant. Every other query
+    compiles the rewritten IR, joins as ``_join_delta``'s two branches.
     """
     plan = ir if isinstance(ir, PosDelta) else PosDelta(ir)
     delta_ir = rewrite_pos_delta(plan)
@@ -283,6 +389,10 @@ def compile_delta(ir: Plan, catalog: DeltaCatalog) -> DataFrame:
             f"no positive-delta derivation for {plan.input.name} "
             "(reference optimizer_rules/mod.rs:187 returns None here)"
         )
+    if _takes_one_pass(plan.input):
+        leaf = getattr(catalog, "flagged", None) or partial(tag_split, catalog)
+        flagged = _compile_flagged(plan.input, leaf)
+        return flagged.where(F.col(APPENDED)).drop(APPENDED)
     return _compile(
         delta_ir,
         scan=_leaf(catalog, catalog.snapshot),

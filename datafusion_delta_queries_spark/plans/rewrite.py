@@ -22,11 +22,15 @@ re-wrapped in PosDelta and the rule re-applied directly, with
 declines (mod.rs:23-32). The un-delta'd join sides (``join.left.clone()``)
 compile to the *old snapshot* — see compiler.py and SURVEY §4.3.
 
-This rule builds the reference IR, three branches per join; the
-executed plan is two. ``split_join_delta`` and ``split_new_state``
-(end of module) recognize the join triple and the semi rule's
-``R ∪ ΔR`` so the compiler can run them as ``ΔL⋈R_new ∪ L_old⋈ΔR``
-and one scan of R's new state.
+This rule builds the reference IR, three branches per join, and
+``compile_delta`` always runs it first: its decline is the compiler's
+refusal. The executed plan is smaller. An inner/cross/union fragment
+with a join runs in one pass over each table's flagged new state and
+never compiles this IR (compiler.py). Everything else compiles it,
+with ``split_join_delta`` and ``split_new_state`` (end of module)
+recognizing the join triple and the semi rule's ``R ∪ ΔR`` so the
+compiler can run them as ``ΔL⋈R_new ∪ L_old⋈ΔR`` and one scan of R's
+new state.
 
 Two deliberate divergences (SURVEY §4.3): the reference clones
 ``join_type`` verbatim (mod.rs:126), silently mis-incrementalizing

@@ -1160,8 +1160,8 @@ def maintain_agg_of_sql(
 #     agg(J ∪ ΔJ) == merge(agg(J), agg(ΔJ))       where ΔJ = Δ(A ⋈ B)
 # so the maintained aggregate is: partial over the old join snapshot
 # (standing in for the stored state) merged with a partial over the
-# join delta (three branches in the IR, two executed: ΔA⋈B_new and
-# A_old⋈ΔB) — only the delta branches touch fresh rows.
+# join delta (three branches in the IR, executed in one pass: one join
+# over A_new and B_new keeping the rows with an appended participant).
 # ------------------------------------------------------------------
 
 
@@ -1304,7 +1304,7 @@ def maintain_join_agg_of_sql(
     """SQL GROUP BY over a JOIN → incrementally-maintained aggregate.
 
     The join fragment goes through the same IR + PosDelta rewrite as
-    ``delta_of_sql`` (join delta executed as ΔA⋈B_new ∪ A_old⋈ΔB);
+    ``delta_of_sql`` (join delta executed in one pass over new state);
     the aggregate is maintained by partial-union-merge over (old-join
     snapshot partial) ∪ (join-delta partial). Exact for count/min/max
     and integer sums; HAVING filters the merged state.

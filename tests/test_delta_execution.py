@@ -111,3 +111,51 @@ def test_agg_maintenance_identity_any_split(spark):
             a, b = merged[k], full[k]
             assert a.n == b.n and a.mx == b.mx and a.mn == b.mn, (m, k)
             assert abs(a.total - b.total) <= 1e-6 * abs(b.total), (m, k)
+
+
+def test_null_split_key_is_old_in_both_flag_realizations(spark, tmp_path):
+    """A row whose split predicate is NULL belongs to the old snapshot:
+    snapshot ⊎ delta = full, the predicate flag and the tagged
+    snapshot/delta union agree, and one-pass ΔQ is exactly
+    full(new) EXCEPT ALL full(old)."""
+    from collections import Counter
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from datafusion_delta_queries_spark.plans import Join, Projection, Scan
+    from datafusion_delta_queries_spark.plans.compiler import tag_split
+
+    pq.write_table(
+        pa.table(
+            {
+                "k": pa.array([0, 1, None, 3, None, 4], pa.int64()),
+                "g": pa.array([1, 1, 1, 2, 2, 3], pa.int32()),
+                "v": ["a", "b", "c", "d", "e", "f"],
+            }
+        ),
+        str(tmp_path / "items.parquet"),
+    )
+    pq.write_table(
+        pa.table({"g": pa.array([1, 2, 3], pa.int32()), "name": ["x", "y", "z"]}),
+        str(tmp_path / "groups.parquet"),
+    )
+    cat = DeltaCatalog(
+        spark, str(tmp_path), {"items": "k % 3 = 0", "groups": "g >= 3"}
+    )
+
+    def bag(df):
+        return Counter(tuple(r) for r in df.collect())
+
+    assert bag(cat.snapshot("items")) + bag(cat.delta("items")) == bag(
+        cat.full("items")
+    )
+    assert bag(cat.flagged("items")) == bag(tag_split(cat, "items"))
+    ir = Projection(
+        ["v", "name"], Join(Scan("items"), Scan("groups"), on=[("g", "g")])
+    )
+    new, old = bag(compile_plan(ir, cat)), bag(compile_snapshot(ir, cat))
+    delta = bag(compile_delta(ir, cat))
+    assert delta == new - old
+    assert old + delta == new
+    assert delta == Counter({("a", "x"): 1, ("d", "y"): 1, ("f", "z"): 1})

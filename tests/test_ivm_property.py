@@ -53,10 +53,8 @@ def leafy(draw, table):
 
 
 @st.composite
-def plans(draw):
-    shape = draw(
-        st.sampled_from(["simple", "join", "chain", "semi", "cross", "union"])
-    )
+def plans(draw, shapes=("simple", "join", "chain", "semi", "cross", "union")):
+    shape = draw(st.sampled_from(shapes))
     if shape == "simple":
         return draw(leafy(draw(st.sampled_from(list(TABLES)))))
     if shape == "chain":
@@ -97,6 +95,31 @@ def plans(draw):
     if shape == "cross":
         node = CrossJoin(draw(leafy("region")), draw(leafy("nation")))
         return Projection(["r_regionkey", "n_nationkey"], node)
+    if shape in ("union_of_joins", "join_of_union"):
+        # customer/supplier rows with their nation key, joined to nation
+        # per branch (union of joins) or once above the union.
+        sides = draw(
+            st.lists(
+                st.sampled_from(["customer", "supplier"]), min_size=2, max_size=3
+            )
+        )
+        keyed = [
+            Projection(
+                [f"{TABLES[t][0][0]} AS id", f"{TABLES[t][0][2]} AS nk"],
+                draw(leafy(t)),
+            )
+            for t in sides
+        ]
+        nk = [("nk", "n_nationkey")]
+        if shape == "join_of_union":
+            node = Join(Union(keyed), draw(leafy("nation")), on=nk)
+            return Projection(["id", "n_name"], node)
+        return Union(
+            [
+                Projection(["id", "n_name"], Join(k, draw(leafy("nation")), on=nk))
+                for k in keyed
+            ]
+        )
     sides = draw(
         st.lists(
             st.sampled_from(["customer", "supplier"]), min_size=2, max_size=3
@@ -133,6 +156,106 @@ def test_ivm_identity_random_plans(spark, ir):
     delta = _multiset(compile_delta(ir, cat))
     # Counter addition IS the multiset sum ⊎
     assert full_old + delta == full_new
+
+
+# -- One-pass ΔQ = two-branch ΔQ, under every flag realization ---------
+#
+# compile_delta runs an inner/cross/union fragment with a join as one
+# join over flagged new state; the two-branch compiler (``_compile``
+# over the rewritten IR) is the reference. Three catalogs build the
+# flag three ways: DeltaCatalog's own split predicate, a
+# VersionedDeltaCatalog's tagged snapshot/changes union, and a
+# DeltaCatalog subclass whose snapshot/delta are a different slice
+# than its (inherited) split predicates — the override must win.
+
+from datafusion_delta_queries_spark.plans import PosDelta, rewrite_pos_delta  # noqa: E402
+from datafusion_delta_queries_spark.plans.compiler import (  # noqa: E402
+    DELTA_PREDICATES,
+    _compile,
+    _leaf,
+)
+
+_ONE_PASS_TABLES = ("orders", "customer", "nation", "region", "supplier")
+
+# Slices other than DELTA_PREDICATES': a catalog that flagged rows by
+# its predicates instead of its overrides would flag the wrong rows.
+_OTHER_SLICES = {
+    "orders": "o_orderkey % 10 = 3",
+    "customer": "c_custkey % 7 = 2",
+    "nation": "n_nationkey < 4",
+    "region": "r_regionkey = 0",
+    "supplier": "s_suppkey % 5 = 1",
+}
+
+
+class _OtherSliceCatalog(DeltaCatalog):
+    """Overrides snapshot/delta with ``_OTHER_SLICES``; its
+    ``delta_predicates`` still name the default split."""
+
+    def snapshot(self, name):
+        return self.full(name).where(f"NOT ({_OTHER_SLICES[name]})")
+
+    def delta(self, name):
+        return self.full(name).where(_OTHER_SLICES[name])
+
+
+@pytest.fixture(scope="module")
+def versioned_catalog_tables(spark, tmp_path_factory):
+    """Each table as v0 = snapshot, v1 = the appended slice."""
+    from datafusion_delta_queries_spark.sources import VersionedTable
+
+    root = tmp_path_factory.mktemp("one_pass")
+    base = DeltaCatalog(spark, SF_SMALL)
+    tables = {}
+    for name in _ONE_PASS_TABLES:
+        vt = VersionedTable(str(root / name))
+        vt.write_version(base.snapshot(name))
+        vt.write_version(base.delta(name))
+        tables[name] = vt
+    return tables
+
+
+def _catalog(spark, realization, versioned_tables):
+    from datafusion_delta_queries_spark.sources import VersionedDeltaCatalog
+
+    if realization == "predicate":
+        return DeltaCatalog(spark, SF_SMALL)
+    if realization == "override":
+        return _OtherSliceCatalog(spark, SF_SMALL, DELTA_PREDICATES)
+    return VersionedDeltaCatalog(
+        spark, versioned_tables, {n: (0, 1) for n in versioned_tables}
+    )
+
+
+@pytest.mark.slow
+@pytest.mark.parametrize("realization", ["predicate", "versioned", "override"])
+@settings(
+    max_examples=6,
+    deadline=None,
+    suppress_health_check=[HealthCheck.too_slow, HealthCheck.function_scoped_fixture],
+)
+@given(
+    ir=plans(
+        shapes=("join", "chain", "cross", "union", "union_of_joins", "join_of_union")
+    )
+)
+def test_one_pass_equals_two_branch_random_plans(
+    spark, versioned_catalog_tables, realization, ir
+):
+    cat = _catalog(spark, realization, versioned_catalog_tables)
+    one_pass = _multiset(compile_delta(ir, cat))
+    two_branch = _multiset(
+        _compile(
+            rewrite_pos_delta(PosDelta(ir)),
+            scan=_leaf(cat, cat.snapshot),
+            delta_scan=cat.delta,
+            new_scan=_leaf(cat, cat.full),
+        )
+    )
+    assert one_pass == two_branch
+    full_new = _multiset(compile_plan(ir, cat))
+    full_old = _multiset(compile_snapshot(ir, cat))
+    assert full_old + one_pass == full_new
 
 
 # -- Signed (retraction) identity on random plans ----------------------

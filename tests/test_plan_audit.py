@@ -111,16 +111,14 @@ def test_no_cartesian_in_lsh_paths(spark):
 
 
 def test_delta_join_physical_shape(spark):
-    """The compiled delta join is a union of exactly two joins,
-    ΔL⋈R_new and L_old⋈ΔR, whose delta-side scans carry the
-    append-split predicate (pushed down)."""
+    """The compiled delta join runs in one pass: one join over the two
+    tables' new state, each table scanned once, no union of branches."""
     from datafusion_delta_queries_spark.operators.delta_queries import q_delta_join
 
     df = q_delta_join(spark, SF_SMALL)
     plan = _plan(df)
-    assert "Union" in plan
-    assert _joins_and_scans(df)[0] == 2, plan
-    # Append-split predicates reach the parquet scans as pushed filters.
+    assert "Union" not in plan
+    assert _joins_and_scans(df) == (1, 2), plan
     assert "PushedFilters" in plan
     assert "o_orderkey" in plan and "c_custkey" in plan
 
@@ -137,30 +135,42 @@ def test_delta_join_null_safe_stays_hash_join(spark):
     plan = _plan(df)
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
-    assert _joins_and_scans(df)[0] == 2, plan
+    assert _joins_and_scans(df) == (1, 2), plan
 
 
 def test_sql_frontend_pushdown_survives_parse(spark):
     """The SQL-string path must compile to the same pushed-down scans
-    as the hand-built IR: WHERE and append-split predicates reach the
-    parquet scans; the delta is a union of exactly two joins."""
+    as the hand-built IR: the WHERE reaches the parquet scan, and the
+    delta is one join over the two tables' new state."""
     from datafusion_delta_queries_spark.operators.delta_queries import (
         q_delta_sql_frontend,
     )
 
     df = q_delta_sql_frontend(spark, SF_SMALL)
     plan = _plan(df)
-    assert "Union" in plan
-    assert _joins_and_scans(df)[0] == 2, plan
+    assert "Union" not in plan
+    assert _joins_and_scans(df) == (1, 2), plan
     assert "PushedFilters" in plan
     # The user's WHERE (o_totalprice > 250000) is pushed into the scan.
     assert "o_totalprice" in plan and "250000" in plan
     assert "CartesianProduct" not in plan
 
 
+def test_delta_semi_join_keeps_two_branches(spark):
+    """A semi join has no one-pass form: its delta stays the rule's two
+    branches, ΔL ⋉ R_new and (L ▷ R) ⋉ ΔR, with R_new one scan."""
+    from datafusion_delta_queries_spark.operators.delta_queries import (
+        q_delta_sql_semi_join,
+    )
+
+    df = q_delta_sql_semi_join(spark, SF_SMALL)
+    assert "Union" in _plan(df)
+    assert _joins_and_scans(df) == (3, 5)
+
+
 # The lineitem⋈orders⋈customer⋈nation⋈region⋈supplier chain, 2 to 6
 # tables: the reference IR keeps its three-branch size (3ⁿ-like), the
-# executed plan runs two branches per level (quadratic).
+# executed plan is one pass (linear).
 _CHAIN = (
     ("lineitem", None),
     ("orders", "lineitem.l_orderkey = orders.o_orderkey"),
@@ -171,11 +181,12 @@ _CHAIN = (
 )
 
 
-def test_delta_chain_plan_size_is_quadratic_in_depth(spark):
-    """Pins the pre-AQE physical joins and scans of ``delta_of_sql``
-    over the chain at depths 2-6, so a regression back to executing
-    the three-branch rule (10/25/56/119 joins at depths 3-6) fails
-    here whatever the host's timing noise."""
+def test_delta_chain_plan_size_is_linear_in_depth(spark):
+    """Pins the reference IR's joins and the pre-AQE physical joins and
+    scans of ``delta_of_sql`` over the chain at depths 2-6: one pass
+    plans n−1 joins and n scans, so a regression to the two-branch
+    form (2/5/9/14/20 joins) or to executing the three-branch rule
+    (3/10/25/56/119) fails here whatever the host's timing noise."""
     from datafusion_delta_queries_spark.plans import (
         Join,
         PosDelta,
@@ -196,11 +207,11 @@ def test_delta_chain_plan_size_is_quadratic_in_depth(spark):
         executed = _joins_and_scans(delta_of_sql(spark, SF_SMALL, sql))
         got[depth] = (ir_joins(ir), *executed)
     assert got == {
-        2: (3, 2, 4),
-        3: (10, 5, 8),
-        4: (25, 9, 13),
-        5: (56, 14, 19),
-        6: (119, 20, 26),
+        2: (3, 1, 2),
+        3: (10, 2, 3),
+        4: (25, 3, 4),
+        5: (56, 4, 5),
+        6: (119, 5, 6),
     }
 
 
