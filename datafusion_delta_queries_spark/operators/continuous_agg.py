@@ -15,29 +15,33 @@ finals (and applies HAVING) on the way out. That is exactly how a
 partial aggregate crosses a shuffle boundary inside Spark — the table
 is a durable map-side partial.
 
-Scale posture: a refresh touches ``O(|Δ| + |affected groups|)`` state
-rows — the delta batch is partially aggregated (map-side combine),
-only the stored rows for *touched* groups are re-merged, and the
-keyed ``upsert`` replaces just those rows. History is never rescanned.
-On a lakehouse table format the upsert becomes ``MERGE INTO`` and
-rewrites only matched files; with plain parquet the swap rewrites the
-state table, which is small (one row per group), not the input.
+Scale posture: a refresh is one write plan. The delta batch is
+partially aggregated (map-side combine) and joined ONCE, full outer on
+the group keys, with the stored state; each partial column folds
+(``AggAlgebra.folded``) and the result is written back. So the input
+side costs ``O(|Δ|)`` and the state is scanned once and written once:
+the touched partitions with ``partition_on``, else the whole table,
+which is small (one row per group), not the input. History is never
+rescanned. On a lakehouse table format the write becomes ``MERGE
+INTO`` and rewrites only matched files.
 
 Insert-only batches refresh via ``refresh``; batches with deletes and
 updates (Delta-CDF shape, or pre-signed rows) via ``refresh_signed`` —
 sum/count/avg merge algebraically from signed partials, and min/max
-(which cannot absorb a retraction) recompute delta-scoped from the
-post-change base, touched groups only.
+(which cannot absorb a retraction) recompute from the post-change base
+for the groups the batch retracts from, in the same plan.
 
 Every maintainer here keeps its state in a ``sources.state.StateStore``
 (schema-known reads, the initial write, replay markers, retention
-predicates) and writes each refresh through its one merge,
+predicates). ``ContinuousAggregate`` and its subclasses write through
+the store's ``read_touched``/``rewrite`` pair, as above. The others
+(and the rollup cascade's coarse tiers) write through
 ``StateStore.replace_touched``, as "replace the touched groups": the
-state becomes ``state ⋉̸ touched ∪ fresh``, where
-``fresh`` holds the complete new rows of the touched groups. A group
-whose live row count reaches zero (a pair netted to zero, a day whose
-hours all died, a row displaced from a top-k) is touched and has no
-fresh row, so it leaves without a separate delete frame.
+state becomes ``state ⋉̸ touched ∪ fresh``, where ``fresh`` holds the
+complete new rows of the touched groups. A group whose live row count
+reaches zero (a pair netted to zero, a day whose hours all died, a row
+displaced from a top-k) is touched and has no fresh row, so it leaves
+without a separate delete frame.
 
 Every aggregate class here takes its expression lists from the one
 aggregate algebra (``plans.sql_frontend.AggAlgebra``) the
@@ -48,9 +52,9 @@ cycle are this module's.
 mergeable state is the distinct (keys, value) pair set, which belongs
 in its own table — ``ContinuousDistinctAggregate`` (below) stores it
 exactly, and ``delta_ndv_maintenance`` carries the bounded-sketch
-alternative. NULL grouping keys are rejected at refresh time: the keyed
-upsert matches on key equality, and SQL NULL never equals itself, so a
-NULL-key state row could not be replaced.
+alternative. NULL grouping keys are rejected at refresh time: the
+fold matches stored rows on key equality, and SQL NULL never equals
+itself, so a NULL-key state row could never be merged into.
 """
 
 from __future__ import annotations
@@ -70,6 +74,21 @@ from ..plans.sql_frontend import (
     parse_agg_sql,
 )
 from ..sources.state import StateStore
+
+# The refresh guards' messages, raised inside the write plan and again
+# as ValueError.
+_NULL_KEY_IN_DELTA = (
+    "continuous aggregate: NULL grouping key in delta batch — a NULL-key "
+    "state row can never be replaced by a keyed upsert (coalesce the key "
+    "in the statement)"
+)
+_NULL_KEY_IN_CHANGES = (
+    "continuous aggregate: NULL grouping key in change batch"
+)
+_OVER_RETRACTION = (
+    "change batch retracts rows a group never had (negative live count) "
+    "— refusing to corrupt the state"
+)
 
 
 class ContinuousAggregate:
@@ -102,13 +121,12 @@ class ContinuousAggregate:
         and arguments are the projected ``_k{i}``/``_a{i}`` columns).
 
         ``partition_on`` (optional grouping-key OUTPUT names) lays the
-        state table out as directory partitions on those keys and
-        routes every refresh through the partition-pruned upsert: with
-        billions of groups, a batch touching a few partitions rewrites
-        only those directories instead of the whole state table. The
-        merge keys are the grouping keys, so the partition columns are
-        key columns by construction — exactly the contract
-        ``upsert_partitioned`` demands."""
+        state table out as directory partitions on those keys, and
+        every refresh reads and rewrites only the partitions its batch
+        touches: with billions of groups, a batch touching a few
+        partitions rewrites only those directories instead of the
+        whole state table. Partition values are key values, so a group
+        never moves between partitions."""
         self.spark = spark
         self.path = path
         self.spec = spec
@@ -201,52 +219,9 @@ class ContinuousAggregate:
             df = df.where(f"NOT ({pred})")
         return df
 
-    def _upsert_state(
-        self, updates: DataFrame, touched: DataFrame | None = None
-    ) -> None:
-        """Persist a refresh by replacing the touched groups (``touched``
-        defaults to the keys of ``updates``; a touched group with no
-        row in ``updates`` leaves the table). Groups inside a recorded
-        retention window never re-enter the state, and their
-        directories are never rewritten. Every caller's ``updates`` is
-        the output of a ``groupBy`` on the key columns — key-unique by
-        construction — so the upsert's duplicate-key guard job is
-        skipped."""
-        self.store.replace_touched(
-            self._apply_retention(updates),
-            list(self.spec["key_names"]),
-            touched=self._apply_retention(touched),
-            assume_unique_keys=True,
-        )
-
     def refresh(self, delta_df: DataFrame) -> None:
-        """Merge one delta batch into the stored state.
-
-        Only groups present in the batch are read back and rewritten;
-        the rest of the state table is untouched by the merge plan
-        (the keyed upsert's anti-join is the single pass over it).
-        """
-        keys = self.spec["key_names"]
-        # Pinned: the aggregated batch (one row per touched group)
-        # feeds the NULL-key guard, the touched semi join, and the
-        # merge — one scan of the raw delta, not three.
-        delta_p = self._partial_of(delta_df).persist()
-        try:
-            null_keys = delta_p.where(
-                " OR ".join(f"`{n}` IS NULL" for n in keys)
-            ).limit(1).count()
-            if null_keys:
-                raise ValueError(
-                    "continuous aggregate: NULL grouping key in delta "
-                    "batch — a NULL-key state row can never be replaced "
-                    "by a keyed upsert (coalesce the key in the statement)"
-                )
-            stored = self.store.read()
-            touched = stored.join(delta_p.select(*keys), keys, "left_semi")
-            merged = self.alg.combined(touched.unionByName(delta_p))
-            self._upsert_state(merged)
-        finally:
-            delta_p.unpersist()
+        """Merge one insert batch into the stored state (``_fold``)."""
+        self._fold(self._partial_of(delta_df), _NULL_KEY_IN_DELTA)
 
     def refresh_signed(
         self, changes_df: DataFrame, base_new_df: DataFrame | None = None
@@ -258,25 +233,28 @@ class ContinuousAggregate:
         (``_change_type`` column) or an already-signed one (``_sign``
         ∈ {±1}). sum/count/avg state merges algebraically from signed
         partials; a group whose live row count reaches zero is DELETED
-        from the state table (it is touched and has no fresh row, so
-        replacing the touched groups drops it). min/max state cannot
-        absorb an arbitrary retraction (the runner-up is gone from the
-        partial), so statements carrying
-        min/max require ``base_new_df`` — the post-change base table.
-        The repair is two-tier: a touched group whose stored extremum
-        is NOT threatened by any retraction in the batch (no retracted
-        value ≤ the stored min / ≥ the stored max) merges
-        ``least/greatest(stored, batch-insert extremum)``
-        algebraically — zero base access; only groups whose extremum
-        IS threatened recompute from the post-change base, restricted
-        to those groups by a semi join. Typical CDC (deletes rarely
-        hit the current extremum) therefore refreshes with work ∝ |Δ|.
-        When a threatened group's recompute does run it reads that
-        group's base slice; for the join subclass with DIM-side
-        grouping keys the semi join restricts the dim branch, not the
-        fact scan, so that recompute costs a fact pass filtered to the
-        threatened groups — lay the fact out partitioned/clustered on
-        the join key to restore pruning there.
+        from the state table (its folded row fails the ``_rows > 0``
+        filter of the write). min/max state cannot absorb an arbitrary
+        retraction (the runner-up is gone from the partial), so
+        statements carrying min/max require ``base_new_df`` — the
+        post-change base table. A group whose stored extremum no
+        retraction in the batch threatens (no retracted value ≤ the
+        stored min / ≥ the stored max) keeps
+        ``least/greatest(stored, batch-insert extremum)``; a threatened
+        group takes its recompute from the post-change base.
+
+        The base is read whenever the batch retracts a row: the
+        recompute is planned beside the fold, over every group the
+        batch retracts from (a semi join on the batch's keys), and the
+        threat test then picks each group's value. An insert-only batch
+        reads no base row when the base plan is a plain scan; a base
+        with a shuffle of its own (a ``CdfVersionedTable`` fold, say)
+        still runs that shuffle's map stage, which AQE starts before it
+        learns the retracted set is empty. For the join subclass with
+        DIM-side grouping keys the semi join restricts the dim branch,
+        not the fact scan, so that recompute costs a fact pass filtered
+        to the retracted groups — lay the fact out partitioned/clustered
+        on the join key to restore pruning there.
 
         A batch that retracts more rows than a group ever had is
         rejected loudly — silent negative counts would corrupt every
@@ -300,141 +278,118 @@ class ContinuousAggregate:
     def _merge_signed_projected(
         self, df: DataFrame, base_new_df: DataFrame | None
     ) -> None:
-        """Shared signed-merge core: ``df`` is an already-projected
+        """Signed entry of ``_fold``: ``df`` is an already-projected
         signed delta of the aggregate's INPUT relation (base rows for
         the plain class; the compiled join-fragment output for the
         join subclass — whichever side of the join the signs rode in
-        on). Merges partials, applies the two-tier min/max repair
-        (``base_new_df`` = post-change base for the recompute tier),
-        and persists through the keyed upsert."""
-        keys = self.spec["key_names"]
-        mm = self.alg.minmax
-        mm_cols = [a["col"] for a in mm]
-        if mm and base_new_df is None:
+        on), and ``base_new_df`` the post-change base the min/max
+        repair recomputes from."""
+        if self.alg.minmax and base_new_df is None:
             raise ValueError(
                 "statement carries min/max: signed partials cannot "
                 "retract an extremum — pass base_new_df (the "
                 "post-change base) for delta-scoped recompute"
             )
         # One batch aggregation carries both the mergeable signed
-        # partials and the min/max repair probes (_i{i}: inserted-rows
-        # extremum, _d{i}: most-threatening retracted value).
-        delta_full = self.alg.grouped(df, self.alg.signed + self.alg.probe)
-        # Retention policy before the negative-count guard: stragglers
-        # for dropped windows leave the batch here — a delete aimed at
-        # a dropped group is not corruption, it is covered by the drop.
-        # (Predicates reference output key names, hence post-groupBy.)
-        delta_full = self._apply_retention(delta_full)
-        # Pins. Under AQE every reference to a cache that is not built
-        # yet runs as its own TableCacheQueryStage job (a pinned frame
-        # that one write reads three times runs as 4 identical save
-        # jobs), so a pin only pays where it saves a re-scan. Measured
-        # on the cdc_rollup benchmark (seed 1, 4 vCPU, jobs and input
-        # rows per op):
-        # - the aggregated change batch, read by the touched semi join,
-        #   the merge and the min/max decision frame: unpinned, each
-        #   re-runs the raw change scan (+2 jobs);
-        # - the touched stored slice, when min/max repair runs: the
-        #   merge and the decision frame share one fine-state scan
-        #   (unpinned: +4 jobs, +30k rows);
-        # - the final merged frame, below.
-        pinned = [delta_full.persist()]
-        try:
-            probe_cols = [a["ins"] for a in mm] + [a["del"] for a in mm]
-            delta_p = delta_full.drop(*probe_cols)
-            stored = self.store.read()
-            touched_keys = delta_p.select(*keys)
-            touched = stored.join(touched_keys, keys, "left_semi")
-            if mm:
-                touched = touched.persist()
-                pinned.append(touched)
-            merged = self.alg.combined(touched.unionByName(delta_p))
-            if mm:
-                # Two-tier repair. Decision frame: per touched group,
-                # the batch's probe columns beside the STORED extrema
-                # (left join: a brand-new group has NULL stored state
-                # and is always safe — its extremum is the batch's).
-                dec = delta_full.select(*keys, *probe_cols).join(
-                    touched.select(*keys, *mm_cols),
-                    keys,
-                    "left",
-                )
-                # A group is UNSAFE iff some retraction threatens some
-                # stored extremum: a retracted value ≤ stored min
-                # (resp. ≥ stored max), or a retraction against
-                # missing/NULL stored state (inconsistent — recompute
-                # rather than guess). Each disjunct is IS-NOT-NULL
-                # guarded, so NOT(unsafe) is null-free and safe rows
-                # partition exactly.
-                unsafe_cond = " OR ".join(
-                    f"({a['del']} IS NOT NULL AND ({a['col']} IS NULL "
-                    f"OR {a['del']} {a['threat_op']} {a['col']}))"
-                    for a in mm
-                )
-                safe_mm = dec.where(f"NOT ({unsafe_cond})").select(
-                    *keys,
+        # partials and the min/max threat probes (_d{i}).
+        self._fold(
+            self.alg.grouped(df, self.alg.signed + self.alg.probe),
+            _NULL_KEY_IN_CHANGES,
+            base_new_df if self.alg.minmax else None,
+        )
+
+    def _fold(
+        self,
+        delta: DataFrame,
+        null_key_msg: str,
+        base_new_df: DataFrame | None = None,
+    ) -> None:
+        """The one merge body: the state becomes ``stored ⟗ Δ``, folded.
+
+        ``delta`` holds the batch's partials, one row per group. The
+        stored side (the touched partitions when the state is
+        partitioned, else the whole table) is joined with it ONCE, full
+        outer on the group keys, and every partial column takes
+        ``AggAlgebra.folded``: stored rows the batch misses pass
+        through, new groups enter, a group at zero live rows is
+        filtered out and so leaves. With ``base_new_df`` (a signed
+        batch carrying min/max), the groups the batch retracts from
+        recompute their extrema from it in the same plan. The NULL-key
+        and negative-count guards are ``raise_error`` inside the
+        written frame, so the refresh is one write action; a failed
+        write leaves the state as it was, and the guard's Spark error
+        is raised again as ``ValueError``.
+
+        Retention predicates filter the batch's groups first: a late
+        row (or a retraction) aimed at a dropped window is covered by
+        the drop, and its partition is never rewritten."""
+        keys = self.spec["key_names"]
+        mm = self.alg.minmax if base_new_df is not None else []
+        delta = self._apply_retention(delta)
+        stored = self.store.read_touched(delta)
+        parts = [c for c in stored.columns if c not in keys]
+        s = stored.select(
+            *[stored[k] for k in keys],
+            *[stored[c].alias(f"__s{c}") for c in parts],
+        )
+        d = delta.select(
+            *[delta[k] for k in keys],
+            *[delta[c].alias(f"__d{c}") for c in parts],
+            *[a["del"] for a in mm],
+        )
+        joined = s.join(d, keys, "full")
+        repaired = None
+        if mm:
+            retracted = d.where(
+                " OR ".join(f"{a['del']} IS NOT NULL" for a in mm)
+            ).select(*[d[k] for k in keys])
+            base = base_new_df
+            if self.spec["where"]:
+                base = base.where(self.spec["where"])
+            # Restrict via the EVALUATED grouping-key expressions
+            # (plans.sql_frontend._semi_on_keys), not output names: a
+            # raw-base semi join on the alias crashes for expression
+            # keys (no such column) and silently mis-restricts when the
+            # alias shadows a base column.
+            recomputed = self.alg.grouped(
+                _semi_on_keys(
+                    self._project(base), retracted, self.spec["keys"], keys
+                ),
+                [a["partial"] for a in mm],
+            )
+            repaired = "__r"
+            joined = joined.join(
+                recomputed.select(
+                    *[recomputed[k] for k in keys],
                     *[
-                        F.expr(
-                            f"{a['merge_fn']}({a['col']}, {a['ins']}) "
-                            f"AS {a['col']}"
-                        )
+                        recomputed[a["col"]].alias(f"__r{a['col']}")
                         for a in mm
                     ],
-                )
-                unsafe_keys = dec.where(unsafe_cond).select(*keys)
-                base = base_new_df
-                if self.spec["where"]:
-                    base = base.where(self.spec["where"])
-                base = self._project(base)
-                # Restrict via the EVALUATED grouping-key expressions
-                # (plans.sql_frontend._semi_on_keys), not output names:
-                # a raw-base semi join on the alias crashes for
-                # expression keys (no such column) and silently
-                # mis-restricts when the alias shadows a base column.
-                # Only the UNSAFE groups' slice is recomputed.
-                recomp_mm = self.alg.grouped(
-                    _semi_on_keys(base, unsafe_keys, self.spec["keys"], keys),
-                    [a["partial"] for a in mm],
-                )
-                merged = merged.drop(*mm_cols).join(
-                    safe_mm.unionByName(recomp_mm), keys, "left"
-                )
-            # Pinned: the final merged frame feeds the guard and the
-            # write. The guard action builds the cache, so the write
-            # (live rows plus touched keys) reads only built caches —
-            # no second run of the state scan, the batch aggregate or
-            # the min/max recompute.
-            merged = merged.persist()
-            pinned.append(merged)
-            # ONE guard action for both invariants. A NULL grouping key
-            # in the batch survives the groupBy as its own group in
-            # `merged`, so both checks read the same frame. Null-key
-            # priority preserved.
-            null_cond = " OR ".join(f"`{n}` IS NULL" for n in keys)
-            guard = merged.agg(
-                F.max(F.expr(f"CASE WHEN {null_cond} THEN 1 ELSE 0 END"))
-                .alias("_nullkey"),
-                F.max(F.expr("CASE WHEN _rows < 0 THEN 1 ELSE 0 END"))
-                .alias("_neg"),
-            ).collect()[0]
-            if guard["_nullkey"]:
-                raise ValueError(
-                    "continuous aggregate: NULL grouping key in change batch"
-                )
-            if guard["_neg"]:
-                raise ValueError(
-                    "change batch retracts rows a group never had "
-                    "(negative live count) — refusing to corrupt the state"
-                )
-            # Replace every touched group: live groups get their new
-            # partials, a group at zero live rows is touched with no
-            # fresh row and so leaves the table.
-            self._upsert_state(
-                merged.where("_rows > 0"), touched=merged.select(*keys)
+                ),
+                keys,
+                "left",
             )
-        finally:
-            for frame in pinned:
-                frame.unpersist()
+        folded = joined.select(
+            *[joined[k] for k in keys],
+            *[F.expr(e) for e in self.alg.folded("__s", "__d", repaired)],
+        )
+        null_key = None
+        for k in keys:
+            c = folded[k].isNull()
+            null_key = c if null_key is None else null_key | c
+        rows = F.col("_rows")
+        out = folded.where(
+            F.when(null_key, F.raise_error(F.lit(null_key_msg)))
+            .when(rows < 0, F.raise_error(F.lit(_OVER_RETRACTION)))
+            .otherwise(rows > 0)
+        ).select(*[folded[c] for c in stored.columns])
+        try:
+            self.store.rewrite(out, delta.select(*[delta[k] for k in keys]))
+        except Exception as e:
+            for msg in (null_key_msg, _OVER_RETRACTION):
+                if msg in str(e):
+                    raise ValueError(msg) from None
+            raise
 
     def stream_into(self, source_dir: str, schema, checkpoint_dir: str):
         """Refresh this view continuously from a file-source stream.
@@ -485,19 +440,18 @@ class ContinuousAggregate:
         table AS OF the batch being applied (i.e. the table the change
         feed was derived from, which the producer updates before
         emitting the change file — against Delta, a plain
-        ``spark.read`` of the same table the CDF stream reads). With
-        the two-tier repair, the base is touched only for groups whose
-        stored extremum a retraction actually threatens; every other
-        group merges algebraically, so streaming extrema costs the
-        threatened slice per batch, not a per-batch rescan. Without
-        ``base_reader``, min/max statements are rejected loudly.
+        ``spark.read`` of the same table the CDF stream reads). The
+        base is read for the groups a batch retracts from (see
+        ``refresh_signed``), so streaming extrema costs that slice per
+        batch, not a per-batch rescan. Without ``base_reader``, min/max
+        statements are rejected loudly.
 
         CONSISTENCY PRECONDITION: ``base_reader`` must return the base
         AS OF the batch being applied. A plain-parquet reader returns
         the LATEST base, so with a BACKLOG of change files (restart
         with several pending, or a producer running ahead of the
-        stream) the intermediate batches' threatened-group recomputes
-        would read a future base and persist wrong extrema if the
+        stream) the intermediate batches' min/max recomputes would
+        read a future base and persist wrong extrema if the
         stream stops before draining. The source is therefore pinned
         to one change file per micro-batch (``maxFilesPerTrigger=1``)
         so a producer that gates file emission on stream progress gets
@@ -593,15 +547,16 @@ class ContinuousJoinAggregate(ContinuousAggregate):
     re-initializing).
 
     min/max statements refresh with ``refresh_signed(batch,
-    base_new_df=<post-change fact>)``: the touched-group recompute
+    base_new_df=<post-change fact>)``: the retracted groups' recompute
     joins the post-change fact through the same fragment — sound here
     (unlike the general signed join-SQL path, which rejects min/max)
     precisely because only the fact side ever changes.
 
     At 100 TB: state is one row per group, the refresh scans only the
-    batch plus the dims' join slices, and the stored table rewrites
-    only touched groups through the keyed upsert — history (the fact
-    table) is never rescanned after ``initialize``.
+    batch plus the dims' join slices, and the stored table is read and
+    written once per refresh (only the touched partitions with
+    ``partition_on``) — history (the fact table) is never rescanned
+    after ``initialize``.
     """
 
     def __init__(
@@ -711,7 +666,7 @@ class ContinuousJoinAggregate(ContinuousAggregate):
         batch). ``dim_new_df`` is the post-change dim; it replaces the
         stored static dim so later fact batches and min/max repairs
         join the right version. Statements carrying min/max use the
-        same two-tier repair as ``refresh_signed``, with the
+        same repair as ``refresh_signed``, with the
         post-change join (current fact ⋈ new dims) as the recompute
         base.
 
@@ -1176,7 +1131,7 @@ class ContinuousCube(ContinuousAggregate):
 
     The sentinel stands in for the grouping NULL (SQL ``GROUPING()``)
     so margin rows survive the NULL-grouping-key rejection the keyed
-    upsert requires; source key values must therefore be non-NULL (or
+    fold requires; source key values must therefore be non-NULL (or
     pre-coalesced in ``cube_keys`` exprs) and never equal the
     sentinel.
 
@@ -1266,7 +1221,7 @@ class ContinuousRollupCascade:
     A day whose every hour died is touched and has no fresh row, so it
     leaves — there is no separate dead-day frame. Retractions need no
     coarse-side base access: the fine tier has already absorbed them
-    (including the two-tier min/max repair), and re-combining correct
+    (including the min/max repair), and re-combining correct
     fine partials is exact by construction — which is the whole point
     of cascading: at 100 TB the daily tier's refresh cost is
     ``O(touched days × buckets/day)`` state rows, independent of both
@@ -1362,21 +1317,21 @@ class ContinuousRollupCascade:
         ).agg(*[F.expr(e) for e in self.fine.alg.combine])
 
     def _touched_chain(self, batch_df: DataFrame) -> list[DataFrame]:
-        """Per-level distinct touched keys — all derived from the
-        batch's key expressions (for CDF batches that includes pre-
-        AND post-images, so a row moving between buckets touches both
+        """Per-level touched keys — all derived from the batch's key
+        expressions (for CDF batches that includes pre- AND
+        post-images, so a row moving between buckets touches both
         sides at every granularity). Rows failing the statement's
-        WHERE never contributed and are excluded."""
+        WHERE never contributed and are excluded. A key repeats once
+        per batch row: the semi and anti joins that consume these
+        frames need no unique keys."""
         df = batch_df
         if self.fine.spec["where"]:
             df = df.where(self.fine.spec["where"])
         prev = df.select(*self.fine.alg.key_cols)
         out = []
         for lvl in self.levels:
-            prev = (
-                prev.withColumn(lvl["key"], F.expr(lvl["expr"]))
-                .select(*lvl["keys"])
-                .distinct()
+            prev = prev.withColumn(lvl["key"], F.expr(lvl["expr"])).select(
+                *lvl["keys"]
             )
             out.append(prev)
         return out
@@ -1438,8 +1393,8 @@ class ContinuousRollupCascade:
         self, changes_df: DataFrame, base_new_df: DataFrame | None = None
     ) -> None:
         """Retraction-capable refresh: the fine tier nets the signed
-        batch (min/max repaired delta-scoped from ``base_new_df``
-        when threatened); each coarser tier then re-merges its touched
+        batch (min/max repaired from ``base_new_df`` when a retraction
+        threatens them); each coarser tier then re-merges its touched
         groups from the tier below — no base access above the fine
         tier ever."""
         from ..plans.signed import CHANGE_TYPE

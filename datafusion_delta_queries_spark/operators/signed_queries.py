@@ -4139,13 +4139,14 @@ def q_pipeline_forget_user(spark: SparkSession, sf_dir: str) -> DataFrame:
     the FULL events history, then ONE CDF delete batch — every row of
     the ~1%% user cohort — propagates through ``refresh_signed``.
     count/sum retract algebraically; min/max ride the two-tier
-    repair, so only groups whose stored extremum the cohort actually
-    held re-read their post-change base slice. The oracle aggregates
+    repair: the groups the cohort retracts from recompute from their
+    post-change base slice, and only where the cohort held the stored
+    extremum does the recompute replace it. The oracle aggregates
     events WITHOUT the cohort: a green row certifies the erasure is
     COMPLETE in the derived state (the compliance property — no
     residue of the subject's rows in any group), not just that some
     rows vanished. At 100 TB this is the GDPR erasure job: work ∝
-    |subject's rows| + the few extremum-threatened groups, never a
+    |subject's rows| + the base slices of the groups they touch, never a
     full recompute of the view."""
     from ..catalog import load_table
     from .continuous_agg import ContinuousAggregate

@@ -367,12 +367,20 @@ def compile_snapshot(ir: Plan, catalog: DeltaCatalog) -> DataFrame:
     )
 
 
+def _holds_delta_scan(node: Plan) -> bool:
+    return isinstance(node, PosDeltaScan) or any(
+        _holds_delta_scan(c) for c in node.children
+    )
+
+
 def compile_delta(ir: Plan, catalog: DeltaCatalog) -> DataFrame:
     """Rewrite to the positive-delta query and compile it.
 
-    Accepts either a bare query (wrapped in PosDelta here) or an
-    already-wrapped/already-rewritten plan. Raises ValueError when the
-    rule declines (reference ``Ok(None)``, mod.rs:187) so callers never
+    Accepts a bare query (wrapped in PosDelta here), a PosDelta-wrapped
+    one, or an already-rewritten plan: one that holds a PosDeltaScan
+    leaf compiles as it is, never rewritten a second time (that would
+    return the delta of its delta). Raises ValueError when the rule
+    declines (reference ``Ok(None)``, mod.rs:187) so callers never
     silently run a full query believing it incremental.
 
     A query with a join whose every node is an unpinned Scan, a
@@ -382,6 +390,8 @@ def compile_delta(ir: Plan, catalog: DeltaCatalog) -> DataFrame:
     keeping the rows with an appended participant. Every other query
     compiles the rewritten IR, joins as ``_join_delta``'s two branches.
     """
+    if not isinstance(ir, PosDelta) and _holds_delta_scan(ir):
+        return _compile_rewritten(ir, catalog)
     plan = ir if isinstance(ir, PosDelta) else PosDelta(ir)
     delta_ir = rewrite_pos_delta(plan)
     if delta_ir is None:
@@ -393,6 +403,12 @@ def compile_delta(ir: Plan, catalog: DeltaCatalog) -> DataFrame:
         leaf = getattr(catalog, "flagged", None) or partial(tag_split, catalog)
         flagged = _compile_flagged(plan.input, leaf)
         return flagged.where(F.col(APPENDED)).drop(APPENDED)
+    return _compile_rewritten(delta_ir, catalog)
+
+
+def _compile_rewritten(delta_ir: Plan, catalog: DeltaCatalog) -> DataFrame:
+    """A rewritten plan over ``catalog``: Scan leaves read the snapshot,
+    PosDeltaScan leaves the appended rows, joins as two branches."""
     return _compile(
         delta_ir,
         scan=_leaf(catalog, catalog.snapshot),

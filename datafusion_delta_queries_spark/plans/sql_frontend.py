@@ -684,14 +684,15 @@ class AggAlgebra:
       that stores no state (a HAVING filter then plans above it);
     - ``signed``: rows carrying ``_sign`` ∈ {±1} → the same partial
       columns. min/max have no signed form (a retraction needs the
-      runner-up): their slots are typed NULLs, repaired by recompute;
-    - ``probe``: per min/max over a signed batch, the inserted-rows
-      extremum ``_i{i}`` (mergeable with the stored one) and the most
-      threatening retracted value ``_d{i}`` (for min the smallest: a
-      retraction can only change a stored min it is ≤ to);
+      runner-up): their slots hold the inserted rows' extremum, exact
+      unless a retraction threatens the stored one;
+    - ``probe``: per min/max over a signed batch, the most threatening
+      retracted value ``_d{i}`` (for min the smallest: a retraction can
+      only change a stored min it is ≤ to);
     - ``minmax``: per min/max, its state column, positive partial,
-      probe columns and the two-tier repair's threat and merge
-      operators.
+      probe column and the repair's threat operator;
+    - ``folded``: two partial frames joined on the keys → partials,
+      the binary form of ``combine`` (see there).
 
     ``distinct`` lists the count(DISTINCT) aggregates, which have no
     scalar partial (their state is ``agg_pairs``). ``key_cols``
@@ -715,6 +716,8 @@ class AggAlgebra:
         self.signed: list[str] = []
         self.probe: list[str] = []
         self.minmax: list[dict] = []
+        # (partial column, its combine function) for ``folded``.
+        self._fold: list[tuple[str, str]] = []
         for i, a in enumerate(spec["aggs"]):
             fn, arg, out, p = a["fn"], a["arg"], a["out"], f"_p{i}"
             if fn == "count_distinct":
@@ -730,6 +733,7 @@ class AggAlgebra:
                     f"sum({arg}) AS {p}s", f"count({arg}) AS {p}n"
                 ]
                 self.combine += [f"sum({p}s) AS {p}s", f"sum({p}n) AS {p}n"]
+                self._fold += [(f"{p}s", "sum"), (f"{p}n", "sum")]
                 self.signed += [
                     f"sum({SIGN} * ({arg})) AS {p}s", f"sum({live}) AS {p}n"
                 ]
@@ -739,6 +743,7 @@ class AggAlgebra:
             pfn, cfn = _DECOMPOSABLE[fn]
             self.partial.append(f"{pfn}({arg}) AS {p}")
             self.combine.append(f"{cfn}({p}) AS {p}")
+            self._fold.append((p, cfn))
             self.final.append(f"{p} AS {out}")
             self.merge.append(f"{cfn}({p}) AS {out}")
             if fn == "sum":
@@ -747,23 +752,21 @@ class AggAlgebra:
                 self.signed.append(f"sum({live}) AS {p}")
             else:
                 self.signed.append(
-                    f"min(CASE WHEN FALSE THEN ({arg}) END) AS {p}"
+                    f"{pfn}(CASE WHEN {SIGN} > 0 THEN ({arg}) END) AS {p}"
                 )
-                self.probe += [
-                    f"{pfn}(CASE WHEN {SIGN} > 0 THEN ({arg}) END) AS _i{i}",
-                    f"{pfn}(CASE WHEN {SIGN} < 0 THEN ({arg}) END) AS _d{i}",
-                ]
+                self.probe.append(
+                    f"{pfn}(CASE WHEN {SIGN} < 0 THEN ({arg}) END) AS _d{i}"
+                )
                 self.minmax.append({
                     "col": p,
                     "partial": f"{pfn}({arg}) AS {p}",
-                    "ins": f"_i{i}",
                     "del": f"_d{i}",
                     "threat_op": "<=" if fn == "min" else ">=",
-                    "merge_fn": "least" if fn == "min" else "greatest",
                 })
         self.partial.append("count(*) AS _rows")
         self.combine.append("sum(_rows) AS _rows")
         self.signed.append(f"sum({SIGN}) AS _rows")
+        self._fold.append(("_rows", "sum"))
 
     def grouped(self, df: DataFrame, exprs: list[str]) -> DataFrame:
         """``exprs`` aggregated per group of ``df``'s evaluated keys."""
@@ -779,6 +782,39 @@ class AggAlgebra:
         return df.groupBy(*[df[n] for n in self.key_names]).agg(
             *[F.expr(e) for e in exprs or self.combine]
         )
+
+    def folded(
+        self, left: str, right: str, repaired: str | None = None
+    ) -> list[str]:
+        """Per partial column ``c``: ``{left}c`` folded with
+        ``{right}c`` into ``c`` — ``combine`` for one row of each side,
+        as a full outer join on the keys yields them (the side without
+        the group is NULL). Sums and counts add null-aware (a NULL side
+        adds nothing, as ``sum`` skips NULL); min/max take
+        ``least``/``greatest``, which skip NULL already.
+
+        With ``repaired``, ``left`` is stored state and ``right`` a
+        signed batch carrying the ``probe`` columns: a min/max whose
+        stored value a retraction threatens (``_d{i}`` at or past it,
+        or no stored value to compare) takes ``{repaired}c``, its
+        recompute from the post-change input; every other group keeps
+        the fold, which the threat test proves exact."""
+        threats = {m["col"]: m for m in self.minmax}
+        out = []
+        for c, fn in self._fold:
+            a, b = left + c, right + c
+            if fn == "sum":
+                e = f"coalesce({a} + {b}, {a}, {b})"
+            else:
+                e = f"{'least' if fn == 'min' else 'greatest'}({a}, {b})"
+            if repaired is not None and c in threats:
+                d, op = threats[c]["del"], threats[c]["threat_op"]
+                e = (
+                    f"CASE WHEN {d} IS NOT NULL AND ({a} IS NULL OR "
+                    f"{d} {op} {a}) THEN {repaired}{c} ELSE {e} END"
+                )
+            out.append(f"{e} AS {c}")
+        return out
 
     def finals(self, state: DataFrame) -> DataFrame:
         return state.select(

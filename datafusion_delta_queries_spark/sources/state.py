@@ -24,6 +24,13 @@ and INT96 or nanosecond timestamp columns (which Spark types
 differently from the Arrow footer) take the inferred read; inferring
 on every read would cost one Spark job each.
 
+Writes come in two shapes. ``replace_touched`` merges an update frame
+as "replace the touched keys" (``sinks.upsert``). ``read_touched`` and
+``rewrite`` serve a maintainer that builds the new content of
+everything it read in one plan (a fold of the stored rows with a
+batch): the touched partitions, or the whole table, read once and
+written once.
+
 ``StateStore.cached`` is the fingerprint-keyed flavour: a table built
 once per (name, fingerprint) under ``cache_root()`` and read back on
 every later run, across processes too.
@@ -136,6 +143,30 @@ class StateStore:
             sinks.upsert(
                 self.spark, self.path, updates, keys, touched=touched,
                 assume_unique_keys=assume_unique_keys,
+            )
+
+    def read_touched(self, touched: DataFrame) -> DataFrame:
+        """The rows ``rewrite(df, touched)`` replaces: the partitions
+        of ``touched``'s partition-column tuples (a pruned scan) when
+        the table is partitioned, the whole table otherwise."""
+        df = self.read()
+        if self.partition_cols:
+            df = sinks.prune_to_touched(df, touched, self.partition_cols)
+        return df
+
+    def rewrite(self, df: DataFrame, touched: DataFrame) -> None:
+        """Replace what ``read_touched(touched)`` reads with ``df``, in
+        one write: the touched partitions (``df`` holds all their rows)
+        or the whole table. Both stage the write first, so one that
+        fails — a guard raising inside ``df``'s plan, say — leaves the
+        table as it was."""
+        if self.partition_cols:
+            sinks.overwrite_touched_partitions(
+                self.spark, self.path, df, self.partition_cols, touched
+            )
+        else:
+            sinks.staged_swap(
+                self.path, lambda p: df.write.mode("overwrite").parquet(p)
             )
 
     def apply_once(self, batch_id: int, fn, ns: str = "") -> None:

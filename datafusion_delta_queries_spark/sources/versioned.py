@@ -118,6 +118,20 @@ def _merged_commit_schema(dirs: list[str]):
     )
 
 
+def _read_dirs(spark: SparkSession, paths: list[str]) -> DataFrame:
+    """The commit (or checkpoint) dirs ``paths`` as one frame, under
+    their additive-evolution union schema: a later commit may ADD
+    columns (the lakehouse norm), and earlier rows read them as NULL.
+    The schema comes from footers on the driver when possible
+    (``_merged_commit_schema``; dirs are write-once, so per-dir schemas
+    memoize), which skips the footer job a ``mergeSchema`` read starts
+    when the frame is built; otherwise that inferred read."""
+    merged = _merged_commit_schema(paths)
+    if merged is not None:
+        return spark.read.schema(merged).parquet(*paths)
+    return spark.read.option("mergeSchema", "true").parquet(*paths)
+
+
 def _kinds_from_footers(d: str):
     """(min, max) ``_change_type`` values of every row group under the
     commit dir ``d``, read from parquet footers on the driver — no
@@ -189,18 +203,7 @@ class VersionedTable:
         paths = [self._version_dir(v) for v in versions]
         if not paths:
             raise ValueError(f"no versions selected from {self.root}")
-        # mergeSchema: a later commit may ADD columns (additive schema
-        # evolution, the lakehouse norm); without it the scan would pick
-        # one file's schema and silently drop the others' extra columns.
-        # Earlier versions' rows surface NULL for columns they predate.
-        # The union schema is computed from footers on the driver when
-        # possible (commits are write-once, so per-dir schemas memoize)
-        # — the explicit-schema read skips the per-read footer job and
-        # fills predated columns with NULL exactly as mergeSchema does.
-        merged = _merged_commit_schema(paths)
-        if merged is not None:
-            return spark.read.schema(merged).parquet(*paths)
-        return spark.read.option("mergeSchema", "true").parquet(*paths)
+        return _read_dirs(spark, paths)
 
     def snapshot(self, spark: SparkSession, version: int | None = None) -> DataFrame:
         """Time travel: table state as of ``version`` (default latest)."""
@@ -497,14 +500,10 @@ class CdfVersionedTable:
         paths = [self._version_dir(v) for v in versions]
         if not paths:
             raise ValueError(f"no versions selected from {self.root}")
-        # mergeSchema, as in VersionedTable._read: additive evolution —
-        # the signed fold then groups old rows with NULL in the new
-        # columns, which is exactly the evolved multiset semantics.
-        # Same driver-side union-schema fast path as VersionedTable.
-        merged = _merged_commit_schema(paths)
-        if merged is not None:
-            return spark.read.schema(merged).parquet(*paths)
-        return spark.read.option("mergeSchema", "true").parquet(*paths)
+        # Additive evolution (see _read_dirs): the signed fold then
+        # groups old rows with NULL in the new columns, which is
+        # exactly the evolved multiset semantics.
+        return _read_dirs(spark, paths)
 
     def _change_kinds(self, spark: SparkSession, versions: list[int]) -> set:
         """Distinct ``_change_type`` tags across ``versions``. Memoized
@@ -685,15 +684,11 @@ class CdfVersionedTable:
             ins = self._read(spark, tail).drop(CHANGE_TYPE)
             if base_ck is None:
                 return ins
-            ck = spark.read.option("mergeSchema", "true").parquet(
-                self._ckpt_dir(base_ck)
-            )
+            ck = _read_dirs(spark, [self._ckpt_dir(base_ck)])
             return ck.unionByName(ins, allowMissingColumns=True)
         parts: list[DataFrame] = []
         if base_ck is not None:
-            ck = spark.read.option("mergeSchema", "true").parquet(
-                self._ckpt_dir(base_ck)
-            )
+            ck = _read_dirs(spark, [self._ckpt_dir(base_ck)])
             if not tail:
                 return ck  # the checkpoint IS the state as of `version`
             parts.append(ck.withColumn(SIGN, F.lit(1)))

@@ -110,19 +110,37 @@ def test_rejects_count_distinct(spark, tmp_path):
         )
 
 
-def test_rejects_null_grouping_key_in_batch(spark, tmp_path):
+def _files(path):
+    """(relative path, size, mtime) of every file under ``path``."""
+    import os
+
+    return sorted(
+        (os.path.relpath(os.path.join(d, f), path),
+         os.path.getsize(os.path.join(d, f)),
+         os.path.getmtime(os.path.join(d, f)))
+        for d, _, fs in os.walk(path)
+        for f in fs
+    )
+
+
+@pytest.mark.parametrize(
+    "partition_on", [None, ["k"]], ids=["unpartitioned", "partitioned"]
+)
+def test_rejects_null_grouping_key_in_batch(spark, tmp_path, partition_on):
     t0 = spark.createDataFrame([("a", 1)], "k: string, v: int")
+    path = str(tmp_path / "s")
     view = ContinuousAggregate(
-        spark,
-        str(tmp_path / "s"),
-        "SELECT k, sum(v) AS total FROM t GROUP BY k",
+        spark, path, "SELECT k, sum(v) AS total FROM t GROUP BY k",
+        partition_on=partition_on,
     )
     view.initialize(t0)
+    before = _files(path)
     bad = spark.createDataFrame([(None, 2)], "k: string, v: int")
     with pytest.raises(ValueError, match="NULL grouping key"):
         view.refresh(bad)
     # State unharmed by the rejected batch.
     assert [tuple(r) for r in view.read().collect()] == [("a", 1)]
+    assert _files(path) == before
 
 
 # -- retraction-capable refresh (signed / CDF batches) -----------------
@@ -266,6 +284,47 @@ def test_signed_minmax_duplicated_extremum_delete_is_exact(
     assert got == {"a": (2, 1.0)}
 
 
+def test_signed_insert_only_batch_reads_no_base(spark, tmp_path):
+    """The base is read when the batch retracts a row: over a plain
+    parquet base, a signed batch of inserts alone reads only the
+    stored state (one row per group), while one retraction reads the
+    base."""
+    rows = [(k, float(v)) for k in "abc" for v in range(200)]
+    base_path = str(tmp_path / "base")
+    spark.createDataFrame(rows, "k: string, v: double").write.parquet(
+        base_path
+    )
+    base = spark.read.parquet(base_path)
+    sql = (
+        "SELECT k, count(*) AS n, min(v) AS lo, max(v) AS hi "
+        "FROM t GROUP BY k"
+    )
+    view = ContinuousAggregate(spark, str(tmp_path / "state"), sql)
+    view.initialize(base)
+    inserts = _cdf(
+        spark.createDataFrame(
+            [("a", 500.0), ("d", 1.0)], "k: string, v: double"
+        ),
+        "insert",
+    )
+    read = _input_rows_in(
+        spark, "inserts", lambda: view.refresh_signed(inserts, base)
+    )
+    assert read == 3, read  # the three stored groups, no base row
+    retraction = _cdf(
+        spark.createDataFrame([("b", 7.0)], "k: string, v: double"), "delete"
+    )
+    read = _input_rows_in(
+        spark, "retraction", lambda: view.refresh_signed(retraction, base)
+    )
+    assert read >= len(rows), read
+    got = {r["k"]: (r["n"], r["lo"], r["hi"]) for r in view.read().collect()}
+    assert got == {
+        "a": (201, 0.0, 500.0), "b": (199, 0.0, 199.0),
+        "c": (200, 0.0, 199.0), "d": (1, 1.0, 1.0),
+    }
+
+
 def test_signed_refresh_sum_count_needs_no_base(spark, tmp_path):
     """Statements without min/max merge purely from signed partials —
     no base-table handle required."""
@@ -295,13 +354,20 @@ def test_signed_refresh_rejects_minmax_without_base(spark, tmp_path):
         view.refresh_signed(_cdf(orders.limit(1), "delete"))
 
 
-def test_signed_refresh_rejects_over_retraction(spark, tmp_path):
+@pytest.mark.parametrize(
+    "partition_on", [None, ["k"]], ids=["unpartitioned", "partitioned"]
+)
+def test_signed_refresh_rejects_over_retraction(
+    spark, tmp_path, partition_on
+):
     t0 = spark.createDataFrame([("a", 1)], "k: string, v: int")
+    path = str(tmp_path / "s")
     view = ContinuousAggregate(
-        spark, str(tmp_path / "s"),
-        "SELECT k, sum(v) AS total FROM t GROUP BY k",
+        spark, path, "SELECT k, sum(v) AS total FROM t GROUP BY k",
+        partition_on=partition_on,
     )
     view.initialize(t0)
+    before = _files(path)
     bad = spark.createDataFrame(
         [("a", 1, "delete"), ("a", 1, "delete")],
         "k: string, v: int, _change_type: string",
@@ -310,6 +376,7 @@ def test_signed_refresh_rejects_over_retraction(spark, tmp_path):
         view.refresh_signed(bad)
     # State unharmed by the rejected batch.
     assert [tuple(r) for r in view.read().collect()] == [("a", 1)]
+    assert _files(path) == before
 
 
 def test_batch_replay_is_idempotent(spark, tmp_path):
@@ -1480,9 +1547,9 @@ def test_read_real_time_merges_tail_without_touching_state(
 # -- per-refresh job budget (deterministic perf gate) ------------------
 
 
-def _jobs_in(spark, label, action):
-    """Spark jobs ``action`` starts, read back from the status tracker
-    under a fresh job group — host speed does not move this count."""
+def _in_group(spark, label, action):
+    """Run ``action`` under a fresh job group; return the group id once
+    the status store has seen every event of its jobs."""
     sc = spark.sparkContext
     gid = f"job-budget-{label}-{next(_JOB_GROUP_SEQ)}"
     sc.setJobGroup(gid, label)
@@ -1490,17 +1557,44 @@ def _jobs_in(spark, label, action):
         action()
     finally:
         sc._jsc.clearJobGroup()
-    return len(sc.statusTracker().getJobIdsForGroup(gid))
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return gid
+
+
+def _jobs_in(spark, label, action):
+    """Spark jobs ``action`` starts, read back from the status tracker
+    under a fresh job group — host speed does not move this count."""
+    gid = _in_group(spark, label, action)
+    return len(spark.sparkContext.statusTracker().getJobIdsForGroup(gid))
+
+
+def _input_rows_in(spark, label, action):
+    """Rows the stages of ``action``'s jobs read from files (a frame
+    built from local rows reads none)."""
+    sc = spark.sparkContext
+    gid = _in_group(spark, label, action)
+    tracker, store = sc.statusTracker(), sc._jsc.sc().statusStore()
+    rows = 0
+    for job in tracker.getJobIdsForGroup(gid):
+        for sid in tracker.getJobInfo(job).stageIds:
+            stage = store.lastStageAttempt(sid)
+            if str(stage.status()) != "SKIPPED":
+                rows += stage.inputRecords()
+    return rows
 
 
 _JOB_GROUP_SEQ = itertools.count()
 
 # Measured at SF_SMALL: a 3-tier cascade refresh and a single-tier
-# refresh of the same statement (sum, count, avg and a two-tier min).
-# Writing state as "replace the touched groups" took them from 81 and
-# 30 jobs; a count above the budget is a regression to explain.
-CASCADE3_REFRESH_JOBS = 30
-AGG_REFRESH_JOBS = 23
+# refresh of the same statement (sum, count, avg and a two-tier min)
+# under one CDF batch, and the single tier's insert refresh. Writing
+# state as "replace the touched groups" took the signed ones from 81
+# and 30 jobs to 30 and 23; folding each batch into the state in one
+# write took them to 13 and 8, and the insert refresh from 11 to 4. A
+# count above the budget is a regression to explain.
+CASCADE3_REFRESH_JOBS = 13
+AGG_REFRESH_JOBS = 8
+AGG_INSERT_REFRESH_JOBS = 4
 
 
 def _events_cdf_cycle(ev):
@@ -1568,8 +1662,25 @@ def test_refresh_signed_job_budget(spark, tmp_path):
     }
     assert hourly == expect
 
+    ins = ContinuousAggregate(spark, str(tmp_path / "ins"), CASCADE_SQL)
+    ins.initialize(s0)
+    n_ins = _jobs_in(
+        spark, "ins", lambda: ins.refresh(ev.where("event_id % 3 = 1"))
+    )
+    expect = {
+        (r["bucket_h"], r["event_type"]): (r["n"], r["m"])
+        for r in ev.where("event_id % 3 IN (0, 1)").groupBy(
+            F.date_trunc("hour", "ts").alias("bucket_h"), "event_type"
+        ).agg(F.count("*").alias("n"), F.min("value").alias("m")).collect()
+    }
+    assert {
+        (r["bucket_h"], r["event_type"]): (r["n_events"], r["min_value"])
+        for r in ins.read().collect()
+    } == expect
+
     assert n_cascade <= CASCADE3_REFRESH_JOBS, n_cascade
     assert n_agg <= AGG_REFRESH_JOBS, n_agg
+    assert n_ins <= AGG_INSERT_REFRESH_JOBS, n_ins
 
 
 # -- retention contract ------------------------------------------------

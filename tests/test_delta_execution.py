@@ -65,6 +65,19 @@ def test_compile_delta_refuses_unsupported(spark):
         compile_delta(PosDelta(PosDeltaScan(Scan("orders"))), cat)
 
 
+def test_compile_delta_takes_a_rewritten_plan_as_is(spark):
+    """A plan that already holds PosDeltaScan leaves compiles as it is:
+    rewriting it again would return the delta of its delta."""
+    from datafusion_delta_queries_spark.plans import rewrite_pos_delta
+    from datafusion_delta_queries_spark.plans.nodes import PosDelta
+
+    cat = DeltaCatalog(spark, SF_SMALL)
+    want = _multiset(compile_delta(_JOIN_IR, cat))
+    rewritten = rewrite_pos_delta(PosDelta(_JOIN_IR))
+    assert _multiset(compile_delta(rewritten, cat)) == want
+    assert len(want) == 365
+
+
 def test_agg_maintenance_identity_any_split(spark):
     """agg(T ∪ ΔT) == merge(agg(T), agg(ΔT)) for EVERY split of the
     input, not just the fixture's — the decomposable-aggregate identity

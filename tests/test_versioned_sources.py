@@ -390,6 +390,21 @@ def test_checkpointed_snapshot_reads_only_checkpoint_plus_tail(
     assert files1 and all("ckpt=00000001" in f for f in files1)
 
 
+def test_checkpointed_snapshot_frame_builds_without_a_job(
+    spark, three_version_log
+):
+    """The checkpoint is read under its footer schema: building the
+    snapshot frame of a checkpointed version starts no Spark job (a
+    mergeSchema read infers the schema with one)."""
+    from .test_state_store import _jobs
+
+    t = three_version_log
+    t.checkpoint(spark, 1)
+    frames = []
+    assert _jobs(spark, lambda: frames.append(t.snapshot(spark, 1))) == 0
+    assert _multiset(frames[0]) == [("b", 2), ("c", 3)]
+
+
 def test_vacuum_removes_covered_commits_and_guards_reads(
     spark, three_version_log
 ):
