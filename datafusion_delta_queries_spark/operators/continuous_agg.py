@@ -33,15 +33,16 @@ for the groups the batch retracts from, in the same plan.
 
 Every maintainer here keeps its state in a ``sources.state.StateStore``
 (schema-known reads, the initial write, replay markers, retention
-predicates). ``ContinuousAggregate`` and its subclasses write through
-the store's ``read_touched``/``rewrite`` pair, as above. The others
-(and the rollup cascade's coarse tiers) write through
-``StateStore.replace_touched``, as "replace the touched groups": the
-state becomes ``state ⋉̸ touched ∪ fresh``, where ``fresh`` holds the
-complete new rows of the touched groups. A group whose live row count
-reaches zero (a pair netted to zero, a day whose hours all died, a row
-displaced from a top-k) is touched and has no fresh row, so it leaves
-without a separate delete frame.
+predicates) and refreshes it in one write plan, through one of the
+store's two builders. ``ContinuousAggregate`` and its subclasses, the
+distinct-pair tables and the sketches fold: ``StateStore.fold``, as
+above. The top-k view and the rollup cascade's coarse tiers replace
+the touched groups: ``StateStore.replace`` makes the state ``state ⋉̸
+touched ∪ fresh``, where ``fresh`` holds the complete new rows of the
+touched groups. A group whose live row count reaches zero (a pair
+netted to zero, a day whose hours all died, a row displaced from a
+top-k) leaves without a separate delete frame: the fold's keep
+predicate drops it, or it is touched and has no fresh row.
 
 Every aggregate class here takes its expression lists from the one
 aggregate algebra (``plans.sql_frontend.AggAlgebra``) the
@@ -73,14 +74,14 @@ from ..plans.sql_frontend import (
     agg_pairs,
     parse_agg_sql,
 )
-from ..sources.state import StateStore
+from ..sources.state import StateStore, guarded
 
 # The refresh guards' messages, raised inside the write plan and again
 # as ValueError.
 _NULL_KEY_IN_DELTA = (
     "continuous aggregate: NULL grouping key in delta batch — a NULL-key "
-    "state row can never be replaced by a keyed upsert (coalesce the key "
-    "in the statement)"
+    "state row can never be matched by the fold (coalesce the key in the "
+    "statement)"
 )
 _NULL_KEY_IN_CHANGES = (
     "continuous aggregate: NULL grouping key in change batch"
@@ -88,6 +89,24 @@ _NULL_KEY_IN_CHANGES = (
 _OVER_RETRACTION = (
     "change batch retracts rows a group never had (negative live count) "
     "— refusing to corrupt the state"
+)
+_NO_BASE = (
+    "a retraction threatens a stored top-k row (its runner-up is not in "
+    "state) — pass base_new_df (the post-change base) for delta-scoped "
+    "recompute"
+)
+_DUPLICATE_ID = (
+    "top-k candidates hold one id twice in a group — a batch re-inserts "
+    "a row the state already holds; retract it first"
+)
+_NULL_PAIR = (
+    "continuous distinct aggregate: NULL grouping key or NULL DISTINCT "
+    "argument in the batch — NULL pairs cannot round-trip the fold's "
+    "key equality match"
+)
+_PAIR_OVER_RETRACTION = (
+    "change batch retracts (group, value) pairs it never had — refusing "
+    "to corrupt the state"
 )
 
 
@@ -314,11 +333,12 @@ class ContinuousAggregate:
         through, new groups enter, a group at zero live rows is
         filtered out and so leaves. With ``base_new_df`` (a signed
         batch carrying min/max), the groups the batch retracts from
-        recompute their extrema from it in the same plan. The NULL-key
-        and negative-count guards are ``raise_error`` inside the
-        written frame, so the refresh is one write action; a failed
-        write leaves the state as it was, and the guard's Spark error
-        is raised again as ``ValueError``.
+        recompute their extrema from it in the same plan, joined onto
+        the batch side. The NULL-key and negative-count guards are
+        ``raise_error`` inside the written frame (``StateStore.fold``),
+        so the refresh is one write action; a failed write leaves the
+        state as it was, and the guard's message is raised again as
+        ``ValueError``.
 
         Retention predicates filter the batch's groups first: a late
         row (or a retraction) aimed at a dropped window is covered by
@@ -326,23 +346,11 @@ class ContinuousAggregate:
         keys = self.spec["key_names"]
         mm = self.alg.minmax if base_new_df is not None else []
         delta = self._apply_retention(delta)
-        stored = self.store.read_touched(delta)
-        parts = [c for c in stored.columns if c not in keys]
-        s = stored.select(
-            *[stored[k] for k in keys],
-            *[stored[c].alias(f"__s{c}") for c in parts],
-        )
-        d = delta.select(
-            *[delta[k] for k in keys],
-            *[delta[c].alias(f"__d{c}") for c in parts],
-            *[a["del"] for a in mm],
-        )
-        joined = s.join(d, keys, "full")
         repaired = None
         if mm:
-            retracted = d.where(
+            retracted = delta.where(
                 " OR ".join(f"{a['del']} IS NOT NULL" for a in mm)
-            ).select(*[d[k] for k in keys])
+            ).select(*keys)
             base = base_new_df
             if self.spec["where"]:
                 base = base.where(self.spec["where"])
@@ -358,9 +366,9 @@ class ContinuousAggregate:
                 [a["partial"] for a in mm],
             )
             repaired = "__r"
-            joined = joined.join(
+            delta = delta.join(
                 recomputed.select(
-                    *[recomputed[k] for k in keys],
+                    *keys,
                     *[
                         recomputed[a["col"]].alias(f"__r{a['col']}")
                         for a in mm
@@ -369,27 +377,18 @@ class ContinuousAggregate:
                 keys,
                 "left",
             )
-        folded = joined.select(
-            *[joined[k] for k in keys],
-            *[F.expr(e) for e in self.alg.folded("__s", "__d", repaired)],
-        )
         null_key = None
         for k in keys:
-            c = folded[k].isNull()
+            c = F.col(k).isNull()
             null_key = c if null_key is None else null_key | c
         rows = F.col("_rows")
-        out = folded.where(
-            F.when(null_key, F.raise_error(F.lit(null_key_msg)))
-            .when(rows < 0, F.raise_error(F.lit(_OVER_RETRACTION)))
-            .otherwise(rows > 0)
-        ).select(*[folded[c] for c in stored.columns])
-        try:
-            self.store.rewrite(out, delta.select(*[delta[k] for k in keys]))
-        except Exception as e:
-            for msg in (null_key_msg, _OVER_RETRACTION):
-                if msg in str(e):
-                    raise ValueError(msg) from None
-            raise
+        self.store.fold(
+            delta,
+            keys,
+            self.alg.folded("__s", "__d", repaired),
+            keep=rows > 0,
+            guards=[(null_key, null_key_msg), (rows < 0, _OVER_RETRACTION)],
+        )
 
     def stream_into(self, source_dir: str, schema, checkpoint_dir: str):
         """Refresh this view continuously from a file-source stream.
@@ -776,21 +775,22 @@ class ContinuousDistinctAggregate:
     multiplicities, one state table per DISTINCT aggregate.
 
     Scalar distinct counts don't merge; pair multiplicities do — a
-    refresh touches only the batch's (keys, value) pairs through the
-    keyed upsert, ``read()`` derives counts as one row-count per group
+    refresh folds the batch's (keys, value) pair multiplicities into
+    the stored ones (``StateStore.fold``, one write per pair table),
+    ``read()`` derives counts as one row-count per group
     (the state is distinct by construction), and ``count(*)`` (the
     only other aggregate allowed in the statement) falls out for free
     as the first pair table's multiplicity sum. Signed/CDF batches
     net multiplicities: a pair retracted to zero leaves the table, a
     group losing its last pair vanishes, and net-negative
-    multiplicities are rejected loudly.
+    multiplicities fail the write loudly (a guard inside its plan).
 
     Exactness contract: the DISTINCT argument must be non-NULL on
     every WHERE-passing row (enforced at initialize/refresh — same
     loud-guard spirit as NULL grouping keys). Under that contract a
     group exists iff it owns at least one pair, which is exactly SQL
     GROUP BY liveness; NULL-tolerant counting would force sentinel
-    keys through the upsert's equality matching. At 100 TB the state
+    keys through the fold's equality matching. At 100 TB the state
     is one row per live (group, value) pair — the information-
     theoretic floor for EXACT distinct counting; the HLL sketch path
     (``delta_ndv_maintenance``) remains the bounded-state alternative.
@@ -832,50 +832,37 @@ class ContinuousDistinctAggregate:
     def _pairs_of(self, df: DataFrame, arg: str, weight: str) -> DataFrame:
         if self.spec["where"]:
             df = df.where(self.spec["where"])
-        keys = self.spec["key_names"]
-        pairs = agg_pairs(df, self._key_cols, arg, weight)
-        bad = " OR ".join(
-            [f"`{n}` IS NULL" for n in keys] + ["_v IS NULL"]
-        )
-        # One pass: the null guard rides the same frame the merge
-        # consumes (the count() below materializes batch-sized data).
-        if pairs.where(bad).limit(1).count():
-            raise ValueError(
-                "continuous distinct aggregate: NULL grouping key or "
-                "NULL DISTINCT argument in the batch — NULL pairs "
-                "cannot round-trip the keyed upsert's equality match"
-            )
-        return pairs
+        return agg_pairs(df, self._key_cols, arg, weight)
+
+    def _null_pair(self):
+        """The guard on a NULL grouping key or NULL DISTINCT argument,
+        raised inside the written frame."""
+        bad = None
+        for n in self.spec["key_names"] + ["_v"]:
+            c = F.col(n).isNull()
+            bad = c if bad is None else bad | c
+        return bad, _NULL_PAIR
 
     def initialize(self, base_df: DataFrame) -> None:
         for store, a in zip(self.stores, self.cds):
-            store.create(self._pairs_of(base_df, a["arg"], ROWS))
+            store.create(
+                guarded(
+                    self._pairs_of(base_df, a["arg"], ROWS),
+                    [self._null_pair()],
+                )
+            )
 
     def _merge(self, i: int, delta_pairs: DataFrame) -> None:
-        keys = self.spec["key_names"] + ["_v"]
-        stored = self.stores[i].read()
-        touched = stored.join(delta_pairs.select(*keys), keys, "left_semi")
-        merged = (
-            touched.unionByName(delta_pairs)
-            .groupBy(*keys)
-            .agg(F.sum("_m").alias("_m"))
-        ).persist()
-        try:
-            if merged.where("_m < 0").limit(1).count():
-                raise ValueError(
-                    "change batch retracts (group, value) pairs it "
-                    "never had — refusing to corrupt the state"
-                )
-            # Replace every touched pair: a pair netted to zero is
-            # touched with no fresh row, so it leaves the table.
-            self.stores[i].replace_touched(
-                merged.where("_m > 0"),
-                keys,
-                touched=merged.select(*keys),
-                assume_unique_keys=True,
-            )
-        finally:
-            merged.unpersist()
+        """Fold the batch's pair multiplicities into pair table ``i``:
+        a pair netted to zero leaves it."""
+        m = F.col("_m")
+        self.stores[i].fold(
+            delta_pairs,
+            self.spec["key_names"] + ["_v"],
+            ["coalesce(__s_m + __d_m, __s_m, __d_m) AS _m"],
+            keep=m > 0,
+            guards=[self._null_pair(), (m < 0, _PAIR_OVER_RETRACTION)],
+        )
 
     def refresh(self, delta_df: DataFrame) -> None:
         for i, a in enumerate(self.cds):
@@ -940,10 +927,14 @@ class ContinuousTopK:
     the stored boundary merge algebraically with zero base access.
 
     At 100 TB: state is k rows per group, refreshes are batch-sized
-    plus the threatened groups' base slice, and the keyed upsert
-    replaces only touched groups' rows (``touched`` is the group
-    columns, so displaced rows leave because their group is touched
-    and they are not re-written).
+    plus the threatened groups' base slice, and the write replaces
+    only touched groups' rows (``StateStore.replace`` with the group
+    columns as ``touched``, so displaced rows leave because their
+    group is touched and they are not re-written). The threat test,
+    the base recompute and the duplicate-id guard all sit inside the
+    one write plan: a threatened group with no ``base_new_df``, or an
+    id re-inserted while the state holds it, fails the write and
+    leaves the state as it was.
     """
 
     def __init__(
@@ -992,6 +983,20 @@ class ContinuousTopK:
     def initialize(self, base_df: DataFrame) -> None:
         self.store.create(self._rank(base_df))
 
+    def _replace(self, fresh: DataFrame, touched: DataFrame) -> None:
+        """Replace the touched groups with ``fresh``. ``touched`` holds
+        group columns only, so rows displaced from a group's top-k are
+        simply not re-written. ``fresh`` is ranked candidates, not a
+        groupBy output, so an id twice in one group (a batch
+        re-inserting a row the state holds) fails the write."""
+        from pyspark.sql import Window as W
+
+        ids = self.group_cols + self.id_cols
+        twice = F.count(F.lit(1)).over(W.partitionBy(*ids)) > 1
+        self.store.replace(
+            fresh, touched, ids, guards=[(twice, _DUPLICATE_ID)]
+        )
+
     def refresh(self, delta_df: DataFrame) -> None:
         stored = self.store.read()
         batch_top = self._rank(delta_df)
@@ -999,13 +1004,7 @@ class ContinuousTopK:
         cand = stored.join(
             F.broadcast(touched), self.group_cols, "left_semi"
         ).unionByName(batch_top.select(*stored.columns))
-        # ``touched`` holds group columns only: every stored row of a
-        # touched group leaves, so rows displaced from its top-k are
-        # simply not re-written.
-        self.store.replace_touched(
-            self._rank(cand), self.group_cols + self.id_cols,
-            touched=touched,
-        )
+        self._replace(self._rank(cand), touched)
 
     def refresh_signed(
         self, changes_df: DataFrame, base_new_df: DataFrame | None = None
@@ -1053,63 +1052,58 @@ class ContinuousTopK:
                 F.count("*").alias("_n"),
             )
         )
-        # Persist: the tiny per-group decision table feeds the threat
-        # probe, the recompute semi-join, the safe-tier filter, and
-        # the touched-union — unpinned, each action re-runs the
-        # stored-boundary aggregate and the delete probe.
-        dec = probe.join(bound, gcols, "left").persist()
-        try:
-            cmp_op = ">=" if self.descending else "<="
-            unsafe_cond = (
-                f"_dnull OR _kth IS NULL OR _n < {self.k} OR _dv {cmp_op} _kth"
+        dec = probe.join(bound, gcols, "left")
+        cmp_op = ">=" if self.descending else "<="
+        unsafe_cond = (
+            f"_dnull OR _kth IS NULL OR _n < {self.k} OR _dv {cmp_op} _kth"
+        )
+        unsafe = dec.where(unsafe_cond).select(*gcols)
+        # THREATENED tier: recompute from the post-change base, planned
+        # beside the safe tier (a batch threatening no group reads an
+        # empty semi join). With no base, a threatened group's row
+        # raises inside the write.
+        if base_new_df is None:
+            fail = F.raise_error(F.lit(_NO_BASE))
+            fresh_unsafe = unsafe.select(
+                *gcols,
+                *[
+                    fail.cast(f.dataType).alias(f.name)
+                    for f in stored.schema
+                    if f.name not in gcols
+                ],
             )
-            unsafe = dec.where(unsafe_cond).select(*gcols)
-            if unsafe.limit(1).count():
-                if base_new_df is None:
-                    raise ValueError(
-                        "a retraction threatens a stored top-k row (its "
-                        "runner-up is not in state) — pass base_new_df "
-                        "(the post-change base) for delta-scoped recompute"
-                    )
-                fresh_unsafe = self._rank(
-                    base_new_df.join(F.broadcast(unsafe), gcols, "left_semi")
-                )
-            else:
-                fresh_unsafe = None
+        else:
+            fresh_unsafe = self._rank(
+                base_new_df.join(F.broadcast(unsafe), gcols, "left_semi")
+            )
 
-            # SAFE tier: groups whose retractions all rank strictly below
-            # the stored boundary (their rows are not in state) merge like
-            # an insert batch; groups touched only by inserts likewise.
-            ins_top = self._rank(ins)
-            safe_touch = (
-                ins_top.select(*gcols)
-                .unionByName(dec.where(f"NOT ({unsafe_cond})").select(*gcols))
-                .distinct()
-                .join(unsafe, gcols, "left_anti")
-            )
-            # Both candidate components restricted to SAFE groups — an
-            # unsafe group's inserts are already covered by its base
-            # recompute, and letting them leak in here would emit a second
-            # (stale) top-k for that group.
-            safe_cand = stored.join(
+        # SAFE tier: groups whose retractions all rank strictly below
+        # the stored boundary (their rows are not in state) merge like
+        # an insert batch; groups touched only by inserts likewise.
+        ins_top = self._rank(ins)
+        safe_touch = (
+            ins_top.select(*gcols)
+            .unionByName(dec.where(f"NOT ({unsafe_cond})").select(*gcols))
+            .distinct()
+            .join(unsafe, gcols, "left_anti")
+        )
+        # Both candidate components restricted to SAFE groups — an
+        # unsafe group's inserts are already covered by its base
+        # recompute, and letting them leak in here would emit a second
+        # (stale) top-k for that group.
+        safe_cand = stored.join(
+            F.broadcast(safe_touch), gcols, "left_semi"
+        ).unionByName(
+            ins_top.select(*stored.columns).join(
                 F.broadcast(safe_touch), gcols, "left_semi"
-            ).unionByName(
-                ins_top.select(*stored.columns).join(
-                    F.broadcast(safe_touch), gcols, "left_semi"
-                )
             )
-            fresh_safe = self._rank(safe_cand)
-
-            fresh = (
-                fresh_safe if fresh_unsafe is None
-                else fresh_safe.unionByName(fresh_unsafe.select(*stored.columns))
-            )
-            self.store.replace_touched(
-                fresh, gcols + self.id_cols,
-                touched=safe_touch.unionByName(unsafe),
-            )
-        finally:
-            dec.unpersist()
+        )
+        self._replace(
+            self._rank(safe_cand).unionByName(
+                fresh_unsafe.select(*stored.columns)
+            ),
+            safe_touch.unionByName(unsafe),
+        )
 
     def read(self) -> DataFrame:
         return self.store.read()
@@ -1354,7 +1348,7 @@ class ContinuousRollupCascade:
         BEFORE the re-aggregation). A touched group with no surviving
         finer rows has no row here. No base-table scan anywhere — that
         is the cascade invariant the plan audit pins, on the write
-        plan ``sinks.replace_touched`` builds from this frame."""
+        plan ``StateStore.replace`` builds from this frame."""
         lvl = self.levels[level]
         prev_state = (
             self.fine.store if level == 0 else self.levels[level - 1]["store"]
@@ -1369,15 +1363,13 @@ class ContinuousRollupCascade:
     def _repair(self, touched_c: DataFrame, level: int = 0) -> None:
         """Replace every touched group at one level from the (already
         refreshed) previous tier: the write is ``level ⋉̸ touched ∪
-        fresh``, so a group whose finer rows all died leaves because it
-        is touched and has no fresh row. Work ∝ touched groups ×
-        fan-in, in one write plan with no pinned frame. ``fresh`` is
-        key-unique by construction (a groupBy output), so the upsert's
-        duplicate-key guard job is skipped."""
+        fresh`` (``StateStore.replace``), so a group whose finer rows
+        all died leaves because it is touched and has no fresh row.
+        Work ∝ touched groups × fan-in, in one write plan with no
+        pinned frame."""
         lvl = self.levels[level]
-        lvl["store"].replace_touched(
-            self._repair_plan(touched_c, level),
-            lvl["keys"], touched=touched_c, assume_unique_keys=True,
+        lvl["store"].replace(
+            self._repair_plan(touched_c, level), touched_c, lvl["keys"]
         )
 
     def _repair_chain(self, touched: list[DataFrame]) -> None:

@@ -1499,8 +1499,9 @@ def q_sql_merge_into_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Partition-pruned MERGE INTO: the target is directory-partitioned
     by ``o_orderstatus`` and the change batch only carries status-'F'
     rows, so ``execute_merge(partition_cols=["o_orderstatus"])``
-    rewrites exactly the F directory through the same dynamic-
-    partition-overwrite tail ``upsert_partitioned`` uses. The query
+    rewrites exactly the F directory through the partition-level
+    commit partitioned maintained state uses
+    (``sinks.overwrite_touched_partitions``). The query
     AUDITS the claim in-line — every file of the untouched status
     directories is hashed before and after the merge and any byte
     difference raises — then returns the merged state for the oracle's

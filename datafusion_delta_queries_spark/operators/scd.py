@@ -24,9 +24,9 @@ SURVEY §2.3 "beyond the reference" capability.
   batch's key set is broadcast, history passes through a broadcast
   anti join untouched (zero shuffle of the big side), and the interval
   rebuild windows over touched keys only — work ∝ |Δ| × versions/key,
-  never a history rescan. Store the history partitioned/bucketed by
-  key and the upsert inherits sinks.upsert_partitioned's
-  touched-dirs-only write.
+  never a history rescan. With ``Scd2Table(n_buckets=…)`` the history
+  is bucketed by key and a batch rewrites only the bucket directories
+  it touches (``StateStore.rewrite`` of partitioned state).
 - ``point_in_time_join`` is an equi join on the key with the interval
   predicate as a residual: it shuffles on the key exactly like any
   fact-dim join (broadcastable when the dim is), and the residual
@@ -41,7 +41,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..catalog import load_table
-from ..sources.sinks import overwrite_touched_partitions, staged_swap
 from ..sources.state import StateStore
 
 HIGH_TS = "9999-12-31 00:00:00"
@@ -502,9 +501,9 @@ class Scd2Table:
     ONLY the buckets its keys land in: the state read prunes to those
     directories at run time (a broadcast semi join on the partition
     column), and the rebuilt slice commits through
-    ``sources.sinks.overwrite_touched_partitions`` — written once to a
-    sibling dir (a failed rebuild leaves the table intact), then each
-    bucket dir renamed in, the tail ``upsert_partitioned`` uses.
+    ``StateStore.rewrite`` — written once to a sibling dir (a failed
+    rebuild leaves the table intact), then each bucket dir renamed
+    in, the tail every partitioned state refresh uses.
     Untouched buckets' bytes are never rewritten (test-pinned). Bucket
     dirs never empty (deletes close intervals, they do not remove
     rows). On a lakehouse table the swap is ``MERGE INTO`` on the key.
@@ -564,11 +563,8 @@ class Scd2Table:
                 "effective_ts, op) rows — deduplicate the CDC feed"
             )
         if self.n_buckets is None:
-            new_hist = scd2_apply(
-                self.read(), changes, self.keys, self.tracked
-            )
-            staged_swap(
-                self.state_path, lambda p: new_hist.write.parquet(p)
+            self.store.rewrite(
+                scd2_apply(self.read(), changes, self.keys, self.tracked)
             )
             return
         # Touched buckets never leave the executors: the state read is
@@ -599,10 +595,7 @@ class Scd2Table:
         # held no rows, stay absent. Buckets never shrink to empty
         # otherwise (closed versions persist).
         rebuilt = scd2_apply(sliced, changes, self.keys, self.tracked)
-        overwrite_touched_partitions(
-            self.spark, self.state_path, self._with_bucket(rebuilt),
-            [self._KB], touched_kb,
-        )
+        self.store.rewrite(self._with_bucket(rebuilt), touched_kb)
 
     def stream_cdc(self, source_dir: str, schema, checkpoint_dir: str):
         """Apply CDC files as they arrive; ``availableNow`` drains and

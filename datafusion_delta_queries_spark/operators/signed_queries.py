@@ -3646,7 +3646,7 @@ def _signed_funnel_oracle() -> str:
 # the signed refresh incl. the delta-scoped min repair, and return
 # read() from the PERSISTED state. The oracle is the plain GROUP BY
 # over the post-change join, so a green row certifies the whole loop:
-# parse → fragment compile → signed partial merge → keyed upsert →
+# parse → fragment compile → signed partial fold → one state write →
 # final derivation. A fresh temp state dir per invocation keeps the
 # query idempotent (the driver may run it repeatedly); all state dirs
 # live under ONE atexit-cleaned root, and each call prunes all but
@@ -3855,7 +3855,7 @@ def q_continuous_rollup_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
     never reads raw events. The oracle is the direct daily GROUP BY
     over the post-change events, so a green row certifies the whole
     two-tier chain: signed hourly merge → touched-day re-aggregation →
-    keyed upsert → finals."""
+    touched-day replace → finals."""
     from .continuous_agg import ContinuousRollupCascade
 
     cat = SignedDeltaCatalog(spark, sf_dir)

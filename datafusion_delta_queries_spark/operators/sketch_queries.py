@@ -286,7 +286,7 @@ def queries_and_oracles():
         "sketch_cms_heavy_hitters": ORACLE_SKETCH_CMS_HEAVY_HITTERS,
         # signed merge must land on the post-change rebuild exactly
         "signed_cms_maintenance": _signed_cms_oracle(),
-        # the stored loop (upsert only touched counters) lands there too
+        # the stored loop (the batch's counters folded in) lands there too
         "signed_continuous_cms": _signed_cms_oracle(),
         "sketch_hll_sliding_window": ORACLE_SKETCH_HLL_SLIDING,
     }
@@ -384,17 +384,19 @@ FROM stats s LEFT JOIN exact USING (g1, g2)
 
 # ---------------------------------------------------------------------------
 # Stored continuous HLL: the register table as on-disk state, refreshed
-# through the keyed upsert with only the registers a batch RAISES.
+# by folding the batch's registers in with ``greatest``.
 # ---------------------------------------------------------------------------
 
 
 class ContinuousHllNdv:
     """A stored approximate-NDV view: state is the portable register
     table (≤ 256 rows per group at any scale), a refresh hashes ONLY
-    the delta batch and upserts ONLY the registers the batch raised
-    (max is monotone — an unraised register is byte-for-byte
-    unchanged, so the merge input is at most |batch registers| rows),
-    and ``read_summary()`` derives the oracle-exact integer summary.
+    the delta batch and folds its registers into the state with
+    ``greatest`` in one write (``StateStore.fold``; max is monotone,
+    so a register the batch does not raise keeps its value), and
+    ``read_summary()`` derives the oracle-exact integer summary. A
+    batch that raises no register skips the write: the state files
+    stay byte-identical.
 
     The sketch sibling of ``operators/continuous_agg.ContinuousAggregate``:
     same state-table discipline, but the partial is a fixed-size
@@ -427,27 +429,15 @@ class ContinuousHllNdv:
         batch_regs = hll_portable_registers(
             batch, self.group_cols, self.value_col
         )
-        state = self.store.read()
         on = [*self.group_cols, "bucket"]
-        # Persist: the raised-registers plan (batch hash + state join)
-        # feeds the no-op probe, the upsert's duplicate-key guard, and
-        # the merge itself — unpinned it would run three times.
-        raised = (
-            batch_regs.alias("b")
-            .join(state.alias("s"), on, "left")
-            .where(F.col("s.rho").isNull() | (F.col("b.rho") > F.col("s.rho")))
-            .select(*on, F.col("b.rho").alias("rho"))
-            .persist()
-        )
-        try:
-            # Keyed MERGE: on a lakehouse table this touches only the
-            # files holding raised registers; plain parquet rewrites
-            # the (tiny) state table. No-op batches skip the write.
-            if raised.limit(1).count() == 0:
-                return
-            self.store.replace_touched(raised, on)
-        finally:
-            raised.unpersist()
+        # A batch that raises no register leaves the state files as
+        # they are: one probe on the batch side, no write.
+        state = self.store.read().withColumnRenamed("rho", "_s")
+        if batch_regs.join(state, on, "left").where(
+            "_s IS NULL OR rho > _s"
+        ).isEmpty():
+            return
+        self.store.fold(batch_regs, on, ["greatest(__srho, __drho) AS rho"])
 
     def read_summary(self) -> DataFrame:
         return hll_summary(self.store.read(), self.group_cols)
@@ -455,11 +445,11 @@ class ContinuousHllNdv:
 
 def q_continuous_hll_ndv(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The stored-lifecycle sibling of ``delta_hll_maintenance``:
-    initialize the register state table from the old snapshot, refresh
-    it with the delta batch through the keyed upsert (raised registers
-    only), read the summary back from disk. The oracle computes the
-    full-table summary — the green row proves the stored lifecycle
-    lands on the rebuild exactly."""
+    initialize the register state table from the old snapshot, fold
+    the delta batch's registers into it (one write), read the summary
+    back from disk. The oracle computes the full-table summary — the
+    green row proves the stored lifecycle lands on the rebuild
+    exactly."""
     import os
 
     from .signed_queries import _cagg_state_dir
@@ -484,6 +474,7 @@ ORACLE_CONTINUOUS_HLL_NDV = ORACLE_DELTA_HLL_MAINTENANCE
 # ---------------------------------------------------------------------------
 
 _CMS_HEX = "0123456789abcdef"
+_CMS_BELOW_ZERO = "corrupt CMS history: counter retracted below zero"
 
 
 def _cms_bucket_sql(j_expr: str, v_expr: str) -> str:
@@ -587,18 +578,19 @@ GROUP BY 1, 2
 
 # ---------------------------------------------------------------------------
 # Stored continuous CMS: the counter table as on-disk state, refreshed
-# with SIGNED deltas through the keyed upsert — the retraction-capable
-# sibling of ContinuousHllNdv (whose max-registers can only grow).
+# by folding SIGNED counter deltas in — the retraction-capable sibling
+# of ContinuousHllNdv (whose max-registers can only grow).
 # ---------------------------------------------------------------------------
 
 
 class ContinuousCms:
     """A stored frequency-sketch view: state is the CMS counter table
     (≤ CMS_D × CMS_W rows per group at any scale), a signed refresh
-    hashes ONLY the change batch and upserts ONLY the (row, bucket)
-    counters the batch touches — counters netting to zero LEAVE the
-    table (touched with no fresh row), a counter driven negative
-    fails inside the plan, and untouched counters are never written.
+    hashes ONLY the change batch and folds its signed (row, bucket)
+    counters into the state by sum in one write (``StateStore.fold``)
+    — counters netting to zero LEAVE the table, a counter driven
+    negative fails inside the plan and leaves the state as it was,
+    and an empty batch writes nothing.
     Insert-only feeds degenerate to pure counter adds; CDC feeds with
     deletes/updates stay exact because counters are linear — the
     property the HLL lifecycle structurally lacks.
@@ -636,42 +628,20 @@ class ContinuousCms:
         delta = cms_counters(
             signed_batch, self.group_cols, self.value_col, weight=F.col(SIGN)
         )
-        state = self.store.read()
-        # Net only the touched counters; everything else stays on disk
-        # untouched. Persist: the netted plan feeds the no-op probe and
-        # the write, which reads it twice (nonzero counters, touched
-        # keys).
-        netted = (
-            delta.alias("d")
-            .join(state.alias("s"), self._keys, "left")
-            .select(
-                *self._keys,
-                (
-                    F.coalesce(F.col("s.cnt"), F.lit(0).cast("bigint"))
-                    + F.col("d.cnt")
-                )
-                .cast("bigint")
-                .alias("cnt"),
-            )
-            .where(
-                "CASE WHEN cnt < 0 THEN CAST(raise_error("
-                "'corrupt CMS history: counter retracted below zero') "
-                "AS BOOLEAN) ELSE TRUE END"
-            )
-            .persist()
+        # An empty batch leaves the state files as they are.
+        if delta.isEmpty():
+            return
+        cnt = F.col("cnt")
+        self.store.fold(
+            delta,
+            self._keys,
+            [
+                "CAST(coalesce(__scnt + __dcnt, __scnt, __dcnt) AS BIGINT)"
+                " AS cnt"
+            ],
+            keep=cnt != 0,
+            guards=[(cnt < 0, _CMS_BELOW_ZERO)],
         )
-        try:
-            if netted.limit(1).count() == 0:
-                return
-            # Replace every touched counter: one netted to zero is
-            # touched with no fresh row, so it leaves the table.
-            self.store.replace_touched(
-                netted.where("cnt <> 0"),
-                self._keys,
-                touched=netted.select(*self._keys),
-            )
-        finally:
-            netted.unpersist()
 
     def read_counters(self) -> DataFrame:
         return self.store.read()
@@ -687,9 +657,8 @@ class ContinuousCms:
 def q_signed_continuous_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The stored-lifecycle sibling of ``signed_cms_maintenance``:
     initialize the counter state table from the old orders snapshot,
-    apply ONE signed CDF batch through the keyed upsert (only touched
-    counters written; zero-netting counters deleted), read the
-    counters back from disk. The oracle builds the counters over the
+    fold ONE signed CDF batch's counters into it (zero-netting
+    counters deleted), read the counters back from disk. The oracle builds the counters over the
     post-change table — a green row certifies the whole stored loop
     lands on the rebuild exactly."""
     import os

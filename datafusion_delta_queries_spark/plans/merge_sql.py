@@ -23,9 +23,10 @@ Semantics follow Delta exactly where it is strict:
 Execution is one declarative plan over (target ⟕ source): survivors
 (anti join), clause-routed matched rows, and not-matched inserts,
 unioned and swapped in via the same staged write discipline as
-``sources/sinks.upsert`` — on a transactional lakehouse this is the
-native MERGE; on plain parquet the table rewrites atomically-enough
-via staging. The reference has no DML surface at all.
+maintained state (``sources/sinks.staged_swap``) — on a
+transactional lakehouse this is the native MERGE; on plain parquet
+the table rewrites atomically-enough via staging. The reference has
+no DML surface at all.
 """
 
 from __future__ import annotations
@@ -181,17 +182,17 @@ def execute_merge(
     With ``partition_cols`` (a directory-PARTITIONED target), the
     write rewrites ONLY the partitions the batch touches — old
     partitions of matched rows plus destination partitions of updated
-    and inserted rows — through the same partition-level commit
-    ``sources.sinks.upsert_partitioned`` uses
-    (``overwrite_touched_partitions``). Untouched partition
-    directories are never opened for write: at 100 TB a MERGE whose
-    source batch touches 3 of 10,000 date partitions costs 3
-    directory rewrites, not a full-table copy. Touched partition
-    values are collected on the driver (low-cardinality by the same
-    argument as ``upsert_partitioned``). Partition-column types come
-    from Spark's path inference on read — for string partition keys
-    with numeric-looking values use ``upsert_partitioned``, which
-    pins types from the batch schema.
+    and inserted rows — through the partition-level commit of
+    partitioned maintained state
+    (``sources.sinks.overwrite_touched_partitions``). Untouched
+    partition directories are never opened for write: at 100 TB a
+    MERGE whose source batch touches 3 of 10,000 date partitions costs
+    3 directory rewrites, not a full-table copy. Touched partition
+    values are collected on the driver (one tuple per touched
+    partition). Partition-column types come from Spark's path
+    inference on read, so a string partition key with numeric-looking
+    values comes back as a number; a ``sources.state.StateStore``
+    table keeps the types it wrote and has no such trap.
 
     Without ``partition_cols`` the rewrite is the whole-table staged
     swap: a failure while computing leaves the table untouched.

@@ -17,9 +17,9 @@ alone can't carry bucket metadata.
 Rewrites of an existing table write their data once, to a sibling
 ``*.__staging__`` dir, and rename it in: ``staged_swap`` swaps the
 whole table, ``overwrite_touched_partitions`` each touched partition
-directory. ``upsert`` and ``upsert_partitioned`` are the keyed merge
-("replace the touched keys") on top of them; maintained state reaches
-them through ``sources.state.StateStore``.
+directory. Maintained state reaches them through
+``sources.state.StateStore.rewrite``; the pruned MERGE / UPDATE /
+DELETE executors in ``plans.merge_sql`` call them directly.
 """
 
 from __future__ import annotations
@@ -39,19 +39,6 @@ def first_part_file(d: str) -> str | None:
         if not name.startswith(("_", ".")) and name.endswith(".parquet"):
             return os.path.join(d, name)
     return None
-
-
-def _footer_columns(path: str) -> list[str] | None:
-    """Column names from the footer of a parquet table directory — a
-    driver-side metadata read, no Spark job. None when there is no
-    readable part file."""
-    import pyarrow.parquet as pq
-
-    try:
-        part = first_part_file(path)
-        return None if part is None else pq.read_schema(part).names
-    except (OSError, ValueError):
-        return None
 
 
 def write_partitioned(
@@ -155,125 +142,6 @@ def staged_swap(target_path: str, write) -> None:
     shutil.rmtree(retired, ignore_errors=True)
 
 
-def _touched_frame(
-    updates: DataFrame,
-    key_cols: list[str],
-    touched: DataFrame | None,
-    fn: str = "upsert",
-) -> DataFrame:
-    """The key frame a merge replaces: ``touched`` as given, or the
-    keys of ``updates`` when it is None. ``touched`` may name any
-    subset of ``key_cols`` — a group-level frame replaces every stored
-    row of each group it holds — but no other column."""
-    if touched is None:
-        return updates.select(*key_cols)
-    extra = [c for c in touched.columns if c not in key_cols]
-    if extra or not touched.columns:
-        raise ValueError(
-            f"{fn}(): touched columns {touched.columns} must be a "
-            f"non-empty subset of the merge key {key_cols}"
-        )
-    return touched
-
-
-def replace_touched(
-    target: DataFrame, updates: DataFrame, touched: DataFrame
-) -> DataFrame:
-    """``target ⋉̸ touched ∪ updates``: every target row whose key (on
-    ``touched``'s columns) is touched leaves, and ``updates`` is the
-    complete new content of the touched keys. One anti join; a touched
-    key with no row in ``updates`` is thereby deleted."""
-    return target.join(touched, touched.columns, "left_anti").unionByName(
-        updates
-    )
-
-
-def upsert(
-    spark: SparkSession,
-    target_path: str,
-    updates: DataFrame,
-    key_cols: list[str],
-    fmt: str = "parquet",
-    touched: DataFrame | None = None,
-    assume_unique_keys: bool = False,
-) -> None:
-    """Keyed MERGE into a file-backed table as "replace the touched
-    keys": the table becomes ``target ⋉̸ touched ∪ updates``.
-    ``touched`` is a key frame whose columns are a subset of
-    ``key_cols`` and defaults to the keys of ``updates`` — the plain
-    upsert: matched keys replaced, new keys appended, all other rows
-    unchanged. A caller that also removes keys passes them in
-    ``touched`` with no row in ``updates`` (``MERGE INTO … WHEN
-    MATCHED DELETE``, which retraction-capable maintenance needs: a
-    group whose count reaches zero must leave the state table). A
-    ``touched`` frame over a key prefix (e.g. the group columns of a
-    top-k view) replaces whole groups.
-
-    Precondition: ``touched`` covers every key in ``updates``. A key
-    in ``updates`` that ``touched`` misses keeps its old row beside
-    the new one; nothing checks this (it would cost a job per merge),
-    and every caller builds ``updates`` from its touched set.
-
-    The plan is the canonical merge-without-transaction-log rewrite:
-    target LEFT ANTI JOIN touched on its columns (one shuffle or
-    broadcast; survivors), UNION ALL updates, full overwrite. On a
-    transactional lakehouse table this is ``MERGE INTO`` and rewrites
-    only the files that contain matched keys; with plain parquet the
-    whole table rewrites, so at 100 TB run it per partition directory
-    (``upsert_partitioned``). Duplicate keys in ``updates`` are
-    rejected: last-writer-wins would depend on partition order, and a
-    silent nondeterministic merge is worse than an error. A batch
-    whose column set differs from the target's is rejected too: the
-    merge would drop the columns it lacks, or NULL-fill the ones it
-    adds, for every surviving row.
-
-    ``assume_unique_keys=True`` skips the duplicate-key guard's Spark
-    job — ONLY for callers whose ``updates`` frame is key-unique by
-    construction (the output of a ``groupBy(*key_cols)``, as every
-    continuous-aggregate refresh is). Each skipped guard is one fewer
-    job per refresh; in a per-batch maintenance loop that overhead
-    dominates the actual merge.
-    """
-    touched = _touched_frame(updates, key_cols, touched)
-    if not assume_unique_keys:
-        dup = (
-            updates.groupBy(*key_cols)
-            .count()
-            .where("count > 1")
-            .limit(1)
-            .count()
-        )
-        if dup:
-            raise ValueError(
-                f"upsert(): updates contain duplicate keys on {key_cols}; "
-                "deduplicate (e.g. keep latest by version column) before "
-                "merging"
-            )
-    # Explicit schema: a merge requires identical schemas anyway, and
-    # schema inference on every state read costs a footer-read job
-    # (~0.3 s per read at any scale; a catalogued production table
-    # serves its schema from metadata the same way). For the same
-    # reason the column-set check reads the target's footer (no job);
-    # the inferred read is only its fallback.
-    on_disk = _footer_columns(target_path) if fmt == "parquet" else None
-    if on_disk is None:
-        on_disk = spark.read.format(fmt).load(target_path).columns
-    if set(on_disk) != set(updates.columns):
-        raise ValueError(
-            f"upsert(): updates columns {sorted(updates.columns)} differ "
-            f"from the target's {sorted(on_disk)} at {target_path}; align "
-            f"the batch to the table schema first"
-        )
-    target = spark.read.format(fmt).schema(updates.schema).load(target_path)
-    merged = replace_touched(target, updates, touched)
-    # The scan and the write never touch the same directory, so no
-    # checkpoint materialization is needed.
-    staged_swap(
-        target_path,
-        lambda p: merged.write.format(fmt).mode("overwrite").save(p),
-    )
-
-
 # Characters Hive/Spark percent-escape when writing a partition value
 # into a directory name (ExternalCatalogUtils.escapePathName): ASCII
 # controls plus the path/metadata specials below.
@@ -348,125 +216,6 @@ def prune_to_touched(
     return df.join(F.broadcast(t), cond, "left_semi")
 
 
-def upsert_partitioned(
-    spark: SparkSession,
-    target_path: str,
-    updates: DataFrame,
-    key_cols: list[str],
-    partition_cols: list[str],
-    fmt: str = "parquet",
-    touched: DataFrame | None = None,
-    assume_unique_keys: bool = False,
-) -> None:
-    """Keyed MERGE into a directory-PARTITIONED table that rewrites
-    only the partitions the batch touches — the 100 TB answer to plain
-    ``upsert``'s whole-table rewrite (its own docstring says "run it
-    per partition directory"; this function is that, automated). The
-    merge is the same "replace the touched keys" as ``upsert``:
-    ``target ⋉̸ touched ∪ updates``, with ``touched`` defaulting to
-    the keys of ``updates``. The same precondition holds — ``touched``
-    covers every key in ``updates`` — and here it also keeps every
-    partition ``updates`` writes inside the touched set. ``touched``
-    must carry every partition column.
-
-    Mechanics: the touched partition values of ``touched`` stay a
-    DataFrame; the target read PRUNES to the touched directories
-    through a broadcast semi join (planned as a
-    ``dynamicpruningexpression`` on the scan — runtime directory
-    pruning, no driver-side partition list); the merge runs on that
-    slice only; ``overwrite_touched_partitions`` writes the slice once
-    and renames each of its partition directories in. A touched
-    partition whose rows are ALL removed produces no output rows —
-    those emptied directories are removed explicitly.
-
-    ``partition_cols`` must be a subset of ``key_cols``: if the
-    partition value were mutable, an update "moving" a key between
-    partitions would strand the old copy in an untouched directory the
-    pruned merge never reads. Making the partition part of the key
-    rules that out by construction (the continuous-aggregate state
-    tables — grouping keys = merge keys — satisfy this naturally).
-
-    Partition values round-trip through DIRECTORY NAMES, which has two
-    traps this function closes explicitly. (1) Type re-inference: Spark
-    re-infers partition-column types from the path on read, so a STRING
-    key with numeric-looking values (``'01'``) would silently come back
-    as ``int 1`` — rows migrate partitions. The target is therefore
-    read with the batch's explicit schema (a merge requires identical
-    schemas anyway), which disables inference for exactly these
-    columns — ``'01'`` stays the string ``'01'``. (2) Escaping: Spark
-    percent-escapes special characters in directory names on write, so
-    the emptied-partition cleanup builds its ``col=value`` paths
-    through the same escaping (``_escape_path_name``) rather than
-    literally. The commit's failure window is per partition (see
-    ``overwrite_touched_partitions``).
-    """
-    missing = [c for c in partition_cols if c not in key_cols]
-    if missing:
-        raise ValueError(
-            f"upsert_partitioned(): partition columns {missing} are not "
-            "part of the merge key — a key changing its partition value "
-            "would strand its old copy in a directory the pruned merge "
-            "never reads. Partition on key columns (or use upsert())."
-        )
-    touched = _touched_frame(
-        updates, key_cols, touched, "upsert_partitioned"
-    )
-    unpruned = [c for c in partition_cols if c not in touched.columns]
-    if unpruned:
-        raise ValueError(
-            f"upsert_partitioned(): touched lacks partition columns "
-            f"{unpruned} — the merge could not tell which directories "
-            "it rewrites"
-        )
-    if not assume_unique_keys:
-        dup = (
-            updates.groupBy(*key_cols)
-            .count()
-            .where("count > 1")
-            .limit(1)
-            .count()
-        )
-        if dup:
-            raise ValueError(
-                f"upsert_partitioned(): updates contain duplicate keys on "
-                f"{key_cols}; deduplicate before merging"
-            )
-    # The touched set stays a (persisted, partition-count-sized)
-    # DataFrame end to end: a one-row stats aggregate guards NULLs and
-    # emptiness, the target scan prunes through a broadcast semi join
-    # (runtime directory pruning), and the only partition tuples the
-    # driver ever receives are the final emptied-directory rm list
-    # inside overwrite_touched_partitions.
-    tdf = touched.select(*partition_cols).distinct().persist()
-    try:
-        n, n_null = _touched_stats(tdf, partition_cols)
-        if n_null:
-            raise ValueError(
-                "upsert_partitioned(): NULL partition value in the "
-                "batch — NULL keys land in the "
-                "__HIVE_DEFAULT_PARTITION__ directory and cannot be "
-                "matched by a keyed merge"
-            )
-        if n == 0:
-            return  # empty batch: nothing to merge, nothing to rewrite
-
-        # Explicit schema: partition-column types come from the batch,
-        # not from Spark's path-based partitionColumnTypeInference — a
-        # string key with numeric-looking values must NOT come back as
-        # int.
-        target = spark.read.format(fmt).schema(updates.schema).load(
-            target_path
-        )
-        sliced = prune_to_touched(target, tdf, partition_cols)
-        merged = replace_touched(sliced, updates, touched)
-
-        overwrite_touched_partitions(
-            spark, target_path, merged, partition_cols, tdf, fmt
-        )
-    finally:
-        tdf.unpersist()
-
-
 def _partition_leaves(root: str, depth: int) -> list[str]:
     """Relative paths of the ``col=value`` directories ``depth`` levels
     under ``root`` — the partitions one partitioned write produced."""
@@ -498,9 +247,13 @@ def overwrite_touched_partitions(
     swaps a whole table. Untouched partition directories are never
     opened for write; touched partitions the batch emptied are removed.
     The shared write tail of every partition-pruned mutation
-    (``upsert_partitioned``, the pruned MERGE / UPDATE / DELETE /
-    INSERT OVERWRITE executors in ``plans.merge_sql`` and the bucketed
-    ``Scd2Table.apply``).
+    (``StateStore.rewrite`` of partitioned state, the bucketed
+    ``Scd2Table.apply`` among them, and the pruned MERGE / UPDATE /
+    DELETE / INSERT OVERWRITE executors in ``plans.merge_sql``).
+    Partition values round-trip through directory names: Spark
+    percent-escapes special characters on write, so the emptied
+    directories are addressed through the same escaping
+    (``_partition_dir``).
 
     Driver-state contract: ``touched_df`` stays distributed — the only
     partition tuples collected are the EMPTIED set (touched minus
@@ -523,11 +276,14 @@ def overwrite_touched_partitions(
     # Partitions the batch emptied have no staged directory. Computed
     # as a distributed anti-diff against the staged copy (read with the
     # known schema: no inference job, and an empty slice reads as no
-    # rows); only this final rm list reaches the driver.
+    # rows); only this final rm list reaches the driver. A touched tuple
+    # with a NULL never matched the pruned read, so it empties nothing
+    # (its directory name would be the string "None").
     staged = spark.read.format(fmt).schema(merged.schema).load(staging)
     emptied = [
         tuple(r)
         for r in touched_df.select(*partition_cols)
+        .dropna()
         .distinct()
         .exceptAll(staged.select(*partition_cols).distinct())
         .collect()

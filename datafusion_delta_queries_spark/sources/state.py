@@ -8,7 +8,8 @@ maintainers' persisted state) keeps that result in a ``StateStore``,
 which owns the on-disk conventions of a state table at ``path``:
 
 - ``<path>``: the parquet table, directory-partitioned on
-  ``partition_cols`` when given;
+  ``partition_cols`` when given, with the schema of its last write in
+  ``<path>/_state_schema.json``;
 - ``<path>.__applied__/<ns>/<batch id>``: ``apply_once`` replay
   markers, one namespace per stream (``stream_ns``);
 - ``<path>.__retention__``: retention predicates a maintainer records
@@ -17,19 +18,24 @@ which owns the on-disk conventions of a state table at ``path``:
   siblings of ``sinks.staged_swap`` and
   ``sinks.overwrite_touched_partitions``.
 
-Reads skip schema inference after the first: the schema comes from
-the parquet footer when Arrow can type it, and otherwise from one
-inferred read, memoized until the next ``create``. Partitioned tables
-and INT96 or nanosecond timestamp columns (which Spark types
-differently from the Arrow footer) take the inferred read; inferring
-on every read would cost one Spark job each.
+Reads skip schema inference: every write leaves the schema of the
+frame it wrote in ``<path>/_state_schema.json``, and reads use it, so
+partition values come back with the types they were written with (a
+string ``'01'`` stays a string; path-based inference would read it as
+int 1). A table written without the file (by an older version) reads
+its schema from the parquet footer when Arrow can type it, and
+otherwise from one inferred read, memoized.
 
-Writes come in two shapes. ``replace_touched`` merges an update frame
-as "replace the touched keys" (``sinks.upsert``). ``read_touched`` and
-``rewrite`` serve a maintainer that builds the new content of
-everything it read in one plan (a fold of the stored rows with a
-batch): the touched partitions, or the whole table, read once and
-written once.
+Every refresh has one shape: build the new content of what
+``read_touched`` returns in one plan, and write it once with
+``rewrite``. Two builders make that plan. ``fold`` joins the touched
+state full outer with a key-unique batch and folds each column (sums,
+register maxima, aggregate partials). ``replace`` replaces the touched
+groups: ``state ⋉̸ touched ∪ fresh``, where ``fresh`` holds their
+complete new rows. Guards are ``raise_error`` inside the written
+frame, so a refresh is one write action; the raised message comes
+back as ``ValueError``, and the staged write leaves the table as it
+was.
 
 ``StateStore.cached`` is the fingerprint-keyed flavour: a table built
 once per (name, fingerprint) under ``cache_root()`` and read back on
@@ -39,17 +45,21 @@ every later run, across processes too.
 from __future__ import annotations
 
 import hashlib
+import json
 import os
 import re
 import shutil
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from . import sinks
 from .versioned import _dir_schema
 
 CACHE_KEEP = 8  # newest same-name cache dirs kept per prune
 _CACHE_VERSION = "v1"
+_SCHEMA_FILE = "_state_schema.json"  # Spark skips ``_``-prefixed files
 
 
 def stream_ns(checkpoint_dir: str) -> str:
@@ -92,58 +102,48 @@ class StateStore:
         self.retention_path = self.path + ".__retention__"
         self._schema = None
 
+    def schema(self) -> StructType:
+        """The table's schema, without a Spark job once known: the one
+        the last write left, else the footer's, else one inferred read.
+        The store writes every version of the table, so the schema
+        cannot change under the memo."""
+        if self._schema is None:
+            try:
+                with open(os.path.join(self.path, _SCHEMA_FILE)) as fh:
+                    self._schema = StructType.fromJson(json.load(fh))
+            except FileNotFoundError:
+                self._schema = (
+                    _dir_schema(self.path)
+                    or self.spark.read.parquet(self.path).schema
+                )
+        return self._schema
+
     def read(self) -> DataFrame:
-        """The table, read with a known schema: from the footer, or
-        from the one inferred read this store has made since its last
-        ``create``. The store writes every version of the table, so the
-        schema cannot change under the memo."""
-        if self._schema is None:
-            self._schema = _dir_schema(self.path)
-        if self._schema is None:
-            df = self.spark.read.parquet(self.path)
-            self._schema = df.schema
-            return df
-        return self.spark.read.schema(self._schema).parquet(self.path)
+        """The table, read with its known schema."""
+        return self.spark.read.schema(self.schema()).parquet(self.path)
+
+    def _save(self, df: DataFrame, p: str) -> None:
+        w = df.write.mode("overwrite")
+        if self.partition_cols:
+            w = w.partitionBy(*self.partition_cols)
+        w.parquet(p)
+        _save_schema(df, p)
 
     def create(self, df: DataFrame) -> None:
         """Replace the table with ``df`` through one staged swap, and
         start a new life: replay markers and retention predicates of a
         previous table at this path are removed (stale markers would
         make a fresh stream's batch ids look like replays; stale
-        predicates would drop fresh groups)."""
+        predicates would drop fresh groups). A guard raised inside
+        ``df``'s plan comes back as ``ValueError``."""
         shutil.rmtree(self.applied_path, ignore_errors=True)
         if os.path.exists(self.retention_path):
             os.remove(self.retention_path)
         self._schema = None
-
-        def write(p: str) -> None:
-            w = df.write.mode("overwrite")
-            if self.partition_cols:
-                w = w.partitionBy(*self.partition_cols)
-            w.parquet(p)
-
-        sinks.staged_swap(self.path, write)
-
-    def replace_touched(
-        self,
-        updates: DataFrame,
-        keys: list[str],
-        touched: DataFrame | None = None,
-        assume_unique_keys: bool = False,
-    ) -> None:
-        """The table becomes ``table ⋉̸ touched ∪ updates`` (see
-        ``sinks.upsert``): only the touched partitions rewrite when the
-        table is partitioned, the whole table otherwise."""
-        if self.partition_cols:
-            sinks.upsert_partitioned(
-                self.spark, self.path, updates, keys, self.partition_cols,
-                touched=touched, assume_unique_keys=assume_unique_keys,
-            )
-        else:
-            sinks.upsert(
-                self.spark, self.path, updates, keys, touched=touched,
-                assume_unique_keys=assume_unique_keys,
-            )
+        _guarded_write(
+            lambda: sinks.staged_swap(self.path, lambda p: self._save(df, p))
+        )
+        self._schema = df.schema
 
     def read_touched(self, touched: DataFrame) -> DataFrame:
         """The rows ``rewrite(df, touched)`` replaces: the partitions
@@ -154,20 +154,137 @@ class StateStore:
             df = sinks.prune_to_touched(df, touched, self.partition_cols)
         return df
 
-    def rewrite(self, df: DataFrame, touched: DataFrame) -> None:
+    def rewrite(
+        self, df: DataFrame, touched: DataFrame | None = None
+    ) -> None:
         """Replace what ``read_touched(touched)`` reads with ``df``, in
         one write: the touched partitions (``df`` holds all their rows)
         or the whole table. Both stage the write first, so one that
-        fails — a guard raising inside ``df``'s plan, say — leaves the
-        table as it was."""
+        fails leaves the table as it was; a guard raised inside
+        ``df``'s plan comes back as ``ValueError``. A ``df`` whose
+        column set differs from the table's is rejected before any
+        job: the write would drop the columns it lacks, or add ones
+        every untouched row lacks. The write keeps the table's column
+        order. On a partitioned table a written row with a NULL
+        partition value fails the write: it would land in
+        ``__HIVE_DEFAULT_PARTITION__``, which ``read_touched`` never
+        reads, so the swap would replace that directory's stored rows
+        instead of merging them."""
+        self._check_columns(df)
+        df = df.select(*self.schema().names)
         if self.partition_cols:
-            sinks.overwrite_touched_partitions(
-                self.spark, self.path, df, self.partition_cols, touched
+            df = guarded(df, [(_any_null(self.partition_cols), _NULL_PART)])
+            _guarded_write(
+                lambda: sinks.overwrite_touched_partitions(
+                    self.spark, self.path, df, self.partition_cols, touched
+                )
             )
+            _save_schema(df, self.path)
         else:
-            sinks.staged_swap(
-                self.path, lambda p: df.write.mode("overwrite").parquet(p)
+            _guarded_write(
+                lambda: sinks.staged_swap(
+                    self.path, lambda p: self._save(df, p)
+                )
             )
+        self._schema = df.schema
+
+    def _check_columns(self, df: DataFrame) -> None:
+        have = self.schema().names
+        if set(df.columns) != set(have):
+            raise ValueError(
+                f"columns {sorted(df.columns)} differ from the target's "
+                f"{sorted(have)} at {self.path}; align the frame to the "
+                "table schema first"
+            )
+
+    def fold(
+        self,
+        batch: DataFrame,
+        keys: list[str],
+        folds: list[str],
+        keep=None,
+        guards=(),
+    ) -> None:
+        """The state becomes ``read_touched(batch) ⟗ batch`` on
+        ``keys``, folded, in one ``rewrite``.
+
+        ``batch`` holds at most one row per key. In the joined frame a
+        stored column ``c`` outside ``keys`` is ``__s<c>``, a batch
+        column of the same name ``__d<c>``, and any other batch column
+        keeps its name. ``folds`` holds one SQL expression per stored
+        column outside ``keys``, as ``<expr> AS <c>``; on a key only
+        one side holds, the other side's columns are NULL, so stored
+        rows the batch misses pass through and new keys enter. A folded
+        row leaves when ``keep`` (a Column) is false; ``guards`` are
+        (condition, message) pairs over the folded row, checked before
+        ``keep``, and a row meeting one fails the refresh with its
+        message."""
+        stored = self.read_touched(batch)
+        parts = [c for c in stored.columns if c not in keys]
+        s = stored.select(
+            *keys, *[stored[c].alias(f"__s{c}") for c in parts]
+        )
+        d = batch.select(
+            *keys,
+            *[
+                batch[c].alias(f"__d{c}") if c in parts else batch[c]
+                for c in batch.columns
+                if c not in keys
+            ],
+        )
+        joined = s.join(d, keys, "full")
+        folded = joined.select(*keys, *[F.expr(e) for e in folds])
+        self.rewrite(
+            guarded(folded, guards, keep).select(*stored.columns),
+            batch.select(*keys),
+        )
+
+    def replace(
+        self, fresh: DataFrame, touched: DataFrame, keys: list[str],
+        guards=(),
+    ) -> None:
+        """The state becomes ``read_touched(touched) ⋉̸ touched ∪
+        fresh``, in one ``rewrite``: every stored row whose values on
+        ``touched``'s columns are touched leaves, and ``fresh`` is the
+        complete new content of the touched groups, so a touched group
+        with no fresh row leaves too. ``touched`` may repeat a group.
+        ``keys`` are the state's key columns; ``touched``'s columns are
+        a non-empty subset of them — a frame over a key prefix replaces
+        whole groups — and include every partition column. A value
+        column in ``touched`` would match only stored rows whose value
+        is unchanged, and keep the others beside their fresh rows.
+        ``guards`` are (condition, message) pairs over ``fresh``'s
+        rows, as in ``fold``.
+
+        Precondition: ``fresh`` holds rows of touched groups only. A
+        row of an untouched group would sit beside that group's stored
+        rows; nothing checks this (it would cost a job), and every
+        caller builds ``fresh`` from its touched set."""
+        unpruned = [
+            c for c in self.partition_cols if c not in touched.columns
+        ]
+        if unpruned:
+            raise ValueError(
+                f"touched lacks partition columns {unpruned}: partition "
+                "columns not part of the merge key would let a group "
+                "change partition and strand its old copy in a directory "
+                "the pruned rewrite never reads"
+            )
+        have = self.schema().names
+        if set(keys) - set(have):
+            raise ValueError(
+                f"keys {keys} are not all columns of the state {have}"
+            )
+        if not touched.columns or set(touched.columns) - set(keys):
+            raise ValueError(
+                f"touched columns {touched.columns} must be a non-empty "
+                f"subset of the merge key {keys}"
+            )
+        self._check_columns(fresh)
+        kept = self.read_touched(touched).join(
+            touched, touched.columns, "left_anti"
+        )
+        self.rewrite(kept.unionByName(guarded(fresh, guards)), touched)
 
     def apply_once(self, batch_id: int, fn, ns: str = "") -> None:
         """Replay guard for NON-idempotent appliers (partial merges
@@ -221,6 +338,48 @@ class StateStore:
             store.create(build())
             _prune(root, name, store.path)
         return store.read()
+
+
+def guarded(df: DataFrame, guards, keep=None) -> DataFrame:
+    """``df``'s rows where ``keep`` holds (all when None); a row
+    meeting a guard's condition raises the guard's message instead.
+    Conditions may be window expressions."""
+    if not guards and keep is None:
+        return df
+    pred = F.lit(True) if keep is None else keep
+    for cond, msg in reversed(guards):
+        pred = F.when(cond, F.raise_error(F.lit(msg))).otherwise(pred)
+    return df.withColumn("__keep", pred).where("__keep").drop("__keep")
+
+
+_NULL_PART = (
+    "NULL partition value in the written rows: NULL lands in the "
+    "__HIVE_DEFAULT_PARTITION__ directory, which a pruned rewrite never "
+    "reads, so its stored rows would be replaced instead of merged"
+)
+
+
+def _any_null(cols: list[str]):
+    return F.expr(" OR ".join(f"`{c}` IS NULL" for c in cols))
+
+
+def _save_schema(df: DataFrame, table_dir: str) -> None:
+    with open(os.path.join(table_dir, _SCHEMA_FILE), "w") as fh:
+        fh.write(df.schema.json())
+
+
+def _guarded_write(write) -> None:
+    """Run ``write``; a ``raise_error`` that fired inside its plan comes
+    back as ``ValueError`` with the raised message."""
+    try:
+        write()
+    except Exception as e:
+        if getattr(e, "getCondition", lambda: None)() != (
+            "USER_RAISED_EXCEPTION"
+        ):
+            raise
+        msg = e.getMessageParameters()["errorMessage"]
+        raise ValueError(msg) from None
 
 
 def _prune(root: str, name: str, keep: str) -> None:

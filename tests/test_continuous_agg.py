@@ -1,6 +1,6 @@
 """Continuous aggregate table: stored state == full recompute across
 multiple refresh cycles (the end-to-end loop behind the reference's
-IVM idea — maintain, persist via keyed upsert, refresh from the next
+IVM idea — maintain, persist by folding each batch in, refresh from the next
 delta batch without rescanning history)."""
 
 from __future__ import annotations
@@ -729,10 +729,38 @@ def test_topk_view_threatening_delete_requires_base(spark, tmp_path):
     )
     with pytest.raises(ValueError, match="runner-up is not in state"):
         view.refresh_signed(batch)
+    # the failed refresh left the state as it was
+    assert {r["o_orderkey"] for r in view.read().collect()} == {10, 9, 8}
     # with the base, the runner-up (7.0) promotes
     view.refresh_signed(batch, base_new_df=t0.where("o_orderkey < 10"))
     got = {r["o_orderkey"] for r in view.read().collect()}
     assert got == {9, 8, 7}
+
+
+def test_topk_view_reinserted_id_fails_loudly(spark, tmp_path):
+    """An insert batch carrying an id the state already holds (a
+    replayed or mislabeled change) would leave the id twice in its
+    group's top-k: the write fails inside its plan, and the state is
+    as it was."""
+    from datafusion_delta_queries_spark.operators.continuous_agg import (
+        ContinuousTopK,
+    )
+
+    schema = "o_orderpriority: string, o_orderkey: bigint, o_totalprice: double"
+    t0 = spark.createDataFrame([("g", i, float(i)) for i in range(1, 6)], schema)
+    view = ContinuousTopK(
+        spark, str(tmp_path / "s"), ["o_orderpriority"],
+        "o_totalprice", 3, ["o_orderkey"],
+    )
+    view.initialize(t0)
+    again = spark.createDataFrame([("g", 5, 7.5)], schema)
+    with pytest.raises(ValueError, match="one id twice"):
+        view.refresh(again)
+    with pytest.raises(ValueError, match="one id twice"):
+        view.refresh_signed(_cdf(again, "insert"))
+    assert {(r["o_orderkey"], r["o_totalprice"]) for r in view.read().collect()} == {
+        (5, 5.0), (4, 4.0), (3, 3.0)
+    }
 
 
 # -- continuous aggregate over a JOIN (fact ⋈ static dims) -------------
@@ -1681,6 +1709,154 @@ def test_refresh_signed_job_budget(spark, tmp_path):
     assert n_cascade <= CASCADE3_REFRESH_JOBS, n_cascade
     assert n_agg <= AGG_REFRESH_JOBS, n_agg
     assert n_ins <= AGG_INSERT_REFRESH_JOBS, n_ins
+
+
+# Measured at SF_SMALL over the refresh call only (the workloads of
+# ``_owner_refreshes``). Merging through the keyed upsert, with its
+# persisted probes and duplicate-key job, these refreshes took 11
+# (distinct signed), 11 and 36 (top-k insert and signed), 9 and 4 (HLL
+# raising and absorbed) and 9 (CMS signed) jobs; one plan written once
+# through ``StateStore.rewrite`` takes the counts below (HLL's include
+# its no-op probe). A count above the budget is a regression to
+# explain.
+OWNER_REFRESH_JOBS = {
+    "distinct_signed": 3,
+    "topk_insert": 5,
+    "topk_signed": 13,
+    "hll_raising": 6,
+    "hll_absorbed": 3,
+    "cms_signed": 4,
+}
+
+
+def _owner_refreshes(spark, tmp_path):
+    """(label, refresh, check) per state owner outside the aggregate
+    family: ``refresh`` runs one refresh of a view initialized over
+    SF_SMALL orders, ``check`` asserts the state then equals a
+    recompute."""
+    from datafusion_delta_queries_spark.functions.sketches import (
+        cms_counters,
+        hll_portable_registers,
+    )
+    from datafusion_delta_queries_spark.operators.continuous_agg import (
+        ContinuousDistinctAggregate,
+        ContinuousTopK,
+    )
+    from datafusion_delta_queries_spark.operators.sketch_queries import (
+        ContinuousCms,
+        ContinuousHllNdv,
+    )
+    from datafusion_delta_queries_spark.plans.signed import signed_of_cdf
+
+    orders = load_table(spark, SF_SMALL, "orders")
+    s0 = orders.where("o_orderkey % 3 = 0")
+    dels = s0.where("o_orderkey % 9 = 0")
+    ins = orders.where("o_orderkey % 3 = 1")
+    batch = _cdf(dels, "delete").unionByName(_cdf(ins, "insert"))
+    s1 = s0.where("o_orderkey % 9 != 0").unionByName(ins)
+
+    def rows(df):
+        return sorted(map(tuple, df.collect()))
+
+    distinct = ContinuousDistinctAggregate(
+        spark, str(tmp_path / "cd"),
+        "SELECT o_orderpriority, count(DISTINCT o_custkey) AS n_custs, "
+        "count(*) AS n_orders FROM orders GROUP BY o_orderpriority",
+    )
+    distinct.initialize(s0)
+    topk_i = ContinuousTopK(
+        spark, str(tmp_path / "ti"), ["o_orderpriority"],
+        "o_totalprice", 3, ["o_orderkey"],
+    )
+    topk_i.initialize(s0)
+    topk_s = ContinuousTopK(
+        spark, str(tmp_path / "ts"), ["o_orderpriority"],
+        "o_totalprice", 3, ["o_orderkey"],
+    )
+    topk_s.initialize(s0)
+    # Deleting every stored leader threatens every group.
+    leaders = [r["o_orderkey"] for r in topk_s.read().collect()]
+    lead_del = s0.where(F.col("o_orderkey").isin(leaders))
+    topk_batch = _cdf(lead_del, "delete").unionByName(_cdf(ins, "insert"))
+    topk_new = s0.where(~F.col("o_orderkey").isin(leaders)).unionByName(ins)
+    hll = ContinuousHllNdv(
+        spark, str(tmp_path / "hll"), ["o_orderpriority"], "o_custkey"
+    )
+    hll.initialize(s0)
+    cms = ContinuousCms(spark, str(tmp_path / "cms"), [], "o_custkey")
+    cms.initialize(s0)
+
+    def topk_state(view):
+        return {(r["o_orderpriority"], r["o_orderkey"]) for r in view.read().collect()}
+
+    def hll_full(df):
+        return rows(hll_portable_registers(df, ["o_orderpriority"], "o_custkey"))
+
+    return [
+        (
+            "distinct_signed",
+            lambda: distinct.refresh_signed(batch),
+            lambda: {
+                r["o_orderpriority"]: (r["n_custs"], r["n_orders"])
+                for r in distinct.read().collect()
+            } == _cd_recompute(s1),
+        ),
+        (
+            "topk_insert",
+            lambda: topk_i.refresh(ins),
+            lambda: topk_state(topk_i) == _topk_recompute(s0.unionByName(ins)),
+        ),
+        (
+            "topk_signed",
+            lambda: topk_s.refresh_signed(topk_batch, base_new_df=topk_new),
+            lambda: topk_state(topk_s) == _topk_recompute(topk_new),
+        ),
+        (
+            "hll_raising",
+            lambda: hll.refresh(ins),
+            lambda: rows(hll.store.read()) == hll_full(s0.unionByName(ins)),
+        ),
+        (
+            "hll_absorbed",
+            lambda: hll.refresh(s0),
+            lambda: rows(hll.store.read()) == hll_full(s0.unionByName(ins)),
+        ),
+        (
+            "cms_signed",
+            lambda: cms.refresh_signed(signed_of_cdf(batch)),
+            lambda: rows(cms.read_counters())
+            == rows(cms_counters(s1, [], "o_custkey")),
+        ),
+    ]
+
+
+def test_state_owner_refresh_job_budgets(spark, tmp_path, monkeypatch):
+    """Each state owner's refresh stays within a pinned Spark-job
+    budget, lands on the recompute, and writes a plan with no pinned
+    (``InMemoryRelation``) frame."""
+    from datafusion_delta_queries_spark.sources.state import StateStore
+
+    plans = []
+    rewrite = StateStore.rewrite
+
+    def capture(self, df, *a):
+        plans.append(df._jdf.queryExecution().optimizedPlan().toString())
+        return rewrite(self, df, *a)
+
+    monkeypatch.setattr(StateStore, "rewrite", capture)
+    jobs = {}
+    for label, refresh, check in _owner_refreshes(spark, tmp_path):
+        n_plans = len(plans)
+        jobs[label] = _jobs_in(spark, label, refresh)
+        assert check(), label
+        assert len(plans) == n_plans + (label != "hll_absorbed"), label
+    assert all("InMemoryRelation" not in p for p in plans)
+    over = {
+        k: (n, OWNER_REFRESH_JOBS[k])
+        for k, n in jobs.items()
+        if n > OWNER_REFRESH_JOBS[k]
+    }
+    assert not over, (over, jobs)
 
 
 # -- retention contract ------------------------------------------------

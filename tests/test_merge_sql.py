@@ -265,7 +265,7 @@ def test_merge_identical_target_rows_not_a_multiple_match(spark, tmp_path):
 # ---------------------------------------------------------------------------
 # Partition-pruned DML: untouched partition directories are BYTE-
 # IDENTICAL after the mutation (the discipline test_sinks.py applies
-# to upsert_partitioned, applied to MERGE / DELETE / UPDATE).
+# to partitioned state replaces, applied to MERGE / DELETE / UPDATE).
 # ---------------------------------------------------------------------------
 
 import hashlib

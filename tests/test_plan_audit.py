@@ -837,7 +837,7 @@ def test_rollup_cascade_repair_never_scans_the_base(
     from datafusion_delta_queries_spark.operators.signed_queries import (
         _CASCADE_SQL,
     )
-    from datafusion_delta_queries_spark.sources import sinks
+    from datafusion_delta_queries_spark.sources.state import StateStore
 
     ev = load_table(spark, SF_SMALL, "events")
     view = ContinuousRollupCascade(
@@ -851,13 +851,13 @@ def test_rollup_cascade_repair_never_scans_the_base(
     # repair's own reads.
     t = view._touched_coarse(ev.limit(5))
     touched = spark.createDataFrame(t.collect(), t.schema)
-    # Capture the frame upsert() writes for the repair: the sink's one
-    # merge primitive builds it.
+    # Capture the frame the repair writes: every state refresh writes
+    # through StateStore.rewrite.
     written = []
-    merge = sinks.replace_touched
+    rewrite = StateStore.rewrite
     monkeypatch.setattr(
-        sinks, "replace_touched",
-        lambda *a: written.append(merge(*a)) or written[-1],
+        StateStore, "rewrite",
+        lambda self, df, *a: written.append(df) or rewrite(self, df, *a),
     )
     view._repair(touched)
     assert len(written) == 1

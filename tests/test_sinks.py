@@ -9,7 +9,6 @@ import pytest
 
 from datafusion_delta_queries_spark.catalog import load_table
 from datafusion_delta_queries_spark.sources.sinks import (
-    upsert,
     write_clustered,
     bucketed_join,
     write_bucketed,
@@ -151,6 +150,30 @@ def test_compact_sizes_percent_encoded_paths(spark, tmp_path):
     assert n_out == 2  # sized from REAL bytes, not a silent total=0
 
 
+# -- the keyed merge of maintained state: StateStore.replace -----------
+#
+# ``StateStore.replace(fresh, touched, keys)`` makes the table ``table ⋉̸
+# touched ∪ fresh`` in one write (the upsert contract: matched keys
+# replaced, new keys appended, touched keys with no fresh row removed),
+# through the staged swap, or per touched partition directory on a
+# partitioned store.
+
+
+def _store(spark, path, partition_cols=()):
+    from datafusion_delta_queries_spark.sources.state import StateStore
+
+    return StateStore(spark, path, partition_cols)
+
+
+def _unique_on(keys):
+    """A guard failing the write when ``fresh`` holds a key twice."""
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
+
+    twice = F.count(F.lit(1)).over(Window.partitionBy(*keys)) > 1
+    return twice, f"fresh rows contain duplicate keys on {keys}"
+
+
 def test_upsert_replaces_and_appends(spark, tmp_path):
     """MERGE semantics: matched keys replaced, new keys appended,
     untouched rows survive byte-identical."""
@@ -164,7 +187,9 @@ def test_upsert_replaces_and_appends(spark, tmp_path):
         [(1, "UPDATED#1", 999.0), (2, "UPDATED#2", 888.0), (10**9, "NEW", 1.0)],
         "c_custkey: bigint, c_name: string, c_acctbal: double",
     )
-    upsert(spark, path, updates, ["c_custkey"])
+    _store(spark, path).replace(
+        updates, updates.select("c_custkey"), ["c_custkey"]
+    )
     got = spark.read.parquet(path)
     assert got.count() == n0 + 1  # two replaced in place, one appended
     rows = {r["c_custkey"]: r for r in got.where(
@@ -179,13 +204,18 @@ def test_upsert_replaces_and_appends(spark, tmp_path):
 
 
 def test_upsert_rejects_duplicate_update_keys(spark, tmp_path):
+    """A guard over ``fresh`` (here: a key twice) fails the write from
+    inside its plan, as ``ValueError``, and the table is unchanged."""
     path = str(tmp_path / "t")
     spark.createDataFrame([(1, "a")], "k: bigint, v: string").write.parquet(path)
     dup = spark.createDataFrame(
         [(2, "x"), (2, "y")], "k: bigint, v: string"
     )
     with pytest.raises(ValueError, match="duplicate keys"):
-        upsert(spark, path, dup, ["k"])
+        _store(spark, path).replace(
+            dup, dup.select("k"), ["k"], guards=[_unique_on(["k"])]
+        )
+    assert [tuple(r) for r in spark.read.parquet(path).collect()] == [(1, "a")]
 
 
 def test_upsert_failure_leaves_target_intact(spark, tmp_path, monkeypatch):
@@ -202,6 +232,7 @@ def test_upsert_failure_leaves_target_intact(spark, tmp_path, monkeypatch):
         [(1, "a"), (2, "b")], "k: bigint, v: string"
     ).write.parquet(path)
     updates = spark.createDataFrame([(2, "B")], "k: bigint, v: string")
+    store = _store(spark, path)
 
     real_rename = _os.rename
 
@@ -210,26 +241,39 @@ def test_upsert_failure_leaves_target_intact(spark, tmp_path, monkeypatch):
 
     monkeypatch.setattr(sinks_mod.os, "rename", crash_before_swap)
     with pytest.raises(OSError, match="injected crash"):
-        upsert(spark, path, updates, ["k"])
+        store.replace(updates, updates.select("k"), ["k"])
     got = sorted(tuple(r) for r in spark.read.parquet(path).collect())
     assert got == [(1, "a"), (2, "b")]  # original table intact
 
     monkeypatch.setattr(sinks_mod.os, "rename", real_rename)
-    upsert(spark, path, updates, ["k"])  # retry over the stale staging dir
+    # retry over the stale staging dir
+    store.replace(updates, updates.select("k"), ["k"])
     got = sorted(tuple(r) for r in spark.read.parquet(path).collect())
     assert got == [(1, "a"), (2, "B")]
 
 
 def test_upsert_rejects_batch_missing_a_target_column(spark, tmp_path):
-    """A batch that lacks one of the target's columns must not rewrite
-    the table without it: the call raises and the table is unchanged."""
+    """A frame that lacks one of the target's columns must not rewrite
+    the table without it: ``replace`` and ``rewrite`` raise, from a
+    driver-side schema compare that starts no Spark job, and the table
+    is unchanged."""
     path = str(tmp_path / "t4")
     spark.createDataFrame(
         [(1, "a", 1.5), (2, "b", 2.5)], "k: bigint, v: string, w: double"
     ).write.parquet(path)
     drifted = spark.createDataFrame([(2, "B")], "k: bigint, v: string")
-    with pytest.raises(ValueError, match="differ from the target"):
-        upsert(spark, path, drifted, ["k"])
+    store = _store(spark, path)
+    store.read()  # the schema is known from here on
+    sc = spark.sparkContext
+    sc.setJobGroup("column-set-check", "column-set-check")
+    try:
+        with pytest.raises(ValueError, match="differ from the target"):
+            store.replace(drifted, drifted.select("k"), ["k"])
+        with pytest.raises(ValueError, match="differ from the target"):
+            store.rewrite(drifted)
+    finally:
+        sc._jsc.clearJobGroup()
+    assert not sc.statusTracker().getJobIdsForGroup("column-set-check")
     got = spark.read.parquet(path)
     assert got.columns == ["k", "v", "w"]
     assert sorted(tuple(r) for r in got.collect()) == [
@@ -246,14 +290,15 @@ def test_upsert_is_idempotent(spark, tmp_path):
         [(1, "a"), (2, "b"), (3, "c")], "k: bigint, v: string"
     ).write.parquet(path)
     updates = spark.createDataFrame([(2, "B"), (4, "D")], "k: bigint, v: string")
-    upsert(spark, path, updates, ["k"])
+    store = _store(spark, path)
+    store.replace(updates, updates.select("k"), ["k"])
     first = sorted(tuple(r) for r in spark.read.parquet(path).collect())
-    upsert(spark, path, updates, ["k"])
+    store.replace(updates, updates.select("k"), ["k"])
     second = sorted(tuple(r) for r in spark.read.parquet(path).collect())
     assert first == second == [(1, "a"), (2, "B"), (3, "c"), (4, "D")]
 
 
-# -- partition-pruned upsert -------------------------------------------
+# -- partition-pruned replace ------------------------------------------
 
 def _part_table(spark, tmp_path):
     """Partitioned copy of a 3-segment customer slice."""
@@ -270,13 +315,10 @@ def _part_table(spark, tmp_path):
 
 
 def test_upsert_partitioned_equals_plain_upsert(spark, tmp_path):
-    """Same MERGE semantics as upsert(): the touched keys are replaced
-    by the batch — matched keys replaced, new keys appended, a touched
-    key with no batch row removed — and the row set is identical."""
-    from datafusion_delta_queries_spark.sources.sinks import (
-        upsert_partitioned,
-    )
-
+    """Same MERGE semantics on a partitioned store: the touched keys
+    are replaced by the batch — matched keys replaced, new keys
+    appended, a touched key with no batch row removed — and the row
+    set is identical."""
     path, base = _part_table(spark, tmp_path)
     got0 = spark.read.parquet(path)
     k1, k2 = [r["c_custkey"] for r in got0.where(
@@ -290,9 +332,8 @@ def test_upsert_partitioned_equals_plain_upsert(spark, tmp_path):
         [(k2, "BUILDING")], "c_custkey: bigint, c_mktsegment: string"
     )
     keys = ["c_custkey", "c_mktsegment"]
-    upsert_partitioned(
-        spark, path, updates, keys, ["c_mktsegment"],
-        touched=updates.select(*keys).unionByName(deletes),
+    _store(spark, path, ["c_mktsegment"]).replace(
+        updates, updates.select(*keys).unionByName(deletes), keys
     )
     got = spark.read.parquet(path).select(
         "c_custkey", "c_mktsegment", "c_name", "c_acctbal"
@@ -330,43 +371,36 @@ def _touched_case(spark):
     return target, updates, deletes, old
 
 
+def _flat_and_part(spark, tmp_path, target, part_col):
+    """``target`` as a whole-table and a partitioned store."""
+    flat = _store(spark, str(tmp_path / "flat"))
+    part = _store(spark, str(tmp_path / "part"), [part_col])
+    flat.create(target)
+    part.create(target)
+    return flat, part
+
+
 def test_touched_form_equals_the_old_delete_merge(spark, tmp_path):
     """``target ⋉̸ touched ∪ updates`` with touched = the batch keys
     plus the deleted keys returns the old merge's rows, for both the
-    whole-table and the partition-pruned upsert."""
-    from datafusion_delta_queries_spark.sources.sinks import (
-        upsert_partitioned,
-    )
-
+    whole-table and the partition-pruned store."""
     target, updates, deletes, old = _touched_case(spark)
     assert old == [
         (1, "a", 1.0), (2, "a", 20.0), (4, "b", 40.0), (5, "b", 50.0),
         (6, "c", 6.0),
     ]
     touched = updates.select("k", "seg").unionByName(deletes)
-    flat, part = str(tmp_path / "flat"), str(tmp_path / "part")
-    target.write.parquet(flat)
-    target.write.partitionBy("seg").parquet(part)
-    upsert(spark, flat, updates, ["k", "seg"], touched=touched)
-    upsert_partitioned(
-        spark, part, updates, ["k", "seg"], ["seg"], touched=touched
-    )
-    for path in (flat, part):
-        got = spark.read.schema(target.schema).parquet(path).select(
-            *target.columns
-        )
-        assert sorted(tuple(r) for r in got.collect()) == old, path
+    for store in _flat_and_part(spark, tmp_path, target, "seg"):
+        store.replace(updates, touched, ["k", "seg"])
+        got = store.read().select(*target.columns)
+        assert sorted(tuple(r) for r in got.collect()) == old, store.path
 
 
 def test_group_level_touched_replaces_the_whole_group(spark, tmp_path):
     """A ``touched`` frame over a key prefix (the top-k shape: group
     columns only) replaces every stored row of each touched group —
     rows of the group absent from the batch leave, other groups stay —
-    on both upsert paths."""
-    from datafusion_delta_queries_spark.sources.sinks import (
-        upsert_partitioned,
-    )
-
+    on both store layouts."""
     target = spark.createDataFrame(
         [("g1", 1, 1.0), ("g1", 2, 2.0), ("g1", 3, 3.0), ("g2", 1, 9.0)],
         "g: string, id: bigint, v: double",
@@ -375,70 +409,76 @@ def test_group_level_touched_replaces_the_whole_group(spark, tmp_path):
         [("g1", 3, 3.0), ("g1", 4, 4.0)], "g: string, id: bigint, v: double"
     )
     touched = spark.createDataFrame([("g1",)], "g: string")
-    flat, part = str(tmp_path / "flat"), str(tmp_path / "part")
-    target.write.parquet(flat)
-    target.write.partitionBy("g").parquet(part)
-    upsert(spark, flat, fresh, ["g", "id"], touched=touched)
-    upsert_partitioned(
-        spark, part, fresh, ["g", "id"], ["g"], touched=touched
-    )
     want = [("g1", 3, 3.0), ("g1", 4, 4.0), ("g2", 1, 9.0)]
-    for path in (flat, part):
-        got = spark.read.schema(target.schema).parquet(path).select(
-            *target.columns
-        )
-        assert sorted(tuple(r) for r in got.collect()) == want, path
+    for store in _flat_and_part(spark, tmp_path, target, "g"):
+        store.replace(fresh, touched, ["g", "id"])
+        got = store.read().select(*target.columns)
+        assert sorted(tuple(r) for r in got.collect()) == want, store.path
 
 
 def test_touched_form_keeps_the_guards(spark, tmp_path):
-    """Passing ``touched`` does not bypass the duplicate-key or the
-    column-set guard, and a ``touched`` column outside the merge key
-    (or one that misses a partition column) is rejected; the table is
-    unchanged after every rejection."""
-    from datafusion_delta_queries_spark.sources.sinks import (
-        upsert_partitioned,
-    )
-
+    """Passing ``touched`` does not bypass a guard over ``fresh`` or
+    the column-set check, and a ``touched`` column outside the merge
+    key (or one that misses a partition column) is rejected; the table
+    is unchanged after every rejection."""
     target, updates, deletes, _ = _touched_case(spark)
-    flat, part = str(tmp_path / "flat"), str(tmp_path / "part")
-    target.write.parquet(flat)
-    target.write.partitionBy("seg").parquet(part)
-    touched = updates.select("k", "seg").unionByName(deletes)
+    flat, part = _flat_and_part(spark, tmp_path, target, "seg")
+    keys = ["k", "seg"]
+    touched = updates.select(*keys).unionByName(deletes)
     dup = updates.unionByName(updates.limit(1))
-    with pytest.raises(ValueError, match="duplicate keys"):
-        upsert(spark, flat, dup, ["k", "seg"], touched=touched)
-    with pytest.raises(ValueError, match="duplicate keys"):
-        upsert_partitioned(
-            spark, part, dup, ["k", "seg"], ["seg"], touched=touched
-        )
+    for store in (flat, part):
+        with pytest.raises(ValueError, match="duplicate keys"):
+            store.replace(dup, touched, keys, guards=[_unique_on(keys)])
     with pytest.raises(ValueError, match="differ from the target"):
-        upsert(spark, flat, updates.drop("v"), ["k", "seg"], touched=touched)
+        flat.replace(updates.drop("v"), touched, keys)
     with pytest.raises(ValueError, match="subset of the merge key"):
-        upsert(spark, flat, updates, ["k", "seg"], touched=updates)
+        flat.replace(updates, updates, keys)
     with pytest.raises(ValueError, match="lacks partition columns"):
-        upsert_partitioned(
-            spark, part, updates, ["k", "seg"], ["seg"],
-            touched=updates.select("k"),
-        )
+        part.replace(updates, updates.select("k"), keys)
     want = sorted(tuple(r) for r in target.collect())
-    for path in (flat, part):
-        got = spark.read.schema(target.schema).parquet(path).select(
-            *target.columns
-        )
-        assert sorted(tuple(r) for r in got.collect()) == want, path
+    for store in (flat, part):
+        got = store.read().select(*target.columns)
+        assert sorted(tuple(r) for r in got.collect()) == want, store.path
+
+
+def test_partitioned_write_rejects_null_partition_value(spark, tmp_path):
+    """A written row with a NULL partition value would land in
+    ``__HIVE_DEFAULT_PARTITION__``, which the pruned read never reads,
+    so the swap would drop that directory's stored rows: ``replace``
+    and ``fold`` fail from inside the write plan, and the table —
+    its NULL-partition rows included — is unchanged. A NULL in
+    ``touched`` alone empties no directory (not the string "None"'s)."""
+    import os
+
+    path = str(tmp_path / "t")
+    base = spark.createDataFrame(
+        [(1, "a", 1.0), (2, None, 2.0), (4, "None", 4.0)],
+        "k: bigint, seg: string, v: double",
+    )
+    store = _store(spark, path, ["seg"])
+    store.create(base)
+    assert os.path.isdir(os.path.join(path, "seg=__HIVE_DEFAULT_PARTITION__"))
+    fresh = spark.createDataFrame(
+        [(3, None, 3.0)], "k: bigint, seg: string, v: double"
+    )
+    with pytest.raises(ValueError, match="NULL partition value"):
+        store.replace(fresh, fresh.select("k", "seg"), ["k", "seg"])
+    with pytest.raises(ValueError, match="NULL partition value"):
+        store.fold(fresh, ["k", "seg"], ["coalesce(__sv, 0) + __dv AS v"])
+    store.replace(fresh.where("1 = 0"), fresh.select("k", "seg"), ["k", "seg"])
+    got = _store(spark, path, ["seg"]).read().select("k", "seg", "v")
+    assert sorted(got.collect(), key=lambda r: r.k) == [
+        (1, "a", 1.0), (2, None, 2.0), (4, "None", 4.0),
+    ]
 
 
 def test_upsert_partitioned_leaves_untouched_partitions_alone(
     spark, tmp_path
 ):
-    """The point of the partitioned variant: a batch touching only
+    """The point of the partitioned layout: a batch touching only
     BUILDING must not rewrite (or even re-list) the other partitions'
     files — their directory contents stay byte-identical."""
     import os
-
-    from datafusion_delta_queries_spark.sources.sinks import (
-        upsert_partitioned,
-    )
 
     path, base = _part_table(spark, tmp_path)
 
@@ -459,9 +499,10 @@ def test_upsert_partitioned_leaves_untouched_partitions_alone(
         "c_custkey: bigint, c_mktsegment: string, c_name: string, "
         "c_acctbal: double",
     )
-    upsert_partitioned(
-        spark, path, updates, ["c_custkey", "c_mktsegment"],
-        ["c_mktsegment"],
+    _store(spark, path, ["c_mktsegment"]).replace(
+        updates,
+        updates.select("c_custkey", "c_mktsegment"),
+        ["c_custkey", "c_mktsegment"],
     )
     after = {s: snap(s) for s in ("MACHINERY", "AUTOMOBILE")}
     assert before == after  # same files, same bytes, same mtimes
@@ -472,22 +513,16 @@ def test_upsert_partitioned_removes_emptied_partition(spark, tmp_path):
     overwrite alone would leave the stale files in place)."""
     import os
 
-    from datafusion_delta_queries_spark.sources.sinks import (
-        upsert_partitioned,
-    )
-
     path, base = _part_table(spark, tmp_path)
     deletes = base.where("c_mktsegment = 'AUTOMOBILE'").select(
         "c_custkey", "c_mktsegment"
     )
-    upsert_partitioned(
-        spark, path,
-        updates=base.where("1 = 0").select(
+    _store(spark, path, ["c_mktsegment"]).replace(
+        base.where("1 = 0").select(
             "c_custkey", "c_mktsegment", "c_name", "c_acctbal"
         ),
-        key_cols=["c_custkey", "c_mktsegment"],
-        partition_cols=["c_mktsegment"],
-        touched=deletes,
+        deletes,
+        ["c_custkey", "c_mktsegment"],
     )
     assert not os.path.isdir(os.path.join(path, "c_mktsegment=AUTOMOBILE"))
     got = spark.read.parquet(path)
@@ -499,26 +534,24 @@ def test_upsert_partitioned_numeric_looking_string_keys(spark, tmp_path):
     """A STRING partition key whose values look numeric ('01', '002')
     must survive the directory-name round-trip as strings: path-based
     type inference would read 'seg=01' back as int 1 and silently
-    migrate rows, so the merge reads the target with the batch's
-    explicit schema instead."""
+    migrate rows, so the store reads the table with the schema it
+    wrote — and so does a new store on the same path."""
     import os
-
-    from datafusion_delta_queries_spark.sources.sinks import (
-        upsert_partitioned,
-    )
 
     path = str(tmp_path / "t")
     base = spark.createDataFrame(
         [(1, "01", 1.0), (2, "01", 2.0), (3, "002", 3.0)],
         "k: bigint, seg: string, v: double",
     )
-    base.write.partitionBy("seg").parquet(path)
+    _store(spark, path, ["seg"]).create(base)
     updates = spark.createDataFrame(
         [(1, "01", 10.0), (4, "002", 4.0)],
         "k: bigint, seg: string, v: double",
     )
-    upsert_partitioned(spark, path, updates, ["k", "seg"], ["seg"])
-    got = spark.read.schema(base.schema).parquet(path)
+    _store(spark, path, ["seg"]).replace(
+        updates, updates.select("k", "seg"), ["k", "seg"]
+    )
+    got = _store(spark, path, ["seg"]).read()
     assert got.schema["seg"].dataType.typeName() == "string"
     rows = {(r.k, r.seg, r.v) for r in got.collect()}
     assert rows == {
@@ -527,13 +560,12 @@ def test_upsert_partitioned_numeric_looking_string_keys(spark, tmp_path):
     # the directories are still the string forms, not int-canonicalized
     assert os.path.isdir(os.path.join(path, "seg=01"))
     assert os.path.isdir(os.path.join(path, "seg=002"))
+    assert not os.path.isdir(os.path.join(path, "seg=1"))
     # deleting all of '01' removes ITS directory, matching the escaped
     # name Spark wrote
     deletes = spark.createDataFrame([(1, "01"), (2, "01")], "k: bigint, seg: string")
-    upsert_partitioned(
-        spark, path,
-        updates=updates.where("1 = 0"),
-        key_cols=["k", "seg"], partition_cols=["seg"], touched=deletes,
+    _store(spark, path, ["seg"]).replace(
+        updates.where("1 = 0"), deletes, ["k", "seg"]
     )
     assert not os.path.isdir(os.path.join(path, "seg=01"))
     assert os.path.isdir(os.path.join(path, "seg=002"))
@@ -545,31 +577,25 @@ def test_upsert_partitioned_escaped_partition_values(spark, tmp_path):
     emptied-partition removal must target the ESCAPED directory."""
     import os
 
-    from datafusion_delta_queries_spark.sources.sinks import (
-        upsert_partitioned,
-    )
-
     path = str(tmp_path / "t")
     base = spark.createDataFrame(
         [(1, "a:b", 1.0), (2, "plain", 2.0)],
         "k: bigint, seg: string, v: double",
     )
-    base.write.partitionBy("seg").parquet(path)
+    store = _store(spark, path, ["seg"])
+    store.create(base)
     assert os.path.isdir(os.path.join(path, "seg=a%3Ab"))
     updates = spark.createDataFrame(
         [(3, "a:b", 3.0)], "k: bigint, seg: string, v: double"
     )
-    upsert_partitioned(spark, path, updates, ["k", "seg"], ["seg"])
+    store.replace(updates, updates.select("k", "seg"), ["k", "seg"])
     got = {(r.k, r.seg) for r in spark.read.schema(base.schema)
            .parquet(path).collect()}
     assert got == {(1, "a:b"), (2, "plain"), (3, "a:b")}
     deletes = spark.createDataFrame(
         [(1, "a:b"), (3, "a:b")], "k: bigint, seg: string"
     )
-    upsert_partitioned(
-        spark, path, updates=updates.where("1 = 0"),
-        key_cols=["k", "seg"], partition_cols=["seg"], touched=deletes,
-    )
+    store.replace(updates.where("1 = 0"), deletes, ["k", "seg"])
     assert not os.path.isdir(os.path.join(path, "seg=a%3Ab"))
     assert spark.read.schema(base.schema).parquet(path).count() == 1
 
@@ -581,60 +607,50 @@ def test_upsert_partitioned_date_partition_values(spark, tmp_path):
     import datetime
     import os
 
-    from datafusion_delta_queries_spark.sources.sinks import (
-        upsert_partitioned,
-    )
-
     d1, d2 = datetime.date(2026, 8, 1), datetime.date(2026, 8, 2)
     path = str(tmp_path / "t")
     base = spark.createDataFrame(
         [(1, d1, 1.0), (2, d1, 2.0), (3, d2, 3.0)],
         "k: bigint, day: date, v: double",
     )
-    base.write.partitionBy("day").parquet(path)
+    store = _store(spark, path, ["day"])
+    store.create(base)
     assert os.path.isdir(os.path.join(path, "day=2026-08-01"))
     updates = spark.createDataFrame(
         [(1, d1, 10.0)], "k: bigint, day: date, v: double"
     )
-    upsert_partitioned(spark, path, updates, ["k", "day"], ["day"])
+    store.replace(updates, updates.select("k", "day"), ["k", "day"])
     got = {(r.k, r.day, r.v) for r in
            spark.read.schema(base.schema).parquet(path).collect()}
     assert got == {(1, d1, 10.0), (2, d1, 2.0), (3, d2, 3.0)}
     deletes = spark.createDataFrame([(3, d2)], "k: bigint, day: date")
-    upsert_partitioned(
-        spark, path, updates=updates.where("1 = 0"),
-        key_cols=["k", "day"], partition_cols=["day"], touched=deletes,
-    )
+    store.replace(updates.where("1 = 0"), deletes, ["k", "day"])
     assert not os.path.isdir(os.path.join(path, "day=2026-08-02"))
     assert spark.read.schema(base.schema).parquet(path).count() == 2
 
 
 def test_upsert_partitioned_rejects_mutable_partition_key(spark, tmp_path):
-    """partition_cols ⊄ key_cols means an update could move a key
-    between partitions and strand the old copy — rejected up front."""
-    from datafusion_delta_queries_spark.sources.sinks import (
-        upsert_partitioned,
-    )
-
+    """A touched frame without the partition columns means a key could
+    move between partitions and strand the old copy — rejected up
+    front."""
     path, base = _part_table(spark, tmp_path)
     updates = base.limit(1)
     with pytest.raises(ValueError, match="not .*part of the merge key"):
-        upsert_partitioned(
-            spark, path, updates, ["c_custkey"], ["c_mktsegment"]
+        _store(spark, path, ["c_mktsegment"]).replace(
+            updates, updates.select("c_custkey"), ["c_custkey"]
         )
 
 
 def test_pruned_merge_drivers_only_the_emptied_list(spark, tmp_path):
     """De-drivered touched-partition contract: a non-emptying
-    upsert_partitioned collects NO partition tuples (the stats guard
-    is a 1-row aggregate; the emptied anti-diff is empty), and the
-    pruned target scan carries a runtime partition filter from the
-    broadcast semi join rather than a driver-built isin list."""
+    partitioned replace collects NO partition tuples (the emptied
+    anti-diff is empty), and the pruned target scan carries a runtime
+    partition filter from the broadcast semi join rather than a
+    driver-built isin list."""
     from pyspark.sql import DataFrame
 
     from datafusion_delta_queries_spark.sources.sinks import (
         prune_to_touched,
-        upsert_partitioned,
     )
 
     orders = load_table(spark, SF_SMALL, "orders").selectExpr(
@@ -656,16 +672,15 @@ def test_pruned_merge_drivers_only_the_emptied_list(spark, tmp_path):
 
     DataFrame.collect = counting_collect
     try:
-        upsert_partitioned(
-            spark, path, updates,
-            key_cols=["o_orderkey", "o_orderpriority"],
-            partition_cols=["o_orderpriority"],
-            assume_unique_keys=True,
+        _store(spark, path, ["o_orderpriority"]).replace(
+            updates,
+            updates.select("o_orderkey", "o_orderpriority"),
+            ["o_orderkey", "o_orderpriority"],
         )
     finally:
         DataFrame.collect = real_collect
-    # stats guard (1 row) + emptied anti-diff (0 rows); anything more
-    # means a partition list reached the driver again
+    # emptied anti-diff (0 rows); anything more means a partition list
+    # reached the driver again
     assert sum(collected_rows) <= 1, collected_rows
 
     got = spark.read.parquet(path)
@@ -740,7 +755,7 @@ def test_whole_table_rewrites_write_once(spark, tmp_path, monkeypatch):
 
 
 def test_partition_commits_write_once(spark, tmp_path, monkeypatch):
-    """A partitioned upsert, a pruned MERGE and a bucketed SCD2 apply
+    """A partitioned state replace, a pruned MERGE and a bucketed SCD2 apply
     each make ONE Spark write: the touched slice is staged once,
     partitioned, and each staged partition dir is renamed in — not
     copied back through a second dynamic-overwrite write."""
@@ -748,9 +763,6 @@ def test_partition_commits_write_once(spark, tmp_path, monkeypatch):
 
     from datafusion_delta_queries_spark.operators.scd import Scd2Table
     from datafusion_delta_queries_spark.plans.merge_sql import execute_merge
-    from datafusion_delta_queries_spark.sources.sinks import (
-        upsert_partitioned,
-    )
 
     writes = []
     for method in ("save", "parquet"):
@@ -769,9 +781,9 @@ def test_partition_commits_write_once(spark, tmp_path, monkeypatch):
     path = str(tmp_path / "u")
     write_partitioned(rows, path, ["day"])
     writes.clear()
-    upsert_partitioned(
-        spark, path, spark.createDataFrame([(2, "d1", 21)], schema),
-        ["k", "day"], ["day"],
+    fresh = spark.createDataFrame([(2, "d1", 21)], schema)
+    _store(spark, path, ["day"]).replace(
+        fresh, fresh.select("k", "day"), ["k", "day"]
     )
     assert len(writes) == 1, writes
     got = sorted(

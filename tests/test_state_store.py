@@ -1,9 +1,10 @@
 """sources.state.StateStore: the one owner of maintained state tables.
 
-Two contracts are pinned here. Every state-owning maintainer reads its
-table without a Spark job once the store knows the schema (from the
-parquet footer, or from one inferred read when the footer cannot type
-the table, as for INT96 timestamps). And no module under
+Three contracts are pinned here. Every state-owning maintainer reads
+its table without a Spark job once the store knows the schema (the one
+its last write left, or, for a table written without it, the parquet
+footer or one inferred read). Partitioned state reads its key columns
+back with the types it wrote. And no module under
 ``operators/`` re-forks the store: state-layout side paths, renames
 and schema memos live in ``sources/state.py`` and ``sources/sinks.py``
 only."""
@@ -216,6 +217,91 @@ def test_state_reads_after_the_first_make_no_job(spark, tmp_path, owner):
     _jobs(spark, read)
     assert _jobs(spark, read) == 0
     assert read().count() > 0
+
+
+# -- partitioned state keeps the key types it wrote --------------------
+
+
+@pytest.mark.parametrize(
+    "keys",
+    [
+        ["01", "02", "10"],  # numeric-looking strings
+        ["a:b", "c/d", "e=f"],  # percent-escaped in directory names
+        [datetime.date(2024, 1, d) for d in (1, 2, 10)],
+    ],
+    ids=["numeric-strings", "escaped", "dates"],
+)
+def test_partitioned_state_round_trips_key_types(spark, tmp_path, keys):
+    """Partition values go through directory names; the store reads
+    them back with the types it wrote, in the same store and in a new
+    one, so a refresh folds into the right group instead of writing a
+    second copy under an inferred type (``seg=01`` beside ``seg=1``)."""
+    import os
+
+    from datafusion_delta_queries_spark.operators.continuous_agg import (
+        ContinuousAggregate,
+    )
+
+    a, b, c = keys
+    kind = "date" if isinstance(a, datetime.date) else "string"
+    sql = "SELECT seg, sum(v) AS s, count(*) AS n FROM t GROUP BY seg"
+    path = str(tmp_path / "state")
+    view = ContinuousAggregate(spark, path, sql, partition_on=["seg"])
+    view.initialize(
+        spark.createDataFrame([(a, 1), (b, 2), (c, 3)], f"seg {kind}, v int")
+    )
+    view.refresh(spark.createDataFrame([(a, 10)], f"seg {kind}, v int"))
+    want = {(a, 11, 2), (b, 2, 1), (c, 3, 1)}
+    for v in (view, ContinuousAggregate(spark, path, sql, partition_on=["seg"])):
+        got = v.read()
+        assert got.schema["seg"].dataType.typeName() == kind
+        assert {tuple(r) for r in got.collect()} == want
+    fresh = ContinuousAggregate(spark, path, sql, partition_on=["seg"])
+    fresh.refresh(spark.createDataFrame([(b, 5)], f"seg {kind}, v int"))
+    want = {(a, 11, 2), (b, 7, 2), (c, 3, 1)}
+    assert {tuple(r) for r in fresh.read().collect()} == want
+    assert len([d for d in os.listdir(path) if d.startswith("seg=")]) == 3
+
+
+def test_state_without_a_schema_file_still_refreshes(spark, tmp_path):
+    """A table written before the store kept its schema file (no
+    ``_state_schema.json``) reads its schema from the footer or one
+    inferred read, refreshes, and has the file afterwards."""
+    import os
+
+    from datafusion_delta_queries_spark.operators.continuous_agg import (
+        ContinuousAggregate,
+    )
+
+    sql = "SELECT k, sum(v) AS total, count(*) AS n FROM t GROUP BY k"
+    for part in (None, ["k"]):
+        path = str(tmp_path / f"state_{bool(part)}")
+        ContinuousAggregate(spark, path, sql, partition_on=part).initialize(
+            _kv(spark, [("a", 1, 1), ("b", 2, 2)])
+        )
+        os.remove(os.path.join(path, "_state_schema.json"))
+        view = ContinuousAggregate(spark, path, sql, partition_on=part)
+        view.refresh(_kv(spark, [("a", 3, 5), ("c", 4, 1)]))
+        assert sorted(tuple(r) for r in view.read().collect()) == [
+            ("a", 6, 2), ("b", 2, 1), ("c", 1, 1)
+        ]
+        assert os.path.exists(os.path.join(path, "_state_schema.json"))
+
+
+def test_replace_keeps_the_column_order(spark, tmp_path):
+    """A refresh writes the table in its own column order: the top-k
+    view's anti join on the group columns moves them first, and the
+    view must still read back as it was initialized."""
+    from datafusion_delta_queries_spark.operators.continuous_agg import (
+        ContinuousTopK,
+    )
+
+    view = ContinuousTopK(spark, str(tmp_path / "state"), ["k"], "v", 1, ["id"])
+    view.initialize(_kv(spark, [("a", 1, 1), ("b", 2, 2)]).select("id", "v", "k"))
+    view.refresh(_kv(spark, [("a", 3, 5)]))
+    got = view.read()
+    assert got.columns == ["id", "v", "k"]
+    assert sorted(tuple(r) for r in got.collect()) == [(2, 2, "b"), (3, 5, "a")]
 
 
 # -- re-fork guard -----------------------------------------------------
