@@ -32,6 +32,8 @@ from ..plans import (
     Scan,
     Union,
     compile_delta,
+    maintain_agg_of_sql,
+    maintain_join_agg_of_sql,
 )
 
 # Verbatim copies of plans.compiler.DELTA_PREDICATES for the SQL side.
@@ -369,7 +371,6 @@ def q_delta_sql_agg_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     partial-merge pattern instead (only the delta batch is scanned
     fresh; the snapshot partial stands in for the stored state)."""
     from ..functions.text import round_portable
-    from ..plans import maintain_agg_of_sql
 
     df = maintain_agg_of_sql(spark, sf_dir, _SQL_AGG_STMT)
     return df.selectExpr(
@@ -401,18 +402,18 @@ def _sql_agg_oracle() -> str:
 # integer hundredths: floor(value*100 + 0.5) is the same IEEE op
 # sequence in Spark and DuckDB, so the merged total is bitwise equal
 # to the oracle's single-pass sum.
+_ROLLUP_BUCKET = "date_format(date_trunc('hour', ts), 'yyyy-MM-dd HH:00')"
 _SQL_ROLLUP_STMT = (
-    "SELECT date_format(date_trunc('hour', ts), 'yyyy-MM-dd HH:00') AS bucket, "
+    f"SELECT {_ROLLUP_BUCKET} AS bucket, "
     "event_type, count(*) AS n_events, "
     "sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS cents "
     "FROM events "
-    "GROUP BY date_format(date_trunc('hour', ts), 'yyyy-MM-dd HH:00'), event_type"
+    f"GROUP BY {_ROLLUP_BUCKET}, event_type"
 )
 
 
 def q_delta_sql_rollup_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.text import round_portable
-    from ..plans import maintain_agg_of_sql
 
     df = maintain_agg_of_sql(spark, sf_dir, _SQL_ROLLUP_STMT)
     return df.selectExpr(
@@ -457,7 +458,6 @@ def q_delta_sql_having(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate (the most common statement shape users paste; the
     reference declines all aggregates, mod.rs:187)."""
     from ..functions.text import round_portable
-    from ..plans import maintain_agg_of_sql
 
     df = maintain_agg_of_sql(spark, sf_dir, _SQL_HAVING_STMT)
     return df.selectExpr(
@@ -502,7 +502,6 @@ def q_delta_sql_join_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incrementally-maintained revenue-per-nation over a 3-table join,
     from one SQL statement."""
     from ..functions.text import round_portable
-    from ..plans import maintain_join_agg_of_sql
 
     df = maintain_join_agg_of_sql(spark, sf_dir, _SQL_JOIN_AGG_STMT)
     return df.selectExpr(
@@ -545,8 +544,6 @@ _SQL_CD_STMT = (
 def q_delta_sql_count_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exactly-maintained count(DISTINCT) beside plain aggregates,
     from one SQL GROUP BY string."""
-    from ..plans import maintain_agg_of_sql
-
     df = maintain_agg_of_sql(spark, sf_dir, _SQL_CD_STMT)
     return df.selectExpr(
         "o_orderpriority",
@@ -579,8 +576,6 @@ _SQL_JOIN_CD_STMT = (
 def q_delta_sql_join_count_distinct(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from ..plans import maintain_join_agg_of_sql
-
     return maintain_join_agg_of_sql(spark, sf_dir, _SQL_JOIN_CD_STMT)
 
 
@@ -625,31 +620,25 @@ _SQL_UNION_ORACLE = _except_all(
 # decomposable aggregates (sum/count/min/max) over append-only inputs,
 # the maintained state merges with the delta batch's partial aggregate:
 #     agg(T ∪ ΔT) == merge(agg(T), agg(ΔT))
-# Here the merge is expressed as re-aggregation over the union of the
-# old result and the delta partial — the same shape Spark's own partial
-# aggregation uses, so Catalyst plans it map-side. At 100 TB the old
-# aggregate is a tiny materialized table; only ΔT is scanned.
+# Each maintainer below is one GROUP BY statement run through
+# ``maintain_agg_of_sql`` (the engine's ``AggAlgebra`` partials of the
+# old snapshot and of ΔT, unioned and combined — Catalyst plans both
+# levels map-side) plus the query's output projection. At 100 TB the
+# old aggregate is a tiny materialized table; only ΔT is scanned.
+
+_AGG_STMT = (
+    "SELECT o_orderpriority, sum(o_totalprice) AS total, "
+    "count(*) AS n_orders, max(o_totalprice) AS max_price "
+    "FROM orders GROUP BY o_orderpriority"
+)
 
 
 def q_delta_agg_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import functions as F
-
-    cat = DeltaCatalog(spark, sf_dir)
-
-    def partial(df: DataFrame) -> DataFrame:
-        return df.groupBy("o_orderpriority").agg(
-            F.sum("o_totalprice").alias("p_total"),
-            F.count("*").alias("p_n"),
-            F.max("o_totalprice").alias("p_max"),
-        )
-
-    merged = partial(cat.snapshot("orders")).unionByName(
-        partial(cat.delta("orders"))
-    )
-    return merged.groupBy("o_orderpriority").agg(
-        F.round(F.sum("p_total"), 2).alias("total"),
-        F.sum("p_n").cast("bigint").alias("n_orders"),
-        F.round(F.max("p_max"), 2).alias("max_price"),
+    return maintain_agg_of_sql(spark, sf_dir, _AGG_STMT).selectExpr(
+        "o_orderpriority",
+        "round(total, 2) AS total",
+        "n_orders",
+        "round(max_price, 2) AS max_price",
     )
 
 
@@ -662,6 +651,12 @@ SELECT o_orderpriority,
 FROM orders GROUP BY o_orderpriority
 """
 
+_ROLLUP_STMT = (
+    f"SELECT {_ROLLUP_BUCKET} AS bucket, event_type, "
+    "count(*) AS n_events, sum(value) AS total_value "
+    f"FROM events GROUP BY {_ROLLUP_BUCKET}, event_type"
+)
+
 
 def q_delta_rollup_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hypertable-style continuous aggregate: an hourly events rollup
@@ -672,24 +667,10 @@ def q_delta_rollup_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     how a time-series continuous aggregate stays fresh. Time-bucketed
     keys mean a delta touches only the buckets its rows fall in.
     """
-    from pyspark.sql import functions as F
 
-    cat = DeltaCatalog(spark, sf_dir)
-
-    def partial(df: DataFrame) -> DataFrame:
-        return df.groupBy(
-            F.date_format(F.date_trunc("hour", "ts"), "yyyy-MM-dd HH:00").alias(
-                "bucket"
-            ),
-            "event_type",
-        ).agg(F.count("*").alias("p_n"), F.sum("value").alias("p_val"))
-
-    merged = partial(cat.snapshot("events")).unionByName(
-        partial(cat.delta("events"))
-    )
-    return merged.groupBy("bucket", "event_type").agg(
-        F.sum("p_n").cast("bigint").alias("n_events"),
-        F.round(F.sum("p_val"), 2).alias("total_value"),
+    return maintain_agg_of_sql(spark, sf_dir, _ROLLUP_STMT).selectExpr(
+        "bucket", "event_type", "n_events",
+        "round(total_value, 2) AS total_value",
     )
 
 
@@ -738,34 +719,21 @@ _SEMI_ORACLE = _except_all(
 #
 # The content-hash dedup index is a decomposable aggregate
 # (count -> sum of counts, min -> min of mins), so it maintains from
-# partials: per refresh, ONLY the appended documents are normalized and
-# hashed — at 100 TB the md5-over-text pass touches the delta batch,
-# never the corpus.
-
-_P_DOCUMENTS = "doc_id % 9 = 0"
+# partials through ``maintain_agg_of_sql``, grouped by the hash
+# expression: per refresh, ONLY the appended documents are normalized
+# and hashed — at 100 TB the md5-over-text pass touches the delta
+# batch, never the corpus.
 
 
 def q_delta_dedup_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import functions as F
-
     from ..functions import text
 
-    cat = DeltaCatalog(spark, sf_dir)
-    norm = text.norm_text("text")
-
-    def partial(df: DataFrame) -> DataFrame:
-        return (
-            df.selectExpr("doc_id", f"md5({norm}) AS content_hash")
-            .groupBy("content_hash")
-            .agg(F.count("*").alias("p_n"), F.min("doc_id").alias("p_keep"))
-        )
-
-    merged = partial(cat.snapshot("documents")).unionByName(
-        partial(cat.delta("documents"))
-    )
-    return merged.groupBy("content_hash").agg(
-        F.sum("p_n").cast("bigint").alias("n_docs"),
-        F.min("p_keep").alias("keep_doc_id"),
+    content_hash = f"md5({text.norm_text('text')})"
+    return maintain_agg_of_sql(
+        spark,
+        sf_dir,
+        f"SELECT {content_hash} AS content_hash, count(*) AS n_docs, "
+        f"min(doc_id) AS keep_doc_id FROM documents GROUP BY {content_hash}",
     )
 
 
@@ -873,39 +841,35 @@ def q_delta_topk_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Fixed-bin histograms are the decomposable form of the quantile /
 # distribution sketch: per-bin counts merge by addition, so the
 # maintained state is (group, bin, n) and a refresh adds the delta
-# batch's bin counts — the at-scale substrate for approximate
+# batch's bin counts (``maintain_agg_of_sql`` over a GROUP BY on the
+# bin expression) — the at-scale substrate for approximate
 # percentiles, drift monitors, and range-pruning stats. Binning uses
 # one double division + floor (identical IEEE on both engines), so
 # unlike t-digest/KLL the merged state is exactly oracle-checkable.
 
-_HIST_BIN_WIDTH, _HIST_MAX_BIN = 25.0, 19  # events.value ∈ [0, ~490]
+# One bin definition for the histogram maintainers here and in
+# signed_queries.py: their statements and oracles share these numbers.
+HIST_BIN_WIDTH, HIST_MAX_BIN = 25.0, 19  # events.value ∈ [0, ~490]
+HIST_BIN = (
+    f"CAST(least({HIST_MAX_BIN}, greatest(0, "
+    f"CAST(floor(value / CAST({HIST_BIN_WIDTH} AS DOUBLE)) AS INT))) AS INT)"
+)
 
 
 def q_delta_histogram_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import functions as F
-
-    cat = DeltaCatalog(spark, sf_dir)
-    bin_expr = (
-        f"CAST(least({_HIST_MAX_BIN}, greatest(0, "
-        f"CAST(floor(value / CAST({_HIST_BIN_WIDTH} AS DOUBLE)) AS INT))) AS INT)"
-    )
-
-    def partial(df: DataFrame) -> DataFrame:
-        return df.selectExpr("event_type", f"{bin_expr} AS bin").groupBy(
-            "event_type", "bin"
-        ).agg(F.count("*").alias("p_n"))
-
-    merged = partial(cat.snapshot("events")).unionByName(partial(cat.delta("events")))
-    return merged.groupBy("event_type", "bin").agg(
-        F.sum("p_n").cast("bigint").alias("n_events")
+    return maintain_agg_of_sql(
+        spark,
+        sf_dir,
+        f"SELECT event_type, {HIST_BIN} AS bin, count(*) AS n_events "
+        f"FROM events GROUP BY event_type, {HIST_BIN}",
     )
 
 
 # Oracle: the maintained histogram must equal the full-table histogram.
 _HIST_MAINT_ORACLE = f"""
 SELECT event_type,
-       CAST(least({_HIST_MAX_BIN}, greatest(0,
-         CAST(floor(value / CAST({_HIST_BIN_WIDTH} AS DOUBLE)) AS INT))) AS INT) AS bin,
+       CAST(least({HIST_MAX_BIN}, greatest(0,
+         CAST(floor(value / CAST({HIST_BIN_WIDTH} AS DOUBLE)) AS INT))) AS INT) AS bin,
        CAST(count(*) AS BIGINT) AS n_events
 FROM events GROUP BY 1, 2
 """

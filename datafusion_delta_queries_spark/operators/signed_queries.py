@@ -56,16 +56,28 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.text import round_portable, token_bucket
-from ..plans import CrossJoin, Filter, Join, Projection, Scan, Union
+from ..plans import (
+    CrossJoin,
+    Filter,
+    Join,
+    Projection,
+    Scan,
+    Union,
+    maintain_agg_of_sql_signed,
+    maintain_join_agg_of_sql_signed,
+    signed_delta_of_sql,
+)
 from ..plans.signed import (
     CDC_SPECS,
     SIGN,
     CdcSpec,
     SignedDeltaCatalog,
     compile_signed_delta,
+    compile_signed_delta_scoped_join,
     consolidate,
 )
 from ..sources.state import StateStore
+from .delta_queries import HIST_BIN, HIST_BIN_WIDTH, HIST_MAX_BIN
 
 # ----------------------------------------------------------------------
 # Oracle-side old/new state SQL, generated from the SAME CDC_SPECS the
@@ -261,34 +273,22 @@ _UNION_ORACLE = _net_oracle(
 # The update rewrites o_orderpriority to '0-UPDATED', so every update
 # MOVES rows between groups: the pre-image retracts from the old group,
 # the post-image inserts into the new one — the case positive-only IVM
-# cannot express at all. Sums aggregate integer cents (exactly-2-decimal
-# prices) so partial-merge totals are bitwise equal to the oracle's
-# single pass, mirroring delta_sql_agg_maintenance's technique.
+# cannot express at all. ``maintain_agg_of_sql_signed`` merges the
+# change batch's sign-weighted partials into the old partials; groups
+# whose row count reaches zero vanish. Sums aggregate integer cents
+# (exactly-2-decimal prices) so partial-merge totals are bitwise equal
+# to the oracle's single pass, mirroring delta_sql_agg_maintenance's
+# technique.
 
 _CENTS = "CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT)"
+_AGG_STMT = (
+    f"SELECT o_orderpriority, sum({_CENTS}) AS cents, count(*) AS n_orders "
+    "FROM orders GROUP BY o_orderpriority"
+)
 
 
 def q_signed_agg_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cat = SignedDeltaCatalog(spark, sf_dir)
-
-    stored = cat.old("orders").groupBy("o_orderpriority").agg(
-        F.expr(f"sum({_CENTS})").alias("p_cents"),
-        F.count("*").alias("p_n"),
-    )
-    d = cat.signed_changes("orders").groupBy("o_orderpriority").agg(
-        F.expr(f"sum({SIGN} * {_CENTS})").alias("p_cents"),
-        F.expr(f"sum({SIGN})").alias("p_n"),
-    )
-    merged = (
-        stored.unionByName(d)
-        .groupBy("o_orderpriority")
-        .agg(
-            F.sum("p_cents").alias("cents"),
-            F.sum("p_n").cast("bigint").alias("n_orders"),
-        )
-        .where(F.col("n_orders") > 0)
-    )
-    return merged.selectExpr(
+    return maintain_agg_of_sql_signed(spark, sf_dir, _AGG_STMT).selectExpr(
         "o_orderpriority",
         "round(cents / 100.0, 2) AS total",
         "n_orders",
@@ -312,6 +312,13 @@ FROM ({_new_sql("orders")}) GROUP BY o_orderpriority
 # both appear and disappear in one batch. The stored state keeps the
 # per-(group, value) multiplicity; the signed delta adjusts it; values
 # whose multiplicity reaches zero stop counting — exact, no sketch.
+#
+# Hand-written on purpose: through ``maintain_agg_of_sql_signed`` the
+# count(*) beside the distinct count is a second partial frame, so the
+# old input and the change batch are each scanned twice (scalar
+# partials, then pairs) and stitched on the keys — 4 → 7 Spark jobs and
+# 30,000 → 60,000 input rows at sf0.01, oracle compare included. Here
+# n_events is the sum of the live pair multiplicities: one scan each.
 
 def q_signed_count_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     cat = SignedDeltaCatalog(spark, sf_dir)
@@ -349,6 +356,14 @@ FROM ({_new_sql("events")}) GROUP BY event_type
 # their stored extrema verbatim; touched groups recompute from the new
 # state restricted to exactly those groups — a broadcast semi join, so
 # at 100 TB (key-partitioned base) only touched partitions are read.
+#
+# Hand-written on purpose: ``maintain_agg_of_sql_signed`` scans the
+# change batch once for its partials and again for the touched keys
+# (column pruning gives the two branches different exchanges, so AQE
+# cannot reuse one), and the old input once for the live-row counts and
+# again for the untouched extrema — 5 → 8 Spark jobs and 40,000 →
+# 70,000 input rows at sf0.01, oracle compare included. This body
+# reads each input once.
 
 def q_signed_minmax(spark: SparkSession, sf_dir: str) -> DataFrame:
     cat = SignedDeltaCatalog(spark, sf_dir)
@@ -385,44 +400,26 @@ FROM ({_new_sql("events")}) GROUP BY event_type
 # (customer, order) — the exact case SURVEY §4.3 shows the reference
 # silently mis-computes (mod.rs:126 reuses the outer join_type in the
 # positive rule). With signs it is expressible; the maintenance is
-# delta-scoped: every output change is confined to join keys present
-# in either change batch (untouched customers keep identical rows —
-# their orders didn't change), so recomputing old-vs-new on the
-# touched-key slice and diffing yields the exact net change. The green
-# oracle, which diffs the UNRESTRICTED query, certifies that
-# confinement, not just the arithmetic.
+# delta-scoped (``compile_signed_delta_scoped_join``): every output
+# change is confined to join keys present in either change batch
+# (untouched customers keep identical rows — their orders didn't
+# change), so recomputing old-vs-new on the touched-key slice and
+# diffing yields the exact net change. The green oracle, which diffs
+# the UNRESTRICTED query, certifies that confinement, not just the
+# arithmetic.
+
+_OUTER_IR = Projection(
+    ["c_custkey", "c_name", "o_orderkey", "round(o_totalprice, 2) AS total"],
+    Join(
+        Scan("customer"), Scan("orders"), on=[("c_custkey", "o_custkey")],
+        join_type="left",
+    ),
+)
+
 
 def q_signed_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     cat = SignedDeltaCatalog(spark, sf_dir)
-
-    touched = (
-        cat.signed_changes("customer").select(F.col("c_custkey").alias("k"))
-        .union(cat.signed_changes("orders").select(F.col("o_custkey").alias("k")))
-        .distinct()
-    )
-
-    def slice_q(cust: DataFrame, orders: DataFrame) -> DataFrame:
-        c = cust.join(
-            F.broadcast(touched), cust["c_custkey"] == touched["k"], "left_semi"
-        )
-        o = orders.join(
-            F.broadcast(touched), orders["o_custkey"] == touched["k"], "left_semi"
-        )
-        j = c.alias("c").join(
-            o.alias("o"), F.col("c.c_custkey") == F.col("o.o_custkey"), "left_outer"
-        )
-        return j.selectExpr(
-            "c_custkey", "c_name", "o_orderkey",
-            "round(o_totalprice, 2) AS total",
-        )
-
-    new_slice = slice_q(cat.new("customer"), cat.new("orders")).withColumn(
-        SIGN, F.lit(1).cast("bigint")
-    )
-    old_slice = slice_q(cat.old("customer"), cat.old("orders")).withColumn(
-        SIGN, F.lit(-1).cast("bigint")
-    )
-    return consolidate(new_slice.union(old_slice))
+    return consolidate(compile_signed_delta_scoped_join(_OUTER_IR, cat))
 
 
 _OUTER_BODY = (
@@ -441,43 +438,24 @@ _OUTER_ORACLE = _net_oracle(
 # Semi join is monotone under inserts (the positive path has an
 # algebraic rule, plans/rewrite.py) but NOT under retractions: deleting
 # a customer's last qualifying order must retract the customer row.
-# Delta-scoped recompute covers it: output changes are confined to
-# customers whose own row or whose orders changed.
+# Delta-scoped recompute (``compile_signed_delta_scoped_join``) covers
+# it: output changes are confined to customers whose own row or whose
+# orders changed.
+
+_SEMI_IR = Projection(
+    ["c_custkey", "c_name", "round(c_acctbal, 2) AS bal"],
+    Join(
+        Scan("customer"),
+        Filter("o_totalprice > 150000", Scan("orders")),
+        on=[("c_custkey", "o_custkey")],
+        join_type="semi",
+    ),
+)
+
 
 def q_signed_semi_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     cat = SignedDeltaCatalog(spark, sf_dir)
-
-    touched = (
-        cat.signed_changes("customer").select(F.col("c_custkey").alias("k"))
-        .union(cat.signed_changes("orders").select(F.col("o_custkey").alias("k")))
-        .distinct()
-    )
-
-    def slice_q(cust: DataFrame, orders: DataFrame) -> DataFrame:
-        c = cust.join(
-            F.broadcast(touched), cust["c_custkey"] == touched["k"], "left_semi"
-        )
-        # Restricting orders to the touched keys too is free correctness
-        # (the kept customers' keys are all touched) and keeps the probe
-        # side delta-sized.
-        o = orders.where("o_totalprice > 150000").join(
-            F.broadcast(touched), orders["o_custkey"] == touched["k"], "left_semi"
-        )
-        matched = c.alias("c").join(
-            o.alias("o"), F.col("c.c_custkey") == F.col("o.o_custkey"),
-            "left_semi",
-        )
-        return matched.selectExpr(
-            "c_custkey", "c_name", "round(c_acctbal, 2) AS bal"
-        )
-
-    new_slice = slice_q(cat.new("customer"), cat.new("orders")).withColumn(
-        SIGN, F.lit(1).cast("bigint")
-    )
-    old_slice = slice_q(cat.old("customer"), cat.old("orders")).withColumn(
-        SIGN, F.lit(-1).cast("bigint")
-    )
-    return consolidate(new_slice.union(old_slice))
+    return consolidate(compile_signed_delta_scoped_join(_SEMI_IR, cat))
 
 
 _SEMI_BODY = (
@@ -549,8 +527,9 @@ SELECT o_orderpriority, rk, o_orderkey, price FROM (
 #
 # The flagship composition: revenue per order priority over the
 # biggest fact table (lineitem ⋈ orders), maintained while BOTH sides
-# take inserts, deletes, AND updates. The join delta flows through the
-# bilinear signed rewrite; the aggregate through signed partial merge.
+# take inserts, deletes, AND updates, through
+# ``maintain_join_agg_of_sql_signed``: the join delta flows through the
+# bilinear signed rewrite, the aggregate through signed partial merge.
 # Change granularity is per line item ((orderkey, linenumber)
 # mod-classes), so one changed line of a multi-line order must adjust
 # revenue WITHOUT re-counting the order's other lines — and deleting
@@ -561,40 +540,16 @@ SELECT o_orderpriority, rk, o_orderkey, price FROM (
 _REV_CENTS = (
     "CAST(floor(l_extendedprice * (1 - l_discount) * 100 + 0.5) AS BIGINT)"
 )
-
-_JOIN_AGG_IR = Projection(
-    ["o_orderpriority", f"{_REV_CENTS} AS rev_cents"],
-    Join(Scan("lineitem"), Scan("orders"), on=[("l_orderkey", "o_orderkey")]),
+_JOIN_AGG_STMT = (
+    f"SELECT o_orderpriority, sum({_REV_CENTS}) AS revenue_cents, "
+    "count(*) AS n_lines "
+    "FROM lineitem JOIN orders ON lineitem.l_orderkey = orders.o_orderkey "
+    "GROUP BY o_orderpriority"
 )
 
 
 def q_signed_join_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cat = SignedDeltaCatalog(spark, sf_dir)
-
-    from ..plans.signed import compile_old
-
-    stored = (
-        compile_old(_JOIN_AGG_IR, cat)
-        .groupBy("o_orderpriority")
-        .agg(F.sum("rev_cents").alias("p_cents"), F.count("*").alias("p_n"))
-    )
-    d = (
-        compile_signed_delta(_JOIN_AGG_IR, cat)
-        .groupBy("o_orderpriority")
-        .agg(
-            F.expr(f"sum({SIGN} * rev_cents)").alias("p_cents"),
-            F.expr(f"sum({SIGN})").alias("p_n"),
-        )
-    )
-    return (
-        stored.unionByName(d)
-        .groupBy("o_orderpriority")
-        .agg(
-            F.sum("p_cents").cast("bigint").alias("revenue_cents"),
-            F.sum("p_n").cast("bigint").alias("n_lines"),
-        )
-        .where(F.col("n_lines") > 0)
-    )
+    return maintain_join_agg_of_sql_signed(spark, sf_dir, _JOIN_AGG_STMT)
 
 
 _JOIN_AGG_ORACLE = f"""
@@ -615,12 +570,11 @@ GROUP BY o_orderpriority
 # and a post-merge HAVING, all maintained under inserts + deletes +
 # group-moving updates via plans.sql_frontend.maintain_agg_of_sql_signed.
 
-_CENTS_EXPR = "CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT)"
 _SQL_AGG_STMT = (
     f"SELECT o_orderpriority, count(*) AS n_orders, "
-    f"sum({_CENTS_EXPR}) AS cents, "
+    f"sum({_CENTS}) AS cents, "
     f"min(o_totalprice) AS min_price, max(o_totalprice) AS max_price, "
-    f"avg({_CENTS_EXPR}) AS avg_cents, "
+    f"avg({_CENTS}) AS avg_cents, "
     f"count(DISTINCT o_custkey) AS n_custs "
     f"FROM orders WHERE o_totalprice > 50000 GROUP BY o_orderpriority "
     f"HAVING count(*) >= 10"
@@ -628,16 +582,14 @@ _SQL_AGG_STMT = (
 
 
 def q_signed_sql_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..plans.sql_frontend import maintain_agg_of_sql_signed
-
     return maintain_agg_of_sql_signed(spark, sf_dir, _SQL_AGG_STMT)
 
 
 _SQL_AGG_ORACLE = f"""
 SELECT o_orderpriority, count(*) AS n_orders,
-       CAST(sum({_CENTS_EXPR}) AS BIGINT) AS cents,
+       CAST(sum({_CENTS}) AS BIGINT) AS cents,
        min(o_totalprice) AS min_price, max(o_totalprice) AS max_price,
-       avg({_CENTS_EXPR}) AS avg_cents,
+       avg({_CENTS}) AS avg_cents,
        count(DISTINCT o_custkey) AS n_custs
 FROM ({_new_sql("orders")})
 WHERE o_totalprice > 50000 GROUP BY o_orderpriority
@@ -1288,8 +1240,6 @@ def q_signed_sql_join_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     bilinear signed rewrite, the aggregate through sign-weighted
     partial merge, count(DISTINCT) via multiplicity state over the
     join output — one SQL statement, both fact sides changing."""
-    from ..plans.sql_frontend import maintain_join_agg_of_sql_signed
-
     return maintain_join_agg_of_sql_signed(spark, sf_dir, _SQL_JOIN_AGG_STMT)
 
 
@@ -1306,7 +1256,7 @@ GROUP BY o_orderpriority HAVING count(*) >= 10
 
 # -- LEFT JOIN + GROUP BY from one SQL statement, under retractions ----
 #
-# The SQL surface for the hand-built signed_outer_join algebra: the
+# The SQL surface for the signed_outer_join algebra: the
 # fragment's signed delta comes from compile_signed_delta_scoped_join
 # (old-vs-new diff on the broadcast touched-key slice — the linear
 # rewrite refuses outer joins, and the reference silently mis-computes
@@ -1327,8 +1277,6 @@ _SQL_OUTER_AGG_STMT = (
 def q_signed_sql_outer_join_agg(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from ..plans.sql_frontend import maintain_join_agg_of_sql_signed
-
     return maintain_join_agg_of_sql_signed(
         spark, sf_dir, _SQL_OUTER_AGG_STMT
     )
@@ -1375,8 +1323,6 @@ _SQL_OUTER_CHAIN_STMT = (
 def q_signed_sql_outer_chain_agg(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from ..plans.sql_frontend import maintain_join_agg_of_sql_signed
-
     return maintain_join_agg_of_sql_signed(
         spark, sf_dir, _SQL_OUTER_CHAIN_STMT
     )
@@ -1417,8 +1363,6 @@ def q_signed_sql_snowflake_chain_agg(
     fact directly. LEFT customer join keeps the padded (NULL segment)
     group live under CDC; null-safe snowflake joins refuse instead
     (plans/signed.py)."""
-    from ..plans.sql_frontend import maintain_join_agg_of_sql_signed
-
     return maintain_join_agg_of_sql_signed(
         spark, sf_dir, _SQL_SNOWFLAKE_CHAIN_STMT
     )
@@ -1450,8 +1394,6 @@ def q_signed_sql_frontend(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The same SQL string the positive path runs (delta_sql_frontend),
     now maintained under deletes/updates: parse → signed rewrite →
     consolidated net change, via the one-call entry point."""
-    from ..plans.sql_frontend import signed_delta_of_sql
-
     return signed_delta_of_sql(spark, sf_dir, _SQL_STMT)
 
 
@@ -1473,8 +1415,10 @@ _SQL_ORACLE = _net_oracle(
 # Fixed-bin histograms are counting sketches, and counts are linear in
 # the signed algebra: a delete subtracts from its bin exactly as an
 # insert adds. The maintainer therefore needs NO delta-scoped
-# recompute — stored per-bin partials plus signed delta partials merge
-# group-wise, and only bins whose count reaches zero vanish. The
+# recompute — ``maintain_agg_of_sql_signed`` merges the stored per-bin
+# partials with the signed delta partials group-wise (the bin
+# definition is delta_queries.HIST_BIN), and only bins whose count
+# reaches zero vanish. The
 # events update moves rows between bins (value + 64.0 crosses the
 # 25-wide bin boundary), so pre-image (−1, old bin) and post-image
 # (+1, new bin) both fire — the case a positive-only histogram
@@ -1482,45 +1426,21 @@ _SQL_ORACLE = _net_oracle(
 # express. Scale: both sides are map-side-combinable group-bys; state
 # is O(types × bins), never O(rows).
 
-_SH_BIN_WIDTH, _SH_MAX_BIN = 25.0, 19  # events.value ∈ [0, ~490]
-_SH_BIN = (
-    f"CAST(least({_SH_MAX_BIN}, greatest(0, "
-    f"CAST(floor(value / CAST({_SH_BIN_WIDTH} AS DOUBLE)) AS INT))) AS INT)"
+_SH_STMT = (
+    f"SELECT event_type, {HIST_BIN} AS bin, count(*) AS n_events "
+    f"FROM events GROUP BY event_type, {HIST_BIN}"
 )
 
 
-def _signed_histogram(cat: SignedDeltaCatalog) -> DataFrame:
-    """The maintained (event_type, bin, n_events) relation: stored
-    per-bin partials plus signed delta partials, merged group-wise."""
-    stored = (
-        cat.old("events")
-        .selectExpr("event_type", f"{_SH_BIN} AS bin")
-        .groupBy("event_type", "bin")
-        .agg(F.count("*").alias("p_n"))
-    )
-    d = (
-        cat.signed_changes("events")
-        .selectExpr("event_type", f"{_SH_BIN} AS bin", SIGN)
-        .groupBy("event_type", "bin")
-        .agg(F.sum(SIGN).alias("p_n"))
-    )
-    return (
-        stored.unionByName(d)
-        .groupBy("event_type", "bin")
-        .agg(F.sum("p_n").cast("bigint").alias("n_events"))
-        .where(F.col("n_events") > 0)
-    )
-
-
 def q_signed_histogram_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _signed_histogram(SignedDeltaCatalog(spark, sf_dir))
+    return maintain_agg_of_sql_signed(spark, sf_dir, _SH_STMT)
 
 
 # The maintained histogram must equal the new-state histogram exactly.
 _SH_ORACLE = f"""
 SELECT event_type,
-       CAST(least({_SH_MAX_BIN}, greatest(0,
-         CAST(floor(value / CAST({_SH_BIN_WIDTH} AS DOUBLE)) AS INT))) AS INT) AS bin,
+       CAST(least({HIST_MAX_BIN}, greatest(0,
+         CAST(floor(value / CAST({HIST_BIN_WIDTH} AS DOUBLE)) AS INT))) AS INT) AS bin,
        CAST(count(*) AS BIGINT) AS n_events
 FROM ({_new_sql("events")}) GROUP BY 1, 2 HAVING count(*) > 0
 """
@@ -1542,7 +1462,7 @@ FROM ({_new_sql("events")}) GROUP BY 1, 2 HAVING count(*) > 0
 def q_signed_quantile_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
-    hist = _signed_histogram(SignedDeltaCatalog(spark, sf_dir))
+    hist = q_signed_histogram_maintenance(spark, sf_dir)
     cum = hist.select(
         "event_type",
         "bin",
@@ -1563,8 +1483,8 @@ def q_signed_quantile_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame
         )
         .selectExpr(
             "event_type",
-            f"CAST((b50 + 1) * {_SH_BIN_WIDTH} AS DOUBLE) AS p50_ub",
-            f"CAST((b95 + 1) * {_SH_BIN_WIDTH} AS DOUBLE) AS p95_ub",
+            f"CAST((b50 + 1) * {HIST_BIN_WIDTH} AS DOUBLE) AS p50_ub",
+            f"CAST((b95 + 1) * {HIST_BIN_WIDTH} AS DOUBLE) AS p95_ub",
             "n_events",
         )
     )
@@ -1574,8 +1494,8 @@ def q_signed_quantile_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame
 _SQ_ORACLE = f"""
 WITH hist AS (
   SELECT event_type,
-         CAST(least({_SH_MAX_BIN}, greatest(0,
-           CAST(floor(value / CAST({_SH_BIN_WIDTH} AS DOUBLE)) AS INT))) AS INT) AS bin,
+         CAST(least({HIST_MAX_BIN}, greatest(0,
+           CAST(floor(value / CAST({HIST_BIN_WIDTH} AS DOUBLE)) AS INT))) AS INT) AS bin,
          count(*) AS n
   FROM ({_new_sql("events")}) GROUP BY 1, 2
 ), cum AS (
@@ -1587,9 +1507,9 @@ WITH hist AS (
 )
 SELECT event_type,
        CAST((min(CASE WHEN 2 * cum >= total THEN bin END) + 1)
-            * {_SH_BIN_WIDTH} AS DOUBLE) AS p50_ub,
+            * {HIST_BIN_WIDTH} AS DOUBLE) AS p50_ub,
        CAST((min(CASE WHEN 20 * cum >= 19 * total THEN bin END) + 1)
-            * {_SH_BIN_WIDTH} AS DOUBLE) AS p95_ub,
+            * {HIST_BIN_WIDTH} AS DOUBLE) AS p95_ub,
        CAST(max(total) AS BIGINT) AS n_events
 FROM cum GROUP BY event_type
 """

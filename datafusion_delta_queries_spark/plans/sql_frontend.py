@@ -1052,18 +1052,36 @@ def _rewrite_having(
     return _expr_text(out)
 
 
+def _side_col(side: str, name: str):
+    return F.col(f"{side}.`{name.replace('`', '``')}`")
+
+
+def _keys_match(key_names: list[str]):
+    """Null-safe equality of every key between the sides aliased
+    ``_l`` and ``_r``. Naming each column through its side's alias lets
+    two frames derived from one aggregate (same attribute ids) join like
+    any other two, without Spark's trivially-true self-join rewrite."""
+    cond = None
+    for n in key_names:
+        c = _side_col("_l", n).eqNullSafe(_side_col("_r", n))
+        cond = c if cond is None else cond & c
+    return cond
+
+
 def _join_on_keys(
     left: DataFrame, right: DataFrame, key_names: list[str]
 ) -> DataFrame:
     """Null-safe inner equi-join on the grouping keys (groupBy treats
     NULL as a regular group, so the stitch between the merge-aggregate
     frame and a count-distinct frame must too)."""
-    cond = None
-    for n in key_names:
-        c = left[n].eqNullSafe(right[n])
-        cond = c if cond is None else cond & c
-    extra = [right[c] for c in right.columns if c not in key_names]
-    return left.join(right, cond, "inner").select(left["*"], *extra)
+    return (
+        left.alias("_l")
+        .join(right.alias("_r"), _keys_match(key_names), "inner")
+        .select(
+            *[_side_col("_l", c) for c in left.columns],
+            *[_side_col("_r", c) for c in right.columns if c not in key_names],
+        )
+    )
 
 
 def _merge_positive(spec: dict, old: DataFrame, delta: DataFrame) -> DataFrame:
@@ -1102,9 +1120,8 @@ def _merge_signed(
     alg = AggAlgebra(spec)
     keys = alg.key_names
     d = alg.grouped(signed, alg.signed)
-    merged = alg.combined(
-        alg.grouped(old, alg.partial).unionByName(d)
-    ).where("_rows > 0")
+    partials = alg.grouped(old, alg.partial)
+    merged = alg.combined(partials.unionByName(d)).where("_rows > 0")
     if alg.minmax:
         if new is None:
             raise ValueError(
@@ -1113,17 +1130,17 @@ def _merge_signed(
                 "delta-scoped recompute"
             )
         # ONE extrema frame for every min/max output: the old extrema
-        # of untouched groups beside the touched groups' recompute.
-        extrema = [m["partial"] for m in alg.minmax]
+        # of untouched groups (read off the old partials) beside the
+        # touched groups' recompute.
+        cols = [m["col"] for m in alg.minmax]
         touched = d.select(*keys)
-        untouched = _anti_on_keys(alg.grouped(old, extrema), touched, keys)
+        untouched = _anti_on_keys(partials.select(*keys, *cols), touched, keys)
         recomputed = alg.grouped(
-            _semi_on_keys(new, touched, spec["keys"], keys), extrema
+            _semi_on_keys(new, touched, spec["keys"], keys),
+            [m["partial"] for m in alg.minmax],
         )
         merged = _join_on_keys(
-            merged.drop(*[m["col"] for m in alg.minmax]),
-            untouched.unionByName(recomputed),
-            keys,
+            merged.drop(*cols), untouched.unionByName(recomputed), keys
         )
     return _finish(spec, alg, alg.finals(merged), old, signed, NET_ROWS)
 
@@ -1393,11 +1410,9 @@ def maintain_agg_of_sql_signed(
 
 def _anti_on_keys(left: DataFrame, keys_df: DataFrame,
                   key_names: list[str]) -> DataFrame:
-    cond = None
-    for n in key_names:
-        c = left[n].eqNullSafe(keys_df[n])
-        cond = c if cond is None else cond & c
-    return left.join(F.broadcast(keys_df), cond, "left_anti")
+    return left.alias("_l").join(
+        F.broadcast(keys_df).alias("_r"), _keys_match(key_names), "left_anti"
+    )
 
 
 def _semi_on_keys(df: DataFrame, keys_df: DataFrame, keys: list[str],
@@ -1438,8 +1453,8 @@ def maintain_join_agg_of_sql_signed(
     SEMI/ANTI) equi-join fragment routes through the delta-scoped
     recompute compiler instead
     (``compile_signed_delta_scoped_join`` — old-vs-new diff on the
-    touched-key slice, the algebra the hand-built
-    ``signed_outer_join`` maintainer uses), so ``SELECT … FROM a LEFT
+    touched-key slice, the compiler the ``signed_outer_join``
+    maintainer runs), so ``SELECT … FROM a LEFT
     JOIN b ON … GROUP BY`` statements are maintained under
     retractions too — a dangling left row gaining its first match has
     its NULL-padded contribution retracted from its group. STAR-shaped

@@ -24,12 +24,6 @@ _HOME = {
     ("sql_frontend.py", "AggAlgebra.__init__"),
     ("sql_frontend.py", "<module>"),
 }
-# Registry query bodies that hand-write their own aggregates. They are
-# workloads with their own oracles, not maintainers.
-_WORKLOADS = {
-    ("signed_queries.py", "q_signed_agg_maintenance"),
-    ("signed_queries.py", "q_signed_join_agg"),
-}
 
 # Lower-cased fragments of the algebra's strings: the liveness column,
 # the signed count and the sign-weighted sum.
@@ -206,14 +200,14 @@ def test_nothing_reforks_the_aggregate_algebra(tmp_path):
         for sub in ("plans", "operators")
         for path in sorted((_PKG / sub).glob("*.py"))
         for f in _algebra_forks(path)
-        if f[:2] not in _HOME | _WORKLOADS
+        if f[:2] not in _HOME
     ]
     assert not found, found
-    # The exemptions still name real hand-written aggregates.
+    # The exemptions still name the algebra's real home.
     seen = {
         f[:2]
         for sub in ("plans", "operators")
         for path in sorted((_PKG / sub).glob("*.py"))
         for f in _algebra_forks(path)
     }
-    assert _HOME | _WORKLOADS <= seen, (_HOME | _WORKLOADS) - seen
+    assert _HOME <= seen, _HOME - seen

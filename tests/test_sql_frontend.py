@@ -948,6 +948,32 @@ class TestSignedAggOfSql:
         )
 
 
+def test_join_on_keys_of_one_aggregate(spark):
+    """Two frames cut from one aggregate carry the same attribute ids;
+    the key stitch still pairs their rows, NULL key included, instead
+    of failing Spark's ambiguous self-join check."""
+    from pyspark.sql import functions as F
+
+    from datafusion_delta_queries_spark.plans.sql_frontend import (
+        _join_on_keys,
+    )
+
+    agg = (
+        spark.createDataFrame(
+            [(1, 10), (1, 20), (2, 5), (None, 7)], "k int, v int"
+        )
+        .groupBy("k")
+        .agg(F.min("v").alias("lo"), F.max("v").alias("hi"))
+    )
+    out = _join_on_keys(
+        agg.select("k", "lo"), agg.where("hi > 5").select("k", "hi"), ["k"]
+    )
+    assert out.columns == ["k", "lo", "hi"]
+    assert sorted(map(tuple, out.collect()), key=str) == [
+        (1, 10, 20), (None, 7, 7)
+    ]
+
+
 class TestSignedJoinAggOfSql:
     def test_join_agg_all_classes_vs_recompute(self, spark):
         from datafusion_delta_queries_spark.plans.sql_frontend import (

@@ -1,0 +1,57 @@
+"""Per-query Spark jobs and input rows, checked against the oracles.
+
+Usage: python tools/job_table.py <sf_dir> <query> [<query> ...]
+Env:   SPARK_GRAFT_CPUS (session cores, default 32)
+
+Runs each named registry query through ``oracle.compare`` against its
+DuckDB oracle, inside its own job group, and prints one tab-separated
+line per query: name, ok, Spark jobs and input rows. The counts come
+from ``perfbench.probe.SparkProbe`` and include the compare's
+``toPandas`` collect. Run it on two checkouts to get a before → after
+table; the counts are deterministic for a given fixture directory.
+Exits 1 when a query is unknown, has no oracle, or fails its oracle.
+"""
+
+from __future__ import annotations
+
+import os
+import sys
+
+
+def main() -> int:
+    if len(sys.argv) < 3:
+        print(__doc__.strip().splitlines()[2], file=sys.stderr)
+        return 2
+    sf_dir, names = sys.argv[1], sys.argv[2:]
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    sys.path.insert(0, repo)
+
+    from datafusion_delta_queries_spark.operators import registry
+    from datafusion_delta_queries_spark.oracle import compare, run_oracle
+    from datafusion_delta_queries_spark.session import get_spark
+    from perfbench.probe import SparkProbe
+
+    spark = get_spark("dfdq-job-table")
+    probe = SparkProbe(spark)
+    queries, oracles = registry()
+    failed = 0
+    print("query\tok\tjobs\tinput_rows")
+    for name in names:
+        if name not in queries or name not in oracles:
+            print(f"{name}\tunknown\t-\t-")
+            failed += 1
+            continue
+        expected = run_oracle(oracles[name], sf_dir)
+        with probe.job_group(name) as gid:
+            ok, msg = compare(queries[name](spark, sf_dir), expected)
+        stats = probe.stage_stats(gid)
+        print(f"{name}\t{ok}\t{stats['jobs']}\t{stats['input_rows']}")
+        if not ok:
+            print(f"  {msg}", file=sys.stderr)
+            failed += 1
+    spark.stop()
+    return 1 if failed else 0
+
+
+if __name__ == "__main__":
+    sys.exit(main())
