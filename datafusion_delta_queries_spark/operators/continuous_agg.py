@@ -70,11 +70,16 @@ from ..plans.sql_frontend import (
     ROWS,
     AggAlgebra,
     UnsupportedSQL,
-    _semi_on_keys,
     agg_pairs,
     parse_agg_sql,
 )
-from ..sources.state import StateStore, guarded
+from ..sources.state import (
+    KeyFrames,
+    StateStore,
+    _quoted,
+    guarded,
+    touched_keys,
+)
 
 # The refresh guards' messages, raised inside the write plan and again
 # as ValueError.
@@ -178,6 +183,24 @@ class ContinuousAggregate:
             df = df.where(self.spec["where"])
         return self.alg.grouped(self._project(df), self.alg.partial)
 
+    def _key_level(self) -> tuple:
+        """The group keys as a ``touched_keys`` level: the grouping
+        expressions over projected rows, named and typed as stored."""
+        types = {f.name: f.dataType for f in self.store.schema().fields}
+        names = self.spec["key_names"]
+        return self.spec["keys"], names, [types[n] for n in names]
+
+    def _retracting(self) -> str | None:
+        """The predicate on projected signed rows that retract a
+        non-NULL min/max argument (None without min/max): only their
+        groups can lose a stored extremum."""
+        from ..plans.signed import SIGN
+
+        if not self.alg.minmax:
+            return None
+        args = " OR ".join(f"({a['arg']}) IS NOT NULL" for a in self.alg.minmax)
+        return f"{SIGN} < 0 AND ({args})"
+
     # -- lifecycle -----------------------------------------------------
 
     def initialize(self, base_df: DataFrame) -> None:
@@ -262,23 +285,30 @@ class ContinuousAggregate:
         ``least/greatest(stored, batch-insert extremum)``; a threatened
         group takes its recompute from the post-change base.
 
-        The base is read whenever the batch retracts a row: the
-        recompute is planned beside the fold, over every group the
-        batch retracts from (a semi join on the batch's keys), and the
-        threat test then picks each group's value. An insert-only batch
-        reads no base row when the base plan is a plain scan; a base
-        with a shuffle of its own (a ``CdfVersionedTable`` fold, say)
-        still runs that shuffle's map stage, which AQE starts before it
-        learns the retracted set is empty. For the join subclass with
-        DIM-side grouping keys the semi join restricts the dim branch,
-        not the fact scan, so that recompute costs a fact pass filtered
-        to the retracted groups — lay the fact out partitioned/clustered
-        on the join key to restore pruning there.
+        The base is read only when the batch retracts a min/max
+        argument: one driver collect (``sources.state.touched_keys``)
+        takes the key hashes of the retracting rows, the recompute is
+        planned beside the fold over the base filtered to that literal
+        set, and the threat test then picks each group's value. An
+        insert-only batch leaves the set empty, and the empty filter
+        prunes the base from the plan, a ``CdfVersionedTable`` fold
+        included. The filter reads no scan's statistics, so the base's
+        files are still read whole; it bounds what is shuffled and
+        aggregated. For the join subclass with DIM-side grouping keys
+        the filter can only sit above the fact ⋈ dim join, so that
+        recompute costs a fact pass — lay the fact out
+        partitioned/clustered on the join key to restore pruning there.
 
         A batch that retracts more rows than a group ever had is
         rejected loudly — silent negative counts would corrupt every
         later refresh.
         """
+        self._merge_signed_projected(
+            self._signed_batch(changes_df), base_new_df
+        )
+
+    def _signed_batch(self, changes_df: DataFrame) -> DataFrame:
+        """A change batch as signed rows, WHERE applied, projected."""
         from ..plans.signed import SIGN, signed_of_cdf
 
         if "_change_type" in changes_df.columns:
@@ -291,18 +321,19 @@ class ContinuousAggregate:
         df = changes_df
         if self.spec["where"]:
             df = df.where(self.spec["where"])
-        df = self._project(df)
-        self._merge_signed_projected(df, base_new_df)
+        return self._project(df)
 
     def _merge_signed_projected(
-        self, df: DataFrame, base_new_df: DataFrame | None
+        self, df: DataFrame, base_new_df: DataFrame | None, retracted=None
     ) -> None:
         """Signed entry of ``_fold``: ``df`` is an already-projected
         signed delta of the aggregate's INPUT relation (base rows for
         the plain class; the compiled join-fragment output for the
         join subclass — whichever side of the join the signs rode in
         on), and ``base_new_df`` the post-change base the min/max
-        repair recomputes from."""
+        repair recomputes from. ``retracted`` is the key set of the
+        groups ``df`` retracts a min/max argument from; without it,
+        ``_retracted`` makes it."""
         if self.alg.minmax and base_new_df is None:
             raise ValueError(
                 "statement carries min/max: signed partials cannot "
@@ -311,17 +342,29 @@ class ContinuousAggregate:
             )
         # One batch aggregation carries both the mergeable signed
         # partials and the min/max threat probes (_d{i}).
+        delta = self.alg.grouped(df, self.alg.signed + self.alg.probe)
+        if self.alg.minmax and retracted is None:
+            retracted = self._retracted(df, delta)
         self._fold(
-            self.alg.grouped(df, self.alg.signed + self.alg.probe),
+            delta,
             _NULL_KEY_IN_CHANGES,
             base_new_df if self.alg.minmax else None,
+            retracted,
         )
+
+    def _retracted(self, df: DataFrame, delta: DataFrame):
+        """The key set of the groups the projected signed batch ``df``
+        retracts a min/max argument from (``delta`` is its partials):
+        the ``_retracting`` rows' key hashes, from one collect."""
+        rows = df.where(self._retracting())
+        return touched_keys(rows, [self._key_level()])[0]
 
     def _fold(
         self,
         delta: DataFrame,
         null_key_msg: str,
         base_new_df: DataFrame | None = None,
+        retracted=None,
     ) -> None:
         """The one merge body: the state becomes ``stored ⟗ Δ``, folded.
 
@@ -332,13 +375,20 @@ class ContinuousAggregate:
         ``AggAlgebra.folded``: stored rows the batch misses pass
         through, new groups enter, a group at zero live rows is
         filtered out and so leaves. With ``base_new_df`` (a signed
-        batch carrying min/max), the groups the batch retracts from
-        recompute their extrema from it in the same plan, joined onto
-        the batch side. The NULL-key and negative-count guards are
-        ``raise_error`` inside the written frame (``StateStore.fold``),
-        so the refresh is one write action; a failed write leaves the
-        state as it was, and the guard's message is raised again as
-        ``ValueError``.
+        batch carrying min/max), the groups in ``retracted`` (the key
+        set of the groups the batch retracts an extremum argument
+        from) recompute their extrema from it in the same plan, joined
+        onto the batch side. The base is restricted by
+        ``retracted.restrict``: a literal filter on the hash of the
+        evaluated grouping keys, which reads no batch row and which
+        Catalyst pushes below the base's own plan (a CDF snapshot's
+        fold, say); an empty set prunes the base whole. A hash
+        collision recomputes an untouched group too, and the left join
+        onto the batch side drops it. The NULL-key and negative-count
+        guards are ``raise_error`` inside the written frame
+        (``StateStore.fold``), so the refresh is one write action; a
+        failed write leaves the state as it was, and the guard's
+        message is raised again as ``ValueError``.
 
         Retention predicates filter the batch's groups first: a late
         row (or a retraction) aimed at a dropped window is covered by
@@ -348,21 +398,15 @@ class ContinuousAggregate:
         delta = self._apply_retention(delta)
         repaired = None
         if mm:
-            retracted = delta.where(
-                " OR ".join(f"{a['del']} IS NOT NULL" for a in mm)
-            ).select(*keys)
             base = base_new_df
             if self.spec["where"]:
                 base = base.where(self.spec["where"])
-            # Restrict via the EVALUATED grouping-key expressions
-            # (plans.sql_frontend._semi_on_keys), not output names: a
-            # raw-base semi join on the alias crashes for expression
-            # keys (no such column) and silently mis-restricts when the
-            # alias shadows a base column.
+            # Restrict via the EVALUATED grouping-key expressions, not
+            # output names: a raw-base restriction on the alias crashes
+            # for expression keys (no such column) and silently
+            # mis-restricts when the alias shadows a base column.
             recomputed = self.alg.grouped(
-                _semi_on_keys(
-                    self._project(base), retracted, self.spec["keys"], keys
-                ),
+                retracted.restrict(self._project(base), self.spec["keys"]),
                 [a["partial"] for a in mm],
             )
             repaired = "__r"
@@ -634,6 +678,15 @@ class ContinuousJoinAggregate(ContinuousAggregate):
         return self._compile_fragment(
             {**self.dims, self.fact: df}.__getitem__, SIGN in df.columns
         )
+
+    def _retracted(self, df: DataFrame, delta: DataFrame):
+        """The retracted groups as a frame inside the write's plan: the
+        batch partials' groups with a retracted extremum argument. Here
+        ``df`` is the batch joined with the dims (with the fact, for a
+        dim batch), so a collect of it would run that join once more,
+        while the frame shares the fold's exchanges."""
+        cond = " OR ".join(f"{a['del']} IS NOT NULL" for a in self.alg.minmax)
+        return KeyFrames(delta.where(cond).select(*self.spec["key_names"]))
 
     def refresh_dim_signed(
         self,
@@ -1204,22 +1257,29 @@ class ContinuousRollupCascade:
     tier's ``combine`` expressions grouped by its coarser key.
     ``more_levels`` chains further tiers (day → month → …): level
     ``i+1`` refreshes from level ``i``'s stored partials, so the
-    month tier's repair reads ≤31 day rows per touched month no
+    month tier's repair aggregates ≤31 day rows per touched month no
     matter how large the corpus or the batch.
 
     Coarse repair is replace-per-touched-group: a batch touching hour
-    ``h`` re-aggregates ALL surviving fine partials of ``day(h)``
-    (a handful of rows via the broadcast semi join — ≤24 hourly rows
-    per touched day) into the complete new day partial, and the day
-    tier is rewritten as ``day ⋉̸ touched ∪ fresh`` in one write plan.
-    A day whose every hour died is touched and has no fresh row, so it
-    leaves — there is no separate dead-day frame. Retractions need no
-    coarse-side base access: the fine tier has already absorbed them
-    (including the min/max repair), and re-combining correct
-    fine partials is exact by construction — which is the whole point
-    of cascading: at 100 TB the daily tier's refresh cost is
-    ``O(touched days × buckets/day)`` state rows, independent of both
-    history size and batch size.
+    ``h`` re-aggregates ALL surviving fine partials of ``day(h)`` (≤24
+    hourly rows per touched day) into the complete new day partial,
+    and the day tier is rewritten as ``day ⋉̸ touched ∪ fresh`` in one
+    write plan. A day whose every hour died is touched and has no
+    fresh row, so it leaves — there is no separate dead-day frame.
+    Every tier's touched groups come from one driver collect per
+    refresh (``sources.state.touched_keys``): a literal set of key
+    hashes, which filters the tier below (``fresh``) and the tier
+    itself (``kept``) with no join, no broadcast and no re-read of the
+    batch. Those filters bound what is shuffled and aggregated, not
+    what is scanned: each tier's files are read whole, which costs one
+    row per group, not per input row. A batch above ``KEY_SET_CAP``
+    distinct key tuples restricts by key frames over the batch
+    instead. Retractions need no coarse-side base access: the fine
+    tier has already absorbed them (including the min/max repair),
+    and re-combining correct fine partials is exact by construction —
+    which is the whole point of cascading: at 100 TB the daily tier's
+    refresh aggregates ``O(touched days × buckets/day)`` state rows,
+    independent of both history size and batch size.
 
     HAVING is rejected: a threshold stated against fine buckets has no
     well-defined reading at the coarse granularity. ``count(DISTINCT)``
@@ -1253,7 +1313,7 @@ class ContinuousRollupCascade:
         over the PREVIOUS level's key (e.g.
         ``[("bucket_m", "date_trunc('month', bucket_d)")]``); level
         ``i+1`` refreshes from level ``i``'s stored partials, so every
-        tier's repair cost stays O(touched groups × fan-in)."""
+        tier's repair aggregates O(touched groups × fan-in) rows."""
         self.spark = spark
         self.root_path = root_path
         self.fine = ContinuousAggregate(
@@ -1292,6 +1352,8 @@ class ContinuousRollupCascade:
                     "expr": expr,
                     "prev_key": prev_key,
                     "keys": [key] + other,
+                    # the keys over the previous level's columns
+                    "exprs": [expr] + [_quoted(k) for k in other],
                     "path": path,
                     "store": StateStore(spark, path),
                 }
@@ -1310,28 +1372,26 @@ class ContinuousRollupCascade:
             *[F.col(k) for k in lvl["keys"]]
         ).agg(*[F.expr(e) for e in self.fine.alg.combine])
 
-    def _touched_chain(self, batch_df: DataFrame) -> list[DataFrame]:
-        """Per-level touched keys — all derived from the batch's key
-        expressions (for CDF batches that includes pre- AND
-        post-images, so a row moving between buckets touches both
-        sides at every granularity). Rows failing the statement's
-        WHERE never contributed and are excluded. A key repeats once
-        per batch row: the semi and anti joins that consume these
-        frames need no unique keys."""
-        df = batch_df
-        if self.fine.spec["where"]:
-            df = df.where(self.fine.spec["where"])
-        prev = df.select(*self.fine.alg.key_cols)
-        out = []
+    def _key_levels(self) -> list[tuple]:
+        """The ``touched_keys`` chain: the fine keys, then each level's
+        keys over the level below's columns, typed as stored."""
+        out = [self.fine._key_level()]
         for lvl in self.levels:
-            prev = prev.withColumn(lvl["key"], F.expr(lvl["expr"])).select(
-                *lvl["keys"]
+            types = {f.name: f.dataType for f in lvl["store"].schema().fields}
+            out.append(
+                (lvl["exprs"], lvl["keys"], [types[k] for k in lvl["keys"]])
             )
-            out.append(prev)
         return out
 
-    def _touched_coarse(self, batch_df: DataFrame) -> DataFrame:
-        return self._touched_chain(batch_df)[0]
+    def _touched(self, batch_df: DataFrame, flag: str | None = None) -> list:
+        """Per-level key sets of the groups a (signed, WHERE-filtered)
+        batch touches, from one collect (``touched_keys``); for CDF
+        batches that includes pre- AND post-images, so a row moving
+        between buckets touches both sides at every granularity. Index
+        0 is the fine tier's, which its fold does not need; with
+        ``flag``, the fine groups of the rows it holds for follow
+        last."""
+        return touched_keys(batch_df, self._key_levels(), flag)
 
     # -- lifecycle -----------------------------------------------------
 
@@ -1342,44 +1402,33 @@ class ContinuousRollupCascade:
             lvl["store"].create(self._level_of(prev, lvl))
             prev = lvl["store"].read()
 
-    def _repair_plan(self, touched_c: DataFrame, level: int = 0) -> DataFrame:
-        """The touched groups' complete new partials at one level,
-        re-merged from the PREVIOUS tier's state (semi-join pruned
-        BEFORE the re-aggregation). A touched group with no surviving
-        finer rows has no row here. No base-table scan anywhere — that
-        is the cascade invariant the plan audit pins, on the write
-        plan ``StateStore.replace`` builds from this frame."""
+    def _replace_level(self, level: int, touched) -> None:
+        """Replace every group of ``touched`` (a key set on the level's
+        keys) at one level from the (already refreshed) tier below, in
+        one write: ``fresh`` is that tier's rows restricted to the set,
+        then re-aggregated, and the level becomes ``level ⋉̸ touched ∪
+        fresh`` (``StateStore.replace``), so a group whose finer rows
+        all died leaves because it is touched and has no fresh row. No
+        base-table and no batch scan: that is the cascade invariant the
+        plan audit pins on this write."""
         lvl = self.levels[level]
-        prev_state = (
+        below = (
             self.fine.store if level == 0 else self.levels[level - 1]["store"]
         ).read()
-        sliced = prev_state.withColumn(
-            lvl["key"], F.expr(lvl["expr"])
-        ).join(F.broadcast(touched_c), lvl["keys"], "left_semi")
-        return sliced.groupBy(
-            *[F.col(k) for k in lvl["keys"]]
-        ).agg(*[F.expr(e) for e in self.fine.alg.combine])
+        fresh = self._level_of(touched.restrict(below, lvl["exprs"]), lvl)
+        lvl["store"].replace(fresh, touched, lvl["keys"])
 
-    def _repair(self, touched_c: DataFrame, level: int = 0) -> None:
-        """Replace every touched group at one level from the (already
-        refreshed) previous tier: the write is ``level ⋉̸ touched ∪
-        fresh`` (``StateStore.replace``), so a group whose finer rows
-        all died leaves because it is touched and has no fresh row.
-        Work ∝ touched groups × fan-in, in one write plan with no
-        pinned frame."""
-        lvl = self.levels[level]
-        lvl["store"].replace(
-            self._repair_plan(touched_c, level), touched_c, lvl["keys"]
-        )
-
-    def _repair_chain(self, touched: list[DataFrame]) -> None:
+    def _replace_levels(self, touched: list) -> None:
         for i, t in enumerate(touched):
-            self._repair(t, level=i)
+            self._replace_level(i, t)
 
     def refresh(self, delta_df: DataFrame) -> None:
-        touched = self._touched_chain(delta_df)
+        df = delta_df
+        if self.fine.spec["where"]:
+            df = df.where(self.fine.spec["where"])
+        touched = self._touched(df)
         self.fine.refresh(delta_df)
-        self._repair_chain(touched)
+        self._replace_levels(touched[1:])
 
     def refresh_signed(
         self, changes_df: DataFrame, base_new_df: DataFrame | None = None
@@ -1388,16 +1437,16 @@ class ContinuousRollupCascade:
         batch (min/max repaired from ``base_new_df`` when a retraction
         threatens them); each coarser tier then re-merges its touched
         groups from the tier below — no base access above the fine
-        tier ever."""
-        from ..plans.signed import CHANGE_TYPE
-
-        probe_df = changes_df
-        if CHANGE_TYPE in probe_df.columns:
-            # key exprs evaluate on pre- and post-images alike
-            probe_df = probe_df.drop(CHANGE_TYPE)
-        touched = self._touched_chain(probe_df)
-        self.fine.refresh_signed(changes_df, base_new_df=base_new_df)
-        self._repair_chain(touched)
+        tier ever. One collect takes every tier's key set and the
+        min/max recompute's; after it the batch is read once more, by
+        the fine tier's fold."""
+        fine = self.fine
+        df = fine._signed_batch(changes_df)
+        flag = fine._retracting() if base_new_df is not None else None
+        touched = self._touched(df, flag)
+        retracted = touched.pop() if flag else None
+        fine._merge_signed_projected(df, base_new_df, retracted)
+        self._replace_levels(touched[1:])
 
     def stream_cdf(
         self,

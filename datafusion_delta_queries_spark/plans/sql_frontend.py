@@ -689,8 +689,8 @@ class AggAlgebra:
     - ``probe``: per min/max over a signed batch, the most threatening
       retracted value ``_d{i}`` (for min the smallest: a retraction can
       only change a stored min it is ≤ to);
-    - ``minmax``: per min/max, its state column, positive partial,
-      probe column and the repair's threat operator;
+    - ``minmax``: per min/max, its state column, argument, positive
+      partial, probe column and the repair's threat operator;
     - ``folded``: two partial frames joined on the keys → partials,
       the binary form of ``combine`` (see there).
 
@@ -759,6 +759,7 @@ class AggAlgebra:
                 )
                 self.minmax.append({
                     "col": p,
+                    "arg": arg,
                     "partial": f"{pfn}({arg}) AS {p}",
                     "del": f"_d{i}",
                     "threat_op": "<=" if fn == "min" else ">=",

@@ -37,6 +37,14 @@ frame, so a refresh is one write action; the raised message comes
 back as ``ValueError``, and the staged write leaves the table as it
 was.
 
+The groups a refresh touches travel as a key set with two
+operations, ``restrict`` (keep rows of touched groups) and ``exclude``
+(drop them). ``touched_keys`` makes them from a batch with one driver
+collect: ``KeyHashes``, a literal set of key-tuple hashes that filters
+a scan with no join and no job, or ``KeyFrames`` over the batch (semi
+and anti joins) when the batch holds more than ``KEY_SET_CAP`` distinct
+key tuples.
+
 ``StateStore.cached`` is the fingerprint-keyed flavour: a table built
 once per (name, fingerprint) under ``cache_root()`` and read back on
 every later run, across processes too.
@@ -52,12 +60,31 @@ import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
+from pyspark.sql.types import (
+    ByteType,
+    DoubleType,
+    FloatType,
+    IntegerType,
+    LongType,
+    ShortType,
+    StructType,
+)
 
+from ..plans.sql_frontend import _semi_on_keys
 from . import sinks
 from .versioned import _dir_schema
 
 CACHE_KEEP = 8  # newest same-name cache dirs kept per prune
+# ``touched_keys`` takes literal key-hash sets up to this many distinct
+# key tuples in a batch and key frames above it: the crossover of the
+# two in ``tools/key_set_crossover.py`` (median wall of four 3-tier
+# cascade ``refresh_signed`` calls over 200,000 fine groups, 4-core
+# host). Hash sets always start fewer jobs (10 against 15) and win on
+# wall time up to 10,000 tuples (0.92 s against 1.08 s at 2,000, 0.93
+# against 1.05 at 5,000, 0.97 against 1.03 at 10,000); at 20,000 they
+# lose (1.14 s against 1.01 s), as analysing and shipping the IN lists
+# outgrows the frames' broadcasts.
+KEY_SET_CAP = 10_000
 _CACHE_VERSION = "v1"
 _SCHEMA_FILE = "_state_schema.json"  # Spark skips ``_``-prefixed files
 
@@ -240,26 +267,39 @@ class StateStore:
         )
 
     def replace(
-        self, fresh: DataFrame, touched: DataFrame, keys: list[str],
-        guards=(),
+        self, fresh: DataFrame, touched, keys: list[str], guards=(),
     ) -> None:
         """The state becomes ``read_touched(touched) ⋉̸ touched ∪
         fresh``, in one ``rewrite``: every stored row whose values on
         ``touched``'s columns are touched leaves, and ``fresh`` is the
         complete new content of the touched groups, so a touched group
-        with no fresh row leaves too. ``touched`` may repeat a group.
-        ``keys`` are the state's key columns; ``touched``'s columns are
-        a non-empty subset of them — a frame over a key prefix replaces
-        whole groups — and include every partition column. A value
-        column in ``touched`` would match only stored rows whose value
-        is unchanged, and keep the others beside their fresh rows.
+        with no fresh row leaves too. ``touched`` is a key set
+        (``KeyHashes`` or ``KeyFrames``; a DataFrame is taken as a
+        ``KeyFrames``), and a frame may repeat a group. ``keys`` are
+        the state's key columns; ``touched``'s columns are a non-empty
+        subset of them — a set over a key prefix replaces whole groups
+        — and include every partition column. A value column in
+        ``touched`` would match only stored rows whose value is
+        unchanged, and keep the others beside their fresh rows.
         ``guards`` are (condition, message) pairs over ``fresh``'s
-        rows, as in ``fold``.
+        rows, as in ``fold``. A partitioned store needs ``KeyFrames``:
+        its pruned read and write name partitions from the frame.
 
         Precondition: ``fresh`` holds rows of touched groups only. A
         row of an untouched group would sit beside that group's stored
         rows; nothing checks this (it would cost a job), and every
-        caller builds ``fresh`` from its touched set."""
+        caller builds ``fresh`` from its touched set. A hash collision
+        makes an untouched group touched; ``fresh`` must then hold its
+        complete rows too, which a ``fresh`` built by ``restrict`` over
+        the same set does."""
+        if isinstance(touched, DataFrame):
+            touched = KeyFrames(touched)
+        frame = touched.frame if isinstance(touched, KeyFrames) else None
+        if self.partition_cols and frame is None:
+            raise ValueError(
+                "a partitioned store replaces through a key frame: its "
+                "pruned read and write name partitions from it"
+            )
         unpruned = [
             c for c in self.partition_cols if c not in touched.columns
         ]
@@ -281,10 +321,8 @@ class StateStore:
                 f"subset of the merge key {keys}"
             )
         self._check_columns(fresh)
-        kept = self.read_touched(touched).join(
-            touched, touched.columns, "left_anti"
-        )
-        self.rewrite(kept.unionByName(guarded(fresh, guards)), touched)
+        kept = touched.exclude(self.read_touched(frame))
+        self.rewrite(kept.unionByName(guarded(fresh, guards)), frame)
 
     def apply_once(self, batch_id: int, fn, ns: str = "") -> None:
         """Replay guard for NON-idempotent appliers (partial merges
@@ -350,6 +388,190 @@ def guarded(df: DataFrame, guards, keep=None) -> DataFrame:
     for cond, msg in reversed(guards):
         pred = F.when(cond, F.raise_error(F.lit(msg))).otherwise(pred)
     return df.withColumn("__keep", pred).where("__keep").drop("__keep")
+
+
+def _quoted(name: str) -> str:
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _key_hash(cols: list):
+    """The hash a ``KeyHashes`` set holds for one key tuple."""
+    return F.xxhash64(*cols)
+
+
+# The type a key is hashed at, by the type the state stores it as:
+# integral keys hash as bigint and float keys as double, so a batch or
+# base that holds a key narrower or wider than the state does still
+# hashes each group alike.
+_WIDE = {
+    ByteType: LongType(),
+    ShortType: LongType(),
+    IntegerType: LongType(),
+    FloatType: DoubleType(),
+}
+
+
+def _hash_type(stored):
+    """The type every side of a key set hashes a key the state stores
+    as ``stored`` at: ``stored`` widened by ``_WIDE``."""
+    return _WIDE.get(type(stored), stored)
+
+
+def _hashed(df: DataFrame, exprs: list[str], types: list):
+    """The key hash of ``exprs`` (SQL over ``df``), each cast to its
+    hash type in ``types`` first. A key whose type does not up-cast
+    to its hash type (``Cast.canUpCast``) raises ``ValueError``: a
+    narrowing cast (a timestamp to a stored date, a double to a stored
+    bigint, a string to a stored number) can merge values the state
+    keeps apart or part values it merges, and so hash a touched group
+    apart from its stored row and skip its recompute."""
+    jvm = df.sparkSession._jvm
+
+    def jtype(t):
+        return jvm.org.apache.spark.sql.types.DataType.fromJson(t.json())
+
+    cast = jvm.org.apache.spark.sql.catalyst.expressions.Cast
+    have = df.select(*[F.expr(e) for e in exprs]).schema.fields
+    for e, f, t in zip(exprs, have, types):
+        if f.dataType != t and not cast.canUpCast(jtype(f.dataType), jtype(t)):
+            raise ValueError(
+                f"key {e} is {f.dataType.simpleString()} here but hashes "
+                f"as {t.simpleString()}, and no lossless cast bridges the "
+                "two: a key-set restriction could miss a touched group"
+            )
+    return _key_hash([F.expr(e).cast(t) for e, t in zip(exprs, types)])
+
+
+class KeyHashes:
+    """Touched groups as a literal set of ``_key_hash`` values of their
+    key tuples (``columns``, each hashed at its type in ``types``). Its
+    filters start no job and join nothing, so Catalyst pushes them to
+    the scans. Hashes collide: the set may also hold an untouched
+    group, which ``restrict`` then keeps and ``exclude`` drops. That is
+    exact wherever every group a set holds is rebuilt from correct
+    inputs, as ``StateStore.replace`` and the min/max recompute do."""
+
+    def __init__(self, columns: list[str], types: list, hashes) -> None:
+        self.columns = list(columns)
+        self.types = list(types)
+        self.hashes = frozenset(hashes)
+        self._test = None  # the IN predicate, parsed once, on first use
+
+    def _member(self, df: DataFrame, exprs, keep: bool) -> DataFrame:
+        if not self.hashes:
+            return df.where(F.lit(False)) if keep else df
+        if self._test is None:
+            lits = ", ".join(f"{v}L" for v in sorted(self.hashes))
+            self._test = F.expr(f"__kh IN ({lits})")
+        exprs = exprs or [_quoted(c) for c in self.columns]
+        return (
+            df.withColumn("__kh", _hashed(df, exprs, self.types))
+            .where(self._test if keep else ~self._test)
+            .drop("__kh")
+        )
+
+    def restrict(self, df: DataFrame, exprs=None) -> DataFrame:
+        """``df``'s rows whose key tuple is in the set: ``exprs`` (SQL
+        over ``df``, in ``columns`` order; default the columns
+        themselves) evaluated per row."""
+        return self._member(df, exprs, True)
+
+    def exclude(self, df: DataFrame) -> DataFrame:
+        """``df``'s rows whose ``columns`` tuple is not in the set."""
+        return self._member(df, None, False)
+
+
+class KeyFrames:
+    """Touched groups as a frame of key tuples, ``columns`` its column
+    names (a group may repeat): ``restrict`` is a broadcast semi join,
+    ``exclude`` an anti join. The form for batches above
+    ``KEY_SET_CAP`` and for callers that hold a frame already; a
+    partitioned store prunes its read and write with it."""
+
+    def __init__(self, frame: DataFrame) -> None:
+        self.frame = frame
+        self.columns = list(frame.columns)
+
+    def restrict(self, df: DataFrame, exprs=None) -> DataFrame:
+        exprs = exprs or [_quoted(c) for c in self.columns]
+        return _semi_on_keys(df, self.frame, exprs, self.columns)
+
+    def exclude(self, df: DataFrame) -> DataFrame:
+        return df.join(self.frame, self.columns, "left_anti")
+
+
+def touched_keys(batch: DataFrame, levels, flag: str | None = None) -> list:
+    """The groups ``batch`` touches at each of ``levels``, from one
+    driver collect: one job, whose tasks each read their partition of
+    the batch and return its distinct key-hash tuples, stopping past
+    ``KEY_SET_CAP`` of them.
+
+    ``levels`` is a chain of ``(exprs, columns, types)``: level 0's SQL
+    ``exprs`` evaluate on batch rows and level ``i``'s on level
+    ``i - 1``'s columns cast to that level's stored key ``types``, as
+    the state tiers are built. Each key is hashed at ``_hash_type``;
+    one that does not up-cast to it raises ``ValueError``. With
+    ``flag``, a SQL predicate over batch rows, one more set follows
+    the levels' sets: level 0's groups of the rows it holds for. Each
+    set is ``KeyHashes`` when the batch holds at most
+    ``KEY_SET_CAP`` distinct key tuples, else ``KeyFrames`` over the
+    batch (which every use then re-reads)."""
+    cur = batch.withColumn("__flag", F.expr(flag)) if flag else batch
+    carry = ["__flag"] if flag else []
+    frames, hash_types = [], []
+    for i, (exprs, columns, types) in enumerate(levels):
+        hts = [_hash_type(t) for t in types]
+        cur = cur.select(
+            *[
+                F.expr(e).cast(t).alias(n)
+                for e, t, n in zip(exprs, types, columns)
+            ],
+            *carry,
+            _hashed(cur, exprs, hts).alias(f"__h{i}"),
+        )
+        frames.append(cur)
+        hash_types.append(hts)
+        carry.append(f"__h{i}")
+    cap = KEY_SET_CAP
+
+    def distinct_upto_cap(batches):
+        import pyarrow as pa
+
+        seen = None
+        for b in batches:
+            t = pa.Table.from_batches([b])
+            if seen is not None:
+                t = pa.concat_tables([seen, t])
+            seen = t.group_by(t.column_names).aggregate([])
+            if seen.num_rows > cap:
+                break
+        if seen is not None:
+            yield from seen.to_batches()
+
+    # Each task dedupes its own partition's Arrow batches, so there is
+    # no exchange (no second job) and no single task over a shuffled
+    # batch's last stage.
+    tuples = cur.select(*carry)
+    found = tuples.mapInArrow(distinct_upto_cap, tuples.schema).collect()
+    rows = set(map(tuple, found))
+    sets: list = []
+    if len(rows) > cap:
+        for f, (_, columns, _) in zip(frames, levels):
+            sets.append(KeyFrames(f.select(*map(_quoted, columns))))
+        if flag:
+            first = frames[0].where("__flag")
+            sets.append(KeyFrames(first.select(*map(_quoted, levels[0][1]))))
+        return sets
+    at = len(carry) - len(levels)  # the first hash's position in a row
+    for i, (_, columns, _) in enumerate(levels):
+        sets.append(KeyHashes(columns, hash_types[i], {r[at + i] for r in rows}))
+    if flag:
+        sets.append(
+            KeyHashes(
+                levels[0][1], hash_types[0], {r[at] for r in rows if r[0]}
+            )
+        )
+    return sets
 
 
 _NULL_PART = (

@@ -6,6 +6,7 @@ delta batch without rescanning history)."""
 from __future__ import annotations
 
 import itertools
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -1452,6 +1453,235 @@ def test_rollup_cascade_rejections(spark, tmp_path):
         )
 
 
+# -- key sets: collisions, the cap, key-type drift, NULL keys ---------
+
+
+def _cascade3(spark, path):
+    from datafusion_delta_queries_spark.operators.continuous_agg import (
+        ContinuousRollupCascade,
+    )
+
+    return ContinuousRollupCascade(
+        spark, path, CASCADE_SQL,
+        fine_key="bucket_h", coarse_key="bucket_d",
+        coarse_expr="date_trunc('day', bucket_h)",
+        more_levels=[("bucket_m", "date_trunc('month', bucket_d)")],
+    )
+
+
+def _assert_tiers_equal(view, expected_df):
+    """Fine, day and month tiers each equal their GROUP BY over
+    ``expected_df``."""
+    def want(unit, key):
+        return _keyed(
+            expected_df.groupBy(
+                F.date_trunc(unit, F.col("ts")).alias(key), "event_type"
+            ).agg(
+                F.count("*").alias("n_events"),
+                F.sum(
+                    F.expr("CAST(floor(value * 100 + 0.5) AS BIGINT)")
+                ).alias("cents"),
+                F.min("value").alias("min_value"),
+            ),
+            (key, "event_type"),
+        )
+
+    def got(df, key):
+        return _keyed(
+            df.select(key, "event_type", "n_events", "cents", "min_value"),
+            (key, "event_type"),
+        )
+
+    assert got(view.read_fine(), "bucket_h") == want("hour", "bucket_h")
+    assert got(view.read(0), "bucket_d") == want("day", "bucket_d")
+    assert got(view.read(1), "bucket_m") == want("month", "bucket_m")
+
+
+def test_key_set_collisions_stay_exact(spark, tmp_path, monkeypatch):
+    """With every key tuple hashing alike, every group of every tier is
+    "touched": the min/max recompute and each coarse tier rebuild all
+    their groups from correct inputs, and every tier still equals its
+    recompute."""
+    from datafusion_delta_queries_spark.sources import state
+
+    monkeypatch.setattr(
+        state, "_key_hash", lambda cols: F.lit(0).cast("bigint")
+    )
+    ev = load_table(spark, SF_SMALL, "events")
+    s0, batch, s1 = _events_cdf_cycle(ev)
+    view = _cascade3(spark, str(tmp_path / "c3"))
+    view.initialize(s0)
+    assert all(k.hashes == {0} for k in view._touched(ev))
+    view.refresh_signed(batch, base_new_df=s1)
+    _assert_tiers_equal(view, s1)
+
+
+def test_key_set_cap_falls_back_to_frames(spark, tmp_path, monkeypatch):
+    """Above ``KEY_SET_CAP`` distinct key tuples the key sets are
+    frames over the batch (semi and anti joins), and every tier still
+    equals its recompute."""
+    from datafusion_delta_queries_spark.operators.continuous_agg import (
+        ContinuousRollupCascade,
+    )
+    from datafusion_delta_queries_spark.sources import state
+
+    monkeypatch.setattr(state, "KEY_SET_CAP", 0)
+    kinds = []
+    touched = ContinuousRollupCascade._touched
+    monkeypatch.setattr(
+        ContinuousRollupCascade, "_touched",
+        lambda self, *a: [
+            kinds.append(type(k).__name__) or k for k in touched(self, *a)
+        ],
+    )
+    ev = load_table(spark, SF_SMALL, "events")
+    s0, batch, s1 = _events_cdf_cycle(ev)
+    view = _cascade3(spark, str(tmp_path / "c3"))
+    view.initialize(s0)
+    view.refresh_signed(batch, base_new_df=s1)
+    assert kinds == ["KeyFrames"] * 4, kinds  # fine, day, month, min/max
+    _assert_tiers_equal(view, s1)
+    ins = ev.where("event_id % 3 = 1")
+    view.refresh(ins)
+    _assert_tiers_equal(view, s1.unionByName(ins))
+
+
+_MINMAX_SQL = "SELECT k, count(*) AS n, min(v) AS lo FROM t GROUP BY k"
+
+
+def _minmax_rows(df):
+    return {
+        r["k"]: (r["n"], r["lo"])
+        for r in df.groupBy("k")
+        .agg(F.count("*").alias("n"), F.min("v").alias("lo"))
+        .collect()
+    }
+
+
+@pytest.mark.parametrize(
+    "state_type, batch_type, base_type",
+    [
+        ("bigint", "int", "int"),
+        ("int", "bigint", "int"),
+        ("int", "int", "bigint"),
+        ("timestamp", "timestamp_ntz", "timestamp_ntz"),
+        ("timestamp_ntz", "timestamp", "timestamp"),
+    ],
+)
+def test_key_type_drift_matches(
+    spark, tmp_path, state_type, batch_type, base_type
+):
+    """Batch or base keys typed unlike the state's: every side hashes
+    each key at one widened type (integral keys as bigint), so the
+    refresh equals the recompute, with the deleted minimum's group
+    repaired to its runner-up (never NULL)."""
+    view = _drift_view(spark, tmp_path, state_type)
+    batch, after = _drift_batch(spark, batch_type)
+    view.refresh_signed(batch, base_new_df=_drift_frame(spark, after, base_type))
+    got = {r["k"]: (r["n"], r["lo"]) for r in view.read().collect()}
+    assert got == _minmax_rows(_drift_frame(spark, after, state_type))
+    assert all(lo is not None for _, lo in got.values())
+
+
+@pytest.mark.parametrize(
+    "state_type, batch_type, base_type",
+    [
+        ("int", "string", "int"),
+        ("int", "int", "string"),
+        ("decimal(5,2)", "decimal(5,3)", "decimal(5,2)"),
+    ],
+)
+def test_key_type_drift_without_a_lossless_cast_raises(
+    spark, tmp_path, state_type, batch_type, base_type
+):
+    """Keys no lossless cast bridges raise ``ValueError`` before any
+    write, and the state is as it was: hashed apart, a touched group
+    would skip its recompute."""
+    view = _drift_view(spark, tmp_path, state_type)
+    before = sorted(map(tuple, view.read().collect()))
+    batch, after = _drift_batch(spark, batch_type)
+    with pytest.raises(ValueError, match="no lossless cast"):
+        view.refresh_signed(
+            batch, base_new_df=_drift_frame(spark, after, base_type)
+        )
+    assert sorted(map(tuple, view.read().collect())) == before
+
+
+_DRIFT_ROWS = [(1, 5.0), (1, 1.0), (2, 7.0), (2, 3.0), (3, 4.0)]
+
+
+def _drift_frame(spark, rows, key_type):
+    df = spark.createDataFrame(rows, "k bigint, v double")
+    if key_type.startswith("timestamp"):
+        return df.select(
+            F.expr(f"CAST(timestamp_seconds(k * 3600) AS {key_type})")
+            .alias("k"),
+            "v",
+        )
+    return df.select(F.col("k").cast(key_type).alias("k"), "v")
+
+
+def _drift_view(spark, tmp_path, state_type):
+    view = ContinuousAggregate(spark, str(tmp_path / "s"), _MINMAX_SQL)
+    view.initialize(_drift_frame(spark, _DRIFT_ROWS, state_type))
+    return view
+
+
+def _drift_batch(spark, batch_type):
+    """A CDF batch deleting group 1's minimum and all of group 3, and
+    inserting into group 2 and a new group 4; and the rows after it."""
+    deleted = [(1, 1.0), (3, 4.0)]
+    inserted = [(2, 2.0), (4, 9.0)]
+    batch = _cdf(_drift_frame(spark, deleted, batch_type), "delete").unionByName(
+        _cdf(_drift_frame(spark, inserted, batch_type), "insert")
+    )
+    return batch, [r for r in _DRIFT_ROWS if r not in deleted] + inserted
+
+
+def test_touched_keys_collect_is_one_parallel_job(spark):
+    """The key collect is one job with a task per batch partition (no
+    single task over the batch's last stage, no exchange), and its sets
+    hold each distinct key once."""
+    from datafusion_delta_queries_spark.sources.state import touched_keys
+
+    batch = spark.range(0, 1000, numPartitions=4).selectExpr("id % 7 AS k")
+    sets = []
+    gid = _in_group(
+        spark, "touched-keys",
+        lambda: sets.extend(
+            touched_keys(batch, [(["k"], ["k"], [batch.schema["k"].dataType])])
+        ),
+    )
+    tracker = spark.sparkContext.statusTracker()
+    jobs = tracker.getJobIdsForGroup(gid)
+    assert len(jobs) == 1, jobs
+    stages = tracker.getJobInfo(jobs[0]).stageIds
+    assert [tracker.getStageInfo(s).numTasks for s in stages] == [4]
+    assert len(sets[0].hashes) == 7
+
+
+def test_null_key_in_keyed_refresh_still_raises(spark, tmp_path):
+    """A NULL grouping key in a change batch fails the fold's guard
+    under the key-set paths too (the collect does not swallow it), and
+    no tier is rewritten."""
+    ev = load_table(spark, SF_SMALL, "events")
+    s0, _, s1 = _events_cdf_cycle(ev)
+    view = _cascade3(spark, str(tmp_path / "c3"))
+    view.initialize(s0)
+    bad = _cdf(
+        s0.limit(3).withColumn("event_type", F.lit(None).cast("string")),
+        "delete",
+    )
+    before = [sorted(map(tuple, view.read(i).collect())) for i in (0, 1)]
+    with pytest.raises(ValueError, match="NULL grouping key in change batch"):
+        view.refresh_signed(bad, base_new_df=s1)
+    assert [sorted(map(tuple, view.read(i).collect())) for i in (0, 1)] == before
+    agg = ContinuousAggregate(spark, str(tmp_path / "agg"), CASCADE_SQL)
+    agg.initialize(s0)
+    with pytest.raises(ValueError, match="NULL grouping key in change batch"):
+        agg.refresh_signed(bad, base_new_df=s1)
+
+
 def test_drop_chunks_retention_lifecycle(spark, tmp_path):
     """TimescaleDB drop_chunks semantics: retained-out partitions are
     DELETED on disk (directory drop, not a rewrite), read() forgets
@@ -1618,10 +1848,12 @@ _JOB_GROUP_SEQ = itertools.count()
 # under one CDF batch, and the single tier's insert refresh. Writing
 # state as "replace the touched groups" took the signed ones from 81
 # and 30 jobs to 30 and 23; folding each batch into the state in one
-# write took them to 13 and 8, and the insert refresh from 11 to 4. A
-# count above the budget is a regression to explain.
-CASCADE3_REFRESH_JOBS = 13
-AGG_REFRESH_JOBS = 8
+# write took them to 13 and 8, and the insert refresh from 11 to 4.
+# Taking every tier's touched keys from one collect of the batch, as
+# literal key-hash filters, took the signed ones to 10 and 6. A count
+# above the budget is a regression to explain.
+CASCADE3_REFRESH_JOBS = 10
+AGG_REFRESH_JOBS = 6
 AGG_INSERT_REFRESH_JOBS = 4
 
 
@@ -1709,6 +1941,62 @@ def test_refresh_signed_job_budget(spark, tmp_path):
     assert n_cascade <= CASCADE3_REFRESH_JOBS, n_cascade
     assert n_agg <= AGG_REFRESH_JOBS, n_agg
     assert n_ins <= AGG_INSERT_REFRESH_JOBS, n_ins
+
+
+def _captured_writes(monkeypatch):
+    """Every frame written through ``StateStore.rewrite`` from now on."""
+    from datafusion_delta_queries_spark.sources.state import StateStore
+
+    written = []
+    rewrite = StateStore.rewrite
+    monkeypatch.setattr(
+        StateStore, "rewrite",
+        lambda self, df, *a: written.append(df) or rewrite(self, df, *a),
+    )
+    return written
+
+
+def _formatted(df):
+    return df._sc._jvm.PythonSQLUtils.explainString(
+        df._jdf.queryExecution(), "formatted"
+    )
+
+
+def test_cascade_refresh_writes_read_the_batch_once(
+    spark, tmp_path, monkeypatch
+):
+    """One signed refresh of a 3-tier cascade reads its change batch's
+    files once across every plan it writes: in the fine tier's fold.
+    The min/max recompute and the day and month repairs take the
+    batch's groups from the one key collect before them, as literal
+    filters."""
+    from datafusion_delta_queries_spark.operators.continuous_agg import (
+        ContinuousRollupCascade,
+    )
+
+    ev = load_table(spark, SF_SMALL, "events")
+    s0, batch, s1 = _events_cdf_cycle(ev)
+    batch_path = str(tmp_path / "batch")
+    batch.write.parquet(batch_path)
+    cascade = ContinuousRollupCascade(
+        spark, str(tmp_path / "c3"), CASCADE_SQL,
+        fine_key="bucket_h", coarse_key="bucket_d",
+        coarse_expr="date_trunc('day', bucket_h)",
+        more_levels=[("bucket_m", "date_trunc('month', bucket_d)")],
+    )
+    cascade.initialize(s0)
+    written = _captured_writes(monkeypatch)
+    cascade.refresh_signed(
+        spark.read.parquet(batch_path), base_new_df=s1
+    )
+    assert len(written) == 3  # fine, day, month
+    locations = [
+        loc
+        for df in written
+        for loc in re.findall(r"Location: \w+ \[([^\]]*)\]", _formatted(df))
+    ]
+    assert sum(loc.endswith("/batch") for loc in locations) == 1, locations
+    _assert_daily_equals(cascade, s1)
 
 
 # Measured at SF_SMALL over the refresh call only (the workloads of

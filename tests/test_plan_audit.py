@@ -827,9 +827,10 @@ def test_rollup_cascade_repair_never_scans_the_base(
     """The cascade invariant, pinned at the plan level: the coarse
     repair's write plan (``coarse ⋉̸ touched ∪ fresh``) reads the FINE
     state and the coarse state once each — no events scan anywhere —
-    the touched-day restriction is a broadcast semi join applied
+    the touched-day restriction is a literal key-hash filter applied
     BEFORE the re-aggregation, the touched days leave the coarse state
-    through exactly one anti join, and nothing in it is pinned."""
+    through exactly one excluding filter, and the plan holds no join
+    (no broadcast of the batch's keys) and nothing pinned."""
     from datafusion_delta_queries_spark.catalog import load_table
     from datafusion_delta_queries_spark.operators.continuous_agg import (
         ContinuousRollupCascade,
@@ -846,11 +847,7 @@ def test_rollup_cascade_repair_never_scans_the_base(
         coarse_expr="date_trunc('day', bucket_h)",
     )
     view.initialize(ev)
-    # Materialize the touched keys (in production they come off the
-    # arriving batch) so the repair plans' scans are exactly the
-    # repair's own reads.
-    t = view._touched_coarse(ev.limit(5))
-    touched = spark.createDataFrame(t.collect(), t.schema)
+    touched = view._touched(ev.limit(5))[1]
     # Capture the frame the repair writes: every state refresh writes
     # through StateStore.rewrite.
     written = []
@@ -859,7 +856,7 @@ def test_rollup_cascade_repair_never_scans_the_base(
         StateStore, "rewrite",
         lambda self, df, *a: written.append(df) or rewrite(self, df, *a),
     )
-    view._repair(touched)
+    view._replace_level(0, touched)
     assert len(written) == 1
     plan = _plan(written[0])
     assert "events" not in plan  # state scans only, never the base
@@ -869,13 +866,22 @@ def test_rollup_cascade_repair_never_scans_the_base(
         "coarse", "fine"
     ]
     # The formatted plan numbers operators children-first, so the
-    # broadcast semi join runs before every aggregate iff its id is
-    # lower than theirs.
-    semi = re.findall(r"BroadcastHashJoin LeftSemi \w+ \((\d+)\)", plan)
+    # fine side's key-set filter runs before every aggregate iff its
+    # id is lower than theirs.
+    conditions = re.findall(
+        r"\((\d+)\) Filter\nInput[^\n]*\nCondition : ([^\n]*)", plan
+    )
+    keyed = [
+        (int(i), c) for i, c in conditions
+        if re.search(r"xxhash64\(.*\) (IN|INSET) ", c)
+    ]
+    kept = [i for i, c in keyed if c.startswith("NOT ")]
+    fresh = [i for i, c in keyed if not c.startswith("NOT ")]
     aggs = re.findall(r"HashAggregate \((\d+)\)", plan)
-    assert len(semi) == 1 and aggs, plan
-    assert int(semi[0]) < min(int(a) for a in aggs)
-    assert plan.count("Join type: LeftAnti") == 1
+    assert len(fresh) == 1 and aggs, plan
+    assert fresh[0] < min(int(a) for a in aggs)
+    assert len(kept) == 1, plan
+    assert "Join" not in plan and "BroadcastExchange" not in plan
     assert "InMemoryRelation" not in plan
     assert "InMemoryTableScan" not in plan
 
