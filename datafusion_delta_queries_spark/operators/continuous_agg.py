@@ -231,7 +231,7 @@ class ContinuousAggregate:
         of partitions removed."""
         import shutil
 
-        from ..sources.sinks import _partition_dir
+        from ..sources.sinks import _partition_dirs
 
         if not self.partition_on:
             raise ValueError(
@@ -239,17 +239,14 @@ class ContinuousAggregate:
                 "directory drop, not a table rewrite"
             )
         state = self.store.read()
-        doomed = [
-            tuple(r)
-            for r in state.select(*self.partition_on)
-            .distinct()
-            .where(where)
-            .collect()  # ≤ one row per live partition: driver-safe
-        ]
-        for values in doomed:
-            shutil.rmtree(
-                _partition_dir(self.path, self.partition_on, values)
-            )
+        # ≤ one row per live partition: driver-safe
+        doomed = _partition_dirs(
+            self.path,
+            self.partition_on,
+            state.select(*self.partition_on).distinct().where(where),
+        )
+        for d in doomed:
+            shutil.rmtree(d)
         with open(self.store.retention_path, "a", encoding="utf-8") as fh:
             fh.write(where + "\n")
         return len(doomed)

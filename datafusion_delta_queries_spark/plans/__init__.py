@@ -10,7 +10,8 @@ Catalyst, exactly as the reference delegates to stock DataFusion.
 - ``compiler``: full-snapshot and delta compilation to DataFrames
 - ``signed``  : retraction-capable (signed / Z-relation) deltas over
   CDF-style change batches — deletes and updates, beyond the
-  reference's insert-only PosDelta
+  reference's insert-only PosDelta — and ``delta_of``, the Δ recursion
+  the positive compiler runs too, with every appended row signed +1
 """
 
 from .compiler import (

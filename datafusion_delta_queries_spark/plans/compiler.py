@@ -11,15 +11,12 @@ Semantics (SURVEY §4.3, matching optimizer_rules/mod.rs:130-149):
 
 - ``compile_plan(ir, catalog)``  — the FULL query over the *current*
   table state (old snapshot ∪ appended delta).
-- ``compile_delta(ir, catalog)`` — rewrite ``PosDelta(ir)`` with the
-  PosDelta rule, then compile with:
-    * ``PosDeltaScan(T)`` → the appended-rows-only batch Δ T,
-    * bare ``Scan(T)``    → the OLD snapshot (the un-delta'd join
-      sides — ``join.left.clone()`` in the reference means the
-      pre-update plan).
+- ``compile_delta(ir, catalog)`` — ΔQ: the rows Q gains when the
+  catalog's appended rows land. ``PosDelta(ir)`` is rewritten with the
+  PosDelta rule first; its decline is ``compile_delta``'s refusal.
 
-The reference IR is three branches per join; the executed plan is
-smaller, in one of two forms:
+The rule builds the reference IR, three branches per join; the
+executed plan is smaller, in one of two forms:
 
 - **One pass** (inner-join fragments). When the query has at least one
   join and every node is an unpinned Scan, a Projection, a Filter, an
@@ -31,20 +28,17 @@ smaller, in one of two forms:
   sides' flags, unions align it positionally, and the root keeps the
   flagged rows (``_compile_flagged``). A chain of n tables plans n−1
   joins and n scans (5 and 6 at six tables).
-- **Two branches** (every other fragment: semi joins, say). The
-  rule's union ``(Δ⋈Δ) ∪ (old⋈Δ) ∪ (Δ⋈old)`` runs as
-  ``ΔL⋈R_new ⊎ L_old⋈ΔR`` (``_join_delta``), with R_new one scan of
-  the current state: join distributes over ⊎ and R_old ⊎ ΔR = R_new,
-  so both equal new⋈new − old⋈old exactly on append-only inputs. The
-  semi rule's ``R ∪ ΔR`` likewise runs as one scan of R's new state.
-  The compiler recognizes those two shapes (``rewrite.split_join_delta``,
-  ``rewrite.split_new_state``) and compiles anything else literally.
-  Join-free fragments, pinned versions, a bare ``*`` projection
-  (it would carry the flag twice) and the signed compiler
-  (plans/signed.py) take this path too.
+- **Two branches** (every other fragment: semi joins, join-free
+  fragments, a bare ``*`` projection, which would carry the flag
+  twice). An append-only batch is a signed change batch whose rows
+  are all +1, so these run through the signed compiler's one Δ
+  recursion (``signed.delta_of``), with the snapshot as the old state
+  and ``full`` as the new one: a join as ``ΔL⋈R_new ⊎ L_old⋈ΔR``, and
+  the positive semi rule as the recursion's insert-only case.
 
-``rewrite_pos_delta`` runs first either way: it still returns the
-reference-shaped IR, and its decline is ``compile_delta``'s refusal.
+A plan that already holds PosDeltaScan leaves compiles literally
+(Scan → the snapshot, PosDeltaScan → the appended rows), three
+branches per join.
 
 ``DeltaCatalog`` models an append-only table version pair. Against the
 parquet fixtures, the snapshot/delta split is a deterministic predicate
@@ -85,12 +79,7 @@ from .nodes import (
     Scan,
     Union,
 )
-from .rewrite import (
-    _DELTA_SAFE_JOIN_TYPES,
-    rewrite_pos_delta,
-    split_join_delta,
-    split_new_state,
-)
+from .rewrite import _DELTA_SAFE_JOIN_TYPES, rewrite_pos_delta
 
 # Deterministic append-split predicates: rows matching the predicate are
 # the "appended since the last maintained version" delta batch; the rest
@@ -203,52 +192,33 @@ def _join(node: Join | CrossJoin, left: DataFrame, right: DataFrame) -> DataFram
     return left.join(right, reduce(lambda a, b: a & b, conds), how)
 
 
-def _join_delta(
-    node: Join | CrossJoin,
-    dl: DataFrame,
-    r_new: DataFrame,
-    l_old: DataFrame,
-    dr: DataFrame,
-    finish=lambda df: df,
-) -> DataFrame:
-    """Δ(L⋈R) executed as ``ΔL⋈R_new ⊎ L_old⋈ΔR``.
-
-    new⋈new − old⋈old = ΔL⋈new + old⋈ΔR, because join distributes over
-    ⊎ and R_new = R_old ⊎ ΔR. The reference's third branch ΔL⋈ΔR is
-    folded into the first, so ΔL is joined once per level, not twice,
-    and a chain of n joins plans O(n²) joins instead of O(3ⁿ).
-    ``finish`` runs on each branch before the positional union (the
-    signed compiler settles the branch's sign there).
-    """
-    return finish(_join(node, dl, r_new)).union(finish(_join(node, l_old, dr)))
+def _unpinned(scan: Scan) -> str:
+    """The table of an unpinned Scan: a pinned version never changes,
+    so it has no delta to compile."""
+    if scan.version is not None:
+        raise ValueError(
+            f"{scan.table} VERSION AS OF {scan.version}: a pinned "
+            f"version has no delta — maintain the current state or "
+            f"query the version directly"
+        )
+    return scan.table
 
 
-def _compile(node: Plan, scan, delta_scan, new_scan=None) -> DataFrame:
+def _compile(node: Plan, scan, delta_scan) -> DataFrame:
     """Recursively compile an IR tree given leaf resolvers.
 
     ``scan`` receives the Scan NODE (it carries the optional pinned
     version); ``delta_scan`` receives a table name — a versioned leaf
-    under a delta marker is refused before it gets there. With
-    ``new_scan`` (the current-state resolver, delta mode only), the
-    join rule's three-branch unions run as ``_join_delta``'s two
-    branches and the semi rule's ``R ∪ ΔR`` as one scan of R's new
-    state; other unions compile literally.
+    under a delta marker is refused before it gets there.
     """
 
     def rec(child: Plan) -> DataFrame:
-        return _compile(child, scan, delta_scan, new_scan)
+        return _compile(child, scan, delta_scan)
 
     if isinstance(node, Scan):
         return scan(node)
     if isinstance(node, PosDeltaScan):
-        if node.scan.version is not None:
-            raise ValueError(
-                f"PosDeltaScan over {node.scan.table} VERSION AS OF "
-                f"{node.scan.version}: a pinned version has no delta — "
-                f"maintain the current state or query the version "
-                f"directly"
-            )
-        return delta_scan(node.scan.table)
+        return delta_scan(_unpinned(node.scan))
     if isinstance(node, Projection):
         return rec(node.input).selectExpr(*node.select_exprs)
     if isinstance(node, Filter):
@@ -256,15 +226,6 @@ def _compile(node: Plan, scan, delta_scan, new_scan=None) -> DataFrame:
     if isinstance(node, (Join, CrossJoin)):
         return _join(node, rec(node.left), rec(node.right))
     if isinstance(node, Union):
-        if new_scan is not None:
-            split = split_join_delta(node)
-            if split is not None:
-                join, left, right, dl, dr = split
-                r_new = _compile(right, new_scan, delta_scan)
-                return _join_delta(join, rec(dl), r_new, rec(left), rec(dr))
-            right = split_new_state(node)
-            if right is not None:
-                return _compile(right, new_scan, delta_scan)
         # Positional UNION ALL — the SQL semantic the reference's
         # LogicalPlan::Union has, and the only one that works when
         # rewrite-generated join branches carry duplicate column names
@@ -388,10 +349,12 @@ def compile_delta(ir: Plan, catalog: DeltaCatalog) -> DataFrame:
     one pass: one join over each table's flagged new state
     (``catalog.flagged``, or ``tag_split`` for a catalog without it),
     keeping the rows with an appended participant. Every other query
-    compiles the rewritten IR, joins as ``_join_delta``'s two branches.
+    runs as two branches per join (``_branch_delta``).
     """
     if not isinstance(ir, PosDelta) and _holds_delta_scan(ir):
-        return _compile_rewritten(ir, catalog)
+        # Scan leaves read the snapshot, PosDeltaScan leaves the
+        # appended rows: exactly compile_snapshot's resolvers.
+        return compile_snapshot(ir, catalog)
     plan = ir if isinstance(ir, PosDelta) else PosDelta(ir)
     delta_ir = rewrite_pos_delta(plan)
     if delta_ir is None:
@@ -403,15 +366,20 @@ def compile_delta(ir: Plan, catalog: DeltaCatalog) -> DataFrame:
         leaf = getattr(catalog, "flagged", None) or partial(tag_split, catalog)
         flagged = _compile_flagged(plan.input, leaf)
         return flagged.where(F.col(APPENDED)).drop(APPENDED)
-    return _compile_rewritten(delta_ir, catalog)
+    return _branch_delta(plan.input, catalog)
 
 
-def _compile_rewritten(delta_ir: Plan, catalog: DeltaCatalog) -> DataFrame:
-    """A rewritten plan over ``catalog``: Scan leaves read the snapshot,
-    PosDeltaScan leaves the appended rows, joins as two branches."""
-    return _compile(
-        delta_ir,
-        scan=_leaf(catalog, catalog.snapshot),
-        delta_scan=catalog.delta,
-        new_scan=_leaf(catalog, catalog.full),
-    )
+def _branch_delta(query: Plan, catalog: DeltaCatalog) -> DataFrame:
+    """ΔQ of a bare ``query`` through the signed compiler's recursion:
+    the appended rows are a change batch whose signs are all +1, the
+    snapshot is the old state and ``full`` the new one."""
+    from .signed import SIGN, delta_of  # signed imports this module
+
+    plus = F.lit(1).cast("bigint")
+    return delta_of(
+        query,
+        lambda name: catalog.delta(name).withColumn(SIGN, plus),
+        old=lambda node: compile_snapshot(node, catalog),
+        new=lambda node: compile_plan(node, catalog),
+        insert_only=True,
+    ).drop(SIGN)

@@ -859,7 +859,7 @@ def execute_optimize(
             "(an unpartitioned table has nothing to scope to; run a "
             "bare OPTIMIZE)"
         )
-    from ..sources.sinks import _partition_dir
+    from ..sources.sinks import _partition_dirs
 
     # Bare OPTIMIZE with partition_cols = compact EVERY partition
     # directory, each independently (layout preserved); WHERE scopes
@@ -924,10 +924,9 @@ def execute_optimize(
     )
     if spec["where"]:
         vals_df = vals_df.where(spec["where"])
-    touched = [tuple(r) for r in vals_df.collect()]
+    touched = _partition_dirs(target_path.rstrip("/"), partition_cols, vals_df)
     before = after = 0
-    for t in touched:
-        d = _partition_dir(target_path.rstrip("/"), partition_cols, t)
+    for d in touched:
         b, a = _dir_rewrite(d)
         before += b
         after += a

@@ -24,13 +24,13 @@ compile to the *old snapshot* — see compiler.py and SURVEY §4.3.
 
 This rule builds the reference IR, three branches per join, and
 ``compile_delta`` always runs it first: its decline is the compiler's
-refusal. The executed plan is smaller. An inner/cross/union fragment
-with a join runs in one pass over each table's flagged new state and
-never compiles this IR (compiler.py). Everything else compiles it,
-with ``split_join_delta`` and ``split_new_state`` (end of module)
-recognizing the join triple and the semi rule's ``R ∪ ΔR`` so the
-compiler can run them as ``ΔL⋈R_new ∪ L_old⋈ΔR`` and one scan of R's
-new state.
+refusal. The executed plan is smaller and never compiles this IR. An
+inner/cross/union fragment with a join runs in one pass over each
+table's flagged new state (compiler.py); everything else runs through
+the signed compiler's Δ recursion (``signed.delta_of``) with every
+appended row signed +1, two branches per join, the semi rule below
+its insert-only case. Only a caller that passes an already-rewritten
+plan gets this IR compiled literally.
 
 Two deliberate divergences (SURVEY §4.3): the reference clones
 ``join_type`` verbatim (mod.rs:126), silently mis-incrementalizing
@@ -148,49 +148,3 @@ def rewrite_pos_delta(plan: Plan) -> Plan | None:
         return PosDeltaScan(child)  # mod.rs:181-186
 
     return None  # mod.rs:187: unsupported operator (agg/sort/limit/...)
-
-
-# -- Recognizers for the compiler ------------------------------------
-#
-# The rule above builds the reference's IR; the compiler executes two
-# of its shapes in a cheaper, equal form (compiler.py). These match
-# only what the rule itself produces: ΔR is confirmed by re-deriving
-# Δ(R) through this module's recursion, and a side whose rewrite
-# declined (ΔR is R itself) never matches.
-
-
-def _is_delta_of(dr: Plan, r: Plan) -> bool:
-    try:
-        return dr != r and dr == _delta_or_self(r)
-    except UnsupportedIncrementalOperator:
-        return False
-
-
-def split_join_delta(node: Plan):
-    """Match the inner/cross join rule's union
-    ``[J(ΔL,ΔR), J(L,ΔR), J(ΔL,R)]``; return ``(J, L, R, ΔL, ΔR)``
-    or None."""
-    if not (isinstance(node, Union) and len(node.inputs) == 3):
-        return None
-    if {type(b) for b in node.inputs} not in ({Join}, {CrossJoin}):
-        return None
-    both, old_left, old_right = node.inputs
-    if isinstance(both, Join) and both.join_type not in _DELTA_SAFE_JOIN_TYPES:
-        return None
-    dl, dr = both.left, both.right
-    left, right = old_left.left, old_right.right
-    if node != Union(
-        [both, both.rebuild((left, dr)), both.rebuild((dl, right))]
-    ) or not _is_delta_of(dr, right):
-        return None
-    return both, left, right, dl, dr
-
-
-def split_new_state(node: Plan) -> Plan | None:
-    """Match the semi rule's ``R ∪ ΔR`` (the right side's new state);
-    return R or None."""
-    if isinstance(node, Union) and len(node.inputs) == 2:
-        right, dr = node.inputs
-        if _is_delta_of(dr, right):
-            return right
-    return None

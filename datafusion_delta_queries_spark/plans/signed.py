@@ -30,14 +30,23 @@ matches on):
 The join rule is the bilinear identity: new⋈new − old⋈old =
 ΔR⋈S_new + R_old⋈ΔS, because S_new = S_old + ΔS as signed multisets.
 The reference's three-branch form (ΔR⋈ΔS as a branch of its own) is
-the same sum with ΔR joined twice; both compilers execute the two
-branches through one helper, ``compiler._join_delta``. Unlike the
-positive-only rule it is sound for deletes and updates, not just
-inserts. Non-linear operators (outer/semi/anti joins, MIN/MAX) have no
-signed-linear rule; they are maintained by *delta-scoped recompute* in
-``operators/signed_queries.py`` — recompute old-vs-new restricted to
-the touched key slice, which is sound for any operator and touches
-work proportional to |Δ|, not |base|.
+the same sum with ΔR joined twice. Unlike the positive-only rule it
+is sound for deletes and updates, not just inserts.
+
+The recursion, ``delta_of``, is the one Δ compiler of the package. An
+append-only batch is a signed batch whose rows are all +1, so the
+positive compiler (``compiler.compile_delta``, for every fragment its
+one-pass form does not cover) runs it too, over the snapshot and the
+current state, with one extra rule only sound without retractions:
+
+- Δ(R ⋉ S)  = (ΔR⋉S_new) ∪ ((R_old ▷ S_old) ⋉ ΔS)     (insert-only)
+
+Under signed changes, non-linear operators (outer/semi/anti joins,
+MIN/MAX) have no signed-linear rule; they are maintained by
+*delta-scoped recompute* in ``operators/signed_queries.py`` —
+recompute old-vs-new restricted to the touched key slice, which is
+sound for any operator and touches work proportional to |Δ|, not
+|base|.
 
 At 100 TB: a signed change batch is small relative to the base table,
 so both join branches are skew joins of a huge state against a tiny
@@ -48,13 +57,14 @@ the only extra shuffle, and it runs on delta-sized data.
 
 from __future__ import annotations
 
+from dataclasses import replace
 from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
-from .compiler import _compile, _join, _join_delta, scan_by_name
+from .compiler import _compile, _join, _unpinned, scan_by_name
 from .nodes import (
     CrossJoin,
     Filter,
@@ -311,45 +321,91 @@ def compile_signed_delta(ir: Plan, catalog: SignedDeltaCatalog) -> DataFrame:
 
     Raises UnsupportedIncrementalOperator for operators outside the
     signed-linear fragment (outer/semi/anti joins) — those route
-    through the delta-scoped recompute maintainers instead.
+    through the delta-scoped recompute maintainers instead — and
+    ValueError for a pinned ``VERSION AS OF`` leaf, which has no delta.
     """
+    return delta_of(
+        ir,
+        catalog.signed_changes,
+        old=lambda node: compile_old(node, catalog),
+        new=lambda node: compile_new(node, catalog),
+    )
+
+
+def delta_of(
+    ir: Plan, change, old, new, insert_only: bool = False
+) -> DataFrame:
+    """ΔQ of ``ir`` with ``_sign`` as its last column: the one Δ
+    recursion of both compilers.
+
+    ``change`` maps a table name to its signed change batch; ``old``
+    and ``new`` compile a subtree over the state before and after it.
+    ``compile_signed_delta`` passes CDF batches; ``compile_delta``
+    passes the appended rows tagged +1 with ``insert_only``, which
+    admits the positive semi rule — semi join is monotone only when
+    nothing is retracted.
+    """
+
+    def rec(node: Plan) -> DataFrame:
+        return delta_of(node, change, old, new, insert_only)
+
     if isinstance(ir, (PosDelta, PosDeltaScan)):
         raise ValueError("signed compilation takes the bare query IR")
 
     if isinstance(ir, Scan):
-        return catalog.signed_changes(ir.table)
+        return change(_unpinned(ir))
 
     if isinstance(ir, Projection):
-        child = compile_signed_delta(ir.input, catalog)
-        return child.selectExpr(*ir.select_exprs, SIGN)
+        child = rec(ir.input)
+        if "*" not in ir.select_exprs:
+            return child.selectExpr(*ir.select_exprs, SIGN)
+        # A bare * already carries the sign; it moves last for the
+        # positional unions above.
+        out = child.selectExpr(*ir.select_exprs)
+        if out.columns[-1] == SIGN:
+            return out
+        return out.select(*[c for c in out.columns if c != SIGN], SIGN)
 
     if isinstance(ir, Filter):
-        return compile_signed_delta(ir.input, catalog).where(ir.predicate)
+        return rec(ir.input).where(ir.predicate)
 
     if isinstance(ir, (Join, CrossJoin)):
-        if isinstance(ir, Join) and ir.join_type not in ("inner", "cross"):
+        how = ir.join_type if isinstance(ir, Join) else "cross"
+        semi = insert_only and how == "semi"
+        if how not in ("inner", "cross") and not semi:
             raise UnsupportedIncrementalOperator(
                 f"signed-linear rewrite covers inner/cross joins only; "
-                f"got {ir.join_type!r} — use the delta-scoped recompute "
+                f"got {how!r} — use the delta-scoped recompute "
                 "maintainers (operators/signed_queries.py)"
             )
-        dl = compile_signed_delta(ir.left, catalog).withColumnRenamed(SIGN, "_sl")
-        dr = compile_signed_delta(ir.right, catalog).withColumnRenamed(SIGN, "_sr")
+        dl, dr = rec(ir.left), rec(ir.right)
+        if semi:
+            # Δ(L ⋉ R) = ΔL ⋉ R_new ∪ (L_old ▷ R_old) ⋉ ΔR: new left
+            # rows matching the new right state, plus old left rows that
+            # matched nothing before but match an appended right row.
+            missed = old(replace(ir, join_type="anti"))
+            plus = F.lit(1).cast("bigint")
+            return _join(ir, dl, new(ir.right)).union(
+                _join(ir, missed, dr).withColumn(SIGN, plus)
+            )
 
-        def signed(branch: DataFrame) -> DataFrame:
+        def signed(branch: DataFrame, side: str) -> DataFrame:
             # The un-delta'd side carries no sign (≡ +1), so a branch's
             # sign is its Δ side's; it moves last for the positional union.
-            side = "_sl" if "_sl" in branch.columns else "_sr"
             return branch.withColumn(SIGN, F.col(side).cast("bigint")).drop(side)
 
-        return _join_delta(
-            ir, dl, compile_new(ir.right, catalog),
-            compile_old(ir.left, catalog), dr, finish=signed,
+        # ΔL⋈R_new ⊎ L_old⋈ΔR: new⋈new − old⋈old, since join
+        # distributes over ⊎ and R_new = R_old ⊎ ΔR. The reference's
+        # third branch ΔL⋈ΔR is folded into the first, so a chain of n
+        # joins plans O(n²) joins instead of O(3ⁿ).
+        dl = dl.withColumnRenamed(SIGN, "_sl")
+        dr = dr.withColumnRenamed(SIGN, "_sr")
+        return signed(_join(ir, dl, new(ir.right)), "_sl").union(
+            signed(_join(ir, old(ir.left), dr), "_sr")
         )
 
     if isinstance(ir, Union):
-        parts = [compile_signed_delta(i, catalog) for i in ir.inputs]
-        return reduce(lambda a, b: a.union(b), parts)
+        return reduce(lambda a, b: a.union(b), map(rec, ir.inputs))
 
     raise UnsupportedIncrementalOperator(
         f"no signed delta derivation for {ir.name}"

@@ -148,25 +148,40 @@ def staged_swap(target_path: str, write) -> None:
 _PATH_ESCAPE = set(chr(c) for c in range(0x20)) | set('"#%\'*/:=?\\\x7f{[]^')
 
 
-def _escape_path_name(value: object) -> str:
-    """Stringify a partition value the way Spark names its directory."""
-    s = str(value)
+def _escape_path_name(value: str) -> str:
+    """Escape a partition value's string form the way Spark names its
+    directory; NULL and the empty string name the default partition."""
+    if value is None or value == "":
+        return "__HIVE_DEFAULT_PARTITION__"
     return "".join(
-        f"%{ord(ch):02X}" if ch in _PATH_ESCAPE else ch for ch in s
+        f"%{ord(ch):02X}" if ch in _PATH_ESCAPE else ch for ch in value
     )
 
 
-def _partition_dir(
-    base: str, partition_cols: list[str], values: tuple
-) -> str:
-    """The directory Spark writes for one partition-value tuple."""
-    return os.path.join(
-        base,
-        *[
-            f"{c}={_escape_path_name(v)}"
-            for c, v in zip(partition_cols, values)
-        ],
-    )
+def _partition_dirs(
+    base: str, partition_cols: list[str], values: DataFrame
+) -> list[str]:
+    """The directories Spark writes for the partition-value tuples in
+    ``values`` (collected; callers keep it small). The values are cast
+    to string inside the collected plan, the cast Spark names a
+    partition directory with, in the session time zone: a collected
+    TIMESTAMP is a Python datetime in the Python process's zone, and
+    ``str`` of it formats fractions differently from Spark."""
+    from pyspark.sql import functions as F
+
+    names = values.select(
+        *[F.col(c).cast("string") for c in partition_cols]
+    ).collect()
+    return [
+        os.path.join(
+            base,
+            *[
+                f"{c}={_escape_path_name(v)}"
+                for c, v in zip(partition_cols, r)
+            ],
+        )
+        for r in names
+    ]
 
 
 def _touched_stats(
@@ -250,10 +265,9 @@ def overwrite_touched_partitions(
     (``StateStore.rewrite`` of partitioned state, the bucketed
     ``Scd2Table.apply`` among them, and the pruned MERGE / UPDATE /
     DELETE / INSERT OVERWRITE executors in ``plans.merge_sql``).
-    Partition values round-trip through directory names: Spark
-    percent-escapes special characters on write, so the emptied
-    directories are addressed through the same escaping
-    (``_partition_dir``).
+    Partition values round-trip through directory names: the emptied
+    directories are named the way Spark names them on write
+    (``_partition_dirs``).
 
     Driver-state contract: ``touched_df`` stays distributed — the only
     partition tuples collected are the EMPTIED set (touched minus
@@ -277,25 +291,23 @@ def overwrite_touched_partitions(
     # as a distributed anti-diff against the staged copy (read with the
     # known schema: no inference job, and an empty slice reads as no
     # rows); only this final rm list reaches the driver. A touched tuple
-    # with a NULL never matched the pruned read, so it empties nothing
-    # (its directory name would be the string "None").
+    # with a NULL never matched the pruned read, so it empties nothing.
     staged = spark.read.format(fmt).schema(merged.schema).load(staging)
-    emptied = [
-        tuple(r)
-        for r in touched_df.select(*partition_cols)
+    emptied = _partition_dirs(
+        base,
+        partition_cols,
+        touched_df.select(*partition_cols)
         .dropna()
         .distinct()
-        .exceptAll(staged.select(*partition_cols).distinct())
-        .collect()
-    ]
+        .exceptAll(staged.select(*partition_cols).distinct()),
+    )
     for rel in _partition_leaves(staging, len(partition_cols)):
         _swap_in(
             os.path.join(staging, rel),
             os.path.join(base, rel),
             os.path.join(retired, rel),
         )
-    for t in emptied:
-        d = _partition_dir(base, partition_cols, t)
+    for d in emptied:
         if os.path.isdir(d):
             shutil.rmtree(d)
     shutil.rmtree(staging, ignore_errors=True)

@@ -14,7 +14,7 @@ round-trips cost ~1s each) but every run explores fresh shapes.
 from __future__ import annotations
 
 import pytest
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 from datafusion_delta_queries_spark.plans import (
@@ -41,6 +41,20 @@ TABLES = {
 }
 
 
+# Select lists with a bare *, alone and followed by a computed column.
+STARS = (["*"], ["*", "c_custkey % 4 AS c_bucket"])
+
+# The star shape at its widest, run on every pass.
+STAR_JOIN = Projection(
+    ["*"],
+    Join(
+        Projection(STARS[1], Filter("c_custkey % 3 = 0", Scan("customer"))),
+        Scan("nation"),
+        on=[("c_nationkey", "n_nationkey")],
+    ),
+)
+
+
 @st.composite
 def leafy(draw, table):
     cols, preds = TABLES[table]
@@ -53,10 +67,18 @@ def leafy(draw, table):
 
 
 @st.composite
-def plans(draw, shapes=("simple", "join", "chain", "semi", "cross", "union")):
+def plans(
+    draw, shapes=("simple", "join", "chain", "semi", "cross", "union", "star")
+):
     shape = draw(st.sampled_from(shapes))
     if shape == "simple":
         return draw(leafy(draw(st.sampled_from(list(TABLES)))))
+    if shape == "star":
+        # SELECT * below a join and over it: the delta must carry its
+        # bookkeeping columns once, whatever the select list expands to.
+        l = Projection(draw(st.sampled_from(STARS)), draw(leafy("customer")))
+        node = Join(l, draw(leafy("nation")), on=[("c_nationkey", "n_nationkey")])
+        return Projection(["*"], node)
     if shape == "chain":
         # orders⋈customer⋈nation, all three with appended rows: one
         # join side is itself a join, so its delta is a nested join
@@ -149,6 +171,7 @@ def _multiset(df):
     suppress_health_check=[HealthCheck.too_slow, HealthCheck.function_scoped_fixture],
 )
 @given(ir=plans())
+@example(ir=STAR_JOIN)
 def test_ivm_identity_random_plans(spark, ir):
     cat = DeltaCatalog(spark, SF_SMALL)
     full_new = _multiset(compile_plan(ir, cat))
@@ -161,18 +184,16 @@ def test_ivm_identity_random_plans(spark, ir):
 # -- One-pass ΔQ = two-branch ΔQ, under every flag realization ---------
 #
 # compile_delta runs an inner/cross/union fragment with a join as one
-# join over flagged new state; the two-branch compiler (``_compile``
-# over the rewritten IR) is the reference. Three catalogs build the
-# flag three ways: DeltaCatalog's own split predicate, a
-# VersionedDeltaCatalog's tagged snapshot/changes union, and a
-# DeltaCatalog subclass whose snapshot/delta are a different slice
-# than its (inherited) split predicates — the override must win.
+# join over flagged new state; the two-branch compiler
+# (``_branch_delta``, the signed Δ recursion) is the reference. Three
+# catalogs build the flag three ways: DeltaCatalog's own split
+# predicate, a VersionedDeltaCatalog's tagged snapshot/changes union,
+# and a DeltaCatalog subclass whose snapshot/delta are a different
+# slice than its (inherited) split predicates — the override must win.
 
-from datafusion_delta_queries_spark.plans import PosDelta, rewrite_pos_delta  # noqa: E402
 from datafusion_delta_queries_spark.plans.compiler import (  # noqa: E402
     DELTA_PREDICATES,
-    _compile,
-    _leaf,
+    _branch_delta,
 )
 
 _ONE_PASS_TABLES = ("orders", "customer", "nation", "region", "supplier")
@@ -244,14 +265,7 @@ def test_one_pass_equals_two_branch_random_plans(
 ):
     cat = _catalog(spark, realization, versioned_catalog_tables)
     one_pass = _multiset(compile_delta(ir, cat))
-    two_branch = _multiset(
-        _compile(
-            rewrite_pos_delta(PosDelta(ir)),
-            scan=_leaf(cat, cat.snapshot),
-            delta_scan=cat.delta,
-            new_scan=_leaf(cat, cat.full),
-        )
-    )
+    two_branch = _multiset(_branch_delta(ir, cat))
     assert one_pass == two_branch
     full_new = _multiset(compile_plan(ir, cat))
     full_old = _multiset(compile_snapshot(ir, cat))
@@ -311,9 +325,15 @@ def signed_leafy(draw, table):
 
 @st.composite
 def signed_plans(draw):
-    shape = draw(st.sampled_from(["simple", "join", "chain", "cross", "union"]))
+    shape = draw(
+        st.sampled_from(["simple", "join", "chain", "cross", "union", "star"])
+    )
     if shape == "simple":
         return draw(signed_leafy(draw(st.sampled_from(list(SIGNED_TABLES)))))
+    if shape == "star":
+        l = Projection(draw(st.sampled_from(STARS)), draw(signed_leafy("customer")))
+        node = Join(l, draw(signed_leafy("nation")), on=[("c_nationkey", "n_nationkey")])
+        return Projection(["*"], node)
     if shape == "chain":
         # lineitem⋈orders⋈customer, all three with inserts, deletes and
         # updates: a nested signed join delta on the left or the right.
@@ -366,6 +386,7 @@ def signed_plans(draw):
     suppress_health_check=[HealthCheck.too_slow, HealthCheck.function_scoped_fixture],
 )
 @given(ir=signed_plans())
+@example(ir=STAR_JOIN)
 def test_signed_identity_random_plans(spark, ir):
     cat = SignedDeltaCatalog(spark, SF_SMALL)
     applied = consolidate(

@@ -5,10 +5,13 @@ Env:   SPARK_GRAFT_CPUS (session cores, default 32)
 
 Runs each named registry query through ``oracle.compare`` against its
 DuckDB oracle, inside its own job group, and prints one tab-separated
-line per query: name, ok, Spark jobs and input rows. The counts come
-from ``perfbench.probe.SparkProbe`` and include the compare's
-``toPandas`` collect. Run it on two checkouts to get a before → after
-table; the counts are deterministic for a given fixture directory.
+line per query: name, ok, Spark jobs, input rows, and the joins and
+file scans of the returned frame's physical plan before AQE
+re-planning. The job and row counts come from
+``perfbench.probe.SparkProbe`` and include the compare's ``toPandas``
+collect; the plan shape from ``perfbench.probe.plan_shape``. Run it on
+two checkouts to get a before → after table; the counts are
+deterministic for a given fixture directory.
 Exits 1 when a query is unknown, has no oracle, or fails its oracle.
 """
 
@@ -29,23 +32,28 @@ def main() -> int:
     from datafusion_delta_queries_spark.operators import registry
     from datafusion_delta_queries_spark.oracle import compare, run_oracle
     from datafusion_delta_queries_spark.session import get_spark
-    from perfbench.probe import SparkProbe
+    from perfbench.probe import SparkProbe, plan_shape
 
     spark = get_spark("dfdq-job-table")
     probe = SparkProbe(spark)
     queries, oracles = registry()
     failed = 0
-    print("query\tok\tjobs\tinput_rows")
+    print("query\tok\tjobs\tinput_rows\tjoins\tscans")
     for name in names:
         if name not in queries or name not in oracles:
-            print(f"{name}\tunknown\t-\t-")
+            print(f"{name}\tunknown\t-\t-\t-\t-")
             failed += 1
             continue
         expected = run_oracle(oracles[name], sf_dir)
         with probe.job_group(name) as gid:
-            ok, msg = compare(queries[name](spark, sf_dir), expected)
+            df = queries[name](spark, sf_dir)
+            joins, scans = plan_shape(df)
+            ok, msg = compare(df, expected)
         stats = probe.stage_stats(gid)
-        print(f"{name}\t{ok}\t{stats['jobs']}\t{stats['input_rows']}")
+        print(
+            f"{name}\t{ok}\t{stats['jobs']}\t{stats['input_rows']}"
+            f"\t{joins}\t{scans}"
+        )
         if not ok:
             print(f"  {msg}", file=sys.stderr)
             failed += 1
