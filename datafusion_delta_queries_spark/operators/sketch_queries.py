@@ -437,7 +437,12 @@ class ContinuousHllNdv:
             "_s IS NULL OR rho > _s"
         ).isEmpty():
             return
-        self.store.fold(batch_regs, on, ["greatest(__srho, __drho) AS rho"])
+        self.store.fold(
+            batch_regs,
+            on,
+            ["max(rho) AS __drho"],
+            ["greatest(__srho, __drho) AS rho"],
+        )
 
     def read_summary(self) -> DataFrame:
         return hll_summary(self.store.read(), self.group_cols)
@@ -635,6 +640,7 @@ class ContinuousCms:
         self.store.fold(
             delta,
             self._keys,
+            ["sum(cnt) AS __dcnt"],
             [
                 "CAST(coalesce(__scnt + __dcnt, __scnt, __dcnt) AS BIGINT)"
                 " AS cnt"

@@ -673,7 +673,8 @@ NET_ROWS = f"sum({SIGN})"
 
 class AggAlgebra:
     """The expression sets of one GROUP BY spec, over ``_p{i}`` partial
-    columns (``_p{i}s``/``_p{i}n`` for avg) plus ``_rows``, the
+    columns (``_p{i}s``/``_p{i}n``, the sum and its non-NULL argument
+    count, for sum and avg) plus ``_rows``, the
     WHERE-passing row multiplicity per group (a group at zero has left
     the aggregate):
 
@@ -689,10 +690,11 @@ class AggAlgebra:
     - ``probe``: per min/max over a signed batch, the most threatening
       retracted value ``_d{i}`` (for min the smallest: a retraction can
       only change a stored min it is ≤ to);
-    - ``minmax``: per min/max, its state column, argument, positive
-      partial, probe column and the repair's threat operator;
-    - ``folded``: two partial frames joined on the keys → partials,
-      the binary form of ``combine`` (see there).
+    - ``minmax``: per min/max, its state column, argument, aggregate
+      call (the positive partial), probe column and the repair's
+      threat operator;
+    - ``folded``: one stored partial row and one batch partial row of
+      a group → partials, the binary form of ``combine`` (see there).
 
     ``distinct`` lists the count(DISTINCT) aggregates, which have no
     scalar partial (their state is ``agg_pairs``). ``key_cols``
@@ -728,7 +730,10 @@ class AggAlgebra:
                 SIGN if arg == "*"
                 else f"CASE WHEN ({arg}) IS NOT NULL THEN {SIGN} ELSE 0 END"
             )
-            if fn == "avg":
+            if fn in ("sum", "avg"):
+                # The sum beside its non-NULL argument count: a group
+                # whose non-NULL arguments were all retracted has a NULL
+                # sum and avg, not the 0 its signed partials net to.
                 self.partial += [
                     f"sum({arg}) AS {p}s", f"count({arg}) AS {p}n"
                 ]
@@ -737,8 +742,18 @@ class AggAlgebra:
                 self.signed += [
                     f"sum({SIGN} * ({arg})) AS {p}s", f"sum({live}) AS {p}n"
                 ]
-                self.final.append(f"{p}s / {p}n AS {out}")
-                self.merge.append(f"sum({p}s) / sum({p}n) AS {out}")
+                if fn == "avg":
+                    self.final.append(f"{p}s / nullif({p}n, 0) AS {out}")
+                    self.merge.append(
+                        f"sum({p}s) / nullif(sum({p}n), 0) AS {out}"
+                    )
+                else:
+                    self.final.append(
+                        f"CASE WHEN {p}n > 0 THEN {p}s END AS {out}"
+                    )
+                    self.merge.append(
+                        f"CASE WHEN sum({p}n) > 0 THEN sum({p}s) END AS {out}"
+                    )
                 continue
             pfn, cfn = _DECOMPOSABLE[fn]
             self.partial.append(f"{pfn}({arg}) AS {p}")
@@ -746,9 +761,7 @@ class AggAlgebra:
             self._fold.append((p, cfn))
             self.final.append(f"{p} AS {out}")
             self.merge.append(f"{cfn}({p}) AS {out}")
-            if fn == "sum":
-                self.signed.append(f"sum({SIGN} * ({arg})) AS {p}")
-            elif fn == "count":
+            if fn == "count":
                 self.signed.append(f"sum({live}) AS {p}")
             else:
                 self.signed.append(
@@ -760,7 +773,7 @@ class AggAlgebra:
                 self.minmax.append({
                     "col": p,
                     "arg": arg,
-                    "partial": f"{pfn}({arg}) AS {p}",
+                    "call": f"{pfn}({arg})",
                     "del": f"_d{i}",
                     "threat_op": "<=" if fn == "min" else ">=",
                 })
@@ -789,10 +802,10 @@ class AggAlgebra:
     ) -> list[str]:
         """Per partial column ``c``: ``{left}c`` folded with
         ``{right}c`` into ``c`` — ``combine`` for one row of each side,
-        as a full outer join on the keys yields them (the side without
-        the group is NULL). Sums and counts add null-aware (a NULL side
-        adds nothing, as ``sum`` skips NULL); min/max take
-        ``least``/``greatest``, which skip NULL already.
+        as ``StateStore.fold``'s one aggregate yields them per group
+        (the side without the group is NULL). Sums and counts add
+        null-aware (a NULL side adds nothing, as ``sum`` skips NULL);
+        min/max take ``least``/``greatest``, which skip NULL already.
 
         With ``repaired``, ``left`` is stored state and ``right`` a
         signed batch carrying the ``probe`` columns: a min/max whose
@@ -1138,7 +1151,7 @@ def _merge_signed(
         untouched = _anti_on_keys(partials.select(*keys, *cols), touched, keys)
         recomputed = alg.grouped(
             _semi_on_keys(new, touched, spec["keys"], keys),
-            [m["partial"] for m in alg.minmax],
+            [f"{m['call']} AS {m['col']}" for m in alg.minmax],
         )
         merged = _join_on_keys(
             merged.drop(*cols), untouched.unionByName(recomputed), keys

@@ -28,9 +28,11 @@ otherwise from one inferred read, memoized.
 
 Every refresh has one shape: build the new content of what
 ``read_touched`` returns in one plan, and write it once with
-``rewrite``. Two builders make that plan. ``fold`` joins the touched
-state full outer with a key-unique batch and folds each column (sums,
-register maxima, aggregate partials). ``replace`` replaces the touched
+``rewrite``. Two builders make that plan. ``fold`` groups the touched
+state and the batch's rows (and any further inputs, such as a min/max
+recompute's base rows) in one aggregate by the keys, so one exchange
+and no join, and folds each column (sums, register maxima, aggregate
+partials). ``replace`` replaces the touched
 groups: ``state ⋉̸ touched ∪ fresh``, where ``fresh`` holds their
 complete new rows. Guards are ``raise_error`` inside the written
 frame, so a refresh is one write action; the raised message comes
@@ -226,45 +228,78 @@ class StateStore:
 
     def fold(
         self,
-        batch: DataFrame,
+        rows: DataFrame,
         keys: list[str],
+        aggs: list[str],
         folds: list[str],
         keep=None,
         guards=(),
+        exprs: list[str] | None = None,
+        also=(),
     ) -> None:
-        """The state becomes ``read_touched(batch) ⟗ batch`` on
-        ``keys``, folded, in one ``rewrite``.
+        """The state becomes ``read_touched(rows) ⊎ rows`` grouped by
+        ``keys``, folded, in one ``rewrite``: one aggregate, so one
+        exchange on the keys and no join.
 
-        ``batch`` holds at most one row per key. In the joined frame a
-        stored column ``c`` outside ``keys`` is ``__s<c>``, a batch
-        column of the same name ``__d<c>``, and any other batch column
-        keeps its name. ``folds`` holds one SQL expression per stored
-        column outside ``keys``, as ``<expr> AS <c>``; on a key only
-        one side holds, the other side's columns are NULL, so stored
-        rows the batch misses pass through and new keys enter. A folded
-        row leaves when ``keep`` (a Column) is false; ``guards`` are
-        (condition, message) pairs over the folded row, checked before
-        ``keep``, and a row meeting one fails the refresh with its
-        message."""
-        stored = self.read_touched(batch)
+        ``exprs`` are the keys as SQL over ``rows`` (default the
+        columns named ``keys``); ``rows`` may hold many rows per key.
+        Per group, a stored column ``c`` outside ``keys`` is read as
+        ``__s<c>``, the one stored value (NULL for a group the state
+        lacks), and each of ``aggs`` (``<one aggregate call> AS
+        <name>``, over ``rows``' columns) sees only ``rows`` (NULL for
+        a group ``rows`` misses; ``count`` is 0). ``also`` holds more
+        inputs to the same aggregate as (frame, key SQL, aggs) triples,
+        each read only by its own aggs.
+        ``folds`` holds one SQL expression per stored column outside
+        ``keys``, as ``<expr> AS <c>``, over those columns: stored
+        rows no input touches pass through and new keys enter. A
+        folded row leaves when ``keep`` (a Column) is false or NULL;
+        ``guards`` are (condition, message) pairs over the folded row,
+        checked in order before ``keep``, and a row meeting one fails
+        the refresh with its message. A guard over the keys alone runs
+        on every input row instead, below the aggregate."""
+        exprs = exprs or [_quoted(k) for k in keys]
+        group = [f"__k{i}" for i in range(len(keys))]
+        # Only a partitioned table reads and writes by touched keys.
+        touched = (
+            rows.select(*[F.expr(e).alias(k) for e, k in zip(exprs, keys)])
+            if self.partition_cols
+            else None
+        )
+        stored = self.read_touched(touched)
         parts = [c for c in stored.columns if c not in keys]
-        s = stored.select(
-            *keys, *[stored[c].alias(f"__s{c}") for c in parts]
+        union = stored.select(
+            *[stored[k].alias(g) for k, g in zip(keys, group)],
+            *[stored[c].alias(f"__s{c}") for c in parts],
+            F.lit(0).alias("__t"),
         )
-        d = batch.select(
-            *keys,
-            *[
-                batch[c].alias(f"__d{c}") if c in parts else batch[c]
-                for c in batch.columns
-                if c not in keys
-            ],
+        calls = [
+            F.max(F.col(_quoted(f"__s{c}"))).alias(f"__s{c}") for c in parts
+        ]
+        inputs = [(rows, exprs, aggs), *also]
+        for t, (df, df_exprs, df_aggs) in enumerate(inputs, 1):
+            union = union.unionByName(
+                df.select(
+                    *[F.expr(e).alias(g) for e, g in zip(df_exprs, group)],
+                    "*",
+                    F.lit(t).alias("__t"),
+                ),
+                allowMissingColumns=True,
+            )
+            calls += [_only(a, f"__t = {t}") for a in df_aggs]
+        folded = union.groupBy(*group).agg(*calls).select(
+            *[F.col(g).alias(k) for g, k in zip(group, keys)],
+            *[F.expr(e) for e in folds],
         )
-        joined = s.join(d, keys, "full")
-        folded = joined.select(*keys, *[F.expr(e) for e in folds])
-        self.rewrite(
-            guarded(folded, guards, keep).select(*stored.columns),
-            batch.select(*keys),
-        )
+        # One filter per guard, in order: a guard over the keys alone
+        # is pushed below the aggregate, ahead of ``rewrite``'s own.
+        for cond, msg in guards:
+            folded = folded.where(
+                F.when(cond, F.raise_error(F.lit(msg))).otherwise(True)
+            )
+        if keep is not None:
+            folded = folded.where(keep)
+        self.rewrite(folded.select(*stored.columns), touched)
 
     def replace(
         self, fresh: DataFrame, touched, keys: list[str], guards=(),
@@ -392,6 +427,14 @@ def guarded(df: DataFrame, guards, keep=None) -> DataFrame:
 
 def _quoted(name: str) -> str:
     return "`" + name.replace("`", "``") + "`"
+
+
+def _only(agg: str, cond: str):
+    """``agg`` (``<one aggregate call> AS <name>``) over the rows where
+    ``cond`` holds: the call's ``FILTER`` clause, so ``count(*)`` and
+    literal arguments count no other row either."""
+    call, name = agg.rsplit(" AS ", 1)
+    return F.expr(f"{call} FILTER (WHERE {cond})").alias(name)
 
 
 def _key_hash(cols: list):

@@ -886,6 +886,65 @@ def test_rollup_cascade_repair_never_scans_the_base(
     assert "InMemoryTableScan" not in plan
 
 
+def test_minmax_refresh_is_one_aggregate_over_one_union(
+    spark, tmp_path, monkeypatch
+):
+    """A min/max ``refresh_signed`` writes one aggregate: the stored
+    partials, the change batch's rows and the base rows of the groups
+    the batch retracts from meet in one Union under one hash Exchange
+    on the group keys. No join (the fold and the recompute are the same
+    aggregate) and no broadcast (the base is restricted by a literal
+    key-hash filter)."""
+    from pyspark.sql import functions as F
+
+    from datafusion_delta_queries_spark.catalog import load_table
+    from datafusion_delta_queries_spark.operators.continuous_agg import (
+        ContinuousAggregate,
+    )
+    from datafusion_delta_queries_spark.operators.signed_queries import (
+        _CASCADE_SQL,
+    )
+    from datafusion_delta_queries_spark.sources.state import StateStore
+
+    ev = load_table(spark, SF_SMALL, "events")
+    s0 = ev.where("event_id % 3 = 0")
+    ev.where("event_id % 9 = 0").withColumn(
+        "_change_type", F.lit("delete")
+    ).write.parquet(str(tmp_path / "batch"))
+    s0.where("event_id % 9 != 0").write.parquet(str(tmp_path / "base"))
+    view = ContinuousAggregate(spark, str(tmp_path / "state"), _CASCADE_SQL)
+    view.initialize(s0)
+    written = []
+    rewrite = StateStore.rewrite
+    monkeypatch.setattr(
+        StateStore, "rewrite",
+        lambda self, df, *a: written.append(df) or rewrite(self, df, *a),
+    )
+    view.refresh_signed(
+        spark.read.parquet(str(tmp_path / "batch")),
+        base_new_df=spark.read.parquet(str(tmp_path / "base")),
+    )
+    assert len(written) == 1
+    plan = written[0]._jdf.queryExecution().executedPlan().toString()
+    assert not _JOIN_NODE.findall(plan), plan
+    assert "BroadcastExchange" not in plan, plan
+    exchanges = re.findall(r"(?m)^[\s:+\-|]*Exchange (\w+)\((.*)\)", plan)
+    assert len(exchanges) == 1, plan
+    kind, args = exchanges[0]
+    assert kind == "hashpartitioning", plan
+    assert re.match(r"__k0#\d+, __k1#\d+, \d+\b", args), args
+    # Below the exchange, one Union reads the state, the batch and the
+    # base, once each.
+    below = plan.split("Exchange hashpartitioning", 1)[1]
+    assert below.count("Union") == 1, plan
+    union = below.split("Union", 1)[1]
+    dirs = re.findall(r"Location: \w+ \[([^\]]*)\]", _plan(written[0]))
+    assert sorted(os.path.basename(d) for d in dirs) == [
+        "base", "batch", "state"
+    ], dirs
+    assert union.count("FileScan") == 3, plan
+
+
 def test_cube_expansion_is_a_single_generate(spark, tmp_path):
     """The 2^d grouping-set expansion is ONE Generate (explode over
     the struct array) feeding a partial HashAggregate — not d separate

@@ -15,6 +15,7 @@ that a committed CORRECTNESS file records as executed.
 
 from __future__ import annotations
 
+import glob
 import json
 import os
 import subprocess
@@ -155,12 +156,22 @@ def _committed_correctness_windows() -> dict[str, set[str]]:
     the tripwire below must not fire on the round's own freshly
     written (not yet committed) file, only on a file a PREVIOUS
     round-close commit sealed.
+
+    Outside a git checkout (an exported source tree, where ``git
+    ls-tree`` fails) the working tree's files are the committed ones,
+    so they are read instead.
     """
-    names = subprocess.run(
+    listing = subprocess.run(
         ["git", "ls-tree", "--name-only", "HEAD"],
-        cwd=_ROOT, capture_output=True, text=True, check=True,
-    ).stdout.split()
+        cwd=_ROOT, capture_output=True, text=True,
+    )
     out: dict[str, set[str]] = {}
+    if listing.returncode != 0:
+        for p in glob.glob(os.path.join(_ROOT, "CORRECTNESS_r*.json")):
+            with open(p, encoding="utf-8") as fh:
+                out[os.path.basename(p)] = set(json.load(fh))
+        return out
+    names = listing.stdout.split()
     for n in names:
         if n.startswith("CORRECTNESS_r") and n.endswith(".json"):
             blob = subprocess.run(

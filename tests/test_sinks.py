@@ -464,7 +464,10 @@ def test_partitioned_write_rejects_null_partition_value(spark, tmp_path):
     with pytest.raises(ValueError, match="NULL partition value"):
         store.replace(fresh, fresh.select("k", "seg"), ["k", "seg"])
     with pytest.raises(ValueError, match="NULL partition value"):
-        store.fold(fresh, ["k", "seg"], ["coalesce(__sv, 0) + __dv AS v"])
+        store.fold(
+            fresh, ["k", "seg"], ["sum(v) AS __dv"],
+            ["coalesce(__sv, 0) + __dv AS v"],
+        )
     store.replace(fresh.where("1 = 0"), fresh.select("k", "seg"), ["k", "seg"])
     got = _store(spark, path, ["seg"]).read().select("k", "seg", "v")
     assert sorted(got.collect(), key=lambda r: r.k) == [
